@@ -12,17 +12,18 @@ plus the training-data pipeline operators. SQL-corpus queries share one ANSI
 text between Spark and the DuckDB oracle; DataFrame-native operators carry a
 semantically-equivalent hand-written oracle.
 
-All 124 queries are declared as of round 15 (the round-14 staged operator
-``minhash_index_upsert`` was promoted at the round-15 rotation). The
-staged tier (``operators.staged_queries()`` / ``staged_oracles()`` +
-``tests/test_staged_oracle.py`` + ``scripts/verify_staged.py``) holds at
-most the one new operator each round's VERDICT budgets (empty this round
-— round 15 is an optimization round); the 124-query surface cycles the
-50-slot gate window every ceil(124/50) = 3 rounds — see ``query_tiers``.
+The driver checks only the first ``GATE_WINDOW`` entries of
+``queries()``. :func:`query_tiers` puts first the queries with the weakest
+evidence in the committed ``CORRECTNESS_r*.json`` files: never green, then
+last green longest ago, then green in the fewest rounds, then by name.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,9 +36,11 @@ if "/root/repo" not in _sys.path:  # driver may exec this file from anywhere
 from datafusion_distributed_experiment_spark import Engine
 from datafusion_distributed_experiment_spark import queries as corpus
 
+GATE_WINDOW = 50
+# the committed CORRECTNESS_r*.json files sit next to this file
+_ARTIFACT_DIR = os.path.dirname(os.path.abspath(__file__))
+
 _SQL_QUERIES = [
-    # events_window_funcs was a round-7 stale-budget sacrifice (last green
-    # r05) and re-enters the round-8 window with the rest of that cohort
     "adhoc/events_window_funcs",
     *(f"tpch/q{i}" for i in range(1, 23)),
     "adhoc/events_agg_count",
@@ -139,165 +142,65 @@ def preload_mem(spark: SparkSession, sf_dir: str, partitions: int | None = None)
     _registered[spark] = (sf_dir, done)
 
 
-def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
-    """Queries grouped by tier, gate-ordered: the driver oracle-checks the
-    FIRST 50 entries, so the window rotates round-over-round.
+def green_rounds(directory: str = _ARTIFACT_DIR) -> dict[int, set[str]]:
+    """``{round: names}`` of the queries green in each committed
+    ``CORRECTNESS_r<round>.json`` under ``directory``. A row is green when
+    its ``rows_match``, ``schema_match`` and ``hash_match`` are all true."""
+    out: dict[int, set[str]] = {}
+    for path in glob.glob(os.path.join(directory, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            rows = json.load(f)
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        out[rnd] = {
+            name
+            for name, row in rows.items()
+            if row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
+        }
+    return out
 
-    STALE BUDGET (124-query surface): 124 queries over a 50-slot window
-    means the full surface cycles every ceil(124/50) = 3 rounds. The real
-    guarantee, pinned by tests/test_corpus_oracle.py: (a) never-verified
-    count = 0 — every declared query holds a green row in SOME committed
-    CORRECTNESS_r*.json before it may sit outside the window; (b) every
-    query outside the window was green within the THREE most recent
-    committed artifacts (exactly the 3-round cycle arithmetic; holds at
-    every commit point, mid-rotation included); (c) the queries left to
-    age furthest are chosen deepest-evidence-first.
 
-    ROUND 15 — the window (50):
-    * slot 1: minhash_index_upsert — the round-14 staged operator (the
-      MAINTAIN step of the persisted MinHash LSH band index: signature
-      only the CDC delta, rewrite only touched (band_idx, bucket)
-      partitions, probe bit-identically to a from-scratch rebuild),
-      PROMOTED this rotation (never driver-verified; leads the window).
-    * slots 2-24: the 23 queries whose last green row is CORRECTNESS_r12
-      (the round-14 sacrifice cohort — the rotation contract's re-entry
-      point): top_terms, the four events temporal/cube re-entries
-      (events_asof, events_cube, events_kmv_distinct, events_range_join),
-      the fifteen TPC-H re-entries (q1, q3-q12, q14, q16, q18, q19), and
-      the three text re-entries (fingerprint, lang_id, text_stats).
-    * slots 25-50: the 26 SHALLOWEST of the r13-green queries by total
-      green-row depth across all committed artifacts: ivf_pq_index_build
-      (once-green), events_quantile_sketch (twice), the ten 4x-green
-      (bfs_hops_t3, bm25_topk, bpe_merges_t2, cms_heavy_hitters,
-      dsir_weights, lpa_communities_t3, span_scrub, stream_topk,
-      triangle_count, winnow_fingerprints), and the 14
-      alphabetically-first five-times-green (bloom_semi_agg,
-      cdc_apply_changes, chunk_documents, corpus_pipeline,
-      custom_source_scan, decontaminate, dedup_clusters_star, domain_mix,
-      domain_resample, embedding_quantize, kmeans_assign, media_dedup,
-      media_frames, media_meta_stats — the 11 alphabetically-last
-      five-times-green sit out one more round). stream_topk is the one
-      streaming query in the window; it sits in its own
-      "shallow-r13-streaming" subtier so the bench's measure-last rule
-      still isolates it (tier NAME carries the rule).
+def gate_order(names, by_round: dict[int, set[str]]) -> list[str]:
+    """``names`` sorted for the gate: never-green queries first, then by
+    last green round (oldest first), then by number of green rounds
+    (fewest first), then by name."""
 
-    SACRIFICED this round (24 r13-green, deepest-evidence-first; they
-    re-enter at round 16 alongside the shallowest r14-green): the 11
-    alphabetically-last 5x-green (pack_sequences, pagerank_nations,
-    pii_scrub, repetition_stats, rollup_incremental, sessionize,
-    stream_click_attr, stream_dedup, stream_enrich, stream_sliding,
-    user_sessions), the three 6x-green (dedup_clusters,
-    dedup_incremental, quality_score), and the ten 7x-green (ann_ivf,
-    ann_lsh, dedup_exact, embedding_dedup, minhash_dedup_pairs,
-    minhash_signatures, ngram_jaccard_pairs, simhash_dedup_pairs,
-    simhash_signatures, token_count). The 50 r14-green queries sit
-    behind the window as the freshest cohort.
+    def key(name: str) -> tuple:
+        rounds = [r for r, green in by_round.items() if name in green]
+        return (bool(rounds), max(rounds, default=0), len(rounds), name)
 
-    The bench re-orders tiers for measurement isolation ("streaming"-named
-    tiers run last); see ``operators.pipeline_tiers``."""
+    return sorted(names, key=key)
+
+
+def query_tiers(
+    directory: str = _ARTIFACT_DIR,
+) -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
+    """Queries grouped by tier. The driver oracle-checks the first
+    ``GATE_WINDOW`` entries of :func:`queries`; those are the first
+    ``GATE_WINDOW`` queries of :func:`gate_order` over the committed
+    ``CORRECTNESS_r*.json`` files in ``directory``, so the window moves
+    by itself whenever a new artifact lands.
+
+    Layout: the window's batch queries (tier ``window``), then its
+    queries whose home tier the bench measures last (tier
+    ``window-streaming``, so ``bench.py`` still runs them after every
+    batch timing), then the rest of ``sql`` and of each home tier of
+    ``operators.pipeline_tiers``, in that order."""
+    from datafusion_distributed_experiment_spark.bench import _measure_last
+    from datafusion_distributed_experiment_spark.operators import pipeline_tiers
+
     sql: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _SQL_QUERIES:
         sql[name.split("/", 1)[1]] = _run_corpus(name)
     sql["q15"] = _run_q15_script()  # exercise the multi-statement machinery
 
-    from datafusion_distributed_experiment_spark.operators import pipeline_tiers
-
-    by_name: dict[str, dict[str, Callable[[SparkSession, str], DataFrame]]] = dict(
-        pipeline_tiers()
-    )
-
-    def _pop(tier: str, *names: str) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-        return {n: by_name[tier].pop(n) for n in names}
-
-    def _pop_sql(*names: str) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-        return {n: sql.pop(n) for n in names}
-
-    # --- slot 1: the promoted round-14 staged operator ------------------
-    promoted = _pop("dedup", "minhash_index_upsert")
-    # --- slots 2-24: last green r12, the round-14 sacrifice cohort ------
-    stale_r12 = {
-        **_pop("analytics", "top_terms"),
-        **_pop("temporal", "events_asof", "events_kmv_distinct", "events_range_join"),
-        **_pop("text", "fingerprint", "lang_id", "text_stats"),
-        **_pop_sql(
-            "q1",
-            "q3",
-            "q4",
-            "q5",
-            "q6",
-            "q7",
-            "q8",
-            "q9",
-            "q10",
-            "q11",
-            "q12",
-            "q14",
-            "q16",
-            "q18",
-            "q19",
-            "events_cube",
-        ),
-    }
-    # --- slots 25-36: r13-green with one to four green rows --------------
-    shallow_r13 = {
-        **_pop("similarity", "ivf_pq_index_build"),
-        **_pop("sketches", "events_quantile_sketch", "cms_heavy_hitters"),
-        **_pop("graph", "bfs_hops_t3", "lpa_communities_t3", "triangle_count"),
-        **_pop("retrieval", "bm25_topk"),
-        **_pop("bpe", "bpe_merges_t2"),
-        **_pop("selection", "dsir_weights"),
-        **_pop("dedup", "span_scrub", "winnow_fingerprints"),
-    }
-    # --- slots 37-49: the 14 alphabetically-first 5x-green r13 (minus
-    # stream_topk, which is 4x-green and rides the streaming subtier) -----
-    mid_r13 = {
-        **_pop("joins", "bloom_semi_agg"),
-        **_pop("cdc", "cdc_apply_changes"),
-        **_pop("curation", "chunk_documents", "decontaminate", "domain_mix", "domain_resample"),
-        **_pop("selection", "kmeans_assign"),
-        **_pop("pipeline", "corpus_pipeline"),
-        **_pop("custom", "custom_source_scan"),
-        **_pop("dedup", "dedup_clusters_star"),
-        **_pop("similarity", "embedding_quantize"),
-        **_pop("multimodal", "media_dedup", "media_frames", "media_meta_stats"),
-    }
-    # --- slot 50: the one streaming query in the window; its OWN
-    # "streaming"-named subtier so the bench measure-last rule (substring
-    # match on tier name) still pushes it behind every batch timing -------
-    window_streaming = _pop("streaming", "stream_topk")
-    # `sql` now holds only the r14-green SQL cohort (q2, q13, q15, q17,
-    # q20-q22, q1_decimal, the events adhoc re-verified at r14 — the
-    # freshest evidence)
-    tail_tiers = (
-        "selection",
-        "dedup",
-        "similarity",
-        "multimodal",
-        "curation",
-        "joins",
-        "cdc",
-        "profile",
-        "analytics",
-        "graph",
-        "retrieval",
-        "bpe",
-        "sketches",
-        "custom",
-        "pipeline",
-        "temporal",
-        "streaming",
-        "stateful",
-        "text",
-    )
+    home = [("sql", sql), *pipeline_tiers()]
+    tier_of = {name: tier for tier, qs in home for name in qs}
+    window = gate_order(tier_of, green_rounds(directory))[:GATE_WINDOW]
+    fns = {name: fn for _, qs in home for name, fn in qs.items()}
     out = [
-        ("promoted", promoted),
-        ("stale-r12", stale_r12),
-        ("shallow-r13", shallow_r13),
-        ("mid-r13", mid_r13),
-        ("shallow-r13-streaming", window_streaming),
-        # ---- window boundary: exactly 50 entries above this line ----
-        ("sql", sql),
-        *[(n, by_name[n]) for n in tail_tiers],
+        ("window", {n: fns[n] for n in window if not _measure_last(tier_of[n])}),
+        ("window-streaming", {n: fns[n] for n in window if _measure_last(tier_of[n])}),
+        *[(tier, {n: fn for n, fn in qs.items() if n not in window}) for tier, qs in home],
     ]
     return [(n, qs) for n, qs in out if qs]
 

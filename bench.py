@@ -138,15 +138,7 @@ def main() -> int:
     if mem_mode:
         entry_mod.preload_mem(spark, sf_dir, partitions=int(cpus))
 
-    # Staged operators (oracle-verified but not yet holding a driver-gate
-    # window slot; operators.staged_tiers) are benched alongside the
-    # declared surface so their round-over-round perf history starts NOW,
-    # not at promotion. run_benchmark still moves streaming last.
-    from datafusion_distributed_experiment_spark.operators import staged_tiers
-
-    tiers = entry_mod.query_tiers() + [
-        (f"staged-{name}", qs) for name, qs in staged_tiers()
-    ]
+    tiers = entry_mod.query_tiers()
     # Reference --query N analog (benchmarks/src/tpch/run.rs:140-143,
     # benchmarks/src/util/options.rs): SPARK_GRAFT_BENCH_ONLY=q9,bm25_topk
     # restricts the run to the named queries. Tier membership is preserved,

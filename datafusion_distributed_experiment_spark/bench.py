@@ -105,8 +105,9 @@ MEASURE_LAST_TIERS = ("streaming",)  # leaves RocksDB maintenance threads behind
 
 
 def _measure_last(tier_name: str) -> bool:
-    """Substring match so staged streaming tiers ("staged-streaming") get
-    the same end-of-run isolation as the declared streaming tier."""
+    """Substring match so the gate window's streaming tier
+    ("window-streaming") gets the same end-of-run isolation as the home
+    streaming tier."""
     return any(m in tier_name for m in MEASURE_LAST_TIERS)
 
 
@@ -236,8 +237,7 @@ def run_benchmark(
                 # entries are keyed by name alone: a duplicate would run one
                 # query twice per pass, merge both tiers' timings under the
                 # later tier, and leave a zero-iteration ghost row for the
-                # first — fail loudly (reachable mid-promotion if a staged
-                # name is also declared)
+                # first — fail loudly
                 raise ValueError(
                     f"duplicate bench query name {name!r}: tiers "
                     f"{entries[name]['tier']!r} and {tier_name!r}"
@@ -338,12 +338,6 @@ def headline_seconds(entry: dict) -> float | None:
     return min(i["elapsed_ms"] for i in its) / 1000.0
 
 
-# Backwards-compat alias: earlier rounds' artifacts/scripts call this
-# mean_seconds even though the estimator is the minimum (behavior change
-# predates the rename; the JSON artifact shape never encoded the name).
-mean_seconds = headline_seconds
-
-
 def mean_iter_seconds(entry: dict) -> float | None:
     """Arithmetic mean over iterations — the reference's estimator
     (BenchQuery::avg, reference benchmarks/src/util/run.rs:263-270).
@@ -413,15 +407,25 @@ def chunked_ms_lines(
             separators=(",", ":"),
         )
 
-    chunks: list[list[tuple[str, int]]] = []
-    cur: list[tuple[str, int]] = []
-    for item in items:
-        if cur and len(_line(9, 9, cur + [item])) > limit:
+    def _pack(widest: int) -> list[list[tuple[str, int]]]:
+        chunks: list[list[tuple[str, int]]] = []
+        cur: list[tuple[str, int]] = []
+        for item in items:
+            if cur and len(_line(widest, widest, cur + [item])) > limit:
+                chunks.append(cur)
+                cur = []
+            cur.append(item)
+        if cur:
             chunks.append(cur)
-            cur = []
-        cur.append(item)
-    if cur:
-        chunks.append(cur)
+        return chunks
+
+    # budget "part"/"of" at their real width: repack with one more digit
+    # until the chunk count fits the width it was packed for
+    widest = 9
+    chunks = _pack(widest)
+    while len(chunks) > widest:
+        widest = widest * 10 + 9
+        chunks = _pack(widest)
     n = len(chunks)
     return [_line(i + 1, n, c) for i, c in enumerate(chunks)]
 

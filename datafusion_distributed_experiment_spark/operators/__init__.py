@@ -19,25 +19,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
-    """Operator queries grouped by tier, in DRIVER-GATE order.
+    """Operator queries grouped by their home tier.
 
-    The grading driver oracle-checks the FIRST 50 entries of
-    ``__spark_entry__.queries()``, so the window ROTATES each round until
-    every operator has earned a driver-verified CORRECTNESS row. Round 4 led
-    with the volatile temporal/streaming/stateful tiers (round 3's
-    correctness rot lived there) and they are now proven green; round 5
-    leads with the dedup/similarity/multimodal/curation tiers — the 26
-    entries the driver had never checked (they were only covered by pytest
-    and the committed GATE.txt full sweep). The tiers now outside the window
-    all hold green rows in CORRECTNESS_r04 and stay covered by pytest +
-    gate.sh.
+    ``__spark_entry__.query_tiers`` keeps this order for the queries
+    outside the driver's gate window. The window itself is computed from
+    the committed ``CORRECTNESS_r*.json`` files: never-green queries first,
+    then by last green round (oldest first), then by number of green rounds
+    (fewest first), then by name.
 
-    This order is for CORRECTNESS runs (each entry independent). The bench
-    re-orders by tier name — streaming runs LAST there, because each
-    micro-batch query leaves RocksDB state-store maintenance threads and
-    checkpoint cleanup running for a while after it stops, which measurably
-    contaminates the next few *batch* query timings in a sequential bench
-    (observed 0.7s -> 5-8s on the text tier when streaming preceded it)."""
+    The bench runs streaming-named tiers last: each micro-batch query
+    leaves RocksDB state-store maintenance threads and checkpoint cleanup
+    running for a while after it stops, which measurably contaminates the
+    next few *batch* query timings in a sequential bench (observed 0.7s ->
+    5-8s on the text tier when streaming preceded it)."""
     from ..sources import custom
     from ..streaming import events as streaming_events
     from ..streaming import stateful
@@ -75,10 +69,10 @@ def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], 
         ("bpe", bpe.queries()),
         ("sketches", sketches.queries()),
         ("custom", custom.queries()),
-        ("stateful", stateful.queries()),
         ("pipeline", pipeline.queries()),
         ("temporal", temporal.queries()),
         ("streaming", streaming_events.queries()),
+        ("stateful", stateful.queries()),
         ("text", text.queries()),
     ]
 
@@ -87,63 +81,6 @@ def pipeline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for _, tier_queries in pipeline_tiers():
         out.update(tier_queries)
-    return out
-
-
-def staged_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
-    """Operators built and oracle-verified but NOT yet in the 50-entry
-    driver gate window. Each staged operator carries the same contract as a
-    declared query — (spark, sf_dir) callable + DuckDB oracle twin — and
-    ``tests/test_staged_oracle.py`` runs the full cross-engine hash
-    comparison over them in every pytest run; at the next rotation they
-    move into ``pipeline_tiers()`` and earn driver CORRECTNESS rows.
-
-    Round 10 staged events_quantile_sketch (promoted r11); round 11
-    staged ivf_pq_topk (promoted r12); round 12 staged ivf_pq_index_build
-    (promoted r13); round 13 staged ivf_pq_index_upsert (promoted r14);
-    round 14 stages minhash_index_upsert (the dedup-tier lifecycle
-    completion). Each round's VERDICT budgets at most ONE new staged
-    operator (the 123-query surface already cycles the gate window every
-    3 rounds; growth is deliberately near-frozen)."""
-    from ..streaming import events as streaming_events
-    from . import bpe, curation, dedup, graph, retrieval, selection, similarity, sketches
-
-    return [
-        ("graph", graph.staged_queries()),
-        ("retrieval", retrieval.staged_queries()),
-        ("selection", selection.staged_queries()),
-        ("bpe", bpe.staged_queries()),
-        ("dedup", dedup.staged_queries()),
-        ("sketches", sketches.staged_queries()),
-        ("similarity", similarity.staged_queries()),
-        ("curation", curation.staged_queries()),
-        # named so the bench's measure-last rule matches it (RocksDB
-        # maintenance threads must not contaminate batch timings)
-        ("streaming-staged", streaming_events.staged_queries()),
-    ]
-
-
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for _, tier in staged_tiers():
-        out.update(tier)
-    return out
-
-
-def staged_oracles() -> dict[str, str]:
-    from ..streaming import events as streaming_events
-    from . import bpe, curation, dedup, graph, retrieval, selection, similarity, sketches
-
-    out: dict[str, str] = {}
-    out.update(graph.staged_oracles())
-    out.update(retrieval.staged_oracles())
-    out.update(selection.staged_oracles())
-    out.update(bpe.staged_oracles())
-    out.update(dedup.staged_oracles())
-    out.update(sketches.staged_oracles())
-    out.update(similarity.staged_oracles())
-    out.update(curation.staged_oracles())
-    out.update(streaming_events.staged_oracles())
     return out
 
 

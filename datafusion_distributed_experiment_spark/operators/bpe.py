@@ -410,17 +410,6 @@ def oracles() -> dict[str, str]:
     }
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Empty since the round-8 promotion: bpe_apply moved into
-    :func:`queries` and the driver gate window."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-8 promotion (see :func:`staged_queries`)."""
-    return {}
-
-
 def _bpe_apply_oracle() -> dict[str, str]:
     toks = DUCK_TOKENS.format(x="text")
     return {

@@ -847,17 +847,6 @@ def oracles() -> dict[str, str]:
     }
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Empty since the round-8 promotion: weighted_sample moved into
-    :func:`queries` and the driver gate window."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-8 promotion (see :func:`staged_queries`)."""
-    return {}
-
-
 def _weighted_sample_oracle() -> dict[str, str]:
     return {
         "weighted_sample": f"""

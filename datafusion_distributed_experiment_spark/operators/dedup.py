@@ -1847,18 +1847,6 @@ def oracles() -> dict[str, str]:
     return out
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round 14 staged :func:`minhash_index_upsert` (the one staged slot
-    the round-13 VERDICT budgeted); it was PROMOTED into the declared
-    surface at the round-15 rotation (it leads the round-15 gate window)
-    and no new operator is staged — round 15 is an optimization round."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    return {}
-
-
 def spill_evidence() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Spill-measurement companions for queries whose RETURNED frame is
     broadcast-only by design (see :func:`minhash_index_spill_evidence`);
@@ -1922,8 +1910,8 @@ def _minhash_index_upsert_oracle() -> str:
             )
             -- stats over hist: the Spark build keys the location on the
             -- FILTERED historical corpus (count + doc_id fingerprint)
-            WHERE CAST(n AS BIGINT) = (SELECT COUNT(*) FROM hist)
-              AND CAST(f AS BIGINT) = (SELECT {duck_fp} FROM hist)
+            WHERE TRY_CAST(n AS BIGINT) = (SELECT COUNT(*) FROM hist)
+              AND TRY_CAST(f AS BIGINT) = (SELECT {duck_fp} FROM hist)
         ), idx_capped AS (
             SELECT * FROM (
                 SELECT *, COUNT(*) OVER (PARTITION BY band_idx, x, y) AS bucket_n

@@ -523,12 +523,6 @@ def bfs_frame(seeds: DataFrame, und: DataFrame, iters: int = BFS_ITERS) -> DataF
     )
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Empty since the round-7 promotion: triangle_count / lpa_communities_t3
-    / bfs_hops_t3 moved into :func:`queries` and the driver gate window."""
-    return {}
-
-
 def _lpa_round(prev: str, i: int) -> str:
     return f"""
             s{i} AS (
@@ -577,11 +571,6 @@ def _bfs_round(i: int) -> str:
                 SELECT p.v, LEAST(p.d, COALESCE(b.nd, {BFS_INF})) AS d
                 FROM d{i} p LEFT JOIN b{i} b ON b.v = p.v
             )"""
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-7 promotion (see :func:`staged_queries`)."""
-    return {}
 
 
 def _t3_oracles() -> dict[str, str]:

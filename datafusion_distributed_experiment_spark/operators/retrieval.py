@@ -182,17 +182,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {"bm25_topk": bm25_topk}
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Empty since the round-7 promotion: bm25_topk moved into
-    :func:`queries` and the driver gate window."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-7 promotion (see :func:`staged_queries`)."""
-    return {}
-
-
 _TOKS = DUCK_TOKENS.format(x="text")
 _DOC_HASH = DUCK_POLY_HASH.format(x="CAST(doc_id AS VARCHAR)")
 

@@ -507,17 +507,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Empty since the round-7 promotion: dsir_weights moved into
-    :func:`queries` and the driver gate window."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-7 promotion (see :func:`staged_queries`)."""
-    return {}
-
-
 def _dsir_oracle() -> dict[str, str]:
     poly_t = DUCK_POLY_HASH.format(x="t")
     return {

@@ -1323,20 +1323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round 14 promoted :func:`ivf_pq_index_upsert` (the round-13 staged
-    operator — incremental maintenance of the persisted IVF-PQ index) into
-    :func:`queries`. The ANN lifecycle (build → serve → maintain) is now
-    fully declared; the round-14 staged slot lives in the dedup tier
-    (``dedup.staged_queries`` — the persisted MinHash LSH index maintain
-    step, completing the dedup lifecycle the same way)."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    return {}
-
-
 _DOT_QV = DUCK_DOT.format(a="qv", b="v", n=DIM)
 _DOT_AB = DUCK_DOT.format(a="av", b="bv", n=DIM)
 _NORM = DUCK_DOT.format(a="v", b="v", n=DIM)
@@ -1491,8 +1477,8 @@ def _ivf_pq_index_oracle() -> str:
             )
             -- stats over vecs, not raw embeddings: the Spark build keys the
             -- location on the FILTERED corpus (exclusion contract)
-            WHERE CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
-              AND CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
+            WHERE TRY_CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
+              AND TRY_CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
         ), cent AS (
             SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs
             WHERE vec_id < (SELECT GREATEST({IVF_K_MIN}, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) FROM vecs)
@@ -1590,8 +1576,8 @@ def _ivf_pq_upsert_oracle() -> str:
             -- location on the FILTERED ORIGINAL corpus (exclusion contract;
             -- the fingerprint closes the same-count clobber race — round-14
             -- review)
-            WHERE CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
-              AND CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
+            WHERE TRY_CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
+              AND TRY_CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
         ), cent AS (
             SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs
             WHERE vec_id < (SELECT GREATEST({IVF_K_MIN}, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) FROM vecs)

@@ -782,17 +782,6 @@ def _quantile_sketch_oracle() -> dict[str, str]:
     }
 
 
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round 10 staged :func:`events_quantile_sketch`; it was promoted into
-    the gate window at the round-11 rotation (lead slot), so this tier is
-    empty again — the machinery stays for the next round's budgeted +1."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    return {}
-
-
 def _hll_oracle() -> dict[str, str]:
     from .temporal import HASH_HEX_DIGITS
 

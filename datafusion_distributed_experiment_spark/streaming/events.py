@@ -354,17 +354,6 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def staged_queries():
-    """Empty since the round-7 promotion: stream_topk moved into
-    :func:`queries` and the driver gate window."""
-    return {}
-
-
-def staged_oracles() -> dict[str, str]:
-    """Empty since the round-7 promotion (see :func:`staged_queries`)."""
-    return {}
-
-
 def _topk_oracle() -> dict[str, str]:
     return {
         "stream_topk": f"""

@@ -7,14 +7,23 @@ sides, single shared exchanges, map-only probes) without running Spark —
 the same role the reference's committed insta plan snapshots play
 (reference ``tests/distributed_aggregation.rs:32-62``).
 
-Usage: python scripts/dump_plans.py   # rewrites PLANS.md at the repo root
+With query names it instead dumps each one's ``.explain("formatted")`` to
+``plans/<name>_<label>.txt``: run it with ``before`` at the parent commit
+and with ``after`` on the change, so plan-shape claims can be checked
+without running Spark. That mode reads ``$SPARK_GRAFT_SF_DIR`` and
+``$SPARK_GRAFT_CPUS`` (default 32) so the plans match the bench's scale.
+
+Usage: python scripts/dump_plans.py                      # rewrites PLANS.md
+       python scripts/dump_plans.py LABEL NAME [NAME ...]  # plans/NAME_LABEL.txt
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -152,25 +161,59 @@ SHOWCASE = [
 EXECUTE_FIRST = {"corpus_pipeline", "dedup_clusters", "dedup_clusters_star"}
 
 
-def main() -> int:
-    import __spark_entry__ as entry_mod
+def _session(cpus: int):
     from datafusion_distributed_experiment_spark import build_session
+
+    spark = build_session(
+        app_name="dump-plans",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={"spark.ui.enabled": "false"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def dump_named(label: str, names: list[str]) -> int:
+    """Write ``plans/<name>_<label>.txt`` for each named query."""
+    import __spark_entry__ as entry_mod
+    from datafusion_distributed_experiment_spark.plans import normalized_plan
+
+    queries = entry_mod.queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"unknown query names: {unknown}", file=sys.stderr)
+        return 2
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    spark = _session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    out_dir = os.path.join(REPO, "plans")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = normalized_plan(queries[name](spark, sf_dir), "formatted")
+        path = os.path.join(out_dir, f"{name}_{label}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+    spark.stop()
+    return 0
+
+
+def main() -> int:
+    if len(sys.argv) > 1:
+        if len(sys.argv) < 3:
+            print(__doc__, file=sys.stderr)
+            return 2
+        return dump_named(sys.argv[1], sys.argv[2:])
+
+    import __spark_entry__ as entry_mod
     from datafusion_distributed_experiment_spark.plans import (
         normalized_plan,
         pushed_filters,
         stage_summary,
     )
 
-    spark = build_session(
-        app_name="dump-plans",
-        master="local[4]",
-        shuffle_partitions=4,
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from datafusion_distributed_experiment_spark.operators import staged_queries
-
-    queries = {**entry_mod.queries(), **staged_queries()}
+    spark = _session(4)
+    queries = entry_mod.queries()
 
     out = [
         "# Physical plans of the headline operators",
@@ -222,7 +265,7 @@ def main() -> int:
             out.append("```")
         out.append("")
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"PLANS.md written ({len(SHOWCASE)} plans)")
     return 0

@@ -41,12 +41,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entry_mod.queries()
-    from datafusion_distributed_experiment_spark.operators import staged_tiers
-
-    for _, tier in staged_tiers():
-        qs.update(tier)
-    fn = qs[args.query]
+    fn = entry_mod.queries()[args.query]
 
     # warm-up (unmeasured): python worker pool + JIT + page cache
     n = spark.sparkContext.defaultParallelism

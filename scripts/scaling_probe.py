@@ -214,9 +214,7 @@ def main() -> int:
     only = args or (XSTEP_OPS if xstep else PROBE_OPS)
     spark = build_session(app_name="scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    from datafusion_distributed_experiment_spark.operators import staged_queries
-
-    queries = {**entry_mod.queries(), **staged_queries()}
+    queries = entry_mod.queries()
     # validate up front: a typo'd op would otherwise KeyError AFTER the
     # earlier ops' minutes of probing, discarding the whole run's output
     unknown = [n for n in only if n not in queries]

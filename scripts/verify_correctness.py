@@ -63,20 +63,9 @@ def main() -> int:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    from datafusion_distributed_experiment_spark.operators import (
-        staged_oracles,
-        staged_queries,
-    )
-
-    # Staged operators are addressable by NAME for subset runs (so the
-    # gate's sf0.1 data-sensitive list can include them before they hold a
-    # window slot); the default full sweep stays the declared surface —
-    # scripts/verify_staged.py is the staged tier's own full sweep.
-    queries = dict(entry_mod.queries())
-    oracles = dict(entry_mod.oracle_sql())
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
     if only:
-        queries.update(staged_queries())
-        oracles.update(staged_oracles())
         unknown = only - set(queries)
         if unknown:
             # fail LOUDLY: a renamed/dropped query silently skipped here

@@ -104,13 +104,8 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    from datafusion_distributed_experiment_spark.operators import (
-        staged_oracles,
-        staged_queries,
-    )
-
-    queries = {**entry_mod.queries(), **staged_queries()}
-    oracles = {**entry_mod.oracle_sql(), **staged_oracles()}
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
 
     # Queries whose spill-bearing stage is a side-effect write (the
     # RETURNED probe is broadcast-only by design, so its executed plan

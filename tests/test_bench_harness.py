@@ -7,7 +7,6 @@ from datafusion_distributed_experiment_spark.bench import (
     FLOOR_EXTRA,
     headline_seconds,
     mean_iter_seconds,
-    mean_seconds,
     run_benchmark,
     spread_ratio,
 )
@@ -89,7 +88,6 @@ def test_failing_query_is_isolated_and_skipped_in_later_passes():
 def test_min_estimator_and_spread():
     entry = {"iterations": [{"elapsed_ms": v} for v in (1058.0, 11500.0, 10329.0, 800.0, 770.0)]}
     assert headline_seconds(entry) == 0.77  # min recovers the uncontaminated cost
-    assert mean_seconds is headline_seconds  # compat alias
     assert spread_ratio(entry) == round(11500.0 / 770.0, 2)
     assert headline_seconds({"iterations": []}) is None
     assert spread_ratio({"iterations": [{"elapsed_ms": 5.0}]}) is None
@@ -308,10 +306,11 @@ def test_bench_cli_flags_map_to_env(monkeypatch):
 
 
 def test_chunked_ms_lines_fit_and_round_trip():
-    """Round-15 driver-visibility fix: the per-query map re-encoded as
-    integer-ms detail lines — every line <= 1000 chars and independently
-    parseable, the union of chunks reproduces the full map exactly
-    (ms = round(1000 * s)), parts numbered 1..n in input order."""
+    """The per-query map re-encoded as integer-ms detail lines: every line
+    <= 1000 chars and independently parseable, the union of chunks
+    reproduces the full map exactly (ms = round(1000 * s)), parts numbered
+    1..n in input order. Two inputs: the real surface (a handful of
+    chunks) and a map large enough for two-digit part numbers."""
     import json
 
     from datafusion_distributed_experiment_spark.bench import chunked_ms_lines
@@ -320,23 +319,24 @@ def test_chunked_ms_lines_fit_and_round_trip():
 
     # the real surface's names (worst case for line length) with plausible
     # 2-decimal headline values, exactly as bench.py main builds per_query
-    per_query = {
+    surface = {
         name: round(0.1 + (i % 77) * 0.13, 2)
         for i, name in enumerate(entry_mod.queries())
     }
-    lines = chunked_ms_lines(per_query)
-    assert 2 <= len(lines) <= 4, f"expected a handful of chunks, got {len(lines)}"
-    merged: dict[str, int] = {}
-    for i, line in enumerate(lines):
-        assert len(line) <= 1000, f"chunk {i + 1} is {len(line)} chars"
-        obj = json.loads(line)
-        assert obj["detail"] == "per_query_ms"
-        assert obj["part"] == i + 1 and obj["of"] == len(lines)
-        assert not (set(obj["queries"]) & set(merged)), "chunks must not overlap"
-        merged.update(obj["queries"])
-    assert merged == {n: int(round(s * 1000)) for n, s in per_query.items()}
-    # order stability: concatenated chunk keys == input order
-    keys: list[str] = []
-    for line in lines:
-        keys.extend(json.loads(line)["queries"])
-    assert keys == list(per_query)
+    # 14 chunks; a budget that assumed one-digit part numbers let three
+    # of them reach 1001-1002 chars
+    many = {f"query_{i:04d}{'x' * (i % 7)}": 1.0 for i in range(600)}
+    for per_query, fewest, most in ((surface, 2, 4), (many, 10, 99)):
+        lines = chunked_ms_lines(per_query)
+        assert fewest <= len(lines) <= most, f"got {len(lines)} chunks"
+        merged: dict[str, int] = {}
+        for i, line in enumerate(lines):
+            assert len(line) <= 1000, f"chunk {i + 1} is {len(line)} chars"
+            obj = json.loads(line)
+            assert obj["detail"] == "per_query_ms"
+            assert obj["part"] == i + 1 and obj["of"] == len(lines)
+            assert not (set(obj["queries"]) & set(merged)), "chunks must not overlap"
+            merged.update(obj["queries"])
+        assert merged == {n: int(round(s * 1000)) for n, s in per_query.items()}
+        # order stability: concatenated chunk keys == input order
+        assert list(merged) == list(per_query)

@@ -1,6 +1,6 @@
 """BPE merge-round semantics: the greedy left-to-right rule on constructed
 words, plus a pure-Python replica differential. The cross-engine oracle check
-(test_staged_oracle) proves Spark == DuckDB; these prove both equal the BPE
+(test_corpus_oracle) proves Spark == DuckDB; these prove both equal the BPE
 algorithm itself — in particular the overlapping-run rule ("aaaa" under
 (a,a) -> "aa","aa", never "a","aa","a").
 """

@@ -96,12 +96,9 @@ def test_staged_ops_are_partition_count_independent(name, spark):
     plus the round-7 staged tier (checkpointed oriented edges,
     broadcast-restricted postings, feature-count shuffles, 1-row argmax
     from shuffled pair counts)."""
-    from datafusion_distributed_experiment_spark.operators import (
-        pipeline_queries,
-        staged_queries,
-    )
+    from datafusion_distributed_experiment_spark.operators import pipeline_queries
 
-    fn = {**pipeline_queries(), **staged_queries()}[name]
+    fn = pipeline_queries()[name]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "1")
@@ -136,27 +133,23 @@ def _already_differential_tested() -> set[str]:
 
 
 def _full_surface_rest() -> list[str]:
-    from datafusion_distributed_experiment_spark.operators import staged_queries
-
     covered = _already_differential_tested()
-    names = list(entry_mod.queries()) + list(staged_queries())
-    return [n for n in names if n not in covered]
+    return [n for n in entry_mod.queries() if n not in covered]
 
 
 @pytest.mark.parametrize("name", _full_surface_rest())
 def test_full_surface_partition_count_independence(name, spark):
     """The reference's core differential strategy applied to the WHOLE
     remaining surface (the two lists above cover the rest): every declared
-    and staged query must produce identical results at 1 vs 8 shuffle
+    query must produce identical results at 1 vs 8 shuffle
     partitions. Cross-query operator memos (the dedup pair graph) are
     evicted between topologies so a cached result cannot fake
     independence; streaming queries re-drain their bounded replay under
     each topology (their STATE partitioning is fixed by _stream_session —
     what this checks is the batch half and the drain plumbing)."""
     from datafusion_distributed_experiment_spark.bench import _evict_query_state
-    from datafusion_distributed_experiment_spark.operators import staged_queries
 
-    fn = {**entry_mod.queries(), **staged_queries()}[name]
+    fn = entry_mod.queries()[name]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "1")

@@ -1,5 +1,5 @@
-"""IVF-PQ staged-operator tests (oracle parity runs in
-tests/test_staged_oracle.py; these pin the algorithm and the guard).
+"""IVF-PQ operator tests (oracle parity runs in
+tests/test_corpus_oracle.py; these pin the algorithm and the guard).
 
 The cross-engine oracle is independent SQL, but both sides share the
 pipeline DESIGN, so per the replica doctrine (SURVEY §5 / the round-8

@@ -1,6 +1,6 @@
-"""IVF-PQ incremental index maintenance (ivf_pq_index_upsert, staged
-round 13; oracle parity over the post-upsert on-disk state runs in
-tests/test_staged_oracle.py).
+"""IVF-PQ incremental index maintenance (ivf_pq_index_upsert; oracle
+parity over the post-upsert on-disk state runs in
+tests/test_corpus_oracle.py).
 
 The four claims that make incremental maintenance worth building, each
 pinned:
@@ -391,14 +391,14 @@ def test_apply_index_delta_equals_set_semantics_on_random_inputs(
     assert got == want, (base_rows, delta_rows, sorted(rm_effective))
 
 
-def test_folded_write_equals_base_minus_rm_plus_delta(spark):
+def test_folded_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
     """Round-15 fold: _write_base_index(rm_keys=, delta_enc=) writes the
     post-delta state in ONE pass — on-disk content must equal
     encode(base) minus the removal keys plus the delta encodings, for an
     arbitrary (not batch-derived) delta, including a list emptied by the
     removal (static overwrite clears its directory)."""
     vecs, centroids, cb, seed_rows = _frozen_fit(spark)
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs)) + "_foldtest"
+    path = str(tmp_path / "foldtest")
     base = {
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in _pq_encode(vecs, centroids, cb).collect()

@@ -1,6 +1,6 @@
-"""Persisted MinHash LSH band index maintenance (minhash_index_upsert,
-staged round 14; oracle parity over the post-upsert on-disk state runs in
-tests/test_staged_oracle.py).
+"""Persisted MinHash LSH band index maintenance (minhash_index_upsert;
+oracle parity over the post-upsert on-disk state runs in
+tests/test_corpus_oracle.py).
 
 The dedup-tier twin of tests/test_ivf_pq_upsert.py — the same four claims
 that make incremental maintenance worth building, each pinned:
@@ -408,13 +408,13 @@ def test_apply_band_delta_equals_set_semantics_on_random_inputs(
     assert got == want, (base_rows, delta_rows, sorted(rm_effective))
 
 
-def test_folded_band_write_equals_base_minus_rm_plus_delta(spark):
+def test_folded_band_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
     """Round-15 fold: _write_base_band_index(rm_keys=, delta_bands=)
     writes the post-delta state in ONE pass — on-disk content must equal
     bands(hist) minus the removal keys plus the delta band rows, for an
     arbitrary delta, including a partition emptied by the removal."""
-    hist, max_id, path = _hist_stats(spark)
-    path = path + "_foldtest"
+    hist, max_id, _ = _hist_stats(spark)
+    path = str(tmp_path / "foldtest")
     base = {
         (int(r["doc_id"]), int(r["band_idx"]), int(r["x"]), int(r["y"]), int(r["bucket"]))
         for r in _bands_with_bucket(
@@ -445,3 +445,36 @@ def test_folded_band_write_equals_base_minus_rm_plus_delta(spark):
     assert not os.path.exists(
         os.path.join(path, f"band_idx={victim[0]}", f"bucket={victim[1]}")
     )
+
+
+def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeypatch):
+    """Both fold writers leave sibling directories whose ``f=`` value is not
+    an integer inside the index table roots, then both upsert oracles run
+    in that same warehouse: they select their partition by value and must
+    skip the foreign directories instead of failing to cast them."""
+    from datafusion_distributed_experiment_spark.operators import (
+        pipeline_oracles,
+        pipeline_queries,
+    )
+    from datafusion_distributed_experiment_spark.operators.similarity import (
+        _write_base_index,
+        corpus_fingerprint,
+        ivf_pq_upsert_location,
+    )
+
+    from ._compare import assert_frames_match
+    from .test_ivf_pq_upsert import _frozen_fit
+
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path))
+    vecs, centroids, cb, _ = _frozen_fit(spark)
+    _write_base_index(
+        vecs, centroids, cb, ivf_pq_upsert_location(*corpus_fingerprint(vecs)) + "_foldtest"
+    )
+    hist, _, path = _hist_stats(spark)
+    _write_base_band_index(hist, path + "_foldtest")
+
+    queries, oracles = pipeline_queries(), pipeline_oracles()
+    for name in ("ivf_pq_index_upsert", "minhash_index_upsert"):
+        got = queries[name](spark, SF_DIR).toPandas()
+        assert len(got) > 0, f"{name}: empty result proves nothing"
+        assert_frames_match(got, duck.execute(oracles[name]).df(), name)

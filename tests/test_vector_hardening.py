@@ -78,8 +78,8 @@ def test_embedding_consumers_agree_on_null_and_zero_vectors(
 ):
     """Every embedding consumer must ANSWER (no raw TypeError, no engine
     crash) and hash-match its oracle on the NULL/zero corpus."""
-    qs = {**S.queries(), **SEL.queries(), **S.staged_queries()}
-    os_ = {**S.oracles(), **SEL.oracles(), **S.staged_oracles()}
+    qs = {**S.queries(), **SEL.queries()}
+    os_ = {**S.oracles(), **SEL.oracles()}
     sdf = qs[name](spark, adversarial_dir).toPandas()
     assert len(sdf) > 0, f"{name}: empty result proves nothing"
     odf = _oracle_conn(adversarial_dir).execute(os_[name]).df()
@@ -119,10 +119,6 @@ def test_empty_corpus_answers_like_the_oracle(spark, tmp_path):
     import pyarrow.parquet as pq
 
     import __spark_entry__ as entry_mod
-    from datafusion_distributed_experiment_spark.operators import (
-        staged_oracles,
-        staged_queries,
-    )
 
     sys_src = "/root/testdata/sf0.001"
     d = tmp_path / "empty"
@@ -139,8 +135,8 @@ def test_empty_corpus_answers_like_the_oracle(spark, tmp_path):
     for t in tables:
         if os.path.exists(f"{d}/{t}.parquet"):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
-    qs = {**entry_mod.queries(), **staged_queries()}
-    os_ = {**entry_mod.oracle_sql(), **staged_oracles()}
+    qs = entry_mod.queries()
+    os_ = entry_mod.oracle_sql()
     names = [
         # the six previously-crashing model-fit operators
         "ann_ivf", "semantic_dedup", "ivf_pq_topk", "ivf_pq_index_build",
