@@ -342,8 +342,8 @@ class Engine:
         §6 small files: without it every input task writes a sliver into
         every bucket, n_tasks x n_buckets files — measured 650 files for a
         2000-row index at sf0.1, taxing the write, every bucket-pruned
-        read, and the oracle's glob; the ``_write_base_index`` hive-layout
-        twin measured 10.7 s -> 6.0 s from the same fix)."""
+        read, and the oracle's glob; the ``sources.write_partitioned``
+        hive-layout twin measured 10.7 s -> 6.0 s from the same fix)."""
         from pyspark.sql import functions as F
 
         writer = (

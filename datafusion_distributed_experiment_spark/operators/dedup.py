@@ -1269,7 +1269,7 @@ def _cluster_output(labels: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------- #
-# persisted MinHash LSH band index: build once, maintain under CDC
+# persisted MinHash LSH band index, rebuilt under a CDC batch
 # (minhash_index_upsert, staged round 14)
 # --------------------------------------------------------------------- #
 # The dedup-tier twin of the ANN lifecycle (similarity.ivf_pq_index_build
@@ -1278,8 +1278,8 @@ def _cluster_output(labels: DataFrame) -> DataFrame:
 # :func:`dedup_incremental` proves the probe SHAPE (incoming bands
 # broadcast onto the historical corpus) but recomputes the index
 # signatures from parquet on every run; at 100 TB the banded signature
-# index is a PERSISTED table, built once and MAINTAINED under the daily
-# CDC feed. Layout: hive-partitioned by (band_idx, bucket) where
+# index is a PERSISTED table refreshed under the daily CDC feed. Layout:
+# hive-partitioned by (band_idx, bucket) where
 # bucket = (x*31 + y) % MINHASH_INDEX_BUCKETS — a pure integer function
 # of the band key (x, y in [0, P): non-negative, so both engines agree on
 # the modulus), which gives the two properties the maintain/serve split
@@ -1357,54 +1357,18 @@ def _minhash_change_batch(hist: DataFrame, max_id: int) -> DataFrame:
     return dele.unionAll(upd).unionAll(ins)
 
 
-def _write_base_band_index(
-    hist: DataFrame,
-    path: str,
-    rm_keys: DataFrame | None = None,
-    delta_bands: DataFrame | None = None,
-) -> None:
-    """Base index: full STATIC write partitioned by (band_idx, bucket) —
-    the build-once step a production pipeline amortizes across every
-    later refresh. The repartition on the partition columns is the
-    one-file-per-partition write-layout lesson from the IVF base write
-    (without it every input task writes a sliver into every directory —
-    n_tasks x 32 small files taxing the write, every pruned read, and
-    the oracle's glob). The width is pinned explicitly
-    (``partitioned_write_width``: min(session width, partition count))
-    so AQE cannot stage-and-coalesce the exchange into one serial writer
-    task (the IVF base-write measurement, similarity._write_base_index).
-
-    ``rm_keys`` / ``delta_bands`` (optimization round 15, the
-    ``similarity._write_base_index`` fold mirrored): when the SAME
-    invocation that builds the base also applies a CDC delta (the
-    declared ``minhash_index_upsert`` lifecycle), the post-delta state
-    — ``bands(hist) ⟕anti rm_keys ∪ delta_bands`` — is written directly
-    in this one pass, saving the index read-back, the per-partition
-    stats aggregate and the second (touched-partition) write the
-    build-then-rewrite shape paid. Broadcast anti-join: the index side
-    still never shuffles; static overwrite clears emptied partitions
-    with the rest of the stale layout. :func:`_apply_band_delta` remains
-    the standalone refresh kernel for a PRE-EXISTING index."""
-    from ..sources.tables import partitioned_write_width
-
+def _band_index_rows(
+    hist: DataFrame, rm_keys: DataFrame, delta_bands: DataFrame
+) -> DataFrame:
+    """Band index rows of the merged corpus, spelled
+    ``bands(hist) ⟕anti rm_keys ∪ delta_bands``: the delta signatures are
+    already materialized for the serve probe, so only the historical
+    bands are computed here. No join hint: the planner broadcasts the
+    removal keys from their size statistics and falls back to a
+    sort-merge join when they outgrow the broadcast threshold."""
     bands = _bands_with_bucket(_with_signature(hist).select("doc_id", "sig"))
-    if rm_keys is not None:
-        bands = bands.join(F.broadcast(rm_keys), "doc_id", "left_anti")
-    if delta_bands is not None:
-        bands = bands.unionByName(delta_bands.select(*bands.columns))
-    (
-        bands
-        .repartition(
-            partitioned_write_width(
-                hist.sparkSession, len(BANDS) * MINHASH_INDEX_BUCKETS
-            ),
-            F.col("band_idx"),
-            F.col("bucket"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("band_idx", "bucket")
-        .parquet(path)
+    return bands.join(rm_keys, "doc_id", "left_anti").unionByName(
+        delta_bands.select(*bands.columns)
     )
 
 
@@ -1430,99 +1394,6 @@ def _read_band_index(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _apply_band_delta(
-    spark: SparkSession,
-    path: str,
-    delta_bands: DataFrame,
-    rm_keys: DataFrame,
-    new_parts: set[tuple[int, int]] | None = None,
-) -> list[tuple[int, int]]:
-    """Rewrite ONLY the touched (band_idx, bucket) partitions of the
-    persisted band index at ``path``: touched = (partitions holding a
-    removed/updated doc's band rows) ∪ (partitions the delta band rows
-    land in). Mirrors ``similarity._apply_index_delta`` step for step:
-
-    - finding old partitions is ONE map-only index scan (slim integer
-      columns) against the broadcast delta key set — the historical index
-      NEVER shuffles;
-    - ONE per-partition stats aggregate (optimization round 14, the
-      ``_apply_index_delta`` restructure mirrored): per (band_idx,
-      bucket), the count of index rows matching a removal key (>0 →
-      touched-by-removal) and of index rows surviving — the old shape's
-      four driver actions (old-parts collect, new-parts collect, rewrite
-      localCheckpoint, survivor collect) fold into one fixed-size
-      aggregate; the shuffle carries 4 x MINHASH_INDEX_BUCKETS partial
-      rows per task, never index rows. A partition survives iff it keeps
-      an index row or receives a delta row, so per-partition delta counts
-      reduce to ``new_parts`` membership;
-    - ``new_parts`` (the delta rows' distinct partition set) may be
-      passed in when the caller already collected it — the upsert shares
-      ONE collect between the delta apply and the serve probe, whose
-      partition sets are identical by construction;
-    - the rewrite reads only the touched partitions (PartitionFilters),
-      anti-joins the broadcast removal keys map-side, unions the delta,
-      and dynamic-partition-overwrite replaces exactly those directories
-      — consumed exactly once, no checkpoint materialization;
-    - an emptied partition is dropped via the Hadoop FS API, verified
-      gone, loud on failure (``sources.tables.drop_partition_dirs``).
-
-    Returns the sorted touched (band_idx, bucket) pairs."""
-    from ..sources.tables import (
-        drop_partition_dirs,
-        overwrite_partitions,
-        partitioned_write_width,
-    )
-
-    index = _read_band_index(spark, path)
-    if new_parts is None:
-        new_parts = {
-            (int(r["band_idx"]), int(r["bucket"]))
-            for r in delta_bands.select("band_idx", "bucket").distinct().collect()
-        }
-    stats = (
-        index.join(F.broadcast(rm_keys.withColumn("__rm", F.lit(True))), "doc_id", "left")
-        .groupBy("band_idx", "bucket")
-        .agg(
-            F.count_if(F.col("__rm").isNotNull()).alias("n_rm"),
-            F.count_if(F.col("__rm").isNull()).alias("n_keep"),
-        )
-        .collect()
-    )
-    old_parts = {
-        (int(r["band_idx"]), int(r["bucket"])) for r in stats if r["n_rm"] > 0
-    }
-    touched = sorted(old_parts | new_parts)
-    if not touched:
-        return touched
-    keepers = {
-        (int(r["band_idx"]), int(r["bucket"])) for r in stats if r["n_keep"] > 0
-    }
-    survivors = new_parts | (set(touched) & keepers)
-    rewrite = (
-        index.filter(_partition_predicate(touched))
-        .join(F.broadcast(rm_keys), "doc_id", "left_anti")
-        .unionByName(delta_bands.select("doc_id", "x", "y", "band_idx", "bucket"))
-        # one file per touched partition (the base-write shuffle analog —
-        # the exchange is bounded by touched-partition bytes, never the
-        # index); explicit width so AQE cannot stage-and-coalesce the
-        # write into one serial writer task (see _write_base_band_index)
-        .repartition(
-            partitioned_write_width(spark, len(touched)),
-            F.col("band_idx"),
-            F.col("bucket"),
-        )
-    )
-    overwrite_partitions(rewrite, path, ["band_idx", "bucket"])
-    drop_partition_dirs(
-        spark,
-        [
-            f"{path}/band_idx={b}/bucket={k}"
-            for (b, k) in set(touched) - survivors
-        ],
-    )
-    return touched
-
-
 def probe_band_index(
     spark: SparkSession,
     path: str,
@@ -1543,9 +1414,9 @@ def probe_band_index(
     Output one row per verified pair: (probe_id, index_id, jaccard_ppm).
 
     ``probed`` (the probe bands' distinct partition set) may be passed in
-    when the caller already collected it — the maintain cycle's probe IS
-    the delta batch, so its partition set was already in hand from the
-    delta apply (optimization round 14: one collect instead of two)."""
+    when the caller already collected it — the upsert's probe IS the
+    delta batch, whose partition set the caller collects once
+    (optimization round 14: one collect instead of two)."""
     probe_bands = _bands_with_bucket(probe_sigs.select("doc_id", "sig"))
     if probed is None:
         probed = sorted(
@@ -1610,7 +1481,7 @@ def minhash_index_spill_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The spill-bearing stage of the maintain cycle, spelled measurably
     for the forced-spill sweep: the band rows sorted by the partition
     columns within each task — exactly the UnsafeExternalSorter pass a
-    dynamic-partition parquet write runs inside every task before opening
+    partitioned parquet write runs inside every task before opening
     files, which is where this operator's buffers live. The probe the
     operator RETURNS is broadcast-only with candidate volume bounded by
     |delta bands| x MAX_BAND_BUCKET (the scale property under test), so
@@ -1625,35 +1496,29 @@ def minhash_index_spill_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental maintenance of the persisted MinHash LSH band index
-    (staged round 14): build the partitioned index from the historical
-    corpus, apply a CDC-shaped document change batch
+    """Refresh of the persisted MinHash LSH band index under a CDC batch
+    (staged round 14): apply a document change batch
     (insert/update/delete, derived deterministically — see
-    :func:`_minhash_change_batch`), then serve a near-dup probe of the
-    delta batch from the maintained on-disk index. Completes the dedup
+    :func:`_minhash_change_batch`) to the historical corpus, rebuild the
+    partitioned band index of the merged corpus, then serve a near-dup
+    probe of the delta batch from the on-disk index. Completes the dedup
     lifecycle (signatures -> pairs -> clusters -> incremental ->
-    MAINTAINED index) exactly as rounds 12-14 completed the ANN lifecycle
-    — the production daily-ingest dedup shape at 100 TB, mirroring the
-    reference's register-then-query lifecycle
-    (``benchmarks/src/tpch/run.rs:311-345``) extended in time. Because
-    this single invocation carries BOTH lifecycle steps, the base write
-    and the delta apply fold into one partitioned write (optimization
-    round 15 — see :func:`_write_base_band_index`); the standalone
-    touched-partition refresh kernel for a pre-existing index is
-    :func:`_apply_band_delta`, pinned by its own tests.
+    persisted index) exactly as rounds 12-14 completed the ANN lifecycle,
+    mirroring the reference's register-then-query lifecycle
+    (``benchmarks/src/tpch/run.rs:311-345``) extended in time. The
+    refresh is a full rebuild: this call builds the index itself, so
+    there is never an earlier index to patch.
 
-    The maintained index is BIT-IDENTICAL to a from-scratch rebuild over
-    the merged corpus (pinned by pytest — MinHash has no fitted model, so
+    The written index is BIT-IDENTICAL to a from-scratch build over the
+    merged corpus (pinned by pytest — MinHash has no fitted model, so
     rebuild equivalence is exact), and the DuckDB oracle replays the
-    band-probe + Jaccard verification from the POST-UPSERT persisted
-    parquet — a green row proves the maintained on-disk state, not the
-    logical dataflow. The merged corpus rides the verified
-    :func:`cdc.cdc_merge` kernel. Work per refresh is
-    O(delta + touched-partition bytes), never O(index)."""
+    band-probe + Jaccard verification from the persisted parquet — a
+    green row proves the on-disk state, not the logical dataflow. The
+    merged corpus rides the verified :func:`cdc.cdc_merge` kernel."""
     from .cdc import cdc_merge
 
     hist = _hist_docs(spark, sf_dir).localCheckpoint()
-    from ..sources.tables import frame_fingerprint_stats
+    from ..sources.tables import frame_fingerprint_stats, write_partitioned
 
     n_hist, fp, max_id = frame_fingerprint_stats(hist, "doc_id")
     if n_hist == 0:
@@ -1681,11 +1546,14 @@ def minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rm_keys = changes.filter(F.col("__op").isin("U", "D")).select("doc_id")
     delta_bands = _bands_with_bucket(delta_sigs.select("doc_id", "sig"))
-    # base write + delta apply folded into ONE partitioned write
-    # (optimization round 15 — see _write_base_band_index); the probe IS
-    # the delta batch, so its partition set (collected once) prunes the
-    # serve scan exactly as before
-    _write_base_band_index(hist, path, rm_keys=rm_keys, delta_bands=delta_bands)
+    write_partitioned(
+        _band_index_rows(hist, rm_keys, delta_bands),
+        path,
+        ["band_idx", "bucket"],
+        len(BANDS) * MINHASH_INDEX_BUCKETS,
+    )
+    # the probe IS the delta batch, so its partition set (collected once)
+    # prunes the serve scan
     new_parts = {
         (int(r["band_idx"]), int(r["bucket"]))
         for r in delta_bands.select("band_idx", "bucket").distinct().collect()
@@ -1859,10 +1727,10 @@ def spill_evidence() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def _minhash_index_upsert_oracle() -> str:
     """DuckDB replay of the maintain-then-probe pipeline reading
     ``(doc_id, x, y, band_idx, bucket)`` from the POST-UPSERT persisted
-    parquet — a hash match proves the MAINTAINED on-disk state: every
+    parquet — a hash match proves the REBUILT on-disk state: every
     inserted and updated document present with its new band rows in the
-    right partitions, every deleted/moved row absent, every untouched
-    partition intact (a stale or missing band row changes the candidate
+    right partitions, every deleted/moved row absent, every unchanged
+    row in place (a stale or missing band row changes the candidate
     set). The probe signatures, the merged corpus, and the frequent-bucket
     cap are re-derived in SQL from the documents view via the shared
     ``_DUCK_SIG`` machinery; partition selection uses the same

@@ -876,7 +876,12 @@ IVF_PQ_INDEX_TABLE = "ivf_pq_index"
 # fingerprint + warehouse-root helpers shared with the dedup tier's
 # persisted band index (sources/tables.py is the home; the aliases keep
 # this module's public surface stable)
-from ..sources.tables import FP_MOD, fp_fold as _fp_fold, warehouse_root as _warehouse_root  # noqa: E402
+from ..sources.tables import (  # noqa: E402
+    FP_MOD,
+    fp_fold as _fp_fold,
+    warehouse_root as _warehouse_root,
+    write_partitioned,
+)
 
 
 def corpus_fingerprint(vecs: DataFrame) -> tuple[int, int]:
@@ -1003,18 +1008,15 @@ def serve_pq_index(
     )
 
 
-# --- IVF-PQ incremental index maintenance (ivf_pq_index_upsert, staged
-# round 13 — the VERDICT-budgeted +1). Completes the ANN lifecycle:
-# build (ivf_pq_index_build) -> serve (serve_pq_index) -> MAINTAIN. A
-# CDC-shaped embedding change batch (I/U/D) is applied to a PERSISTED
-# index without re-encoding the corpus: only the delta is encoded
-# (map-only _pq_encode under the FROZEN model — centroids/codebook stay
-# fixed between full rebuilds, the production contract), and only the
-# TOUCHED inverted lists are rewritten (dynamic partition overwrite over
-# a hive list_id=K layout — the partition-dir analog of the build's
-# bucket layout, chosen because partitions can be replaced one directory
-# at a time where bucket files cannot). The daily-refresh shape at 100 TB:
-# work is O(delta + touched-list bytes), never O(index).
+# --- IVF-PQ index maintenance under a CDC batch (ivf_pq_index_upsert,
+# staged round 13). Completes the ANN lifecycle: build
+# (ivf_pq_index_build) -> serve (serve_pq_index) -> MAINTAIN. A CDC-shaped
+# embedding change batch (I/U/D) is merged into the corpus and the index
+# is REBUILT from the merged corpus under the FROZEN model
+# (centroids/codebook stay fixed between full refits, the production
+# contract) as a hive list_id=K layout. The rebuild is the whole cost:
+# the index is built in the same call, at a path keyed by the corpus
+# fingerprint, so no earlier index exists to patch in place.
 IVF_PQ_UPSERT_TABLE = "ivf_pq_index_upsert"
 
 
@@ -1063,188 +1065,23 @@ def _with_xp(df: DataFrame) -> DataFrame:
     )
 
 
-def _write_base_index(
-    vecs: DataFrame,
-    centroids: list,
-    cb: list,
-    path: str,
-    scores: F.Column | None = None,
-    rm_keys: DataFrame | None = None,
-    delta_enc: DataFrame | None = None,
-) -> None:
-    """Base index: full STATIC write partitioned by list_id (clears any
-    stale same-count layout) — the build-once step a production pipeline
-    amortizes across every later refresh.
-
-    ``rm_keys`` / ``delta_enc`` (optimization round 15, guide §6 one
-    write pass): when the SAME invocation that builds the base also
-    applies a CDC delta (the declared ``ivf_pq_index_upsert`` lifecycle),
-    the post-delta state is known before the first byte is written —
-    the base encode is in flight, the delta encodes map-side from the
-    change batch — so writing base-then-rewrite-touched pays one full
-    partitioned write PLUS an index read-back, a K-row stats aggregate
-    and a second (touched-list) write for bytes this function could have
-    written correctly the first time. Passing the removal key set and
-    the encoded delta folds the maintain step into THIS single write:
-    ``encode(base) ⟕anti rm_keys ∪ delta_enc`` — row-for-row the frozen-
-    model encode of the merged corpus (the bit-identical-rebuild pytest
-    pin). The broadcast anti-join keeps the index-never-shuffles
-    property; static overwrite clears emptied lists with the rest of the
-    stale layout. :func:`_apply_index_delta` remains the standalone
-    refresh kernel for a PRE-EXISTING index (its own tests pin the
-    O(delta + touched bytes) contract).
-
-    The repartition on list_id is the write_bucketed shuffle-at-write
-    analog, and it is what keeps the layout sane: WITHOUT it every input
-    task writes a sliver into every list directory — n_tasks x K small
-    files, which at K = ceil(sqrt(N)) lists is a small-file explosion
-    that taxes the write, every later partition-pruned read, AND the
-    oracle's glob (measured 10.7 s -> 6.0 s for the full maintain cycle
-    at sf0.1). With it, one file per inverted list. The width is pinned
-    explicitly (``partitioned_write_width``: min(session width, K lists))
-    so AQE cannot stage-and-coalesce the exchange into one serial writer
-    task (measured 1.31 s -> 0.74 s on this write alone)."""
-    from ..sources.tables import partitioned_write_width
-
-    enc = _pq_encode(vecs, centroids, cb, scores=scores)
-    if rm_keys is not None:
-        enc = enc.join(F.broadcast(rm_keys), "vec_id", "left_anti")
-    if delta_enc is not None:
-        enc = enc.unionByName(delta_enc.select(*enc.columns))
-    (
-        enc
-        .select("vec_id", "codes", "list_id")  # partition col LAST
-        .repartition(
-            partitioned_write_width(vecs.sparkSession, len(centroids)),
-            F.col("list_id"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("list_id")
-        .parquet(path)
-    )
-
-
-def _apply_index_delta(
-    spark: SparkSession,
-    path: str,
-    delta_enc: DataFrame,
-    rm_keys: DataFrame,
-) -> list[int]:
-    """Rewrite ONLY the touched inverted lists of the persisted index at
-    ``path``: touched = (old lists holding a removed/updated vec_id) ∪
-    (lists the delta encodings land in). Scale shape, each step pinned by
-    ``tests/test_ivf_pq_upsert.py``:
-
-    - finding old lists is ONE map-only index scan (8 B/vector columns)
-      against the broadcast delta key set — the historical index NEVER
-      shuffles;
-    - ONE per-list stats aggregate (optimization round 14, guide §1.2 /
-      §2.4) derives touched AND survivors together: the old shape ran
-      four driver actions per refresh (old-list collect, new-list
-      collect, a rewrite localCheckpoint, survivor collect); the new
-      shape folds them into a single K-row aggregate — per list, the
-      count of index rows matching a removal key (>0 → touched-by-
-      removal), of index rows surviving the removal, and of delta rows
-      landing there. The aggregate's shuffle carries K partial rows per
-      task (map-side combine), never index rows, so the
-      index-never-shuffles property is intact. K = ceil(sqrt(N)) lists
-      bound the collect at model-state scale. ``rm_keys`` is a KEY SET
-      (unique — both callers derive it from a duplicate-key-guarded CDC
-      batch); survivor counts use the match-free row count, which stays
-      exact even if a caller ever passed duplicates;
-    - the rewrite reads only the touched partitions (PartitionFilters),
-      anti-joins the broadcast removal keys map-side, unions the delta,
-      and dynamic-partition-overwrite replaces exactly those directories
-      — consumed exactly ONCE now, so the old two-consumer checkpoint
-      materialization is gone;
-    - a touched list whose every row was removed is dropped explicitly
-      (dynamic overwrite only replaces partitions PRESENT in the output —
-      an emptied list would otherwise keep its stale directory), the
-      DROP PARTITION step of a metastore-backed table.
-
-    Returns the sorted touched list ids."""
-    from ..sources.tables import overwrite_partitions, partitioned_write_width
-
-    index = spark.read.parquet(path).withColumn(
-        "list_id", F.col("list_id").cast("long")
-    )
-    marked = index.join(
-        F.broadcast(rm_keys.withColumn("__rm", F.lit(True))), "vec_id", "left"
-    ).select(
-        "list_id",
-        F.coalesce(F.col("__rm"), F.lit(False)).alias("rm"),
-        F.lit(False).alias("is_new"),
-    )
-    stats = (
-        marked.unionByName(
-            delta_enc.select(
-                "list_id", F.lit(False).alias("rm"), F.lit(True).alias("is_new")
-            )
-        )
-        .groupBy("list_id")
-        .agg(
-            F.count_if(F.col("rm")).alias("n_rm"),
-            F.count_if(~F.col("rm") & ~F.col("is_new")).alias("n_keep"),
-            F.count_if(F.col("is_new")).alias("n_new"),
-        )
-        .collect()
-    )
-    touched = sorted(
-        int(r["list_id"]) for r in stats if r["n_rm"] > 0 or r["n_new"] > 0
-    )
-    if not touched:
-        return touched
-    survivors = {
-        int(r["list_id"])
-        for r in stats
-        if (r["n_rm"] > 0 or r["n_new"] > 0) and (r["n_keep"] + r["n_new"]) > 0
-    }
-    rewrite = (
-        index.filter(F.col("list_id").isin(touched))
-        .join(F.broadcast(rm_keys), "vec_id", "left_anti")
-        .unionByName(delta_enc)
-        .select("vec_id", "codes", "list_id")  # partition col LAST
-        # one file per touched list (the base-write shuffle analog — the
-        # exchange is bounded by touched-list bytes, never the index);
-        # explicit width so AQE cannot stage-and-coalesce the write into
-        # one serial writer task (see _write_base_index / guide §2.4)
-        .repartition(
-            partitioned_write_width(spark, len(touched)), F.col("list_id")
-        )
-    )
-    overwrite_partitions(rewrite, path, ["list_id"])
-    # emptied lists dropped via the Hadoop FS API, verified gone, loud on
-    # failure (round-14 review, ADVICE medium — see drop_partition_dirs)
-    from ..sources.tables import drop_partition_dirs
-
-    drop_partition_dirs(
-        spark, [f"{path}/list_id={emptied}" for emptied in set(touched) - survivors]
-    )
-    return touched
-
-
 def ivf_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF-PQ index maintenance (staged round 13): build the
-    partitioned index from the ORIGINAL corpus, apply a CDC-shaped change
-    batch (insert/update/delete, derived deterministically from the
-    corpus — see :func:`_upsert_change_batch`), then serve from the
-    maintained on-disk index. Mirrors the reference's register-then-query
-    lifecycle (``benchmarks/src/tpch/run.rs:311-345``) extended in TIME:
-    register once, refresh daily, query always. Because this single
-    invocation carries BOTH lifecycle steps, the base write and the delta
-    apply fold into one partitioned write (optimization round 15 — see
-    :func:`_write_base_index`); the standalone touched-list refresh
-    kernel for a pre-existing index is :func:`_apply_index_delta`,
-    pinned by its own tests.
+    """IVF-PQ index maintenance (staged round 13): apply a CDC-shaped
+    change batch (insert/update/delete, derived deterministically from the
+    corpus — see :func:`_upsert_change_batch`) to the ORIGINAL corpus,
+    rebuild the partitioned index from the merged corpus under the model
+    fitted on the original, then serve from the on-disk index. Mirrors
+    the reference's register-then-query lifecycle
+    (``benchmarks/src/tpch/run.rs:311-345``) extended in TIME: register
+    once, refresh, query. The refresh is a full rebuild: this call builds
+    the index itself, so there is never an earlier index to patch.
 
-    The serve result is BIT-IDENTICAL to a full rebuild over the merged
-    corpus under the same frozen model (pinned by pytest), and the DuckDB
-    oracle replays ADC/refine from the POST-UPSERT persisted parquet — a
-    green row proves the maintained on-disk state, not the logical
-    dataflow. The merged corpus itself comes from the verified
-    :func:`cdc.cdc_merge` kernel (whole-row U images, loud unknown-op
-    contract)."""
+    The serve result is BIT-IDENTICAL to the in-flight serve over the
+    frozen-model encode of the merged corpus (pinned by pytest), and the
+    DuckDB oracle replays ADC/refine from the persisted parquet — a green
+    row proves the on-disk state, not the logical dataflow. The merged
+    corpus itself comes from the verified :func:`cdc.cdc_merge` kernel
+    (whole-row U images, loud unknown-op contract)."""
     from .cdc import cdc_merge
 
     # non-eager: the fit's head aggregate below is the first full-scan
@@ -1267,35 +1104,22 @@ def ivf_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_ppm bigint, rank bigint",
         )
     path = ivf_pq_upsert_location(n_orig, fp)
-    scores = _centroid_scores(centroids)  # parsed once: build/delta/probe
+    scores = _centroid_scores(centroids)  # parsed once, shared encode/probe
 
     changes = _upsert_change_batch(vecs, max_id).localCheckpoint()
-    # the maintained corpus (refine needs updated/inserted vectors); the
-    # change batch rides the verified CDC merge kernel
+    # the maintained corpus: encoded into the index here and read again by
+    # refine, so it is materialized once; the change batch rides the
+    # verified CDC merge kernel
     merged = _with_xp(
         cdc_merge(vecs.select("vec_id", "v"), changes, key="vec_id")
     ).withColumn("nrm", norm(F.col("v"))).localCheckpoint()
-    delta_enc = _pq_encode(
-        _with_xp(
-            changes.filter(F.col("__op").isin("I", "U"))
-            .select("vec_id", "v")
-            .withColumn("nrm", norm(F.col("v")))  # coarse assign scores need it
+    write_partitioned(
+        _pq_encode(merged, centroids, cb, scores=scores).select(
+            "vec_id", "codes", "list_id"
         ),
-        centroids,
-        cb,
-        scores=scores,
-    )
-    rm_keys = changes.filter(F.col("__op").isin("U", "D")).select("vec_id")
-    # base write + delta apply folded into ONE partitioned write
-    # (optimization round 15, guide §6): this invocation builds the base
-    # in flight, so the post-delta state is written directly — the old
-    # shape paid a second write pass plus an index read-back and a K-row
-    # stats collect to rewrite the touched lists it had just written.
-    # _apply_index_delta (pinned by tests) remains the standalone refresh
-    # kernel against a pre-existing index.
-    _write_base_index(
-        vecs, centroids, cb, path, scores=scores,
-        rm_keys=rm_keys, delta_enc=delta_enc,
+        path,
+        ["list_id"],
+        len(centroids),
     )
 
     index = spark.read.parquet(path).withColumn(
@@ -1529,9 +1353,9 @@ def _ivf_pq_index_oracle() -> str:
 def _ivf_pq_upsert_oracle() -> str:
     """DuckDB replay of the serve-after-maintenance pipeline reading
     ``(vec_id, list_id, codes)`` from the POST-UPSERT persisted parquet —
-    a hash match proves the MAINTAINED on-disk state: every inserted and
+    a hash match proves the REBUILT on-disk state: every inserted and
     updated vector present with frozen-model codes in its new list, every
-    deleted/moved row absent, every untouched list intact (a stale or
+    deleted/moved row absent, every unchanged row in place (a stale or
     missing row in any probed list breaks the ADC sums). The KB-scale
     model (centroids, codebook, query LUT inputs) is refit from the
     ORIGINAL embeddings view (the frozen-model contract: the change batch

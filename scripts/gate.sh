@@ -42,7 +42,7 @@ python scripts/verify_correctness.py /root/testdata/sf0.1 \
   minhash_pairs_skew kmeans_lloyd_t3 ngram_span_dedup \
   stream_topk hll_distinct weighted_sample bpe_apply \
   domain_token_profile events_quantile_sketch ivf_pq_topk \
-  ivf_pq_index_build ivf_pq_index_upsert >> "$ART" 2>&1
+  ivf_pq_index_build ivf_pq_index_upsert minhash_index_upsert >> "$ART" 2>&1
 SF01_RC=$?
 
 # Spill-pressure pass: sort/window/as-of queries under 128-row force-spill

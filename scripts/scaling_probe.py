@@ -92,14 +92,14 @@ PROBE_OPS = [
     # index — build adds one bucketed write (linear in the corpus), serve
     # reads only probed buckets, so growth must track ivf_pq_topk's
     "ivf_pq_index_build",
-    # round-13 staged: incremental maintenance — base write (linear) +
-    # delta encode + touched-partition rewrite (delta-scale) + serve;
-    # growth must track ivf_pq_index_build's (the delta is a fixed
-    # fraction of the corpus in the derived change batch)
+    # round-13 staged: index refresh under a CDC batch — merge + frozen-
+    # model encode of the merged corpus + one partitioned write (all
+    # linear in the corpus) + serve; growth must track
+    # ivf_pq_index_build's
     "ivf_pq_index_upsert",
-    # round-14 staged: the dedup-tier maintain cycle — base band write
-    # (linear in corpus tokens) + delta signature encode + touched-
-    # partition rewrite + partition-pruned probe; candidate volume is
+    # round-14 staged: the dedup-tier refresh — band rows of the merged
+    # corpus in one partitioned write (linear in corpus tokens) + delta
+    # signature encode + partition-pruned probe; candidate volume is
     # bounded by |delta bands| x bucket cap, so growth must stay linear
     # (never the pair explosion the cap exists to prevent)
     "minhash_index_upsert",

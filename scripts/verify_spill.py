@@ -65,15 +65,15 @@ SPILL_QUERIES = (
     # hash-match with those sort buffers forced to disk AND the disk
     # round trip in the path
     "ivf_pq_index_build",
-    # round-13 staged: maintenance serve — same candidate-row sorts, but
-    # over an index that was INCREMENTALLY rewritten (delta encode +
-    # touched-partition overwrite) before serving; a spill-corrupted
-    # rewrite or serve would break the hash
+    # round-13 staged: refresh serve — same candidate-row sorts, but over
+    # an index rebuilt from the CDC-merged corpus (frozen-model encode +
+    # partitioned overwrite) before serving; a spill-corrupted write or
+    # serve would break the hash
     "ivf_pq_index_upsert",
-    # round-14 staged: the dedup-tier maintain cycle — the candidate
-    # dedup (pair dropDuplicates), the bucket-cap count aggregate and the
-    # rewrite's layout exchange all buffer above the 128-row forced
-    # threshold; a spill-corrupted band rewrite or probe would break the
+    # round-14 staged: the dedup-tier refresh — the candidate dedup (pair
+    # dropDuplicates), the bucket-cap count aggregate and the index
+    # write's layout exchange all buffer above the 128-row forced
+    # threshold; a spill-corrupted band write or probe would break the
     # hash against the post-upsert on-disk oracle
     "minhash_index_upsert",
 )

@@ -26,6 +26,15 @@ def spark():
     yield spark
 
 
+@pytest.fixture(scope="module")
+def private_warehouse(tmp_path_factory):
+    """Persisted-index writes of one test module go to a private directory,
+    never the warehouse the oracle tests read."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path_factory.mktemp("warehouse")))
+        yield
+
+
 @pytest.fixture(scope="session")
 def engine(spark):
     from datafusion_distributed_experiment_spark import Engine

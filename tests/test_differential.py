@@ -91,7 +91,7 @@ _PROMOTED_SAMPLE = [
 
 
 @pytest.mark.parametrize("name", _PROMOTED_SAMPLE)
-def test_staged_ops_are_partition_count_independent(name, spark):
+def test_promoted_ops_are_partition_count_independent(name, spark):
     """Same cross-topology claim for the operators promoted at round 7
     plus the round-7 staged tier (checkpointed oriented edges,
     broadcast-restricted postings, feature-count shuffles, 1-row argmax

@@ -7,6 +7,9 @@ script (run.rs:186-199)."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from datafusion_distributed_experiment_spark.engine import split_sql_script
 
 from .conftest import SF_DIR
@@ -174,6 +177,63 @@ def test_dynamic_partition_overwrite_replaces_only_written_partitions(engine, tm
     assert (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static") != "dynamic"
     )
+
+
+_PART_ROWS = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=3),    # a (partition column)
+        st.integers(min_value=0, max_value=1),    # b (partition column)
+        st.integers(min_value=-50, max_value=50),  # v
+    ),
+    min_size=1,
+    max_size=25,
+)
+
+
+@given(rows=_PART_ROWS, stale=_PART_ROWS, n_dirs=st.integers(min_value=1, max_value=8))
+@settings(max_examples=8, deadline=None)
+def test_write_partitioned_replaces_the_whole_layout(
+    spark, tmp_path_factory, rows, stale, n_dirs
+):
+    """The one writer behind both persisted indexes, for ARBITRARY rows
+    over a stale layout: the table on disk is EXACTLY the new rows, a
+    stale partition the new rows lack has no directory left, and every
+    partition directory holds one data file — also where the stale
+    layout wrote several files into a directory the new rows reuse."""
+    import os
+
+    from datafusion_distributed_experiment_spark.sources.tables import (
+        write_partitioned,
+    )
+
+    schema = "id long, v long, a long, b long"
+    path = str(tmp_path_factory.mktemp("partitioned") / "t")
+    stale_rows = [(1000 + i, v, a, b) for i, (a, b, v) in enumerate(stale)]
+    (
+        spark.createDataFrame(stale_rows + [(-1, 0, 9, 0)], schema)
+        .repartition(3)
+        .write.partitionBy("a", "b")
+        .parquet(path)
+    )
+    new_rows = [(i, v, a, b) for i, (a, b, v) in enumerate(rows)]
+    write_partitioned(spark.createDataFrame(new_rows, schema), path, ["a", "b"], n_dirs)
+
+    got = sorted(
+        (int(r["id"]), int(r["v"]), int(r["a"]), int(r["b"]))
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == sorted(new_rows)
+    assert not os.path.exists(os.path.join(path, "a=9")), "stale partition survived"
+    part_dirs = [
+        os.path.join(path, da, db)
+        for da in os.listdir(path)
+        if da.startswith("a=")
+        for db in os.listdir(os.path.join(path, da))
+    ]
+    assert len(part_dirs) == len({(a, b) for _, _, a, b in new_rows})
+    for d in part_dirs:
+        data = [f for f in os.listdir(d) if not f.startswith((".", "_"))]
+        assert len(data) == 1, (d, data)
 
 
 def test_narrow_scan_width_estimate_agrees_with_rdd(spark, tmp_path):

@@ -1,47 +1,50 @@
-"""IVF-PQ incremental index maintenance (ivf_pq_index_upsert; oracle
+"""IVF-PQ index refresh under a CDC batch (ivf_pq_index_upsert; oracle
 parity over the post-upsert on-disk state runs in
 tests/test_corpus_oracle.py).
 
-The four claims that make incremental maintenance worth building, each
-pinned:
-(1) upsert ≡ rebuild: after the delta apply, the persisted index holds
-    EXACTLY the frozen-model encode of the merged corpus — including
-    lists no probe touches — and serving from it is BIT-IDENTICAL to the
-    in-flight serve over that rebuild encode;
-(2) only touched lists are rewritten: every untouched partition
-    directory keeps its exact file set and mtimes across the delta apply
-    (the O(delta), never O(index), refresh contract at 100 TB);
-(3) the historical index never shuffles during the delta apply: the
-    rewrite plan's index side is a partition-pruned scan plus a
-    BROADCAST anti-join; the only keyed exchange is the
-    one-file-per-list layout repartition, bounded by TOUCHED-list bytes;
-(4) a list whose every row is removed has its directory DROPPED (dynamic
-    partition overwrite only replaces partitions present in the output —
-    an emptied list would otherwise serve stale rows forever).
+Pinned here:
+(1) upsert ≡ rebuild: the persisted index holds EXACTLY the frozen-model
+    encode of the merged corpus — including lists no probe touches — and
+    serving from it is BIT-IDENTICAL to the in-flight serve over that
+    rebuild encode;
+(2) the serve over the persisted index prunes to the probed list
+    directories, and pruning is sound;
+(3) the refresh has set semantics for ARBITRARY change batches written
+    over a stale base layout: the index is (encode(base) minus removed
+    ids) plus encode(inserted and updated rows), an empty batch changes
+    nothing, and a list the batch empties loses its directory.
+
+The partitioned writer itself (static overwrite, one file per partition,
+stale partitions gone) is pinned in tests/test_engine.py. Every test here
+writes into a private warehouse, never the one the oracles read.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from datafusion_distributed_experiment_spark.operators.similarity import (
-    _apply_index_delta,
     _pq_encode,
     _pq_fit,
     _pq_serve,
     _upsert_change_batch,
     _vectors,
     _with_xp,
-    _write_base_index,
     ivf_pq_index_upsert,
     corpus_fingerprint,
     ivf_pq_upsert_location,
     norm,
 )
+from datafusion_distributed_experiment_spark.sources.tables import write_partitioned
 
 from .conftest import SF_DIR
+
+pytestmark = pytest.mark.usefixtures("private_warehouse")
 
 
 def _rows(df):
@@ -91,126 +94,6 @@ def test_upsert_equals_frozen_model_rebuild(spark):
     assert got_serve == want_serve and len(got_serve) > 0
 
 
-def test_upsert_rewrites_only_touched_partitions(spark):
-    """(2) the O(delta) contract: applying a delta leaves every UNTOUCHED
-    list directory byte-identical (same file names, sizes, mtimes). The
-    delta here is surgical — one deleted vector plus one insert into a
-    second list — because the sf0.001 %10 batch is dense enough to touch
-    all ~25 lists (a test-data artifact, not a machinery property); the
-    partition-replacement machinery under test is _apply_index_delta
-    either way."""
-    vecs, centroids, cb, seed_rows = _frozen_fit(spark)
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs))
-    _write_base_index(vecs, centroids, cb, path)
-
-    def snapshot():
-        out = {}
-        for d in os.listdir(path):
-            if not d.startswith("list_id="):
-                continue
-            full = os.path.join(path, d)
-            out[d] = sorted(
-                (f, os.path.getsize(os.path.join(full, f)),
-                 os.path.getmtime(os.path.join(full, f)))
-                for f in os.listdir(full)
-                if f.endswith(".parquet")
-            )
-        return out
-
-    before = snapshot()
-    idx = spark.read.parquet(path).withColumn(
-        "list_id", F.col("list_id").cast("long")
-    )
-    two = idx.orderBy("list_id", "vec_id").limit(1).unionByName(
-        idx.orderBy(F.desc("list_id"), "vec_id").limit(1)
-    ).collect()
-    (del_vec, del_list), (ins_list,) = (
-        (int(two[0]["vec_id"]), int(two[0]["list_id"])),
-        (int(two[1]["list_id"]),),
-    )
-    assert del_list != ins_list, "corpus must span at least two lists"
-    max_id = int(vecs.agg(F.max("vec_id")).collect()[0][0])
-    delta_enc = spark.createDataFrame(
-        [(max_id + 1, list(two[1]["codes"]), ins_list)],
-        "vec_id long, codes array<int>, list_id long",
-    )
-    rm_keys = spark.createDataFrame([(del_vec,)], "vec_id long")
-    touched = _apply_index_delta(spark, path, delta_enc, rm_keys)
-    after = snapshot()
-
-    assert sorted(touched) == sorted({del_list, ins_list})
-    touched_dirs = {f"list_id={t}" for t in touched}
-    untouched = set(before) - touched_dirs
-    assert untouched, "pin needs at least one untouched list"
-    assert touched_dirs & set(before), "pin needs at least one rewritten list"
-    for d in untouched:
-        assert after.get(d) == before[d], f"untouched partition {d} changed"
-    # the delete and the insert both landed
-    post = spark.read.parquet(path)
-    ids = {int(r["vec_id"]) for r in post.collect()}
-    assert del_vec not in ids and (max_id + 1) in ids
-
-
-def test_delta_apply_never_shuffles_the_index(spark):
-    """(3) the rewrite's index side: partition-pruned scan (PartitionFilters
-    on list_id), removal keys applied as a BROADCAST left-anti join — the
-    only exchanges over index rows are the broadcast of the tiny key set
-    and the one-file-per-list layout repartition, which is bounded by the
-    TOUCHED-list bytes (rows that were being rewritten anyway), never the
-    historical index."""
-    from datafusion_distributed_experiment_spark.plans import plan_string
-
-    vecs, centroids, cb, _ = _frozen_fit(spark)
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs))
-    _write_base_index(vecs, centroids, cb, path)
-    max_id = int(vecs.agg(F.max("vec_id")).collect()[0][0])
-    changes = _upsert_change_batch(vecs, max_id).localCheckpoint()
-    delta_enc = _pq_encode(
-        _with_xp(
-            changes.filter(F.col("__op").isin("I", "U"))
-            .select("vec_id", "v")
-            .withColumn("nrm", norm(F.col("v")))
-        ),
-        centroids,
-        cb,
-    ).localCheckpoint()
-    rm_keys = changes.filter(F.col("__op").isin("U", "D")).select("vec_id")
-
-    index = spark.read.parquet(path).withColumn(
-        "list_id", F.col("list_id").cast("long")
-    )
-    old_lists = [
-        int(r["list_id"])
-        for r in index.join(F.broadcast(rm_keys), "vec_id")
-        .select("list_id").distinct().collect()
-    ]
-    new_lists = [int(r["list_id"]) for r in delta_enc.select("list_id").distinct().collect()]
-    touched = sorted(set(old_lists) | set(new_lists))
-    rewrite = (
-        index.filter(F.col("list_id").isin(touched))
-        .join(F.broadcast(rm_keys), "vec_id", "left_anti")
-        .unionByName(delta_enc)
-        .select("vec_id", "codes", "list_id")
-        .repartition(F.col("list_id"))  # the implementation's layout shuffle
-    )
-    plan = plan_string(rewrite)
-    assert "PartitionFilters" in plan and "list_id" in plan, plan
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    # permitted exchanges: the broadcast of the tiny key set and the
-    # touched-rows layout repartition KEYED ON list_id — nothing else
-    # (in particular, nothing hashed on vec_id, which would mean the
-    # historical index rows themselves were being exchanged for the join)
-    import re
-
-    exchanges = re.findall(r"Exchange \w+[^\n]*", plan)
-    bad = [
-        e
-        for e in exchanges
-        if "Broadcast" not in e and "hashpartitioning(list_id" not in e
-    ]
-    assert not bad, (bad, plan)
-
-
 def test_single_query_serve_prunes_partitions(spark):
     """Serving shape over the MAINTAINED index: ONE query probes
     IVF_PROBE lists and the planned scan's PartitionFilters INSET carries
@@ -253,184 +136,186 @@ def test_single_query_serve_prunes_partitions(spark):
     assert _rows(served) == _rows(unpruned) and len(_rows(served)) > 0
 
 
-def test_emptied_list_directory_is_dropped(spark, tmp_path):
-    """(4) dynamic overwrite only replaces partitions PRESENT in the
-    output: a list whose every row is removed must have its directory
-    dropped explicitly, or serving would read stale rows forever."""
-    path = str(tmp_path / "idx")
-    base = spark.createDataFrame(
-        [(1, [1, 2], 7), (2, [3, 4], 7), (3, [5, 6], 9)],
-        "vec_id long, codes array<int>, list_id long",
-    )
-    base.select("vec_id", "codes", "list_id").write.partitionBy("list_id").parquet(path)
-    assert os.path.isdir(f"{path}/list_id=9")
-    empty_delta = spark.createDataFrame(
-        [], "vec_id long, codes array<int>, list_id long"
-    )
-    rm = spark.createDataFrame([(3,)], "vec_id long")
-    touched = _apply_index_delta(spark, path, empty_delta, rm)
-    assert touched == [9]
-    assert not os.path.exists(f"{path}/list_id=9"), "emptied list dir must drop"
-    kept = sorted(
-        int(r["vec_id"]) for r in spark.read.parquet(path).collect()
-    )
-    assert kept == [1, 2], "untouched list must survive intact"
-
-
-def test_drop_partition_dirs_uses_hadoop_fs(spark, tmp_path):
-    """Round-14 review fix (ADVICE medium): the emptied-partition drop
-    goes through the Hadoop FileSystem API — the same FS abstraction
-    every other read/write uses, so it works on non-local filesystems —
-    and VERIFIES the directory is gone instead of swallowing failures
-    (a silently-surviving stale list directory would be served by every
-    later probe). Pinned: a nested directory is removed recursively, a
-    missing path is a no-op (idempotent re-runs), and sibling
-    directories survive."""
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        drop_partition_dirs as _drop_partition_dirs,
-    )
-
-    keep = tmp_path / "idx" / "list_id=1"
-    drop = tmp_path / "idx" / "list_id=9"
-    keep.mkdir(parents=True)
-    drop.mkdir(parents=True)
-    (keep / "part-0.parquet").write_bytes(b"k")
-    (drop / "part-0.parquet").write_bytes(b"d")
-    _drop_partition_dirs(spark, [str(drop)])
-    assert not drop.exists(), "directory (with contents) must be gone"
-    assert (keep / "part-0.parquet").exists(), "siblings must survive"
-    # missing path: no-op, no raise — the drop is idempotent
-    _drop_partition_dirs(spark, [str(drop)])
-
-
-def test_noop_change_batch_is_noop(spark, tmp_path):
-    """Degenerate delta: empty change batch touches nothing and rewrites
-    nothing (touched == [])."""
-    path = str(tmp_path / "idx")
-    spark.createDataFrame(
-        [(1, [1], 3)], "vec_id long, codes array<int>, list_id long"
-    ).write.partitionBy("list_id").parquet(path)
-    empty_delta = spark.createDataFrame(
-        [], "vec_id long, codes array<int>, list_id long"
-    )
-    no_rm = spark.createDataFrame([], "vec_id long")
-    assert _apply_index_delta(spark, path, empty_delta, no_rm) == []
-    assert [int(r["vec_id"]) for r in spark.read.parquet(path).collect()] == [1]
-
-
 # ------------------------------------------------------------------ #
-# Hypothesis: the partition-rewrite machinery preserves set semantics
-# for ARBITRARY deltas (the dedup band-index twin lives in
-# tests/test_minhash_index_upsert.py)
+# The refresh as the query spells it — cdc_merge, frozen-model encode,
+# write_partitioned — driven by hand-built change batches the derived
+# batch never emits, written over a stale base layout.
 # ------------------------------------------------------------------ #
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-_IDX_ROWS = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=40),   # vec_id
-        st.integers(min_value=0, max_value=7),    # list_id
-        st.integers(min_value=0, max_value=255),  # one code byte (expanded below)
-    ),
-    min_size=1,
-    max_size=25,
-    unique_by=lambda t: t[0],  # one row per vec
-)
+_CHANGES_SCHEMA = "vec_id long, v array<double>, __op string"
 
 
-@given(
-    base=_IDX_ROWS,
-    delta=_IDX_ROWS,
-    rm_seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=8, deadline=None)
-def test_apply_index_delta_equals_set_semantics_on_random_inputs(
-    spark, tmp_path_factory, base, delta, rm_seed
-):
-    """For ARBITRARY base indexes, delta encodings, and removal key sets:
-    after _apply_index_delta the on-disk index is EXACTLY
-    (base \\ rm_keys) ∪ delta — the frozen-model derived batch in the
-    pinned rebuild-equivalence test is one point in this space; the
-    property covers removals of absent vecs, empty deltas, deltas into
-    untouched lists, and total emptying of a list."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(rm_seed)
-    base_rows = [(v, [c, (c * 7) % 256], l) for v, l, c in base]
-    delta_rows = [(v + 1000, [c, (c * 11) % 256], l) for v, l, c in delta]
-    base_ids = [v for v, _, _ in base_rows]
-    rm_ids = {v for v in base_ids if rng.random() < 0.4} | (
-        {999} if rng.random() < 0.3 else set()
-    )
-    path = str(tmp_path_factory.mktemp("ivfidx") / "idx")
-    schema = "vec_id long, codes array<int>, list_id long"
-    (
-        spark.createDataFrame(base_rows, schema)
-        .repartition(F.col("list_id"))
-        .write.partitionBy("list_id")
-        .parquet(path)
-    )
-    delta_df = spark.createDataFrame(delta_rows, schema)
-    rm_df = spark.createDataFrame(
-        [(i,) for i in sorted(rm_ids)] or [(-1,)], "vec_id long"
-    )
-    _apply_index_delta(spark, path, delta_df, rm_df)
-
-    got = sorted(
-        (int(r["vec_id"]), tuple(r["codes"]), int(r["list_id"]))
-        for r in spark.read.parquet(path).collect()
-    )
-    rm_effective = rm_ids if rm_ids else {-1}
-    want = sorted(
-        [(v, tuple(c), l) for v, c, l in base_rows if v not in rm_effective]
-        + [(v, tuple(c), l) for v, c, l in delta_rows]
-    )
-    assert got == want, (base_rows, delta_rows, sorted(rm_effective))
-
-
-def test_folded_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
-    """Round-15 fold: _write_base_index(rm_keys=, delta_enc=) writes the
-    post-delta state in ONE pass — on-disk content must equal
-    encode(base) minus the removal keys plus the delta encodings, for an
-    arbitrary (not batch-derived) delta, including a list emptied by the
-    removal (static overwrite clears its directory)."""
-    vecs, centroids, cb, seed_rows = _frozen_fit(spark)
-    path = str(tmp_path / "foldtest")
-    base = {
-        (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
-        for r in _pq_encode(vecs, centroids, cb).collect()
-    }
-    # remove every vector of ONE list (empties it) plus one more key;
-    # insert a fresh id into a different list
-    lists = sorted({l for _, l, _ in base})
-    assert len(lists) >= 2
-    victim = lists[0]
-    other = lists[-1]
-    rm_ids = {v for v, l, _ in base if l == victim}
-    rm_ids.add(next(v for v, l, _ in base if l == other))
-    max_id = max(v for v, _, _ in base)
-    some_codes = next(c for _, l, c in base if l == other)
-    delta_enc = spark.createDataFrame(
-        [(max_id + 7, list(some_codes), other)],
-        "vec_id long, codes array<int>, list_id long",
-    )
-    rm_keys = spark.createDataFrame([(v,) for v in sorted(rm_ids)], "vec_id long")
-    _write_base_index(
-        vecs, centroids, cb, path, rm_keys=rm_keys, delta_enc=delta_enc
-    )
-    got = {
+def _index_set(spark, path):
+    return {
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in spark.read.parquet(path)
         .withColumn("list_id", F.col("list_id").cast("long"))
         .collect()
     }
-    want = {t for t in base if t[0] not in rm_ids} | {
-        (max_id + 7, other, tuple(some_codes))
+
+
+def _list_dirs(path):
+    return {d for d in os.listdir(path) if d.startswith("list_id=")}
+
+
+def _encoded(vecs_v, centroids, cb):
+    """Frozen-model encodings of (vec_id, v) rows as a set of
+    (vec_id, list_id, codes)."""
+    enc = _pq_encode(
+        _with_xp(vecs_v).withColumn("nrm", norm(F.col("v"))), centroids, cb
+    )
+    return {
+        (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
+        for r in enc.collect()
     }
-    assert got == want
-    # the emptied list has no directory (static overwrite wrote only
-    # surviving partitions into a cleared path)
-    assert not os.path.exists(os.path.join(path, f"list_id={victim}"))
+
+
+def _refresh(vecs, changes, centroids, cb, path):
+    """The index write of ivf_pq_index_upsert for an explicit change batch."""
+    from datafusion_distributed_experiment_spark.operators.cdc import cdc_merge
+
+    merged = _with_xp(
+        cdc_merge(vecs.select("vec_id", "v"), changes, key="vec_id")
+    ).withColumn("nrm", norm(F.col("v")))
+    write_partitioned(
+        _pq_encode(merged, centroids, cb).select("vec_id", "codes", "list_id"),
+        path,
+        ["list_id"],
+        len(centroids),
+    )
+
+
+_FIT = {}
+
+
+def _cached_fit(spark):
+    """Frozen model, its base encodings and the corpus vectors by id,
+    computed once per module (Hypothesis examples reuse them)."""
+    if "fit" not in _FIT:
+        vecs, centroids, cb, _ = _frozen_fit(spark)
+        base = _encoded(vecs.select("vec_id", "v"), centroids, cb)
+        by_id = {
+            int(r["vec_id"]): list(r["v"])
+            for r in vecs.select("vec_id", "v").collect()
+        }
+        _FIT["fit"] = (vecs, centroids, cb, base, by_id)
+    return _FIT["fit"]
+
+
+def _write_base(vecs, centroids, cb, path):
+    write_partitioned(
+        _pq_encode(vecs, centroids, cb).select("vec_id", "codes", "list_id"),
+        path,
+        ["list_id"],
+        len(centroids),
+    )
+
+
+@given(
+    picks=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=10_000),  # corpus position
+            st.sampled_from(["D", "U"]),
+        ),
+        max_size=12,
+        unique_by=lambda t: t[0],
+    ),
+    inserts=st.lists(st.integers(min_value=0, max_value=10_000), max_size=6),
+    absent_delete=st.booleans(),
+)
+@settings(max_examples=8, deadline=None)
+def test_apply_index_delta_equals_set_semantics_on_random_inputs(
+    spark, tmp_path_factory, picks, inserts, absent_delete
+):
+    """For ARBITRARY change batches over the corpus, refreshed over a
+    stale base layout: the on-disk index is EXACTLY
+    (encode(base) \\ removed ids) ∪ encode(inserted and updated rows) —
+    the derived batch in the rebuild-equivalence test is one point in
+    this space; the property covers empty batches, deletes of absent
+    ids, updates that move a vector between lists, and lists emptied by
+    the batch."""
+    vecs, centroids, cb, base, by_id = _cached_fit(spark)
+    ids = sorted(by_id)
+    max_id = ids[-1]
+    picked = {ids[p % len(ids)]: op for p, op in picks}
+    rows = [
+        (i, [-x for x in by_id[i]] if op == "U" else by_id[i], op)
+        for i, op in sorted(picked.items())
+    ]
+    rows += [
+        (max_id + 1 + n, list(reversed(by_id[ids[p % len(ids)]])), "I")
+        for n, p in enumerate(inserts)
+    ]
+    if absent_delete:
+        rows.append((max_id + 1000, by_id[ids[0]], "D"))
+    changes = spark.createDataFrame(rows, _CHANGES_SCHEMA)
+
+    path = str(tmp_path_factory.mktemp("ivfidx") / "idx")
+    _write_base(vecs, centroids, cb, path)
+    _refresh(vecs, changes, centroids, cb, path)
+
+    removed = {i for i, _, op in rows if op in ("U", "D")}
+    delta = spark.createDataFrame(
+        [(i, v) for i, v, op in rows if op in ("I", "U")] or [(-1, [1.0])],
+        "vec_id long, v array<double>",
+    ).filter(F.col("vec_id") >= 0)
+    want = {t for t in base if t[0] not in removed} | _encoded(delta, centroids, cb)
+    assert _index_set(spark, path) == want, rows
+    assert _list_dirs(path) == {f"list_id={l}" for _, l, _ in want}
+
+
+def test_emptied_list_directory_is_dropped(spark, tmp_path):
+    """A list whose every vector the batch deletes has no directory after
+    the refresh, although the base layout at the same path had one — or
+    serving would read stale rows forever. Every other list survives with
+    exactly its rows."""
+    vecs, centroids, cb, base, by_id = _cached_fit(spark)
+    path = str(tmp_path / "idx")
+    _write_base(vecs, centroids, cb, path)
+    victim = min({l for _, l, _ in base})
+    assert f"list_id={victim}" in _list_dirs(path)
+    rm_ids = sorted(v for v, l, _ in base if l == victim)
+    changes = spark.createDataFrame(
+        [(i, by_id[i], "D") for i in rm_ids], _CHANGES_SCHEMA
+    )
+    _refresh(vecs, changes, centroids, cb, path)
+    assert f"list_id={victim}" not in _list_dirs(path), "emptied list dir must drop"
+    assert _index_set(spark, path) == {t for t in base if t[1] != victim}
+
+
+def test_noop_change_batch_is_noop(spark, tmp_path):
+    """Degenerate batch: an empty change batch refreshes the index to
+    exactly the base index, same rows and same list directories."""
+    vecs, centroids, cb, base, _ = _cached_fit(spark)
+    path = str(tmp_path / "idx")
+    _write_base(vecs, centroids, cb, path)
+    dirs = _list_dirs(path)
+    _refresh(vecs, spark.createDataFrame([], _CHANGES_SCHEMA), centroids, cb, path)
+    assert _index_set(spark, path) == base and len(base) > 0
+    assert _list_dirs(path) == dirs
+
+
+def test_folded_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
+    """The one-pass refresh into a fresh path: on-disk content equals
+    encode(base) minus the removed ids plus the inserted encodings, for an
+    arbitrary (not batch-derived) batch that empties one list and inserts
+    into another; the emptied list has no directory."""
+    vecs, centroids, cb, base, by_id = _cached_fit(spark)
+    lists = sorted({l for _, l, _ in base})
+    assert len(lists) >= 2
+    victim, other = lists[0], lists[-1]
+    rm_ids = {v for v, l, _ in base if l == victim}
+    rm_ids.add(next(v for v, l, _ in base if l == other))
+    src, _, some_codes = next(
+        t for t in sorted(base) if t[1] == other and t[0] not in rm_ids
+    )
+    new_id = max(by_id) + 7
+    changes = spark.createDataFrame(
+        [(i, by_id[i], "D") for i in sorted(rm_ids)] + [(new_id, by_id[src], "I")],
+        _CHANGES_SCHEMA,
+    )
+    path = str(tmp_path / "foldtest")
+    _refresh(vecs, changes, centroids, cb, path)
+    want = {t for t in base if t[0] not in rm_ids} | {(new_id, other, some_codes)}
+    assert _index_set(spark, path) == want
+    assert f"list_id={victim}" not in _list_dirs(path)
