@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 from pathlib import Path
 from typing import Callable
@@ -329,9 +330,9 @@ def headline_seconds(entry: dict) -> float | None:
 
     The min structurally masks regressions that raise only SOME iterations
     (intermittent spill, GC pressure from a larger footprint) — which is why
-    :func:`mean_iter_seconds` is reported alongside and queries with
-    ``spread_ratio`` beyond the 1.2x reference threshold are flagged
-    explicitly in the bench output rather than read as silently green."""
+    :func:`compare_runs` reports the :func:`mean_iter_seconds` ratio
+    alongside, and ``bench.py`` flags on stderr every query whose
+    :func:`floor_spread` exceeds the 1.2x reference threshold."""
     its = entry.get("iterations") or []
     if not its:
         return None
@@ -349,21 +350,7 @@ def mean_iter_seconds(entry: dict) -> float | None:
     return sum(i["elapsed_ms"] for i in its) / len(its) / 1000.0
 
 
-def spread_ratio(entry: dict) -> float | None:
-    """max/min elapsed across ALL iterations — the within-run variance
-    signal. With the floor protocol this deliberately includes the
-    interleaved-vs-floor regime gap, so it reads as 'how far above the
-    floor can this query run'; use :func:`floor_spread_ratio` for the
-    headline-stability signal."""
-    its = entry.get("iterations") or []
-    if len(its) < 2:
-        return None
-    vals = [i["elapsed_ms"] for i in its]
-    lo = min(vals)
-    return round(max(vals) / lo, 2) if lo > 0 else None
-
-
-def floor_spread_ratio(entry: dict) -> float | None:
+def floor_spread(entry: dict) -> float | None:
     """max/min over the consecutive FLOOR iterations only. The headline min
     almost always comes from the floor block, so this is the direct
     stability signal: beyond the reference's 1.2x regression threshold
@@ -381,25 +368,23 @@ PER_QUERY_CHUNK_CHARS = 1000
 
 
 def chunked_ms_lines(
-    per_query_seconds: dict[str, float], limit: int = PER_QUERY_CHUNK_CHARS
+    headline: dict[str, float], limit: int = PER_QUERY_CHUNK_CHARS
 ) -> list[str]:
-    """Re-encode the per-query headline map as integer-millisecond JSON
-    detail lines of at most ``limit`` characters each (round-15 driver-
-    visibility fix — VERDICT r14: the single ~2.5 KB per-query line
-    overflowed the driver's 2000-char stdout tail, so PERF_r13/r14 lost
-    the whole per-query table).
+    """Encode the per-query headline map as integer-millisecond JSON lines
+    of at most ``limit`` characters each. The driver keeps only the last
+    2000 characters of stdout, and the whole map at 124 queries is about
+    2.4 KB, so no single line can carry it.
 
     Each line is a self-contained JSON object
     ``{"detail": "per_query_ms", "part": i, "of": n, "queries": {...}}``
     that parses independently of its siblings: the tail window keeps the
     END of stdout, so the later chunks always survive whole and a
     truncated run still yields per-query data for every chunk inside the
-    window. Values are ``int(round(seconds * 1000))`` of the SAME rounded
-    seconds the per_query_seconds line carries — a duplicate encoding,
-    never a second measurement. Greedy first-fit packing preserves bench
-    execution order (tier order), so chunk membership is stable
-    round-over-round while the surface is."""
-    items = [(name, int(round(s * 1000))) for name, s in per_query_seconds.items()]
+    window. Values are ``int(round(seconds * 1000))``. Greedy first-fit
+    packing preserves bench execution order (tier order), so chunk
+    membership is stable round-over-round while the surface is.
+    ``results.json`` stays the complete per-query record."""
+    items = [(name, int(round(s * 1000))) for name, s in headline.items()]
 
     def _line(part: int, of: int, chunk: list[tuple[str, int]]) -> str:
         return json.dumps(
@@ -485,13 +470,17 @@ def compare_runs(current: dict, previous: dict) -> list[str]:
     return lines
 
 
-def write_results(results: dict, output: str | Path) -> None:
-    output = Path(output)
-    if output.exists():
+def write_results(results: dict, output: str | Path, baseline: str | Path) -> None:
+    """Print the comparison against ``baseline`` (when it exists) to stderr,
+    then write ``results`` to ``output``. A partial run passes the full-run
+    ``results.json`` as its baseline and writes a separate file, so the
+    full-run baseline is never overwritten by a partial one."""
+    baseline = Path(baseline)
+    if baseline.exists():
         try:
-            previous = json.loads(output.read_text())
+            previous = json.loads(baseline.read_text())
             for line in compare_runs(results, previous):
-                print(line)
+                print(line, file=sys.stderr)
         except Exception:  # noqa: BLE001 - stale/corrupt previous file
             pass
-    output.write_text(json.dumps(results, indent=2))
+    Path(output).write_text(json.dumps(results, indent=2))

@@ -14,24 +14,14 @@ only on explicit keys, broadcast only for provably-small sides.
 from __future__ import annotations
 
 from collections.abc import Callable
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
-    """Operator queries grouped by their home tier.
-
-    ``__spark_entry__.query_tiers`` keeps this order for the queries
-    outside the driver's gate window. The window itself is computed from
-    the committed ``CORRECTNESS_r*.json`` files: never-green queries first,
-    then by last green round (oldest first), then by number of green rounds
-    (fewest first), then by name.
-
-    The bench runs streaming-named tiers last: each micro-batch query
-    leaves RocksDB state-store maintenance threads and checkpoint cleanup
-    running for a while after it stops, which measurably contaminates the
-    next few *batch* query timings in a sequential bench (observed 0.7s ->
-    5-8s on the text tier when streaming preceded it)."""
+def _tier_modules() -> list[tuple[str, ModuleType]]:
+    """The operator modules by home tier, in bench order. Each module
+    exports ``queries()`` and ``oracles()``."""
     from ..sources import custom
     from ..streaming import events as streaming_events
     from ..streaming import stateful
@@ -55,26 +45,43 @@ def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], 
     )
 
     return [
-        ("selection", selection.queries()),
-        ("dedup", dedup.queries()),
-        ("similarity", similarity.queries()),
-        ("multimodal", multimodal.queries()),
-        ("curation", curation.queries()),
-        ("joins", joins.queries()),
-        ("cdc", cdc.queries()),
-        ("profile", profile.queries()),
-        ("analytics", analytics.queries()),
-        ("graph", graph.queries()),
-        ("retrieval", retrieval.queries()),
-        ("bpe", bpe.queries()),
-        ("sketches", sketches.queries()),
-        ("custom", custom.queries()),
-        ("pipeline", pipeline.queries()),
-        ("temporal", temporal.queries()),
-        ("streaming", streaming_events.queries()),
-        ("stateful", stateful.queries()),
-        ("text", text.queries()),
+        ("selection", selection),
+        ("dedup", dedup),
+        ("similarity", similarity),
+        ("multimodal", multimodal),
+        ("curation", curation),
+        ("joins", joins),
+        ("cdc", cdc),
+        ("profile", profile),
+        ("analytics", analytics),
+        ("graph", graph),
+        ("retrieval", retrieval),
+        ("bpe", bpe),
+        ("sketches", sketches),
+        ("custom", custom),
+        ("pipeline", pipeline),
+        ("temporal", temporal),
+        ("streaming", streaming_events),
+        ("stateful", stateful),
+        ("text", text),
     ]
+
+
+def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
+    """Operator queries grouped by their home tier.
+
+    ``__spark_entry__.query_tiers`` keeps this order for the queries
+    outside the driver's gate window. The window itself is computed from
+    the committed ``CORRECTNESS_r*.json`` files: never-green queries first,
+    then by last green round (oldest first), then by number of green rounds
+    (fewest first), then by name.
+
+    The bench runs streaming-named tiers last: each micro-batch query
+    leaves RocksDB state-store maintenance threads and checkpoint cleanup
+    running for a while after it stops, which measurably contaminates the
+    next few *batch* query timings in a sequential bench (observed 0.7s ->
+    5-8s on the text tier when streaming preceded it)."""
+    return [(tier, module.queries()) for tier, module in _tier_modules()]
 
 
 def pipeline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -96,31 +103,7 @@ def spill_evidence() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def pipeline_oracles() -> dict[str, str]:
-    from ..streaming import events as streaming_events
-    from ..streaming import stateful
-    from . import curation, dedup, joins, multimodal, pipeline, similarity, temporal, text
-
-    from ..sources import custom
-    from . import analytics, bpe, cdc, graph, profile, retrieval, selection, sketches
-
     out: dict[str, str] = {}
-    out.update(selection.oracles())
-    out.update(retrieval.oracles())
-    out.update(bpe.oracles())
-    out.update(sketches.oracles())
-    out.update(analytics.oracles())
-    out.update(graph.oracles())
-    out.update(profile.oracles())
-    out.update(cdc.oracles())
-    out.update(custom.oracles())
-    out.update(joins.oracles())
-    out.update(streaming_events.oracles())
-    out.update(text.oracles())
-    out.update(dedup.oracles())
-    out.update(similarity.oracles())
-    out.update(multimodal.oracles())
-    out.update(stateful.oracles())
-    out.update(pipeline.oracles())
-    out.update(temporal.oracles())
-    out.update(curation.oracles())
+    for _, module in _tier_modules():
+        out.update(module.oracles())
     return out

@@ -1,63 +1,35 @@
 #!/usr/bin/env python
-"""Compare two bench.py JSON outputs for measurement stability.
+"""Compare two bench ``results.json`` files with the bench's own comparator.
 
-The regression protocol (reference benchmarks/src/util/run.rs:212-260) is
-only meaningful if back-to-back runs of UNCHANGED code agree within the same
-1.2x threshold it flags regressions at; this prints the per-query ratio and
-the agreement rate so a round can prove (or disprove) that its numbers carry
-signal.
+Prints ``compare_runs``' line per query (the 1.2x faster/slower markers of
+reference ``benchmarks/src/util/run.rs:212-260``, with the mean ratio
+alongside). Two back-to-back runs of unchanged code should read "no change"
+almost everywhere; otherwise the per-query verdicts carry no signal.
 
-Usage: python scripts/bench_compare.py runA.json runB.json [threshold]
-Exit 0 when >= 95% of queries agree within the threshold.
+Usage: python scripts/bench_compare.py previous.json current.json
+Exit 0 when at least 95% of the lines read "no change" with no
+MEAN-REGRESSED flag.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
+from pathlib import Path
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def load(path: str) -> dict[str, float]:
-    with open(path) as fh:
-        # bench.py stdout carries several JSON lines (detail lines first,
-        # headline last); take the one with the per-query map and tolerate
-        # log noise / truncated lines around it
-        for line in fh:
-            line = line.strip()
-            if line.startswith("{"):
-                try:
-                    obj = json.loads(line)
-                except ValueError:
-                    continue
-                if "queries" in obj:
-                    return obj["queries"]
-    raise SystemExit(f"no per-query JSON line in {path}")
+from datafusion_distributed_experiment_spark.bench import compare_runs  # noqa: E402
 
 
 def main() -> int:
-    a, b = load(sys.argv[1]), load(sys.argv[2])
-    threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.2
-    common = sorted(set(a) & set(b))
-    if not common:
-        raise SystemExit("no common queries")
-    disagree = []
-    for q in common:
-        lo, hi = sorted((a[q], b[q]))
-        ratio = hi / lo if lo > 0 else float("inf")
-        mark = "" if ratio <= threshold else "  <-- UNSTABLE"
-        print(f"{q:28s} {a[q]:8.3f}s {b[q]:8.3f}s  x{ratio:.2f}{mark}")
-        if ratio > threshold:
-            disagree.append((q, ratio))
-    rate = 1 - len(disagree) / len(common)
-    print(
-        f"\n{len(common) - len(disagree)}/{len(common)} queries within "
-        f"{threshold}x ({rate:.0%}); worst: "
-        + (
-            ", ".join(f"{q} x{r:.2f}" for q, r in sorted(disagree, key=lambda t: -t[1])[:5])
-            or "none"
-        )
-    )
-    return 0 if rate >= 0.95 else 1
+    previous, current = (json.loads(Path(p).read_text()) for p in sys.argv[1:3])
+    lines = compare_runs(current, previous)
+    for line in lines:
+        print(line)
+    stable = sum("no change" in line and "MEAN-REGRESSED" not in line for line in lines)
+    return 0 if lines and stable >= 0.95 * len(lines) else 1
 
 
 if __name__ == "__main__":

@@ -12,9 +12,10 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Canonical TPC-H schemas (reference benchmarks/src/tpch/mod.rs:48-141),
 # restricted to the driver's simplified column set where applicable.

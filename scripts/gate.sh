@@ -56,13 +56,35 @@ SF01_RC=$?
 python scripts/verify_spill.py /root/testdata/sf0.01 >> "$ART" 2>&1
 SPILL_RC=$?
 
+# Bench smoke: a partial bench run must print only JSON on stdout, the
+# per_query_ms chunks and then the metric line the driver parses, with
+# both queries counted. Comparison lines and logs go to stderr.
 {
   echo
-  echo "== result: pytest rc=$PYTEST_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC =="
+  echo "-- bench smoke sf0.001 (bench.py --query q6,stream_dedup) --"
+} >> "$ART"
+BENCH_OUT=$(python bench.py --query q6,stream_dedup --iterations 1 \
+  --sf-dir /root/testdata/sf0.001 --cpus 4 2>> "$ART")
+BENCH_RC=$?
+printf '%s\n' "$BENCH_OUT" >> "$ART"
+if [ "$BENCH_RC" -eq 0 ]; then
+  printf '%s\n' "$BENCH_OUT" | python -c '
+import json, sys
+objs = [json.loads(line) for line in sys.stdin.read().splitlines()]
+assert all(o.get("detail") == "per_query_ms" for o in objs[:-1]), objs
+assert objs[-1]["metric"] == "total_query_seconds", objs[-1]
+assert objs[-1]["n_queries"] == 2, objs[-1]
+' >> "$ART" 2>&1
+  BENCH_RC=$?
+fi
+
+{
+  echo
+  echo "== result: pytest rc=$PYTEST_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC bench rc=$BENCH_RC =="
 } >> "$ART"
 
 tail -n 5 "$ART"
-if [ "$PYTEST_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ]; then
+if [ "$PYTEST_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ] || [ "$BENCH_RC" -ne 0 ]; then
   echo "GATE RED — do not snapshot. Full output in $ART" >&2
   exit 1
 fi

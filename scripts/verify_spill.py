@@ -18,11 +18,12 @@ Exit 0 = every query hash-matches with observed spill.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from verify_correctness import TABLES, canonical_hash  # noqa: E402
 

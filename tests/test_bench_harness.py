@@ -1,14 +1,15 @@
 """Unit tests for the bench harness logic (no JVM): interleaved pass order,
-failure isolation, min/spread estimators, and measure-last tier ordering."""
+failure isolation, min/floor-spread estimators, measure-last tier ordering,
+and the stdout contract of ``bench.py``."""
 
 from __future__ import annotations
 
 from datafusion_distributed_experiment_spark.bench import (
     FLOOR_EXTRA,
+    floor_spread,
     headline_seconds,
     mean_iter_seconds,
     run_benchmark,
-    spread_ratio,
 )
 
 
@@ -88,9 +89,13 @@ def test_failing_query_is_isolated_and_skipped_in_later_passes():
 def test_min_estimator_and_spread():
     entry = {"iterations": [{"elapsed_ms": v} for v in (1058.0, 11500.0, 10329.0, 800.0, 770.0)]}
     assert headline_seconds(entry) == 0.77  # min recovers the uncontaminated cost
-    assert spread_ratio(entry) == round(11500.0 / 770.0, 2)
     assert headline_seconds({"iterations": []}) is None
-    assert spread_ratio({"iterations": [{"elapsed_ms": 5.0}]}) is None
+    # the floor spread reads the floor block only: the interleaved 11.5 s
+    # excursion does not count, the floor block's own 800/770 does
+    for it in entry["iterations"][3:]:
+        it["floor"] = True
+    assert floor_spread(entry) == round(800.0 / 770.0, 2)
+    assert floor_spread({"iterations": [{"elapsed_ms": 5.0, "floor": True}]}) is None
     # reference-protocol mean (BenchQuery::avg, util/run.rs:263-270)
     assert mean_iter_seconds(entry) == (1058.0 + 11500.0 + 10329.0 + 800.0 + 770.0) / 5 / 1000
     assert mean_iter_seconds({"iterations": []}) is None
@@ -340,3 +345,96 @@ def test_chunked_ms_lines_fit_and_round_trip():
         assert merged == {n: int(round(s * 1000)) for n, s in per_query.items()}
         # order stability: concatenated chunk keys == input order
         assert list(merged) == list(per_query)
+
+
+def test_bench_main_stdout_is_chunks_then_metric_line(monkeypatch, capsys):
+    """bench.py prints only JSON on stdout: the per_query_ms chunks, then
+    the metric line last. The comparison and the floor-spread flag go to
+    stderr, and a full run writes results.json against itself as baseline."""
+    import importlib
+    import json
+    import os
+
+    import __spark_entry__ as entry_mod
+    import datafusion_distributed_experiment_spark as pkg
+    from datafusion_distributed_experiment_spark import bench as harness
+
+    bench_mod = importlib.import_module("bench")
+
+    class _Session:
+        class sparkContext:
+            @staticmethod
+            def setLogLevel(level):
+                pass
+
+    # enough long names for several chunks, one failed query (no
+    # iterations, left out) and one unstable floor block (stderr flag)
+    names = [f"query_{i:03d}_{'x' * (i % 9)}" for i in range(150)]
+    canned = {"context": {}, "queries": []}
+    for i, name in enumerate(names):
+        floor = [100.0 + i, 100.0 + i] if i else [10.0, 90.0]
+        canned["queries"].append({
+            "query": name,
+            "iterations": [{"elapsed_ms": 200.0 + i}]
+            + [{"elapsed_ms": v, "floor": True} for v in floor],
+        })
+    canned["queries"].append({"query": "failed", "iterations": [], "success": False})
+    writes = []
+
+    for var in ("SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_SORTED", "SPARK_GRAFT_BENCH_MEM"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "data/sf0.001")
+    monkeypatch.setattr(pkg, "build_session", lambda **kw: _Session())
+    monkeypatch.setattr(entry_mod, "query_tiers", lambda: [("sql", {})])
+    monkeypatch.setattr(harness, "run_benchmark", lambda *a, **kw: canned)
+    monkeypatch.setattr(harness, "write_results", lambda *a: writes.append(a[1:]))
+
+    assert bench_mod.main() == 0
+    out, err = capsys.readouterr()
+    lines = out.splitlines()
+    objs = [json.loads(line) for line in lines]  # every stdout line is JSON
+    headline = {n: headline_seconds(q) for n, q in zip(names, canned["queries"])}
+    assert objs[-1] == {
+        "metric": "total_query_seconds",
+        "value": round(sum(headline.values()), 3),
+        "unit": "sec",
+        "sf": 0.001,
+        "n_queries": len(names),
+    }
+    chunks = objs[:-1]
+    assert len(chunks) > 1
+    merged: dict[str, int] = {}
+    for i, obj in enumerate(chunks):
+        assert obj["detail"] == "per_query_ms"
+        assert obj["part"] == i + 1 and obj["of"] == len(chunks)
+        merged.update(obj["queries"])
+    assert merged == {n: int(round(s * 1000)) for n, s in headline.items()}
+    assert "floor-spread>1.2x" in err and names[0] in err
+    (written,) = writes
+    assert [os.path.basename(p) for p in written] == ["results.json", "results.json"]
+
+
+def test_write_results_compares_to_baseline_then_writes_output(tmp_path, capsys):
+    """The comparison against the baseline goes to stderr, the output file
+    gets the new run, and a separate baseline file is left as it was."""
+    import json
+
+    from datafusion_distributed_experiment_spark.bench import write_results
+
+    def run(ms):
+        return {"queries": [{"query": "q", "iterations": [{"elapsed_ms": ms}]}]}
+
+    baseline = tmp_path / "results.json"
+    baseline.write_text(json.dumps(run(100.0)))
+    before = baseline.read_bytes()
+    partial = tmp_path / "results.partial.json"
+    write_results(run(300.0), partial, baseline)
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert err.startswith("q: 300.0 ms (prev 100.0 ms)") and "slower" in err
+    assert baseline.read_bytes() == before
+    assert json.loads(partial.read_text()) == run(300.0)
+    # no baseline yet: nothing to compare, the output is still written
+    write_results(run(5.0), tmp_path / "first.json", tmp_path / "missing.json")
+    assert capsys.readouterr() == ("", "")
+    assert json.loads((tmp_path / "first.json").read_text()) == run(5.0)
