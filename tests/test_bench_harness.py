@@ -16,6 +16,9 @@ from datafusion_distributed_experiment_spark.bench import (
 class _FakeSpark:
     version = "test"
 
+    class sparkContext:
+        defaultParallelism = 4
+
 
 class _FakeDF:
     def __init__(self, rows):
@@ -232,49 +235,45 @@ def test_compare_runs_refuses_partial_baseline():
     assert any("q9" in l for l in compare_runs(cur, prev))
 
 
-def test_measured_iterations_evict_cross_query_memos():
-    """Round-8 advisory fix: the minhash pair-graph memo (localCheckpoint
-    blocks OUTSIDE the catalog cache, deliberately shared by the driver's
-    correctness pass) must NOT survive the bench's between-query eviction —
-    a measured dedup_clusters iteration that reuses it skips the LSH mine,
-    its documented dominant cost, and times a different job."""
-    from datafusion_distributed_experiment_spark.operators import dedup
+def test_compare_runs_refuses_other_scale_or_width():
+    """A run at another sf_dir or local[N] width measures different work, so
+    compare_runs refuses it in one line; cpus is the session's
+    defaultParallelism, and a baseline that predates it still compares."""
+    import copy
 
-    class _Catalog:
-        def clearCache(self):
-            pass
+    from datafusion_distributed_experiment_spark.bench import compare_runs
 
-    class _CatalogSpark(_FakeSpark):
-        catalog = _Catalog()
+    def run(sf_dir, ms):
+        def fn(spark, _sf_dir):
+            return _FakeDF(1)
 
-    class _FakeCheckpoint:
-        unpersisted = 0
-
-        def unpersist(self):
-            _FakeCheckpoint.unpersisted += 1
-
-    evictions: list[int] = []
-
-    def probe(spark, sf_dir):
-        # memo state seen AT QUERY START: a prior query's entry must be gone
-        evictions.append(len(dedup._PAIR_GRAPH_MEMO))
-        dedup._PAIR_GRAPH_MEMO[("app", sf_dir)] = (_FakeCheckpoint(), frozenset())
-        return _FakeDF(1)
-
-    dedup._PAIR_GRAPH_MEMO.clear()
-    try:
-        run_benchmark(
-            _CatalogSpark(), None, "sf", iterations=2, warmup=False,
-            tiers=[("sql", {"p": probe})], clear_cache=True, warm_epoch=True,
+        res = run_benchmark(
+            _FakeSpark(), None, sf_dir, iterations=1, warmup=False,
+            tiers=[("sql", {"q6": fn})], clear_cache=False, warm_epoch=False,
         )
-        # epoch + 2 interleaved + FLOOR_EXTRA floor runs, every one of them
-        # starting with an EMPTY memo (the previous run's entry evicted)
-        assert evictions == [0] * (3 + FLOOR_EXTRA), evictions
-        assert not dedup._PAIR_GRAPH_MEMO
-        # eviction released the checkpoint blocks, not just the dict entry
-        assert _FakeCheckpoint.unpersisted == 3 + FLOOR_EXTRA
-    finally:
-        dedup._PAIR_GRAPH_MEMO.clear()
+        res["queries"][0]["iterations"] = [{"elapsed_ms": ms, "row_count": 1}]
+        return res
+
+    cur = run("/data/sf0.001", 300.0)
+    assert cur["context"]["arguments"]["cpus"] == 4
+
+    (line,) = compare_runs(cur, run("/data/sf0.1", 100.0))
+    assert "sf_dir=/data/sf0.1" in line and "refused" in line, line
+    assert "slower" not in line and "faster" not in line
+
+    wider = run("/data/sf0.001", 100.0)
+    wider["context"]["arguments"]["cpus"] = 32
+    (line,) = compare_runs(cur, wider)
+    assert "cpus=32" in line and "refused" in line, line
+
+    same = run("/data/sf0.001", 100.0)
+    (line,) = compare_runs(cur, same)
+    assert line.startswith("q6: 300.0 ms (prev 100.0 ms) -3.00x slower"), line
+
+    older = copy.deepcopy(same)
+    del older["context"]["arguments"]["cpus"]
+    (line,) = compare_runs(cur, older)
+    assert "slower" in line, line
 
 
 def test_bench_cli_flags_map_to_env(monkeypatch):

@@ -208,44 +208,33 @@ def test_star_cc_empty_and_self_loop_graphs(spark):
     assert _star_cc(spark, [(5, 5)]) == {5: 5}
 
 
-def test_pair_graph_memo_eviction_releases_checkpoint_blocks(spark):
-    """clear_pair_graph_memo must free the localCheckpoint's executor
-    storage, not just drop the dict entry: DataFrame.unpersist alone only
-    uncaches via the cache manager, leaving the checkpoint RDD blocks to
-    ContextCleaner GC (round-8 advisory). The memo records the checkpoint's
-    RDD ids at creation and unpersists them through getPersistentRDDs, so
-    eviction is observable as the ids leaving the persistent-RDD map."""
-    from datafusion_distributed_experiment_spark.operators import dedup
+def test_dedup_clusters_keeps_no_state_between_calls(spark, tmp_path):
+    """Each call mines its own pair graph: a second call after clearCache
+    launches exactly the jobs of the first and returns the same rows. The
+    sf_dir is a fresh path, so no earlier test can have warmed anything
+    keyed by it."""
+    import os
+
+    from datafusion_distributed_experiment_spark.operators.dedup import dedup_clusters
 
     from .conftest import SF_DIR
 
-    dedup.clear_pair_graph_memo()
-    before = dedup._persistent_rdd_ids(spark)
-    # an UNRELATED frame checkpointed while the memo builds: the memo must
-    # record only its own checkpoint (it reads the RDD id off the returned
-    # frame), never attribute concurrent persists to itself — eviction
-    # force-unpersists its recorded ids, which would strand a live
-    # truncated-lineage frame (round-9 advisory)
-    bystander = spark.range(10).localCheckpoint()
-    bystander_ids = dedup._checkpoint_rdd_ids(bystander)
-    assert bystander_ids, "probe must see the bystander checkpoint id"
-    dedup._shared_pair_graph(spark, SF_DIR)
-    (_, ckpt_ids), = dedup._PAIR_GRAPH_MEMO.values()
-    assert ckpt_ids, "memo must record the checkpoint's RDD ids"
-    assert ckpt_ids <= dedup._persistent_rdd_ids(spark) - before
-    assert not (ckpt_ids & bystander_ids), (
-        "memo attributed an unrelated concurrent checkpoint to itself"
-    )
-    dedup.clear_pair_graph_memo()
-    assert not dedup._PAIR_GRAPH_MEMO
-    assert not (ckpt_ids & dedup._persistent_rdd_ids(spark)), (
-        "checkpoint blocks must be released at eviction, not deferred to GC"
-    )
-    assert bystander_ids <= dedup._persistent_rdd_ids(spark), (
-        "eviction must not release blocks it does not own"
-    )
-    assert bystander.count() == 10  # still usable after eviction
-    bystander.unpersist()
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    os.symlink(f"{SF_DIR}/documents.parquet", sf_dir / "documents.parquet")
+    sc = spark.sparkContext
+    jobs, rows = [], []
+    try:
+        for i in range(2):
+            group = f"cc-no-state-{i}"
+            sc.setJobGroup(group, "dedup_clusters call")
+            rows.append(sorted(dedup_clusters(spark, str(sf_dir)).collect()))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            spark.catalog.clearCache()
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs[0] == jobs[1] > 0, jobs
+    assert rows[0] == rows[1] and rows[0]
 
 
 def test_cc_raises_loudly_when_round_budget_exhausted(spark, monkeypatch):

@@ -142,23 +142,21 @@ def test_full_surface_partition_count_independence(name, spark):
     """The reference's core differential strategy applied to the WHOLE
     remaining surface (the two lists above cover the rest): every declared
     query must produce identical results at 1 vs 8 shuffle
-    partitions. Cross-query operator memos (the dedup pair graph) are
-    evicted between topologies so a cached result cannot fake
-    independence; streaming queries re-drain their bounded replay under
-    each topology (their STATE partitioning is fixed by _stream_session —
-    what this checks is the batch half and the drain plumbing)."""
-    from datafusion_distributed_experiment_spark.bench import _evict_query_state
-
+    partitions. The catalog cache is cleared between topologies so a
+    cached result cannot fake independence; streaming queries re-drain
+    their bounded replay under each topology (their STATE partitioning is
+    fixed by _stream_session — what this checks is the batch half and the
+    drain plumbing)."""
     fn = entry_mod.queries()[name]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "1")
-        _evict_query_state(spark)
+        spark.catalog.clearCache()
         single = canonical(fn(spark, SF_DIR).toPandas())
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        _evict_query_state(spark)
+        spark.catalog.clearCache()
         distributed = canonical(fn(spark, SF_DIR).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _evict_query_state(spark)
+        spark.catalog.clearCache()
     assert single == distributed

@@ -782,14 +782,12 @@ def test_dedup_cluster_plans_carry_no_corpus_sized_work(spark):
     appearing here would mean corpus-sized work leaked into the
     per-consumer plan."""
     from datafusion_distributed_experiment_spark.operators.dedup import (
-        clear_pair_graph_memo,
         dedup_clusters,
         dedup_clusters_star,
     )
 
     from .conftest import SF_DIR
 
-    clear_pair_graph_memo()
     df = dedup_clusters(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     s = stage_summary(df)
@@ -798,7 +796,7 @@ def test_dedup_cluster_plans_carry_no_corpus_sized_work(spark):
     assert "rangepartitioning" in plan, plan[:3000]
     assert s["aggregates"] == 0 and s["exchanges"] == 1, (s, plan[:2000])
 
-    df2 = dedup_clusters_star(spark, SF_DIR)  # memoized pair graph reused
+    df2 = dedup_clusters_star(spark, SF_DIR)
     plan2 = df2._jdf.queryExecution().executedPlan().toString()
     s2 = stage_summary(df2)
     assert "FileScan parquet" not in plan2, plan2[:3000]
