@@ -30,15 +30,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 import sys as _sys
 
-if "/root/repo" not in _sys.path:  # driver may exec this file from anywhere
-    _sys.path.insert(0, "/root/repo")
+# the package and the committed CORRECTNESS_r*.json files sit next to this
+# file; the driver may exec it from anywhere
+_ARTIFACT_DIR = os.path.dirname(os.path.abspath(__file__))
+if _ARTIFACT_DIR not in _sys.path:
+    _sys.path.insert(0, _ARTIFACT_DIR)
 
 from datafusion_distributed_experiment_spark import Engine
 from datafusion_distributed_experiment_spark import queries as corpus
 
 GATE_WINDOW = 50
-# the committed CORRECTNESS_r*.json files sit next to this file
-_ARTIFACT_DIR = os.path.dirname(os.path.abspath(__file__))
 
 _SQL_QUERIES = [
     "adhoc/events_window_funcs",

@@ -42,9 +42,9 @@ from pyspark.sql import functions as F
 from ..functions.text import DUCK_TOKENS, tokens
 from ..sources.events import DUCK_EVENTS_MS, read_events
 
-# Imported, not re-hardcoded: the batch/stream session-boundary
+# Imported, not re-hardcoded: the lag-gap and session_window boundary
 # equivalence (pinned by the Hypothesis boundary suite) is structural —
-# tuning the stateful sessionizer's gap cannot silently strand this side.
+# tuning the lag-gap sessionizer's gap cannot silently strand this side.
 from ..streaming.stateful import DEFAULT_GAP_MS as SESSION_GAP_MS
 
 MS_PER_DAY = 86_400_000
@@ -509,7 +509,7 @@ def event_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # SESSION_GAP_MS is imported from streaming.stateful at the top of this
-# module (one source of truth for the batch/stream gap).
+# module (one source of truth for the session gap).
 
 
 def sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:

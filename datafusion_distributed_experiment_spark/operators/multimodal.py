@@ -5,25 +5,19 @@ Design for 100 TB media pipelines:
 - Media payloads are opaque ``binary`` columns with a typed metadata struct —
   the parquet row stays self-describing and column-prunable (a metadata-only
   query never touches the bytes).
-- Decode / feature-extraction / resize / frame-sampling run as Arrow-batched
+- Feature extraction / resize / frame sampling run as Arrow-batched
   ``mapInPandas`` stages: executors stream ~``arrow.maxRecordsPerBatch`` rows
   per pandas batch, so peak memory is bounded regardless of table size, and
   the stage is map-only (no shuffle).
-- The byte->pixels step is REAL for binary Netpbm payloads (P5 grayscale /
-  P6 RGB, 8- and 16-bit): ``decode_ppm`` parses the raster with pure numpy —
-  no external codec — and ``pixel_embed`` turns decoded pixels into the
-  FEATURE_DIM statistics vector, exercised through the actual mapInPandas
-  stage in tests. Compressed formats (JPEG/PNG/video) still require a codec
-  (PIL/ffmpeg, not in this container): ``decode_image`` raises
-  ``NotImplementedError`` for those, and the default feature pipeline over
-  the synthetic (non-image-byte) corpus uses a clearly-marked deterministic
-  fake (md5-derived) with the same batch shape and dtype.
+- The payloads are synthetic (derived from ``documents``), so the feature
+  step is a clearly-marked deterministic fake (``fake_embed``, md5-derived)
+  with the same batch shape and dtype a codec+model would produce.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -75,146 +69,6 @@ FEATURE_DIM = 8
 FRAME_EVERY_MS = 1000
 
 
-def _codec_available() -> bool:
-    try:  # pragma: no cover - container has no PIL
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_ppm_with_maxval(content: bytes):
-    """REAL bytes -> pixels for binary Netpbm: P5 (grayscale) and P6 (RGB),
-    8-bit and 16-bit maxval, '#' header comments — the full binary-raster
-    spec, parsed with pure numpy (no external codec). Returns ``(array,
-    maxval)``: an HxW (grayscale) or HxWx3 (RGB) array, uint8 or big-endian
-    uint16 exactly as the raster stores it, plus the header's declared
-    maxval (the sample full-scale value — NOT necessarily the dtype width:
-    maxval 1023 is a valid 16-bit-container raster whose samples top out at
-    1023). Raises ValueError on a non-Netpbm magic, non-positive
-    dimensions, or a truncated raster (the executor-boundary
-    DataFormatError source)."""
-    import numpy as np
-
-    content = bytes(content)
-    magic = content[:2]
-    if magic not in (b"P5", b"P6"):
-        raise ValueError("not a binary Netpbm payload (expected P5/P6 magic)")
-    # header: 3 whitespace-separated ints (width, height, maxval); '#'
-    # starts a comment running to end-of-line anywhere between tokens
-    tokens: list[int] = []
-    i, n = 2, len(content)
-    while len(tokens) < 3:
-        if i >= n:
-            raise ValueError("truncated Netpbm header")
-        c = content[i : i + 1]
-        if c == b"#":
-            while i < n and content[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        else:
-            j = i
-            while j < n and not content[j : j + 1].isspace():
-                j += 1
-            tokens.append(int(content[i:j]))
-            i = j
-    i += 1  # exactly ONE whitespace byte separates maxval from the raster
-    width, height, maxval = tokens
-    if width <= 0 or height <= 0:
-        raise ValueError(f"Netpbm dimensions must be positive: {width}x{height}")
-    if not (0 < maxval < 65536):
-        raise ValueError(f"maxval {maxval} outside the Netpbm range")
-    channels = 3 if magic == b"P6" else 1
-    dtype = np.dtype(">u2") if maxval > 255 else np.dtype(np.uint8)
-    count = width * height * channels
-    # byte-level check BEFORE frombuffer: a 16-bit raster whose tail byte
-    # count is odd would otherwise surface numpy's generic "buffer size
-    # must be a multiple of element size" instead of the truncation message
-    avail = n - i
-    if avail < count * dtype.itemsize:
-        raise ValueError(
-            f"truncated Netpbm raster: {avail // dtype.itemsize} samples "
-            f"< {count} expected"
-        )
-    raster = np.frombuffer(content, dtype=dtype, count=count, offset=i)
-    arr = raster.reshape((height, width, channels))
-    return (arr[:, :, 0] if channels == 1 else arr), maxval
-
-
-def decode_ppm(content: bytes):
-    """:func:`decode_ppm_with_maxval` without the maxval — the pixel-array
-    convenience used where full-scale normalization is not needed."""
-    return decode_ppm_with_maxval(content)[0]
-
-
-def decode_image_with_maxval(content: bytes):
-    """Bytes -> ``(pixel array, declared full-scale value)``. REAL for
-    binary Netpbm (P5/P6) via :func:`decode_ppm_with_maxval`; compressed
-    formats (JPEG/PNG) require an external codec (PIL) that this container
-    does not ship, and raise ``NotImplementedError`` — the documented
-    pluggable boundary. A plugged codec MUST return the image's declared
-    full scale alongside the array: 12-bit imagery (PNG/DICOM/RAW) rides
-    in uint16 containers, and guessing the dtype width would compress its
-    features ~16x toward 0 — the same defect class the Netpbm path fixes
-    by reading the header's maxval."""
-    if content and bytes(content[:2]) in (b"P5", b"P6"):
-        return decode_ppm_with_maxval(content)
-    if not _codec_available():
-        raise NotImplementedError(
-            "compressed-format image decode requires an image codec (e.g. "
-            "PIL); not available in this container — Netpbm (P5/P6) decodes "
-            "natively via decode_ppm, other formats use fake_embed() in the "
-            "default feature pipeline"
-        )
-    raise NotImplementedError(
-        "compressed-format decode: plug a codec in here, returning "
-        "(array, declared full-scale value)"
-    )
-
-
-def decode_image(content: bytes):
-    """:func:`decode_image_with_maxval` without the full-scale value — the
-    pixel-array convenience used where normalization is not needed."""
-    return decode_image_with_maxval(content)[0]
-
-
-def pixel_embed(content: bytes | None) -> list[float]:
-    """REAL decode+embed for Netpbm payloads: bytes -> pixels
-    (:func:`decode_ppm`) -> FEATURE_DIM pixel statistics (per-channel means,
-    std, min, max, clamped height/width), all scaled to [0, 1]. The real
-    counterpart of :func:`fake_embed` — install with ``set_decoder`` to run
-    actual pixel math through the same Arrow-batched mapInPandas stage
-    (exercised in tests/test_multimodal.py on constructed PPM images)."""
-    import numpy as np
-
-    if content is None:
-        return [0.0] * FEATURE_DIM
-    # normalize by the image's DECLARED full-scale value, not the dtype
-    # width: a maxval-1023 raster rides in a 16-bit container but its
-    # samples top out at 1023, and dividing by 65535 would compress every
-    # feature toward 0 and break cross-image comparability — the decode
-    # boundary carries the full scale for plugged codecs too
-    arr, maxval = decode_image_with_maxval(bytes(content))
-    a = arr.astype(np.float64)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    scale = float(maxval)
-    chans = [float(a[:, :, c].mean()) / scale for c in range(a.shape[2])]
-    while len(chans) < 3:
-        chans.append(chans[-1])
-    h, w = a.shape[:2]
-    feats = chans[:3] + [
-        float(a.std()) / scale,
-        float(a.min()) / scale,
-        float(a.max()) / scale,
-        min(h, 4096) / 4096.0,
-        min(w, 4096) / 4096.0,
-    ]
-    return [float(x) for x in feats[:FEATURE_DIM]]
-
-
 def fake_embed(content: bytes | None) -> list[float]:
     """DETERMINISTIC FAKE decode+embed: md5(content) -> FEATURE_DIM floats in
     [0, 1). Stands in for codec+model inference; same batch shape and dtype
@@ -225,31 +79,9 @@ def fake_embed(content: bytes | None) -> list[float]:
     return [b / 256.0 for b in digest[:FEATURE_DIM]]
 
 
-# Pluggable bytes -> feature decoder. None -> fake_embed (container default:
-# no PIL/ffmpeg here). A real deployment installs its codec+model once via
-# set_decoder(); extract_features captures the hook at plan-build time, so
-# the closure ships it to every executor — the escape hatch is live plumbing
-# (proven in tests/test_multimodal.py with an injected decoder), not a dead
-# branch.
-_DECODER: Callable[[bytes | None], list[float]] | None = None
-
-
-def set_decoder(
-    fn: Callable[[bytes | None], list[float]] | None,
-) -> Callable[[bytes | None], list[float]] | None:
-    """Install the real decode+embed function (must return FEATURE_DIM
-    floats). Pass None to restore the deterministic fake; returns the
-    previous hook so callers can restore it."""
-    global _DECODER
-    prev = _DECODER
-    _DECODER = fn
-    return prev
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: streams Arrow batches through Python,
     emits (media_id, modality, n_bytes, feature[FEATURE_DIM])."""
-    embed = _DECODER or fake_embed  # bound now, serialized into the UDF
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -260,7 +92,7 @@ def extract_features(media: DataFrame) -> DataFrame:
                     "n_bytes": pdf["content"].map(
                         lambda c: len(c) if c is not None else 0
                     ).astype("int64"),
-                    "feature": pdf["content"].map(embed),
+                    "feature": pdf["content"].map(fake_embed),
                 }
             )
 
@@ -290,67 +122,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
             yield out
 
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-# Raw-file ingestion: extension -> modality. Unknown extensions pass through
-# as 'unknown' rather than erroring — a 100 TB landing zone always contains
-# strays, and dropping them silently would corrupt dataset accounting.
-MODALITY_BY_EXT = {
-    "jpg": "image",
-    "jpeg": "image",
-    "png": "image",
-    "gif": "image",
-    "webp": "image",
-    "wav": "audio",
-    "mp3": "audio",
-    "flac": "audio",
-    "ogg": "audio",
-    "mp4": "video",
-    "mkv": "video",
-    "webm": "video",
-    "avi": "video",
-}
-
-
-def read_media_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Ingest a directory of raw media files as MEDIA_SCHEMA rows via Spark's
-    ``binaryFile`` source — the path from object-store dumps (s3://bucket/
-    imgs/*.jpg) into the typed media table the rest of this module operates
-    on.
-
-    Scale notes: ``binaryFile`` ships each file whole to one task (files are
-    not splittable; the source caps at 2 GB/file), so parallelism = #files —
-    right for media corpora of many small-to-medium objects. Only ``path``/
-    ``length``/``modificationTime`` are touched for listing; ``content`` is
-    only read by tasks that consume it, and a metadata-only projection never
-    loads payloads. ``media_id`` is ``xxhash64(path)`` — stable across
-    re-runs, so incremental ingests and dedup joins key consistently. The
-    ``meta`` struct is typed-null here: geometry/duration come from the
-    decode stage (stubbed in this container — see module docstring), not the
-    ingest."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    modality = F.coalesce(
-        *[F.when(ext == e, F.lit(m)) for e, m in MODALITY_BY_EXT.items()],
-        F.lit("unknown"),
-    )
-    null_i = F.lit(None).cast("integer")
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        modality.alias("modality"),
-        F.col("content"),
-        F.struct(
-            null_i.alias("width"),
-            null_i.alias("height"),
-            null_i.alias("sample_rate"),
-            null_i.alias("duration_ms"),
-        ).alias("meta"),
-        F.col("path"),
-        F.col("length").alias("n_bytes"),
-    )
 
 
 def synthetic_media(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -873,45 +873,19 @@ def _pq_serve(
 IVF_PQ_INDEX_BUCKETS = 32
 IVF_PQ_INDEX_TABLE = "ivf_pq_index"
 
-# fingerprint + warehouse-root helpers shared with the dedup tier's
-# persisted band index (sources/tables.py is the home; the aliases keep
-# this module's public surface stable)
 from ..sources.tables import (  # noqa: E402
-    FP_MOD,
-    fp_fold as _fp_fold,
     warehouse_root as _warehouse_root,
     write_partitioned,
 )
 
 
-def corpus_fingerprint(vecs: DataFrame) -> tuple[int, int]:
-    """(row count, content fingerprint) of the filtered corpus — the
-    two-level partition key of every persisted index. Round-14 review fix
-    (ADVICE low): keying the location on row count ALONE left two
-    same-count corpora (or two concurrent same-count invocations over
-    different data) sharing one ``n=<count>`` partition, so the
-    write/read clobber race was only closed across *different* scales.
-    The fingerprint folds min/max/sum-of-residues of ``vec_id`` — one
-    extra column in the agg pass the caller already pays, and derivable
-    identically by the STATIC DuckDB oracle from the embeddings view
-    (``_DUCK_FP``) — so same-count-different-content corpora land in
-    disjoint ``n=<count>/f=<fp>`` partitions. Two invocations over the
-    IDENTICAL corpus still share a partition and produce identical bytes,
-    so the residual race is benign for READERS; concurrent writers of the
-    same partition can still fail LOUDLY at task-commit time (one job's
-    temp-dir cleanup racing the other's commit) — a crash, never silent
-    corruption."""
-    from ..sources.tables import frame_fingerprint
-
-    return frame_fingerprint(vecs, "vec_id")
-
-
 def ivf_pq_index_location(n_corpus: int, fp: int) -> tuple[str, str]:
     """(catalog table name, on-disk path) for the persisted index of a
-    corpus with ``corpus_fingerprint() == (n_corpus, fp)``. Table names
-    carry the same suffix as the path so a session running two scales
-    holds two live catalog entries instead of silently re-pointing one
-    name."""
+    corpus whose ``frame_fingerprint_stats(vecs, "vec_id")`` starts with
+    ``(n_corpus, fp)``. The fingerprint keeps two same-count corpora out of
+    one partition. Table names carry the same suffix as the path so a
+    session running two scales holds two live catalog entries instead of
+    silently re-pointing one name."""
     return (
         f"{IVF_PQ_INDEX_TABLE}_n{n_corpus}_f{fp}",
         f"{_warehouse_root()}/{IVF_PQ_INDEX_TABLE}/n={n_corpus}/f={fp}",
@@ -1022,7 +996,7 @@ IVF_PQ_UPSERT_TABLE = "ivf_pq_index_upsert"
 
 def ivf_pq_upsert_location(n_corpus: int, fp: int) -> str:
     """On-disk path for the maintained index of an ORIGINAL corpus with
-    ``corpus_fingerprint() == (n_corpus, fp)`` (stats taken before the
+    fingerprint ``(n_corpus, fp)`` (stats taken before the
     change batch — the oracle keys its partition selection on the
     embeddings view, which only ever sees the original table)."""
     return f"{_warehouse_root()}/{IVF_PQ_UPSERT_TABLE}/n={n_corpus}/f={fp}"
@@ -1165,7 +1139,7 @@ _DUCK_BUCKET = " + ".join(
     f"(CASE WHEN v[{i}] >= 0 THEN {1 << (i - 1)} ELSE 0 END)" for i in range(1, 9)
 )
 
-# DuckDB twin of corpus_fingerprint's fold (over the SAME filtered vecs
+# DuckDB twin of the vec_id fingerprint fold (over the SAME filtered vecs
 # CTE): selects the content partition alongside the count partition.
 # ONE shared spelling (sources.tables.duck_fp_sql — round-14 review:
 # hand-copied folds used C-style % where Python's is non-negative, a

@@ -96,14 +96,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return re.findall(r"PushedFilters: \[([^\]]*)\]", text)
 
 
-def partition_filters(df: DataFrame) -> list[str]:
-    """PartitionFilters entries from the formatted plan — assert a filter on
-    a hive-layout partition column became directory pruning (no data files
-    listed, let alone read) rather than a post-scan predicate."""
-    text = plan_string(df, "formatted")
-    return [f for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", text) if f.strip()]
-
-
 def executed_metrics(df: DataFrame) -> list[dict]:
     """Per-operator runtime metrics from the EXECUTED plan — Spark's analog
     of the reference displaying metric-annotated plans after a run. Returns

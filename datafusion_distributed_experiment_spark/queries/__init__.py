@@ -35,13 +35,3 @@ def load(name: str) -> str:
     """Load a corpus query by name, e.g. ``tpch/q1`` or ``pipeline/dedup_exact``."""
     path = _HERE / f"{name}.sql"
     return path.read_text().strip().rstrip(";")
-
-
-def available(group: str | None = None) -> list[str]:
-    groups = [group] if group else ["tpch", "pipeline"]
-    out: list[str] = []
-    for g in groups:
-        d = _HERE / g
-        if d.is_dir():
-            out.extend(sorted(f"{g}/{p.stem}" for p in d.glob("*.sql")))
-    return out

@@ -195,9 +195,13 @@ def build_session(
     if master and master.startswith("local"):
         # In local mode the driver JVM hosts all executor threads; the 1g
         # default heap dies on any real shuffle. On a cluster, executor
-        # memory comes from the deployment instead.
+        # memory comes from the deployment instead. The default heap is at
+        # most half the host's physical memory, so the JVM collects before
+        # the host runs out.
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48 << 10, phys_mb // 2)}m"),
         )
     for k, v in default_spark_conf(shuffle_partitions=shuffle_partitions).items():
         builder = builder.config(k, v)

@@ -21,7 +21,6 @@ from .tables import (
     read_tbl_table,
     write_clustered,
     write_csv,
-    write_json,
     write_orc,
     write_parquet,
 )
@@ -38,7 +37,6 @@ __all__ = [
     "write_parquet",
     "write_clustered",
     "write_csv",
-    "write_json",
     "read_orc_table",
     "write_orc",
     "overwrite_partitions",

@@ -185,79 +185,3 @@ def oracles() -> dict[str, str]:
             WHERE numbers > 1 ORDER BY numbers DESC
         """,
     }
-
-
-# --------------------------------------------------------------------- #
-# Streaming variant: custom source as an offset-tracked stream
-# --------------------------------------------------------------------- #
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
-
-STREAM_FORMAT_NAME = "int64stream"
-
-
-class Int64StreamSource(DataSource):
-    """``spark.readStream.format("int64stream")`` — the reference's custom
-    leaf operator as a STREAMING source: the configured list replays in
-    offset-tracked chunks, so micro-batch planning, restart, and
-    exactly-once replay all flow through the engine's own offset log
-    (checkpointed by Structured Streaming, the reference's stage-retry
-    analog for sources).
-
-    Options:
-      values      JSON array of integers
-      batch_size  values per micro-batch (default 7)
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return STREAM_FORMAT_NAME
-
-    def schema(self) -> str:
-        return "numbers bigint"
-
-    def simpleStreamReader(self, schema) -> "Int64StreamReader":
-        return Int64StreamReader(self.options)
-
-
-class Int64StreamReader(SimpleDataSourceStreamReader):
-    """Offsets are list positions; ``readBetweenOffsets`` re-serves any
-    committed range byte-identically, which is what makes recovery
-    exactly-once: a batch replayed after a crash is THE SAME batch."""
-
-    def __init__(self, options):
-        self.values = [int(v) for v in json.loads(options.get("values", "[]"))]
-        self.batch_size = max(1, int(options.get("batch_size", "7")))
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def read(self, start: dict):
-        pos = start["pos"]
-        end = min(pos + self.batch_size, len(self.values))
-        return iter([(v,) for v in self.values[pos:end]]), {"pos": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter([(v,) for v in self.values[start["pos"] : end["pos"]]])
-
-
-def register_stream(spark: SparkSession) -> None:
-    """Idempotent streaming-source registration (same session-locality
-    caveats as :func:`register`)."""
-    try:
-        spark.dataSource.register(Int64StreamSource)
-    except Exception as exc:  # noqa: BLE001 - narrow on the error class
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
-            raise
-
-
-def int64_stream(
-    spark: SparkSession, values: Sequence[int], batch_size: int = 7
-) -> DataFrame:
-    register_stream(spark)
-    return (
-        spark.readStream.format(STREAM_FORMAT_NAME)
-        .option("values", json.dumps(list(values)))
-        .option("batch_size", str(batch_size))
-        .load()
-    )

@@ -159,10 +159,6 @@ def read_json_table(
     return reader.json(path)
 
 
-def write_json(df: DataFrame, path: str, compression: str = "gzip") -> None:
-    df.write.mode("overwrite").option("compression", compression).json(path)
-
-
 def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
     """ORC source (columnar alternative to parquet; same pushdown/pruning
     machinery — ``spark.sql.orc.filterPushdown`` is on by default)."""
@@ -277,12 +273,6 @@ def frame_fingerprint_stats(df: DataFrame, key: str) -> tuple[int, int, int]:
         fp_fold(int(row["mn"]), int(row["mx"]), int(row["s"])),
         int(row["mx"]),
     )
-
-
-def frame_fingerprint(df: DataFrame, key: str) -> tuple[int, int]:
-    """(row count, content fingerprint) — see :func:`frame_fingerprint_stats`."""
-    n, fp, _ = frame_fingerprint_stats(df, key)
-    return n, fp
 
 
 def warehouse_root() -> str:
@@ -428,76 +418,6 @@ def write_clustered(
     special — pushdown against row-group stats is automatic."""
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     out = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-    out.write.mode("overwrite").option("compression", compression).parquet(path)
-
-
-Z_BITS = 8  # 256 bins per dimension; z key spans 16 bits
-
-
-def _zvalue(a, b, bits: int = Z_BITS):
-    """Interleave the low ``bits`` of two bin indices (Morton/Z curve) —
-    a pure JVM expression, no UDF."""
-    from pyspark.sql import functions as F
-
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    partitions: int | None = None,
-    compression: str = "zstd",
-    bits: int = Z_BITS,
-) -> None:
-    """Parquet sink clustered on a two-dimensional Z-ORDER (Morton) curve:
-    each value is binned (equi-width over the observed min/max), the two bin
-    indices are bit-interleaved, and the data is range-partitioned + sorted
-    on the interleaved key. Every file then covers a small set of quadtree
-    cells — bounded intervals in BOTH dimensions — so parquet min/max stats
-    prune selective filters on EITHER column, where a 1-D clustered layout
-    (:func:`write_clustered`) only prunes its single sort dimension.
-
-    Scale shape identical to write_clustered: the min/max bounds are one
-    tiny aggregate (driver-held model state, like the IVF centroids), the
-    z key is a map-side expression, and the single range exchange at write
-    time buys every future selective read on either dimension. Equi-width
-    binning keeps the bound computation O(1); heavily skewed dimensions
-    would swap in approxQuantile boundaries with the same interleave."""
-    from pyspark.sql import functions as F
-
-    ca, cb = cols
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    bounds = df.agg(
-        F.min(ca).alias("a_lo"),
-        F.max(ca).alias("a_hi"),
-        F.min(cb).alias("b_lo"),
-        F.max(cb).alias("b_hi"),
-    ).collect()[0]
-    nbins = 1 << bits
-
-    def _bin(col, lo, hi):
-        # None bounds (empty input, or an all-NULL dimension) degrade to a
-        # single bin like a constant column — not a TypeError on None <= None
-        if lo is None or hi is None or hi <= lo:
-            return F.lit(0).cast("long")
-        raw = F.width_bucket(F.col(col).cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(nbins))
-        return F.greatest(F.lit(0), F.least(F.lit(nbins - 1), raw - 1)).cast("long")
-
-    z = _zvalue(_bin(ca, bounds["a_lo"], bounds["a_hi"]), _bin(cb, bounds["b_lo"], bounds["b_hi"]), bits)
-    out = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
     out.write.mode("overwrite").option("compression", compression).parquet(path)
 
 

@@ -1,165 +1,26 @@
-"""Custom stateful streaming operator: per-user sessionization.
+"""Per-user sessionization: the ``sessionize`` and ``user_sessions`` queries.
 
-The reference ships custom operators to workers through its extension-codec
-mechanism (reference ``tests/custom_extension_codec.rs:160-264``); Spark's
-analog for *stateful* custom logic is ``applyInPandasWithState`` — state is
-hash-partitioned by key (same shuffle a groupBy would use), held in the state
-store, and carried across micro-batches, so the operator scales exactly like
-a streaming aggregate.
-
-``sessionize_stateful`` assigns events to sessions (a new session starts when
-the gap to the previous event of the same user exceeds ``gap_ms``) and emits
-the cumulative per-user rollup each micro-batch; the emission with the highest
-``emit_seq`` per user is the final answer. State is a set of merged session
-*intervals* (the Flink session-window representation), so arrival order —
-within a batch or across batches — cannot change the result: an event landing
-between two existing sessions bridges and merges them, exactly as if it had
-arrived in order. ``sessionize_batch`` is the closed-form batch oracle (lag
-window over event time) that the streaming result must converge to on bounded
-input regardless of how micro-batch boundaries slice the stream — the
-differential-testing strategy of the reference (``tests/tpch.rs:168-194``)
-applied to stateful streaming.
+A new session starts when the gap to the previous event of the same user
+exceeds ``gap_ms``. :func:`sessionize_rollup` marks session starts with a lag
+window over event time and rolls them up per user; :func:`sessionize` runs it
+over the events table, and :func:`user_sessions` keeps one row per (user,
+session) instead of per user. Both carry a DuckDB oracle that spells the same
+lag window in SQL.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any, Iterable
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-SESSION_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_sessions", LongType()),
-        StructField("last_ts_ms", LongType()),
-        # Per-user emission counter: n_sessions is NOT monotone (a late event
-        # can merge two sessions), so consumers pick the row with the highest
-        # emit_seq, never per-column maxes.
-        StructField("emit_seq", LongType()),
-        # Open (still-mutable) sessions held in state after watermark
-        # eviction — observability for the state-boundedness contract.
-        StructField("n_open", LongType()),
-    ]
-)
-
-SESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("starts", ArrayType(LongType())),
-        StructField("ends", ArrayType(LongType())),
-        StructField("n_events", LongType()),
-        # Sessions already finalized + evicted under the watermark, and the
-        # max event ts ever seen (which may belong to an evicted session).
-        StructField("n_closed", LongType()),
-        StructField("last_ts_ms", LongType()),
-        StructField("emit_seq", LongType()),
-    ]
-)
 
 DEFAULT_GAP_MS = 60 * 60 * 1000  # 1 hour
-
-
-def sessionize_stateful(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
-    """Streaming sessionization over a DataFrame with ``user_id`` and a
-    timestamp column ``ts`` (TIMESTAMP); state = merged session intervals +
-    event count per user.
-
-    Order-independent by construction: each event is an [ts, ts] interval;
-    intervals closer than ``gap_ms`` merge. Late cross-batch events extend or
-    bridge existing sessions instead of silently corrupting a scalar
-    ``last_ts``.
-
-    State is BOUNDED when the input carries a watermark: a session whose end
-    precedes ``watermark - gap_ms`` can never merge with a future event
-    (Spark drops rows older than the watermark before they reach the
-    operator), so it is folded into a closed-session counter and evicted
-    from the interval list. Rollup counts stay exact; only the per-user
-    state footprint shrinks to O(open sessions within the watermark horizon)
-    — the contract that keeps the state store flat at 100 TB/day event
-    volume. Without a watermark nothing is evicted and results are still
-    exact (state grows with open sessions)."""
-
-    def fn(
-        key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            starts, ends, n_events, n_closed, last_ts, emit_seq = state.get
-            intervals = [[int(s), int(e)] for s, e in zip(starts, ends)]
-            last_ts = int(last_ts) if last_ts is not None else None
-        else:
-            intervals, n_events, n_closed, last_ts, emit_seq = [], 0, 0, None, 0
-        new_ts = pd.concat(list(pdfs))["ts_ms"]
-        n_events += int(len(new_ts))
-        merged: list[list[int]] = []
-        for s, e in sorted(intervals + [[int(t), int(t)] for t in new_ts]):
-            if merged and s - merged[-1][1] <= gap_ms:
-                merged[-1][1] = max(merged[-1][1], e)
-            else:
-                merged.append([s, e])
-        if merged:
-            last_ts = max(last_ts, merged[-1][1]) if last_ts is not None else merged[-1][1]
-        try:
-            watermark_ms = state.getCurrentWatermarkMs()
-        except Exception:  # noqa: BLE001 - no watermark on the input stream
-            watermark_ms = 0
-        if watermark_ms > 0:
-            still_open = [iv for iv in merged if iv[1] + gap_ms >= watermark_ms]
-            n_closed += len(merged) - len(still_open)
-            merged = still_open
-        emit_seq += 1
-        state.update(
-            (
-                [s for s, _ in merged],
-                [e for _, e in merged],
-                n_events,
-                n_closed,
-                last_ts,
-                emit_seq,
-            )
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "n_events": n_events,
-                    "n_sessions": n_closed + len(merged),
-                    "last_ts_ms": last_ts,
-                    "emit_seq": emit_seq,
-                    "n_open": len(merged),
-                }
-            ]
-        )
-
-    # Keep the original ts column: the event-time watermark rides on its
-    # attribute metadata, and projecting it away silently disables
-    # watermarking (state.getCurrentWatermarkMs then raises -> no eviction).
-    # a NULL event time reaches the UDF as NaN and int(NaN) raises,
-    # failing the whole streaming query (round-12 review); an event
-    # without a time has no session on ANY path — excluded like the
-    # batch/lag spellings
-    keyed = events.filter(F.col("ts").isNotNull()).select(
-        "user_id", "ts", F.expr("unix_micros(ts) DIV 1000").alias("ts_ms")
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        SESSION_OUTPUT_SCHEMA,
-        SESSION_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
 
 
 def sessionize_rollup(keyed: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
     """Closed-form sessionization over (user_id, ts_ms): lag window marks
     session starts, then one per-user rollup. Two shuffles on user_id (the
     window and the groupBy share partitioning, so AQE/EnsureRequirements
-    reuses the exchange) — the batch shape of the streaming operator."""
+    reuses the exchange)."""
     w = Window.partitionBy("user_id").orderBy("ts_ms")
     gaps = keyed.withColumn(
         "new_session",
@@ -174,15 +35,6 @@ def sessionize_rollup(keyed: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFra
         F.sum("new_session").cast("long").alias("n_sessions"),
         F.max("ts_ms").cast("long").alias("last_ts_ms"),
     )
-
-
-def sessionize_batch(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
-    """Closed-form batch sessionization (lag window): the oracle the
-    streaming operator converges to on bounded input."""
-    keyed = events.filter(F.col("ts").isNotNull()).select(
-        "user_id", F.expr("unix_micros(ts) DIV 1000").alias("ts_ms")
-    )
-    return sessionize_rollup(keyed, gap_ms)
 
 
 def sessionize(spark, sf_dir: str) -> DataFrame:
@@ -295,74 +147,3 @@ def oracles() -> dict[str, str]:
             ORDER BY user_id, session_no
         """,
     }
-
-
-# --------------------------------------------------------------------- #
-# transformWithState: the arbitrary-stateful successor API
-# --------------------------------------------------------------------- #
-
-try:  # pyspark >= 4.0
-    # NOTE: executing transformWithState also needs google.protobuf at
-    # runtime (its state-server wire protocol) — absent in this container,
-    # so the end-to-end replay test self-skips and the processor's
-    # accumulation logic is unit-tested against a fake ValueState instead
-    # (tests/test_streaming.py). applyInPandasWithState above remains the
-    # fully end-to-end-tested stateful path.
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """Per-user running event count + cents total in a ValueState.
-
-        Demonstrates ``transformWithStateInPandas`` — the successor to
-        ``applyInPandasWithState`` (typed composable state primitives:
-        value/list/map state, timers, TTL) and the Spark analog of the
-        reference's user-defined-operator mechanism for STREAMS. State is
-        two BIGINTs per user: O(keys), the minimum any per-key aggregate
-        can hold; totals are associative so arrival order and micro-batch
-        slicing cannot change the converged value (pinned by the striped
-        replay test)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, cents BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-            n = 0
-            cents = 0
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    cents += int(pdf["value_cents"].sum())
-            if self._totals.exists():
-                prev = self._totals.get()
-                n += int(prev[0])
-                cents += int(prev[1])
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [int(key[0])], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_totals_stateful(events: DataFrame) -> DataFrame:
-        """Streaming per-user running totals via ``transformWithState``.
-        Input: raw events stream (``user_id``, ``value`` columns used);
-        output: one updated (user_id, n_events, total_cents) row per user
-        per micro-batch (Update mode). The latest emission per user equals
-        the batch groupBy — the convergence oracle."""
-        keyed = events.select(
-            "user_id", F.expr("CAST(ROUND(value * 100) AS BIGINT)").alias("value_cents")
-        )
-        return keyed.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType="user_id BIGINT, n_events BIGINT, total_cents BIGINT",
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older pyspark without the API
-    RunningTotalsProcessor = None  # type: ignore[assignment]
-    running_totals_stateful = None  # type: ignore[assignment]

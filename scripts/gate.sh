@@ -16,8 +16,13 @@ ART=GATE.txt
   echo "-- pytest tests/ -q --"
 } > "$ART"
 
-python -m pytest tests/ -q >> "$ART" 2>&1
+python -m pytest tests/ -q -rs >> "$ART" 2>&1
 PYTEST_RC=$?
+# A skipped test is a path nothing checked, so a skip turns the gate red
+# (-rs lists the skip reasons above the summary line).
+if tail -n 1 "$ART" | grep -qE "[0-9]+ skipped"; then
+  PYTEST_RC=1
+fi
 
 {
   echo

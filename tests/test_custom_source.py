@@ -108,67 +108,3 @@ def test_custom_source_filter_pushdown(spark):
         "numbers > 15"
     )
     assert sorted(r["numbers"] for r in plain.collect()) == [16, 17, 18, 19]
-
-
-# ------------------------------------------------------------ streaming ----
-
-
-def test_custom_stream_source_delivers_all_values_in_batches(spark):
-    """The custom streaming source must deliver every configured value
-    exactly once across multiple micro-batches (batch_size 7 over 20
-    values -> at least 3 planned batches through the offset log)."""
-    import time
-
-    from datafusion_distributed_experiment_spark.sources.custom import int64_stream
-
-    values = list(range(100, 120))
-    q = (
-        int64_stream(spark, values, batch_size=7)
-        .writeStream.format("memory")
-        .queryName("t_int64_stream")
-        .outputMode("append")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            got = [r.numbers for r in spark.table("t_int64_stream").collect()]
-            if len(got) >= len(values):
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert sorted(got) == values
-    assert len(got) == len(values)  # exactly once, no duplicates
-
-
-def test_custom_stream_reader_replays_offset_ranges_identically(spark):
-    """Exactly-once recovery contract: readBetweenOffsets must re-serve any
-    committed range byte-identically, and chunked reads must tile the list
-    without gaps or overlaps."""
-    from datafusion_distributed_experiment_spark.sources.custom import (
-        Int64StreamReader,
-    )
-
-    import json as _json
-
-    reader = Int64StreamReader(
-        {"values": _json.dumps(list(range(10))), "batch_size": "4"}
-    )
-    off = reader.initialOffset()
-    seen = []
-    offsets = [off]
-    while True:
-        rows, nxt = reader.read(off)
-        rows = list(rows)
-        if not rows:
-            break
-        seen.extend(v for (v,) in rows)
-        offsets.append(nxt)
-        off = nxt
-    assert seen == list(range(10))
-    # replay every committed (start, end) pair: identical slices
-    for a, b in zip(offsets, offsets[1:]):
-        replay = [v for (v,) in reader.readBetweenOffsets(a, b)]
-        assert replay == list(range(a["pos"], b["pos"]))

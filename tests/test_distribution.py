@@ -51,8 +51,11 @@ def test_not_in_with_null_subquery_is_empty(engine):
 
 
 def test_convert_cli_roundtrip(engine, tmp_path):
+    import os
     import subprocess
     import sys
+
+    from .conftest import REPO_DIR
 
     src = engine.sql("SELECT n_nationkey, n_name, n_regionkey FROM nation")
     tbl = tmp_path / "nation.tbl"
@@ -63,7 +66,7 @@ def test_convert_cli_roundtrip(engine, tmp_path):
     res = subprocess.run(
         [
             sys.executable,
-            "/root/repo/scripts/convert.py",
+            os.path.join(REPO_DIR, "scripts", "convert.py"),
             "--input",
             str(tbl),
             "--table",

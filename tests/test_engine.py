@@ -42,9 +42,7 @@ def test_register_csv_and_tbl(engine, tmp_path):
 
 def test_register_json_roundtrip(engine, tmp_path):
     src = engine.sql("SELECT n_nationkey, n_name FROM nation")
-    from datafusion_distributed_experiment_spark import sources
-
-    sources.write_json(src, str(tmp_path / "nation_json"))
+    src.write.json(str(tmp_path / "nation_json"))
     engine.register_json(
         "nation_json", str(tmp_path / "nation_json"),
         schema="n_nationkey INT, n_name STRING",
@@ -375,71 +373,6 @@ def test_preload_mem_serves_sql_from_cached_tables(spark, tmp_path):
 
         entry_mod._registered.clear()
         Engine(spark).register_sf_dir(SF_DIR)
-
-
-def test_write_zordered_bounds_both_dimensions(spark, tmp_path):
-    """Z-order layout: every output file covers a bounded interval in BOTH
-    clustered dimensions (quadtree cells), so min/max stats prune selective
-    filters on EITHER column — where the 1-D clustered control only bounds
-    its single sort dimension. Also a lossless round trip."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        write_clustered,
-        write_zordered,
-    )
-    from .conftest import SF_DIR
-
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet").select("event_id", "user_id")
-    zpath, cpath = str(tmp_path / "z"), str(tmp_path / "c")
-    write_zordered(src, zpath, ("user_id", "event_id"), partitions=8)
-    write_clustered(src, cpath, ["user_id"], partitions=8)
-
-    # lossless
-    back = spark.read.parquet(zpath)
-    chk = lambda df: df.agg(  # noqa: E731
-        F.count("*"), F.sum("event_id"), F.sum("user_id")
-    ).collect()
-    assert chk(back) == chk(src)
-
-    import os
-
-    def mean_spans(path):
-        los = {"user_id": [], "event_id": []}
-        his = {"user_id": [], "event_id": []}
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(path, f)).metadata
-            for col in ("user_id", "event_id"):
-                idx = next(
-                    i for i in range(md.num_columns)
-                    if md.row_group(0).column(i).path_in_schema == col
-                )
-                stats = [
-                    md.row_group(g).column(idx).statistics
-                    for g in range(md.num_row_groups)
-                ]
-                los[col].append(min(s.min for s in stats))
-                his[col].append(max(s.max for s in stats))
-        out = {}
-        for col in ("user_id", "event_id"):
-            glo, ghi = min(los[col]), max(his[col])
-            spans = [
-                (h - l) / max(1, ghi - glo) for l, h in zip(los[col], his[col])
-            ]
-            out[col] = sum(spans) / len(spans)
-        return out
-
-    zspans = mean_spans(zpath)
-    cspans = mean_spans(cpath)
-    # z-order bounds BOTH dims; 1-D clustering bounds only user_id and
-    # leaves event_id unconstrained (~full range per file)
-    assert zspans["user_id"] < 0.6, zspans
-    assert zspans["event_id"] < 0.6, zspans
-    assert cspans["user_id"] < 0.3, cspans
-    assert cspans["event_id"] > 0.9, cspans
 
 
 # --------------------------------------------------------- maintenance ----
@@ -802,13 +735,13 @@ def test_fingerprint_fold_matches_duckdb_on_negative_ids(spark):
     from datafusion_distributed_experiment_spark.sources.tables import (
         FP_MOD,
         duck_fp_sql,
-        frame_fingerprint,
+        frame_fingerprint_stats,
     )
 
     con = duckdb.connect()
     for ids in ([1, 2, 3], [-5, -2, 0, 7], [-1_000_000, -999], [0]):
         df = spark.createDataFrame([(i,) for i in ids], "k long")
-        n_spark, fp_spark = frame_fingerprint(df, "k")
+        n_spark, fp_spark = frame_fingerprint_stats(df, "k")[:2]
         con.execute("CREATE OR REPLACE TABLE t AS SELECT * FROM (VALUES "
                     + ", ".join(f"({i})" for i in ids) + ") v(k)")
         fp_duck = con.execute(f"SELECT {duck_fp_sql('k')} FROM t").fetchone()[0]

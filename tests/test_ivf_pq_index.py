@@ -31,8 +31,10 @@ from datafusion_distributed_experiment_spark.operators.similarity import (
 from pyspark.sql import functions as F
 
 from datafusion_distributed_experiment_spark.operators.similarity import (
-    corpus_fingerprint,
     ivf_pq_index_location,
+)
+from datafusion_distributed_experiment_spark.sources.tables import (
+    frame_fingerprint_stats,
 )
 
 from .conftest import SF_DIR
@@ -46,7 +48,8 @@ def _index_table(spark):
     # per-corpus catalog name (round-13/14 reviews: the location is keyed
     # by (row count, vec_id fingerprint) so concurrent scales — and
     # same-count different-content corpora — cannot clobber each other)
-    return ivf_pq_index_location(*corpus_fingerprint(_vectors(spark, SF_DIR)))[0]
+    n, fp, _ = frame_fingerprint_stats(_vectors(spark, SF_DIR), "vec_id")
+    return ivf_pq_index_location(n, fp)[0]
 
 
 def test_index_serve_equals_inflight_topk(spark):
@@ -140,7 +143,8 @@ def test_index_location_is_scale_isolated_and_relocatable(spark, duck, tmp_path)
 
     n_base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
     ivf_pq_index_build(spark, SF_DIR).collect()
-    base_path = ivf_pq_index_location(*corpus_fingerprint(_vectors(spark, SF_DIR)))[1]
+    n, fp, _ = frame_fingerprint_stats(_vectors(spark, SF_DIR), "vec_id")
+    base_path = ivf_pq_index_location(n, fp)[1]
     assert os.path.isdir(base_path)
     base_files = sorted(os.listdir(base_path))
 
@@ -158,10 +162,9 @@ def test_index_location_is_scale_isolated_and_relocatable(spark, duck, tmp_path)
     ).write.parquet(str(syn_dir / "embeddings.parquet"))
     got = ivf_pq_index_build(spark, str(syn_dir)).toPandas()
     assert len(got) > 0
-    syn_path = ivf_pq_index_location(
-        *corpus_fingerprint(_vectors(spark, str(syn_dir)))
-    )[1]
-    assert corpus_fingerprint(_vectors(spark, str(syn_dir)))[0] == n_syn
+    n, fp, _ = frame_fingerprint_stats(_vectors(spark, str(syn_dir)), "vec_id")
+    syn_path = ivf_pq_index_location(n, fp)[1]
+    assert n == n_syn
     assert os.path.isdir(syn_path) and syn_path != base_path
     # the base scale's partition is untouched by the synthetic build
     assert sorted(os.listdir(base_path)) == base_files
@@ -216,11 +219,13 @@ def test_index_location_is_content_isolated_at_same_count(spark, duck, tmp_path)
     dir_b = corpus("b", list(range(n - 1)) + [n + 12])
 
     ivf_pq_index_build(spark, dir_a).collect()
-    path_a = ivf_pq_index_location(*corpus_fingerprint(_vectors(spark, dir_a)))[1]
+    n_a, fp_a, _ = frame_fingerprint_stats(_vectors(spark, dir_a), "vec_id")
+    path_a = ivf_pq_index_location(n_a, fp_a)[1]
     files_a = sorted(os.listdir(path_a))
 
     got_b = ivf_pq_index_build(spark, dir_b).toPandas()
-    path_b = ivf_pq_index_location(*corpus_fingerprint(_vectors(spark, dir_b)))[1]
+    n_b, fp_b, _ = frame_fingerprint_stats(_vectors(spark, dir_b), "vec_id")
+    path_b = ivf_pq_index_location(n_b, fp_b)[1]
     assert path_b != path_a, "same-count corpora must not share a partition"
     # corpus A's partition is untouched by corpus B's build
     assert sorted(os.listdir(path_a)) == files_a

@@ -36,11 +36,13 @@ from datafusion_distributed_experiment_spark.operators.similarity import (
     _vectors,
     _with_xp,
     ivf_pq_index_upsert,
-    corpus_fingerprint,
     ivf_pq_upsert_location,
     norm,
 )
-from datafusion_distributed_experiment_spark.sources.tables import write_partitioned
+from datafusion_distributed_experiment_spark.sources.tables import (
+    frame_fingerprint_stats,
+    write_partitioned,
+)
 
 from .conftest import SF_DIR
 
@@ -81,7 +83,7 @@ def test_upsert_equals_frozen_model_rebuild(spark):
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in rebuild_enc.collect()
     )
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs))
+    path = ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
     got_index = sorted(
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in spark.read.parquet(path).collect()
@@ -112,7 +114,7 @@ def test_single_query_serve_prunes_partitions(spark):
     ivf_pq_index_upsert(spark, SF_DIR).collect()  # maintain side effect
     vecs, centroids, cb, seed_rows = _frozen_fit(spark)
     merged = _merged_corpus(spark, vecs).localCheckpoint()
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs))
+    path = ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
     index = spark.read.parquet(path).withColumn(
         "list_id", F.col("list_id").cast("long")
     )

@@ -243,7 +243,6 @@ def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeyp
     )
     from datafusion_distributed_experiment_spark.operators.similarity import (
         _pq_encode,
-        corpus_fingerprint,
         ivf_pq_upsert_location,
     )
 
@@ -254,7 +253,8 @@ def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeyp
     vecs, centroids, cb, _ = _frozen_fit(spark)
     write_partitioned(
         _pq_encode(vecs, centroids, cb),
-        ivf_pq_upsert_location(*corpus_fingerprint(vecs)) + "_foldtest",
+        ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
+        + "_foldtest",
         ["list_id"],
         len(centroids),
     )

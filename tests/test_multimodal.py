@@ -1,4 +1,4 @@
-"""Multimodal plumbing: real schema/batch-shape/partitioning, stubbed codecs."""
+"""Multimodal plumbing: real schema/batch-shape/partitioning, fake embedding."""
 
 from __future__ import annotations
 
@@ -43,243 +43,6 @@ def test_sample_frames_fans_out(media):
     assert frames.schema == mm.MEDIA_SCHEMA
 
 
-def test_injected_decoder_reaches_executors(media):
-    """The real-codec escape hatch end-to-end: a custom decoder installed via
-    set_decoder must be serialized into the pandas UDF and produce the
-    features on executors (a deployment with PIL/ffmpeg plugs in exactly
-    like this fake)."""
-
-    def length_embed(content):
-        n = float(len(content)) if content is not None else -1.0
-        return [n] * mm.FEATURE_DIM
-
-    prev = mm.set_decoder(length_embed)
-    try:
-        out = {r.media_id: r.feature for r in mm.extract_features(media).collect()}
-    finally:
-        mm.set_decoder(prev)
-    assert out[0] == [10.0] * mm.FEATURE_DIM  # row 0 content is 10 bytes
-    assert all(f == [float(10 + i)] * mm.FEATURE_DIM for i, f in out.items())
-    # and the hook is cleanly restored: default path is the fake again
-    restored = {r.media_id: r.feature for r in mm.extract_features(media).collect()}
-    assert restored[0] == mm.fake_embed(bytes([0] * 10))
-
-
-def test_decode_compressed_formats_still_gated():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x89PNG...")
-
-
-def test_decode_branches_on_codec_availability(monkeypatch):
-    """Both arms of the codec escape hatch for COMPRESSED formats: without a
-    codec the error points at the fake_embed fallback; with one (simulated —
-    the container has no PIL) the plug-in arm is reached instead of the
-    fallback message. Netpbm bytes never reach either arm (decoded natively
-    — tests below)."""
-    monkeypatch.setattr(mm, "_codec_available", lambda: False)
-    with pytest.raises(NotImplementedError, match="fake_embed"):
-        mm.decode_image(b"x")
-    monkeypatch.setattr(mm, "_codec_available", lambda: True)
-    with pytest.raises(NotImplementedError, match="plug a codec"):
-        mm.decode_image(b"x")
-
-
-def _ppm_bytes(arr, maxval=255, comment=False):
-    """Encode a numpy array as binary Netpbm (P6 for HxWx3, P5 for HxW)."""
-    import numpy as np
-
-    magic = b"P6" if arr.ndim == 3 else b"P5"
-    h, w = arr.shape[:2]
-    hdr = magic + (b"\n# synthetic test image\n" if comment else b"\n")
-    hdr += f"{w} {h}\n{maxval}\n".encode()
-    dtype = ">u2" if maxval > 255 else "u1"
-    return hdr + arr.astype(np.dtype(dtype)).tobytes()
-
-
-def test_decode_ppm_roundtrips_real_pixels():
-    """REAL bytes -> pixels: encode known numpy rasters as binary Netpbm and
-    decode them back bit-exactly — P6 RGB, P5 grayscale, a '#' header
-    comment, and 16-bit (big-endian) maxval. Truncated rasters and foreign
-    magics raise ValueError."""
-    import numpy as np
-
-    rgb = (np.arange(6 * 5 * 3, dtype=np.uint8).reshape(6, 5, 3) * 7) % 256
-    assert np.array_equal(mm.decode_ppm(_ppm_bytes(rgb)), rgb)
-    assert np.array_equal(mm.decode_ppm(_ppm_bytes(rgb, comment=True)), rgb)
-    gray = (np.arange(4 * 9, dtype=np.uint8).reshape(4, 9) * 13) % 256
-    assert np.array_equal(mm.decode_ppm(_ppm_bytes(gray)), gray)
-    deep = (np.arange(3 * 4, dtype=np.uint16).reshape(3, 4) * 4099) % 65536
-    got = mm.decode_ppm(_ppm_bytes(deep, maxval=65535))
-    assert np.array_equal(got.astype(np.uint16), deep)
-    with pytest.raises(ValueError, match="truncated"):
-        mm.decode_ppm(_ppm_bytes(rgb)[:-4])
-    with pytest.raises(ValueError, match="magic"):
-        mm.decode_ppm(b"JFIF....")
-
-
-def test_decode_ppm_validates_dimensions_and_odd_16bit_truncation():
-    """Non-positive dimensions raise the explicit dimension message, and a
-    16-bit raster cut to an ODD byte count still raises the documented
-    'truncated Netpbm raster' ValueError instead of numpy's generic
-    'buffer size must be a multiple of element size'."""
-    import numpy as np
-
-    for bad_hdr in (b"P5\n0 4\n255\n", b"P5\n4 0\n255\n", b"P6\n-3 4\n255\n"):
-        with pytest.raises(ValueError, match="dimensions must be positive"):
-            mm.decode_ppm(bad_hdr + b"\x00" * 64)
-    deep = (np.arange(3 * 4, dtype=np.uint16).reshape(3, 4) * 4099) % 65536
-    payload = _ppm_bytes(deep, maxval=65535)
-    with pytest.raises(ValueError, match="truncated Netpbm raster"):
-        mm.decode_ppm(payload[:-3])  # odd tail: (len - header) % 2 == 1
-
-
-def test_pixel_embed_normalizes_by_declared_maxval():
-    """The header's declared maxval — not the dtype container width — is the
-    full-scale value: a uniform image whose samples equal its maxval must
-    embed with channel means ~1.0 for ANY legal maxval (e.g. 1023, a valid
-    16-bit-container raster). Dividing by 65535 would compress the same
-    image to ~0.0156 and break cross-image comparability."""
-    import numpy as np
-
-    for maxval in (100, 1023, 4095, 65535):
-        arr = np.full((6, 7), maxval, dtype=np.uint16)
-        feats = mm.pixel_embed(_ppm_bytes(arr, maxval=maxval))
-        assert feats[0] == pytest.approx(1.0), maxval  # channel mean
-        assert feats[5] == pytest.approx(1.0), maxval  # max
-        # and a half-scale image lands at ~0.5 regardless of container
-        half = np.full((6, 7), maxval // 2, dtype=np.uint16)
-        f2 = mm.pixel_embed(_ppm_bytes(half, maxval=maxval))
-        assert f2[0] == pytest.approx((maxval // 2) / maxval), maxval
-    # 8-bit path unchanged
-    arr8 = np.full((4, 4), 255, dtype=np.uint8)
-    assert mm.pixel_embed(_ppm_bytes(arr8))[0] == pytest.approx(1.0)
-
-
-def test_pixel_embed_runs_real_pixels_through_spark(spark):
-    """End-to-end REAL bytes -> pixels -> features THROUGH the Arrow-batched
-    mapInPandas stage: constructed Netpbm images as media payloads,
-    pixel_embed installed via the live set_decoder hook, executor output
-    equal to local numpy truth. This is the real-decode counterpart of the
-    fake-embed plumbing test — actual pixel math on executors, no codec
-    stub anywhere on the path."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for i in range(12):
-        arr = rng.integers(0, 256, size=(8 + i, 5 + i, 3), dtype=np.uint8)
-        rows.append((i, "image", _ppm_bytes(arr), (5 + i, 8 + i, None, None)))
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA).repartition(3)
-    prev = mm.set_decoder(mm.pixel_embed)
-    try:
-        got = {r.media_id: r.feature for r in mm.extract_features(media).collect()}
-    finally:
-        mm.set_decoder(prev)
-    assert len(got) == 12
-    for i, _, content, _ in rows:
-        want = mm.pixel_embed(content)
-        assert got[i] == pytest.approx(want, abs=1e-6), i
-        # features are REAL pixel statistics: channel means in [0,1],
-        # min <= means <= max
-        assert got[i][4] <= min(got[i][:3]) and max(got[i][:3]) <= got[i][5]
-
-
-def test_read_media_files_ingests_binary_dir(spark, tmp_path):
-    """binaryFile ingestion: extension->modality mapping, stable path-hash
-    ids, payload fidelity, and a metadata-only projection that never loads
-    content. Feeds straight into the feature/dedup stages."""
-    payloads = {
-        "a.jpg": b"\xff\xd8fakejpeg",
-        "b.JPG": b"\xff\xd8fakejpeg2",  # extension case-insensitive
-        "c.wav": b"RIFFfakewav",
-        "d.mp4": b"\x00\x00fakemp4",
-        "e.bin": b"stray",  # unknown extension survives as 'unknown'
-    }
-    for name, blob in payloads.items():
-        (tmp_path / name).write_bytes(blob)
-
-    media = mm.read_media_files(spark, str(tmp_path))
-    rows = {r.path.rsplit("/", 1)[-1]: r for r in media.collect()}
-    assert set(rows) == set(payloads)
-    assert rows["a.jpg"].modality == "image"
-    assert rows["b.JPG"].modality == "image"
-    assert rows["c.wav"].modality == "audio"
-    assert rows["d.mp4"].modality == "video"
-    assert rows["e.bin"].modality == "unknown"
-    assert all(bytes(rows[n].content) == payloads[n] for n in payloads)
-    assert all(r.n_bytes == len(payloads[n]) for n, r in rows.items())
-    # ids are distinct and stable across a re-read (path-hash, not zipWithIndex)
-    again = {r.path.rsplit("/", 1)[-1]: r.media_id for r in mm.read_media_files(spark, str(tmp_path)).collect()}
-    assert len(set(again.values())) == len(payloads)
-    assert all(rows[n].media_id == again[n] for n in payloads)
-
-    # glob narrows the listing; downstream feature extraction runs unchanged
-    imgs = mm.read_media_files(spark, str(tmp_path), glob="*.jpg")
-    feats = mm.extract_features(imgs.select("media_id", "modality", "content")).collect()
-    assert len(feats) == 1 and len(feats[0].feature) == mm.FEATURE_DIM
-
-
-def test_decode_ppm_roundtrip_property():
-    """Hypothesis property: ANY uint8 raster (1-32 px sides, gray or RGB,
-    with or without a header comment) encodes to binary Netpbm and decodes
-    back bit-exactly — the decoder is total over the format, not just over
-    the handful of fixtures above."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from hypothesis.extra.numpy import arrays
-
-    shapes = st.one_of(
-        st.tuples(st.integers(1, 32), st.integers(1, 32)),
-        st.tuples(st.integers(1, 32), st.integers(1, 32), st.just(3)),
-    )
-
-    @given(
-        arr=shapes.flatmap(
-            lambda s: arrays(dtype=np.uint8, shape=s)
-        ),
-        comment=st.booleans(),
-    )
-    @settings(max_examples=150, deadline=None)
-    def check(arr, comment):
-        got = mm.decode_ppm(_ppm_bytes(arr, comment=comment))
-        assert got.shape == arr.shape
-        assert (got == arr).all()
-
-    check()
-
-
-def test_decode_ppm_maxval_roundtrip_property():
-    """Hypothesis property over the MAXVAL dimension (where the round-10
-    pixel_embed scaling bug lived): for ANY declared maxval in the legal
-    1..65535 range, a raster of samples within [0, maxval] round-trips
-    bit-exactly AND decode_ppm_with_maxval reports the header's declared
-    maxval — not the dtype container width."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @given(
-        h=st.integers(1, 12),
-        w=st.integers(1, 12),
-        maxval=st.integers(1, 65535),
-        rgb=st.booleans(),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    @settings(max_examples=120, deadline=None)
-    def check(h, w, maxval, rgb, seed):
-        rng = np.random.default_rng(seed)
-        shape = (h, w, 3) if rgb else (h, w)
-        dtype = np.uint16 if maxval > 255 else np.uint8
-        arr = rng.integers(0, maxval + 1, size=shape).astype(dtype)
-        got, got_maxval = mm.decode_ppm_with_maxval(_ppm_bytes(arr, maxval=maxval))
-        assert got_maxval == maxval
-        assert got.shape == arr.shape
-        assert (got.astype(dtype) == arr).all()
-
-    check()
-
-
 def test_synthetic_media_modality_matches_oracle_case_on_negative_ids(spark, tmp_path):
     """Round-12 review fix: the modality lookup was
     element_at(array(...), doc_id % 3 + 1), which THROWS on Spark for
@@ -306,74 +69,3 @@ def test_synthetic_media_modality_matches_oracle_case_on_negative_ids(spark, tmp
 
     for doc_id, modality in got.items():
         assert modality == oracle_case(doc_id), (doc_id, modality)
-
-
-# ------------------------------------------------------------------ #
-# round-14 payload-bytes adversarial hardening: hostile headers
-# ------------------------------------------------------------------ #
-
-
-def test_decode_ppm_rejects_allocation_bomb_headers_fast():
-    """A header declaring billion-pixel dimensions over a tiny payload
-    must fail with the truncation ValueError BEFORE any raster allocation
-    — the byte-level avail check runs ahead of np.frombuffer, so a
-    hostile header costs microseconds and a few bytes, never
-    width*height*channels of memory."""
-    import time
-
-    bomb = b"P6\n999999999 999999999\n255\n" + b"\x00" * 64
-    t = time.time()
-    with pytest.raises(ValueError, match="truncated Netpbm raster"):
-        mm.decode_ppm(bomb)
-    # generous bound: allocating the declared raster (2.7e18 bytes) would
-    # OOM/fail differently long before this, so the assertion is about
-    # code PATH (the pre-frombuffer byte check), not microbenchmarks —
-    # a loaded CI box must not flake it
-    assert time.time() - t < 30.0, "hostile header must fail without allocating"
-
-
-def test_decode_ppm_rejects_malformed_header_tokens():
-    """Non-numeric header tokens raise ValueError (Python's int parse),
-    EOF inside a '#' comment raises the explicit truncated-header message,
-    and maxval outside (0, 65536) raises the range message — every hostile
-    header path ends in a typed ValueError, never an index error or a
-    silent misparse."""
-    with pytest.raises(ValueError):
-        mm.decode_ppm(b"P5\nwide 4\n255\n" + b"\x00" * 64)
-    with pytest.raises(ValueError, match="truncated Netpbm header"):
-        mm.decode_ppm(b"P5\n# comment that never ends")
-    with pytest.raises(ValueError, match="truncated Netpbm header"):
-        mm.decode_ppm(b"P5\n4 4")  # EOF before maxval
-    for bad_maxval in (b"0", b"65536", b"70000"):
-        with pytest.raises(ValueError, match="outside the Netpbm range"):
-            mm.decode_ppm(b"P5\n2 2\n" + bad_maxval + b"\n" + b"\x00" * 16)
-
-
-def test_corrupt_payload_error_surfaces_intact_through_executors(spark):
-    """A corrupt Netpbm payload inside the Arrow-batched mapInPandas
-    pipeline (pixel_embed installed): the decode ValueError must surface
-    on the driver with its message intact — a payload that silently
-    embedded as zeros would poison downstream similarity search with
-    plausible-looking vectors."""
-    import numpy as np
-
-    from datafusion_distributed_experiment_spark.errors import map_exception
-
-    good = _ppm_bytes(np.arange(12, dtype=np.uint8).reshape(3, 4))
-    rows = [
-        (1, "image", good, 4, 3),
-        (2, "image", good[:-5], 4, 3),  # truncated raster
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, modality string, content binary, width int, height int"
-    )
-    prev = mm.set_decoder(mm.pixel_embed)
-    try:
-        with pytest.raises(Exception) as excinfo:
-            mm.extract_features(media).collect()
-    finally:
-        mm.set_decoder(prev)
-    assert "truncated Netpbm raster" in str(excinfo.value)
-    # and the taxonomy maps it to a typed engine error, message intact
-    mapped = map_exception(excinfo.value)
-    assert "truncated Netpbm raster" in str(mapped)

@@ -111,43 +111,6 @@ def test_split_sql_script_statement_count(fragments):
 
 
 # ------------------------------------------------------------------ #
-# interval-merge sessionization vs brute force
-# ------------------------------------------------------------------ #
-
-def _brute_sessions(ts_list, gap):
-    ts = sorted(ts_list)
-    n_sessions = 0
-    last = None
-    for t in ts:
-        if last is None or t - last > gap:
-            n_sessions += 1
-        last = t
-    return n_sessions
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(st.integers(0, 10**7), min_size=1, max_size=60),
-    st.integers(1, 10**6),
-    st.integers(1, 5),
-)
-def test_interval_merge_order_independent(ts_list, gap, n_chunks):
-    """The interval-merge fold used by sessionize_stateful: any chunking and
-    any within-chunk order yields the brute-force session count."""
-    intervals: list[list[int]] = []
-    chunks = [ts_list[i::n_chunks] for i in range(n_chunks)]
-    for chunk in chunks:
-        merged: list[list[int]] = []
-        for s, e in sorted(intervals + [[t, t] for t in chunk]):
-            if merged and s - merged[-1][1] <= gap:
-                merged[-1][1] = max(merged[-1][1], e)
-            else:
-                merged.append([s, e])
-        intervals = merged
-    assert len(intervals) == _brute_sessions(ts_list, gap)
-
-
-# ------------------------------------------------------------------ #
 # ANN recall floor vs brute force
 # ------------------------------------------------------------------ #
 

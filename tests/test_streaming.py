@@ -48,91 +48,6 @@ def test_streaming_matches_batch_daily(spark, engine, events_dir):
     assert_frames_match(result, batch, "streaming_vs_batch")
 
 
-def _final_sessions(spark, table_name):
-    """Final per-user rollup from update-mode emissions: the row with the
-    highest emit_seq (n_sessions is NOT monotone — a late event can merge two
-    sessions — so per-column maxes would be wrong)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("emit_seq"))
-    return (
-        spark.table(table_name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "n_sessions", "last_ts_ms")
-        .toPandas()
-    )
-
-
-def _run_sessionize(spark, events_dir, table_name, max_files_per_trigger=8):
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        sessionize_stateful,
-    )
-
-    stream = read_events_stream(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _final_sessions(spark, table_name)
-
-
-def _batch_oracle(spark, sf_dir=SF_DIR):
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        sessionize_batch,
-    )
-
-    from datafusion_distributed_experiment_spark.sources.events import (
-        ts_event_time_expr,
-    )
-
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch_events = raw.select("user_id", ts_event_time_expr(raw).alias("ts"))
-    return sessionize_batch(batch_events).toPandas()
-
-
-def test_stateful_sessionize_matches_batch(spark, events_dir):
-    """applyInPandasWithState sessionization converges to the lag-window
-    batch oracle on bounded single-batch input."""
-    result = _run_sessionize(spark, events_dir, "t_sessions")
-    assert_frames_match(result, _batch_oracle(spark), "stateful_sessionize_vs_batch")
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS, ids=_sf_tag)
-def test_stateful_sessionize_order_independent_across_batches(spark, tmp_path, sf_dir):
-    """Events split across micro-batches in NON-event-time order (interleaved
-    event_id stripes, one file per trigger) must still converge to the batch
-    oracle: the interval-merge state bridges/extends sessions for late rows
-    instead of corrupting a scalar last_ts."""
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    table = ds.dataset(f"{sf_dir}/events.parquet").to_table()
-    d = tmp_path / "striped"
-    d.mkdir()
-    n_stripes = 4
-    for i in range(n_stripes):
-        idx = [j for j in range(table.num_rows) if j % n_stripes == i]
-        # stripe i holds every n-th event: each later batch contains events
-        # older than ones already processed -> genuine cross-batch disorder
-        pq.write_table(table.take(idx), d / f"stripe-{i}.parquet")
-
-    result = _run_sessionize(
-        spark, str(d), f"t_sessions_striped_{_sf_tag(sf_dir)}", max_files_per_trigger=1
-    )
-    assert_frames_match(
-        result, _batch_oracle(spark, sf_dir), "stateful_sessionize_multibatch_vs_batch"
-    )
-
-
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=_sf_tag)
 def test_stream_stream_join_converges_across_batches(spark, tmp_path, duck, sf_dir):
     """The stream-stream attribution join must find click↔view matches whose
@@ -187,85 +102,6 @@ def test_watermark_present_in_plan(spark, events_dir):
     stream = windowed_counts(read_events_stream(spark, events_dir), watermark="2 hours")
     explain = stream._jdf.queryExecution().analyzed().toString()
     assert "EventTimeWatermark" in explain
-
-
-def test_stateful_sessionize_watermark_bounds_state(spark, tmp_path):
-    """With a watermarked input and time-ordered micro-batches, sessions
-    older than watermark - gap are folded into the closed counter and
-    EVICTED from state (n_open < n_sessions in the final emission), while
-    the rollup still matches the batch oracle exactly."""
-    import os
-    import time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        sessionize_batch,
-        sessionize_stateful,
-    )
-
-    # 3 users x 4 sessions/user, one session per day, 3 events per session.
-    hour = 3600 * 1000
-    day = 24 * hour
-    rows = []
-    eid = 0
-    for u in range(3):
-        for s in range(4):
-            base = s * day + u * hour
-            for k in range(3):
-                rows.append((eid, (base + k * 60_000) * 1_000_000, u))  # ns
-                eid += 1
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id"])
-    pdf["event_type"] = "e"
-    pdf["value"] = 0.0
-    pdf["props"] = "{}"
-    d = tmp_path / "wm_events"
-    d.mkdir()
-    # one file per day, mtimes increasing so the file source processes them
-    # in event-time order and the watermark genuinely advances per batch
-    now = time.time()
-    for s in range(4):
-        chunk = pdf[(pdf.ts >= s * day * 1_000_000) & (pdf.ts < (s + 1) * day * 1_000_000)]
-        f = d / f"day-{s}.parquet"
-        pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), f)
-        os.utime(f, (now + s, now + s))
-
-    stream = read_events_stream(spark, str(d), max_files_per_trigger=1).withWatermark(
-        "ts", "30 minutes"
-    )
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("t_sessions_wm")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("emit_seq"))
-    final = (
-        spark.table("t_sessions_wm")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .toPandas()
-    )
-    # eviction happened: closed sessions left the state
-    assert (final["n_open"] < final["n_sessions"]).all(), final
-    # rollup still exact vs the batch oracle over the full input
-    batch_events = spark.read.schema(
-        "event_id long, ts long, user_id long, event_type string, value double, props string"
-    ).parquet(str(d)).select("user_id", F.expr("timestamp_micros(ts DIV 1000)").alias("ts"))
-    batch = sessionize_batch(batch_events).toPandas()
-    assert_frames_match(
-        final[["user_id", "n_events", "n_sessions", "last_ts_ms"]],
-        batch,
-        "watermarked_sessionize_vs_batch",
-    )
 
 
 def test_stream_restart_is_exactly_once(spark, tmp_path):
@@ -351,64 +187,6 @@ def test_stream_dedup_converges_across_batches(spark, tmp_path, duck, sf_dir):
     assert_frames_match(got, want, "stream_dedup_vs_batch_distinct")
 
 
-def test_stateful_sessionize_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState state must persist across a QUERY RESTART via
-    the checkpointed RocksDB store: half the events stream in run 1, the
-    query stops, the rest arrive, and run 2 (same checkpoint) must resume
-    from restored per-user interval state — sessions spanning the restart
-    boundary merge correctly and the final rollup equals the batch oracle
-    over ALL events. This is the continuous-deployment contract: a deploy
-    restart must not corrupt or forget session state."""
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        sessionize_stateful,
-    )
-
-    table = ds.dataset(f"{SF_DIR}/events.parquet").to_table()
-    src = tmp_path / "restart_src"
-    src.mkdir()
-    sink = str(tmp_path / "restart_sink")
-    ckpt = str(tmp_path / "restart_ckpt")
-    half = table.num_rows // 2
-    pq.write_table(table.slice(0, half), src / "a.parquet")
-
-    def run_once():
-        stream = read_events_stream(spark, str(src))
-
-        # update-mode emissions land in parquet via foreachBatch (the file
-        # sink itself is append-only)
-        def write_batch(bdf, _bid):
-            bdf.write.mode("append").parquet(sink)
-
-        q = (
-            sessionize_stateful(stream)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    pq.write_table(table.slice(half), src / "b.parquet")
-    run_once()
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("emit_seq"))
-    final = (
-        spark.read.parquet(sink)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "n_sessions", "last_ts_ms")
-        .toPandas()
-    )
-    assert_frames_match(final, _batch_oracle(spark), "restart_sessionize_vs_batch")
-
-
 # NOTE (round 4): a test asserting that rows arriving AFTER the watermark
 # passed their window are DROPPED was written and then removed after
 # empirical verification: Spark's watermark contract is one-directional —
@@ -416,9 +194,7 @@ def test_stateful_sessionize_state_survives_restart(spark, tmp_path):
 # best-effort in every output mode (observed numRowsDroppedByWatermark == 0
 # for a 10-days-late row under a 1-hour delay, in update AND append, with
 # the row aggregated and emitted). The guaranteed side (convergence with a
-# delay wider than the disorder) is what the tests above assert; state
-# BOUNDING under watermarks is asserted by
-# test_stateful_sessionize_watermark_bounds_state.
+# delay wider than the disorder) is what the tests above assert.
 
 
 def test_streaming_session_window_matches_batch_native(spark, tmp_path):
@@ -468,118 +244,6 @@ def test_streaming_session_window_matches_batch_native(spark, tmp_path):
     got = spark.table("t_sw_native").toPandas()
     batch = sessionize_native(spark, SF_DIR).toPandas()
     assert_frames_match(got, batch, "streaming_session_window_vs_batch")
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState's state-server protocol requires google.protobuf, "
-    "absent in this container (no installs allowed); the operator is "
-    "API-validated and the applyInPandasWithState sessionizer is the "
-    "fully-tested stateful path",
-)
-def test_transform_with_state_running_totals_converge(spark, tmp_path):
-    """transformWithState (the applyInPandasWithState successor): per-user
-    ValueState totals over striped out-of-order micro-batches must converge
-    to the batch aggregate; every intermediate emission is a prefix total
-    (monotone in both columns)."""
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from datafusion_distributed_experiment_spark.sources.events import read_events
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        running_totals_stateful,
-    )
-
-    table = ds.dataset(f"{SF_DIR}/events.parquet").to_table()
-    d = tmp_path / "tws_striped"
-    d.mkdir()
-    for i in range(3):
-        idx = [j for j in range(table.num_rows) if j % 3 == i]
-        pq.write_table(table.take(idx), d / f"stripe-{i}.parquet")
-
-    stream = read_events_stream(spark, str(d), max_files_per_trigger=1)
-    q = (
-        running_totals_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("t_tws_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table("t_tws_totals").collect()
-
-    final = {}
-    for r in emitted:  # totals are monotone: max = last emission
-        cur = final.get(r.user_id)
-        if cur is None or r.n_events > cur[0]:
-            final[r.user_id] = (r.n_events, r.total_cents)
-    batch = {
-        r.user_id: (r.n, r.c)
-        for r in read_events(spark, SF_DIR)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value_cents").alias("c"))
-        .collect()
-    }
-    assert final == batch
-    # 3 triggers x 15 users -> multiple emissions per user proves state
-    # genuinely carried across batches
-    assert len(emitted) > len(batch)
-
-
-def test_running_totals_processor_logic_without_state_server():
-    """The processor's accumulation semantics, driven directly with a fake
-    ValueState — covers the cross-batch carryover logic that the skipped
-    end-to-end test would exercise (the state-server transport is the only
-    piece this cannot reach)."""
-    import pandas as pd
-
-    from datafusion_distributed_experiment_spark.streaming.stateful import (
-        RunningTotalsProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    p = RunningTotalsProcessor()
-    p._totals = FakeState()
-    out1 = list(
-        p.handleInputRows(
-            (7,), iter([pd.DataFrame({"value_cents": [100, 200]})]), None
-        )
-    )[0]
-    out2 = list(
-        p.handleInputRows((7,), iter([pd.DataFrame({"value_cents": [50]})]), None)
-    )[0]
-    assert out1.iloc[0].to_dict() == {"user_id": 7, "n_events": 2, "total_cents": 300}
-    # second batch accumulates onto carried state
-    assert out2.iloc[0].to_dict() == {"user_id": 7, "n_events": 3, "total_cents": 350}
-    # empty batch: state unchanged, emission repeats the running total
-    out3 = list(
-        p.handleInputRows((7,), iter([pd.DataFrame({"value_cents": []})]), None)
-    )[0]
-    assert out3.iloc[0].to_dict() == {"user_id": 7, "n_events": 3, "total_cents": 350}
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=_sf_tag)
