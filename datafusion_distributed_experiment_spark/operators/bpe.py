@@ -150,48 +150,20 @@ def _trained_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds — the tokenizer model, shared by training-statistics
     (:func:`bpe_merges_t2`) and corpus encoding (:func:`bpe_apply`).
 
-    The merge rounds run under a VOCABULARY-scoped shuffle width — the
-    same doctrine as the connected-components loops (``dedup.py``,
-    ``connected_components``): once the corpus has collapsed to its
-    exploded character table, every per-round window/join moves a
-    vocabulary-sized frame, and paying the session's corpus-sized width
-    in per-task scheduling on each of the ~6 exchanges per round is pure
-    overhead (measured over the 138-row sf0.1 char table: two rounds at
-    width 32 take 1.31 s warm / 3.0 s cold vs 1.02 s / 1.5 s at width 4 —
-    a modest steady-state win, most of the cold gap being codegen
-    warm-up the bench's warm epoch absorbs). Width grows back
-    toward the session width at 100k char rows per partition, so a real
-    100-TB vocabulary (millions of words) still fans out. The width lives
-    in a sibling session (shared context/cache, own SQLConf) so
-    concurrent queries on the caller's session never observe it; the
-    checkpointed chars cross sessions via a global temp view. Downstream,
-    the model-sized windows/aggregates inherit the narrow width from the
-    returned frame while corpus-side scans/joins stay at the caller's
-    width (they derive from the caller's session)."""
+    The merge rounds run on the caller's session: once the corpus has
+    collapsed to its exploded character table, every per-round
+    window/join moves a vocabulary-sized frame, and AQE coalesces those
+    shuffles to the minimum partition size at any session width."""
     chars = _vocab_chars(spark, sf_dir).localCheckpoint()
-    n_rows = chars.count()
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(4, min(session_width, n_rows // 100_000 + 1))
-    from ..session import scoped_session
-
-    bpe_spark = scoped_session(spark, {"spark.sql.shuffle.partitions": str(width)})
-    import uuid
-
-    view = f"bpe_chars_{uuid.uuid4().hex}"
-    chars.createGlobalTempView(view)
-    try:
-        chars = bpe_spark.table(f"global_temp.{view}")
-        for _ in range(MERGE_ITERS):
-            # each round reads its predecessor twice (pair count + merge):
-            # checkpoint keeps the window/join chains from re-running.
-            # eager=False: the round's own pair-count broadcast build is
-            # the first job over the frame and forces (and persists) the
-            # checkpoint — one driver job per round instead of two,
-            # identical lineage truncation (optimization round 14, the
-            # connected_components pattern)
-            chars = _merge_round(chars).localCheckpoint(eager=False)
-    finally:
-        spark.catalog.dropGlobalTempView(view)
+    for _ in range(MERGE_ITERS):
+        # each round reads its predecessor twice (pair count + merge):
+        # checkpoint keeps the window/join chains from re-running.
+        # eager=False: the round's own pair-count broadcast build is
+        # the first job over the frame and forces (and persists) the
+        # checkpoint — one driver job per round instead of two,
+        # identical lineage truncation (optimization round 14, the
+        # connected_components pattern)
+        chars = _merge_round(chars).localCheckpoint(eager=False)
     return chars
 
 

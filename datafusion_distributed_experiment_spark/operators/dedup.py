@@ -23,7 +23,6 @@ tests/custom_extension_codec.rs:160-264).
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -898,39 +897,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 MAX_CC_ITERS = 64
 
 
-@contextmanager
-def _cc_scope(pairs: DataFrame):
-    """Shared setup for both connected-components variants: checkpoint the
-    pair graph, scope the loop's shuffle width to the GRAPH's volume, and
-    re-bind the frame into the width-scoped sibling session.
-
-    Width: the label/edge tables are pairs-sized (far smaller than the
-    corpus that produced them), and every round pays per-task scheduling on
-    every shuffle partition — 32-wide rounds over a few thousand edges
-    measured ~2x slower than 4-wide. Grows back toward the session width as
-    the edge count grows (100k edges per partition). The width lives in a
-    SIBLING session (shared context/cache, own SQLConf) so concurrent
-    queries on the caller's session never observe it; the checkpointed
-    pairs cross sessions via a global temp view whose lifetime is this
-    scope. Yields ``(pairs_in_scope, scoped_spark)``."""
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    spark = pairs.sparkSession
-    n_edges = pairs.count()
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cc_width = max(4, min(session_width, n_edges // 100_000 + 1))
-    from ..session import scoped_session
-
-    cc_spark = scoped_session(spark, {"spark.sql.shuffle.partitions": str(cc_width)})
-    import uuid
-
-    view = f"cc_pairs_{uuid.uuid4().hex}"
-    pairs.createGlobalTempView(view)
-    try:
-        yield cc_spark.table(f"global_temp.{view}"), cc_spark
-    finally:
-        spark.catalog.dropGlobalTempView(view)
-
-
 def _unconverged(kind: str, iters: int):
     from ..errors import ExecutionError
 
@@ -961,55 +927,56 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     labels one row per *duplicated* doc — both far smaller than the corpus);
     graphs with large diameter should use :func:`connected_components_star`
     (the O(log n)-round large-star/small-star variant, same join
-    primitive). Setup (checkpoint, graph-volume-scoped shuffle width,
-    sibling session) is the shared :func:`_cc_scope`; non-convergence at
-    :data:`MAX_CC_ITERS` raises instead of returning wrong labels."""
-    with _cc_scope(pairs) as (pairs_cc, _):
-        edges = pairs_cc.unionAll(
-            pairs_cc.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    primitive). The loop runs on the caller's session: AQE coalesces its
+    pairs-sized shuffles to the minimum partition size at any session
+    width. Non-convergence at :data:`MAX_CC_ITERS` raises instead of
+    returning wrong labels."""
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
+    edges = pairs.unionAll(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    )
+    # eager=False everywhere in this loop: the convergence aggregate is
+    # the action that forces (and persists) each round's checkpoint, so
+    # every round costs ONE driver job instead of two — the lineage
+    # truncation the eager checkpoint existed for is identical
+    # (optimization round 14, guide §1.2: fewer driver actions)
+    labels = (
+        edges.select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("doc_id"))
+        .localCheckpoint(eager=False)
+    )
+    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
+    converged = prev_sum is None  # empty graph is trivially converged
+    # +1: the sum fixpoint is OBSERVED one round after labels stabilize
+    # (equality needs a no-change round), so the cap must budget that
+    # extra observation round — MAX_CC_ITERS bounds CHANGING rounds,
+    # and a graph converging in exactly MAX_CC_ITERS of them must not
+    # raise a false non-convergence
+    for _ in range(MAX_CC_ITERS + 1):
+        if converged:
+            break
+        nbr_min = (
+            edges.join(labels.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+            .groupBy(F.col("doc_b").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        # eager=False everywhere in this loop: the convergence aggregate is
-        # the action that forces (and persists) each round's checkpoint, so
-        # every round costs ONE driver job instead of two — the lineage
-        # truncation the eager checkpoint existed for is identical
-        # (optimization round 14, guide §1.2: fewer driver actions)
         labels = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .distinct()
-            .withColumn("cluster_id", F.col("doc_id"))
+            labels.join(nbr_min, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.least(F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")).alias(
+                    "cluster_id"
+                ),
+            )
             .localCheckpoint(eager=False)
         )
-        prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        converged = prev_sum is None  # empty graph is trivially converged
-        # +1: the sum fixpoint is OBSERVED one round after labels stabilize
-        # (equality needs a no-change round), so the cap must budget that
-        # extra observation round — MAX_CC_ITERS bounds CHANGING rounds,
-        # and a graph converging in exactly MAX_CC_ITERS of them must not
-        # raise a false non-convergence
-        for _ in range(MAX_CC_ITERS + 1):
-            if converged:
-                break
-            nbr_min = (
-                edges.join(labels.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            labels = (
-                labels.join(nbr_min, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")).alias(
-                        "cluster_id"
-                    ),
-                )
-                .localCheckpoint(eager=False)
-            )
-            new_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-            if new_sum == prev_sum:
-                converged = True
-            prev_sum = new_sum
-        if not converged:
-            raise _unconverged("connected_components (min-label propagation)", MAX_CC_ITERS)
+        new_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
+        if new_sum == prev_sum:
+            converged = True
+        prev_sum = new_sum
+    if not converged:
+        raise _unconverged("connected_components (min-label propagation)", MAX_CC_ITERS)
     return labels
 
 
@@ -1030,90 +997,89 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 32) -> DataFram
 
     Both phases are one groupBy + one join keyed on the star center — the
     identical shuffle primitive as the label-propagation loop, with the same
-    per-round ``localCheckpoint`` lineage truncation and graph-volume-scoped
-    shuffle width. Convergence is an O(1)-row checksum fixpoint (edge count +
+    per-round ``localCheckpoint`` lineage truncation, on the caller's
+    session. Convergence is an O(1)-row checksum fixpoint (edge count +
     order-insensitive xxhash bit-xor), not a diffing join. Same output contract
     as :func:`connected_components`: (doc_id, cluster_id = min reachable
-    doc_id) for every node of the input pair graph. Setup is the shared
-    :func:`_cc_scope`; exhausting ``max_iters`` before the checksum
-    fixpoint raises — at that point L is not yet a set of stars, and the
-    final nodes-join would emit duplicate doc_ids with conflicting
-    cluster_ids."""
-    with _cc_scope(pairs) as (base, _):
-        # eager=False: nodes is consumed once by the final join (forced
-        # there), and each L checkpoint is forced by the round's checksum
-        # aggregate — one driver job per round instead of two, identical
-        # lineage truncation (optimization round 14, guide §1.2)
-        nodes = (
-            base.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(base.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # edge list L, self-loops dropped; (u, v) is undirected
+    doc_id) for every node of the input pair graph. Exhausting ``max_iters``
+    before the checksum fixpoint raises — at that point L is not yet a set
+    of stars, and the final nodes-join would emit duplicate doc_ids with
+    conflicting cluster_ids."""
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
+    # eager=False: nodes is consumed once by the final join (forced
+    # there), and each L checkpoint is forced by the round's checksum
+    # aggregate — one driver job per round instead of two, identical
+    # lineage truncation (optimization round 14, guide §1.2)
+    nodes = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .unionAll(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # edge list L, self-loops dropped; (u, v) is undirected
+    L = (
+        pairs.filter(F.col("doc_a") != F.col("doc_b"))
+        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+    def _checksum(df: DataFrame) -> tuple:
+        # bit_xor, not sum: order-insensitive, exact on the distinct edge
+        # set, and cannot overflow (a sum of 64-bit hashes trips ANSI
+        # overflow checking on externally-built sessions)
+        row = df.agg(
+            F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ).collect()[0]
+        return (row["n"], row["h"])
+
+    prev = _checksum(L)
+    converged = prev[0] == 0  # edgeless graph is trivially converged
+    # +1 observation round, same as connected_components: the checksum
+    # fixpoint is seen one round after the edge set stabilizes, so
+    # max_iters bounds CHANGING rounds rather than observations
+    for _ in range(max_iters + 1):
+        if converged:
+            break
+        # ---- large-star: neighbors v > u attach to min(Γ(u) ∪ {u})
+        nbrs = L.unionAll(L.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        m = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
         L = (
-            base.filter(F.col("doc_a") != F.col("doc_b"))
-            .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+            nbrs.join(m, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # ---- small-star: orient large→small, attach Γ⁻(u) ∪ {u} to min
+        D = L.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        ).distinct()
+        m2 = D.groupBy("u").agg(F.min("v").alias("m"))
+        L = (
+            D.join(m2, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionAll(m2.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
             .distinct()
             .localCheckpoint(eager=False)
         )
-
-        def _checksum(df: DataFrame) -> tuple:
-            # bit_xor, not sum: order-insensitive, exact on the distinct edge
-            # set, and cannot overflow (a sum of 64-bit hashes trips ANSI
-            # overflow checking on externally-built sessions)
-            row = df.agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-            ).collect()[0]
-            return (row["n"], row["h"])
-
-        prev = _checksum(L)
-        converged = prev[0] == 0  # edgeless graph is trivially converged
-        # +1 observation round, same as connected_components: the checksum
-        # fixpoint is seen one round after the edge set stabilizes, so
-        # max_iters bounds CHANGING rounds rather than observations
-        for _ in range(max_iters + 1):
-            if converged:
-                break
-            # ---- large-star: neighbors v > u attach to min(Γ(u) ∪ {u})
-            nbrs = L.unionAll(L.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            m = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-            L = (
-                nbrs.join(m, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # ---- small-star: orient large→small, attach Γ⁻(u) ∪ {u} to min
-            D = L.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            ).distinct()
-            m2 = D.groupBy("u").agg(F.min("v").alias("m"))
-            L = (
-                D.join(m2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(m2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            cur = _checksum(L)
-            if cur == prev:
-                converged = True
-            prev = cur
-        if not converged:
-            raise _unconverged("connected_components_star", max_iters)
-        # at fixpoint L is a set of stars (node -> component minimum);
-        # isolated nodes (only ever in self-pairs) label themselves
-        return nodes.join(
-            L.select(F.col("u").alias("doc_id"), F.col("v").alias("parent")),
-            "doc_id",
-            "left",
-        ).select(
-            "doc_id", F.coalesce("parent", "doc_id").alias("cluster_id")
-        )
+        cur = _checksum(L)
+        if cur == prev:
+            converged = True
+        prev = cur
+    if not converged:
+        raise _unconverged("connected_components_star", max_iters)
+    # at fixpoint L is a set of stars (node -> component minimum);
+    # isolated nodes (only ever in self-pairs) label themselves
+    return nodes.join(
+        L.select(F.col("u").alias("doc_id"), F.col("v").alias("parent")),
+        "doc_id",
+        "left",
+    ).select(
+        "doc_id", F.coalesce("parent", "doc_id").alias("cluster_id")
+    )
 
 
 def clear_pair_graph_memo() -> None:

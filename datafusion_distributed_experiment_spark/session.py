@@ -13,10 +13,11 @@ partition coalescing on); tests override parallelism for local runs.
 from __future__ import annotations
 
 import os
-import weakref
 from typing import Mapping
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_spark_conf(
@@ -112,39 +113,28 @@ def configure_session(
     return spark
 
 
-# value carries a weakref to the PARENT: id() keys are recycled addresses,
-# so a cache hit must prove the parent object is still the same live
-# session — otherwise a new session allocated at a dead one's address
-# would receive a stale clone bound to a stopped SparkContext
-_scoped_cache: dict[tuple[int, frozenset], tuple["weakref.ref[SparkSession]", SparkSession]] = {}
-
-
 def scoped_session(spark: SparkSession, overrides: Mapping[str, str]) -> SparkSession:
-    """A sibling session with conf ``overrides`` applied — conf scoping
+    """A new sibling session with conf ``overrides`` applied — conf scoping
     WITHOUT mutating the shared session.
 
-    ``SparkSession.newSession()`` shares the SparkContext, table cache and
-    global temp views but gets its own SQLConf and temp-view catalog, so two
-    operators needing different shuffle widths can run concurrently without
-    racing on ``spark.conf`` (the set/restore pattern this replaces was
-    single-thread-correct only). The parent's *runtime* confs are copied
-    first (``SET`` enumerates every explicitly-set conf — engine confs
-    applied by :func:`configure_session` at runtime would otherwise be lost,
-    since a fresh session only inherits context-level conf), then the
-    overrides. Static/immutable confs are skipped per-key.
+    ``SparkSession.newSession()`` shares the SparkContext and table cache
+    but gets its own SQLConf and temp-view catalog, so a query rooted in
+    the clone can run beside queries on the caller's session without
+    racing on ``spark.conf``. The parent's *runtime* confs are copied first
+    (``SET`` enumerates every explicitly-set conf — engine confs applied by
+    :func:`configure_session` at runtime would otherwise be lost, since a
+    fresh session only inherits context-level conf), then the overrides.
+    Static/immutable confs are skipped per-key.
 
-    Clones are cached per (parent, overrides): the streaming harness and the
-    CC loop call this once per query invocation, and session-state (catalog,
-    conf map) should not accumulate across a 76-query bench run. Parent conf
-    changes made *after* the clone was built are not re-copied — the
-    overrides are the confs callers care about."""
-    key = (id(spark), frozenset(overrides.items()))
-    cached = _scoped_cache.get(key)
-    # identity proof, not just the id: a hit only counts when the weakly-
-    # held parent is THIS object — id() keys get recycled after GC, and a
-    # new session at a dead one's address must not get the stale clone
-    if cached is not None and cached[0]() is spark:
-        return cached[1]
+    Only the streaming replays use it (``streaming.events._stream_session``,
+    which keeps one clone per live parent). A stream's state-store
+    partitions are fixed by ``spark.sql.shuffle.partitions`` at its first
+    micro-batch and AQE cannot coalesce them, so a stream needs its own
+    width: the ``stream_click_attr`` replay measured ~7 s of store churn at
+    32 partitions against ~2.5 s at 8. Batch loops need no clone — AQE
+    coalesces their small shuffles at any session width, and running the
+    connected-components and BPE loops on the caller's session saved two
+    jobs per query with identical rows."""
     clone = spark.newSession()
     for row in spark.sql("SET").collect():
         val = row["value"]
@@ -159,17 +149,6 @@ def scoped_session(spark: SparkSession, overrides: Mapping[str, str]) -> SparkSe
             pass
     for k, v in overrides.items():
         clone.conf.set(k, str(v))
-    # sweep dead entries before inserting: a dead parent weakref can never
-    # match again, and each stale entry would otherwise pin a cloned
-    # SparkSession's JVM session state forever across many short-lived
-    # sessions or data-derived override sets. list() snapshots the items
-    # and pop() tolerates concurrent removal — this function is called
-    # from concurrently-running operators (the docstring's whole point),
-    # so the sweep must not iterate the live dict while a sibling inserts
-    dead = [k for k, (ref, _) in list(_scoped_cache.items()) if ref() is None]
-    for k in dead:
-        _scoped_cache.pop(k, None)
-    _scoped_cache[key] = (weakref.ref(spark), clone)
     return clone
 
 
@@ -203,9 +182,12 @@ def build_session(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48 << 10, phys_mb // 2)}m"),
         )
-    for k, v in default_spark_conf(shuffle_partitions=shuffle_partitions).items():
+    conf = {**default_spark_conf(shuffle_partitions=shuffle_partitions), **(extra_conf or {})}
+    # Python workers (pandas UDFs, Python data sources) unpickle functions
+    # of this package by module name, so they must import it from wherever
+    # the driver runs: its parent directory goes first on their path.
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_PACKAGE_PARENT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     return builder.getOrCreate()

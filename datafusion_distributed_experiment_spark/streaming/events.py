@@ -9,6 +9,8 @@ by (window, event_type), the same hash shuffle a batch groupBy would use.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -182,11 +184,16 @@ def click_view_join(
 
 STREAM_STATE_PARTITIONS = 8
 
-_aqe_warning_silenced: set[int] = set()
+# one stream clone per LIVE parent session: weak keys, not id()s, so a
+# dead parent's entry falls out and a new session allocated at its address
+# cannot receive a clone bound to a stopped context
+_stream_sessions: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _silence_unconditional_aqe_warning(spark: SparkSession) -> None:
-    """Demote MicroBatchExecution's logger to ERROR — per-JVM, once.
+    """Demote MicroBatchExecution's logger to ERROR.
 
     Spark 4.1's ``disableAQESupportInStatelessIfUnappropriated`` logs
     "Disabling AQE since AQE is not supported in stateful workloads" and
@@ -196,31 +203,29 @@ def _silence_unconditional_aqe_warning(spark: SparkSession) -> None:
     unguarded conf.set). Pre-disabling AQE on the stream session (which this
     module already does) therefore cannot silence it; scoping that one
     logger to ERROR is the only lever. Every other logger keeps WARN."""
-    sc = spark.sparkContext
-    if id(sc) in _aqe_warning_silenced:
-        return
     try:
-        jvm = sc._jvm
+        jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
             jvm.org.apache.logging.log4j.Level.ERROR,
         )
-        _aqe_warning_silenced.add(id(sc))
     except Exception:  # noqa: BLE001 - cosmetic; never fail a query over logging
         pass
 
 
 def _stream_session(spark: SparkSession) -> SparkSession:
     """Sibling session with ``spark.sql.shuffle.partitions`` scoped to
-    stream volume (see stream_click_attr's docstring). Replaces the old
-    set/restore-on-the-shared-session pattern: state partitioning binds at
-    query start from the DataFrame's own session, so rooting the stream in
-    a clone leaves concurrent batch queries on the caller's session — and
-    the caller's conf — untouched."""
+    stream volume (see stream_click_attr's docstring), built once per live
+    parent. State partitioning binds at query start from the DataFrame's
+    own session, so rooting the stream in a clone leaves concurrent batch
+    queries on the caller's session — and the caller's conf — untouched."""
+    clone = _stream_sessions.get(spark)
+    if clone is not None:
+        return clone
     from ..session import scoped_session
 
     _silence_unconditional_aqe_warning(spark)
-    return scoped_session(
+    clone = scoped_session(
         spark,
         {
             "spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS),
@@ -232,6 +237,8 @@ def _stream_session(spark: SparkSession) -> SparkSession:
             "spark.sql.adaptive.enabled": "false",
         },
     )
+    _stream_sessions[spark] = clone
+    return clone
 
 
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -60,7 +60,7 @@ SHOWCASE = [
     ("hll_distinct", "HLL build: per-key register MAX merges map-side; integer estimator is a pure projection; exact twin rides the same key exchange"),
     ("weighted_sample", "priority sampling: map-only integer priorities, TakeOrderedAndProject top-k (per-partition heaps, no global sort); rank window bounded by k rows"),
     ("corpus_pipeline", "flagship composition: quality+token features fused into the scan of EACH augmented-corpus union branch (2 documents scans total, filters pushed); AQE resolves the pairs-sized drop set to ONE BroadcastHashJoin LeftAnti whose exchange is built once and ReusedExchange'd by the other branch; map-side partial aggregate feeds the 1-row rollup"),
-    ("dedup_clusters", "cluster resolution (label-prop CC): ALL iterative work ran during construction on pairs-sized checkpointed state (graph-width-scoped shuffles, per-round localCheckpoint) — the returned plan is a checkpointed-RDD scan plus the range-partitioned presentation sort: zero parquet scans, zero joins, zero corpus-sized exchanges"),
+    ("dedup_clusters", "cluster resolution (label-prop CC): ALL iterative work ran during construction on pairs-sized checkpointed state (per-round localCheckpoint, AQE-coalesced shuffles) — the returned plan is a checkpointed-RDD scan plus the range-partitioned presentation sort: zero parquet scans, zero joins, zero corpus-sized exchanges"),
     ("dedup_clusters_star", "cluster resolution (large/small-star CC): returned plan joins the nodes table to the fixpoint star edges — two checkpointed-RDD scans, pairs-sized hash exchanges (SMJ is the scale-safe choice: the dup-node side needn't fit a broadcast), zero parquet scans"),
     ("minhash_dedup_pairs", "LSH mine: checkpointed signatures feed ALL five consumers (cap count, both band self-join sides, both token join-backs — zero parquet scans); hub buckets suppressed by a broadcast LEFT ANTI before the band shuffle"),
     ("simhash_dedup_pairs", "byte-band SimHash LSH: ONE exploded band table self-joined on the (band_idx, byte) equi-key — not four per-byte joins; Hamming verify is a map-side filter over the checkpointed signature table"),

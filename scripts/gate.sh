@@ -43,9 +43,9 @@ ORACLE_RC=$?
 python scripts/verify_correctness.py /root/testdata/sf0.1 \
   events_asof events_range_join events_kmv_distinct sessionize user_sessions \
   stream_click_attr stream_dedup stream_enrich stream_sliding \
-  minhash_dedup_pairs dedup_incremental dedup_clusters \
-  minhash_pairs_skew kmeans_lloyd_t3 ngram_span_dedup \
-  stream_topk hll_distinct weighted_sample bpe_apply \
+  minhash_dedup_pairs dedup_incremental dedup_clusters dedup_clusters_star \
+  corpus_pipeline minhash_pairs_skew kmeans_lloyd_t3 ngram_span_dedup \
+  stream_topk hll_distinct weighted_sample bpe_apply bpe_merges_t2 \
   domain_token_profile events_quantile_sketch ivf_pq_topk \
   ivf_pq_index_build ivf_pq_index_upsert minhash_index_upsert >> "$ART" 2>&1
 SF01_RC=$?

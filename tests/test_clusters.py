@@ -69,14 +69,40 @@ def test_dedup_clusters_canonical_flag(spark):
     assert len(canon) == len({r["cluster_id"] for r in rows})
 
 
-def test_scoped_width_is_concurrency_safe(spark):
-    """Two shuffle-width-scoped operators (CC loop at width 4, streaming
-    replay at width 8) running concurrently with batch queries must never
-    leak their width into the shared session — the conf lives on sibling
-    sessions (session.scoped_session), not on a set/restore of the caller's.
+def test_loops_run_on_the_callers_session(spark):
+    """Both connected-components loops and the BPE merge loop run on the
+    caller's session: their results belong to it, no global temp view is
+    left behind, and the caller's shuffle width is untouched."""
+    from datafusion_distributed_experiment_spark.operators import bpe
+    from datafusion_distributed_experiment_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
 
-    This is the failure mode the old pattern had: thread B's batch groupBy
-    planned while thread A held the narrowed conf."""
+    from .conftest import SF_DIR
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    views = sorted(t.name for t in spark.catalog.listTables("global_temp"))
+    edges = [(b, b + 1) for b in (10, 20, 30)] + [(b + 1, b + 2) for b in (10, 20, 30)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    want = {b + i: b for b in (10, 20, 30) for i in range(3)}
+    for cc in (connected_components, connected_components_star):
+        out = cc(pairs)
+        assert out.sparkSession is spark, cc.__name__
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == want
+    assert bpe._trained_chars(spark, SF_DIR).sparkSession is spark
+    assert sorted(t.name for t in spark.catalog.listTables("global_temp")) == views
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+def test_scoped_width_is_concurrency_safe(spark):
+    """The streaming replay runs at its own width (8) on a sibling session
+    (session.scoped_session) while the CC loop and batch queries run on the
+    caller's session: neither may leak a width into the shared session's
+    conf, and all three must return correct results side by side.
+
+    This is the failure mode a set/restore of the caller's conf had: a
+    batch groupBy planned while another thread held the narrowed conf."""
     import threading
 
     from pyspark.sql import functions as F

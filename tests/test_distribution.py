@@ -89,8 +89,6 @@ def test_results_survive_forced_spill_pressure(engine, spark):
     join+aggregate and a window query must produce identical results to the
     unpressured run — Spark's UnifiedMemoryManager spill machinery is the
     engine's memory-limit answer, and it must be lossless."""
-    from datafusion_distributed_experiment_spark.session import scoped_session
-
     join_sql = (
         "SELECT o_orderpriority, COUNT(*) AS n, "
         "SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cents "
@@ -105,7 +103,7 @@ def test_results_survive_forced_spill_pressure(engine, spark):
     )
     plain = [engine.sql(q).collect() for q in (join_sql, window_sql)]
 
-    pressured = scoped_session(spark, {})
+    pressured = spark.newSession()
     from datafusion_distributed_experiment_spark import Engine
 
     peng = Engine(pressured)  # engine defaults first...
@@ -138,14 +136,13 @@ def test_round5_window_operators_survive_forced_spill(spark):
         events_percentiles,
         funnel,
     )
-    from datafusion_distributed_experiment_spark.session import scoped_session
 
     from .conftest import SF_DIR
 
     ops = (funnel, events_percentiles, event_sequences)
     plain = [sorted(tuple(r) for r in op(spark, SF_DIR).collect()) for op in ops]
 
-    pressured = scoped_session(spark, {})
+    pressured = spark.newSession()
     for k, v in {
         "spark.sql.windowExec.buffer.spill.threshold": "16",
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "16",

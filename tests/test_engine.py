@@ -553,22 +553,23 @@ def test_sql_script_parenthesized_set_operation_is_a_result(engine):
     assert sorted(r["z"] for r in df.collect()) == [1, 2]
 
 
-def test_scoped_cache_sweeps_dead_parent_entries(spark):
-    """Round-12 review fix: cache entries whose parent session was GC'd can
-    never match again (the identity check requires the LIVE parent), so the
-    insert path sweeps them — otherwise each pins a cloned SparkSession's
-    JVM session state forever across short-lived parents or data-derived
-    override sets."""
-    from datafusion_distributed_experiment_spark.session import (
-        _scoped_cache,
-        scoped_session,
+def test_stream_session_memo_drops_dead_parents(spark):
+    """The stream clone is built once per LIVE parent: the same parent gets
+    the same clone, and a garbage-collected parent leaves no entry that
+    could pin its clone's JVM session state or match a new session."""
+    import gc
+
+    from datafusion_distributed_experiment_spark.streaming.events import (
+        _stream_session,
+        _stream_sessions,
     )
 
     class FakeSession:
-        """Duck-typed parent: newSession/sql/conf are the only calls."""
+        """Duck-typed parent: newSession/sql/sparkContext are the only calls."""
 
         def __init__(self, real):
             self._real = real
+            self.sparkContext = real.sparkContext
 
         def newSession(self):
             return self._real.newSession()
@@ -577,18 +578,14 @@ def test_scoped_cache_sweeps_dead_parent_entries(spark):
             return self._real.sql(q)
 
     fake = FakeSession(spark)
-    scoped_session(fake, {"spark.sql.shuffle.partitions": "3"})
-    dead_keys = [k for k in _scoped_cache if k[0] == id(fake)]
-    assert dead_keys, "the fake parent's clone must have been cached"
+    clone = _stream_session(fake)
+    assert _stream_session(fake) is clone, "a live parent must reuse its clone"
+    assert clone.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert fake in _stream_sessions
+    n_before = len(_stream_sessions)
     del fake
-    import gc
-
     gc.collect()
-    # next insert sweeps the dead entry
-    scoped_session(spark, {"spark.sql.shuffle.partitions": "5"})
-    assert all(
-        _scoped_cache[k][0]() is not None for k in _scoped_cache
-    ), "dead-parent entries must be swept on insert"
+    assert len(_stream_sessions) == n_before - 1, "a dead parent's entry must drop"
 
 
 def test_check_constraints_empty_frame_and_empty_rules(engine):

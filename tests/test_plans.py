@@ -780,8 +780,7 @@ def test_corpus_pipeline_broadcasts_drop_set_once(spark):
 
 def test_dedup_cluster_plans_carry_no_corpus_sized_work(spark):
     """Both clustering queries run ALL iterative CC work during
-    construction, on pairs-sized checkpointed state with graph-scoped
-    shuffle widths — so the RETURNED plan must touch no parquet and hold
+    construction, on pairs-sized checkpointed state — so the RETURNED plan must touch no parquet and hold
     no aggregate: label-prop's plan is one checkpointed-RDD scan plus the
     range-partitioned presentation sort; star-CC's adds only the
     nodes-to-star-edges output join over two checkpointed-RDD scans

@@ -7,7 +7,7 @@ import shutil
 import subprocess
 import sys
 
-from .conftest import REPO_DIR
+from .conftest import REPO_DIR, SF_DIR
 
 PACKAGE = "datafusion_distributed_experiment_spark"
 
@@ -45,6 +45,38 @@ def test_entry_module_imports_the_package_next_to_it(tmp_path):
     )
     assert res.returncode == 0, res.stderr
     assert res.stdout.strip() == "True", res.stdout
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver run from a directory that holds no package, with
+    ``PYTHONPATH`` unset, still runs the queries whose Python workers
+    import the package: a pandas UDF and a Python data source."""
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO_DIR!r})\n"
+        f"from {PACKAGE} import build_session\n"
+        f"from {PACKAGE}.operators.multimodal import media_features\n"
+        f"from {PACKAGE}.sources.custom import custom_source_scan\n"
+        "spark = build_session(app_name='portability', master='local[2]', "
+        "shuffle_partitions=2, extra_conf={'spark.ui.enabled': 'false'})\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "for q in (media_features, custom_source_scan):\n"
+        f"    print(q.__name__, len(q(spark, {SF_DIR!r}).collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    counts = dict(line.split() for line in res.stdout.splitlines())
+    assert counts == {"media_features": "500", "custom_source_scan": "8"}, res.stdout
 
 
 def test_local_driver_heap_fits_the_host(spark):
