@@ -7,22 +7,25 @@ word-frequency dictionary. The dataflow form: collapse the corpus to its
 (word, freq) dictionary — the ONE corpus-sized shuffle — then each merge
 iteration is (a) an adjacent-pair count weighted by word frequency, (b) an
 argmax over the pair table, (c) a left-to-right greedy merge applied to
-every word's token sequence. Steps (a) and (c) are vocabulary-sized
-map/window work; (b) reduces to one row. At 100 TB the corpus aggregation
-dominates and everything downstream runs on the vocabulary table (millions
-of rows, not billions) — which is exactly why tokenizer training is
-tractable at all.
+every word's token sequence. The model is one row per vocabulary word,
+``(word, freq, toks)``, so (a) is a map-side explode of each word's
+adjacent pairs into one aggregate and (c) is a map-side array fold; (b)
+reduces to one row. At 100 TB the corpus aggregation dominates and
+everything downstream runs on the vocabulary table (millions of rows, not
+billions) — which is exactly why tokenizer training is tractable at all.
 
 The subtle part is (c): BPE's merge is GREEDY left-to-right, so in a run of
 overlapping matches ("aaa" under pair (a,a)) only every other position
-merges. Relationally: match positions per word -> gaps-and-islands to find
-maximal runs -> keep positions at EVEN offsets within their run. Both
-engines run the identical window chain, so the learned merges and the
-resulting tokenization match bit-for-bit.
+merges. The fold walks each word's tokens once with a ``skip`` flag: a
+match appends ``x||y`` and skips the consumed right half, so the greedy
+rule is the loop itself, with no windows and no position bookkeeping. The
+DuckDB oracle replays the same merges as a gaps-and-islands window chain
+over one row per character; the learned merges and the resulting
+tokenization match bit-for-bit.
 
 Reference analog: the extension-operator mechanism
 (tests/custom_extension_codec.rs:160-264). MERGE_ITERS is fixed (2) so the
-DuckDB oracle is the same dataflow unrolled as CTEs — the
+DuckDB oracle is the same algorithm unrolled as CTEs — the
 kmeans_lloyd_t3 / pagerank_nations pattern for iterative algorithms.
 """
 
@@ -34,21 +37,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import DUCK_POLY_HASH, DUCK_TOKENS, poly_hash, tokens
+from ..sources.tables import rebalance_narrow_scan
 from .dedup import MOD, SHINGLE_MULT
 
 MERGE_ITERS = 2
 
 
-def _vocab_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, freq, pos, tok) — every vocabulary word exploded to single
-    characters. The corpus collapses to (word, freq) first, so the exploded
-    table is vocabulary-sized, never corpus-sized."""
-    from ..sources.tables import rebalance_narrow_scan
-
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text) — the ONE read of ``documents.parquet`` per call (one
+    schema inference, one footer probe); it feeds both the vocabulary build
+    and the encode side."""
     path = f"{sf_dir}/documents.parquet"
-    docs = rebalance_narrow_scan(
-        spark.read.parquet(path).select("text"), path
+    return rebalance_narrow_scan(
+        spark.read.parquet(path).select("doc_id", "text"), path
     )
+
+
+def _vocab_words(docs: DataFrame) -> DataFrame:
+    """(word, freq, toks) — one row per vocabulary word, its tokens the
+    word's single characters. The corpus collapses to (word, freq) first,
+    so the model is vocabulary-sized, never corpus-sized."""
     vocab = (
         docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -61,110 +69,86 @@ def _vocab_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
         # matches one code point, so a surrogate pair stays one element,
         # exactly like the oracle's string_split(word, '') (round-12
         # review: the previous split("(?!$)") broke astral characters
-        # into two lone surrogates — different position tables and pair
-        # counts vs DuckDB); also emits no trailing "" on any Spark
-        F.posexplode(F.regexp_extract_all("word", F.lit(r"(?s)."), 0)).alias("pos", "tok"),
-    ).select("word", "freq", F.col("pos").cast("long").alias("pos"), "tok")
+        # into two lone surrogates — different pair counts vs DuckDB);
+        # also emits no trailing "" on any Spark
+        F.regexp_extract_all("word", F.lit(r"(?s)."), 0).alias("toks"),
+    )
 
 
-def _merge_round(chars: DataFrame) -> DataFrame:
-    """One BPE iteration over (word, freq, pos, tok): count pairs, pick the
-    winner, apply the greedy merge, re-compact positions.
+# Every adjacent token pair of a word, as (x, y) structs.
+_PAIRS = """explode(zip_with(
+    slice(toks, 1, greatest(size(toks) - 1, 0)),
+    slice(toks, 2, greatest(size(toks) - 1, 0)),
+    (a, b) -> named_struct('x', a, 'y', b)))"""
 
-    Precondition: the vocabulary contains at least one 2+-character word
-    (else there is no pair to merge and the round degenerates — impossible
-    on a real corpus).
+# The greedy left-to-right merge of the winning pair (x, y), step for step
+# the Python loop: the fold carries the output tokens and a flag that drops
+# the right half of the pair just merged, so in a run of overlapping
+# matches ("aaa" under (a, a)) only every other position merges. Words
+# shorter than two tokens, and every word in a round without a winner,
+# keep their tokens. ``get`` returns NULL past the end of the array.
+_MERGED = """CASE WHEN x IS NULL OR size(toks) < 2 THEN toks ELSE aggregate(
+    sequence(0, size(toks) - 1),
+    named_struct('out', CAST(array() AS array<string>), 'skip', false),
+    (acc, i) -> CASE
+        WHEN acc.skip THEN named_struct('out', acc.out, 'skip', false)
+        WHEN get(toks, i) = x AND get(toks, i + 1) = y
+            THEN named_struct('out', array_append(acc.out, x || y), 'skip', true)
+        ELSE named_struct('out', array_append(acc.out, get(toks, i)), 'skip', false)
+    END,
+    acc -> acc.out) END"""
 
-    Greedy left-to-right without a self-join: positions are dense per word,
-    so a maximal run of overlapping matches is a run of consecutive rows
-    with ``match`` set, and the classic islands windows find run starts and
-    offsets in one pass — a matched position merges iff its offset within
-    its run is even, and the row after a merged position is the consumed
-    right half.
+
+def _merge_round(words: DataFrame) -> DataFrame:
+    """One BPE iteration over (word, freq, toks): count the adjacent pairs,
+    pick the winner, apply the greedy merge to every word.
 
     A round with NO adjacent pair anywhere (every word already a single
-    token — reachable on tiny vocabularies before MERGE_ITERS runs out) is
-    a NO-OP, as in standard BPE early stopping: the 1-row argmax is joined
-    LEFT on a constant key, so an empty winner leaves every token
-    unmatched instead of emptying the vocabulary through a cross join
+    token, or an all-single-character vocabulary) is a NO-OP, as in
+    standard BPE early stopping: the 1-row argmax is joined LEFT on a
+    constant key, so an empty winner leaves every word's tokens as they
+    are instead of emptying the vocabulary through a cross join
     (hypothesis-caught on the corpus [['aa']]; the DuckDB oracle chain
-    no-ops the same way)."""
-    wp = Window.partitionBy("word").orderBy("pos")
-    wcum = wp.rowsBetween(Window.unboundedPreceding, 0)
-    paired = chars.withColumn("nxt", F.lead("tok").over(wp))
+    no-ops the same way).
+
+    Both steps are SQL expression strings: each is parsed in one call,
+    where the same expression built from Column objects costs hundreds
+    of driver round trips per round."""
     top = F.broadcast(
-        paired.filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
+        words.select("freq", F.expr(_PAIRS).alias("p"))
+        .groupBy("p.x", "p.y")
         .agg(F.sum("freq").alias("cnt"))
         .orderBy(F.col("cnt").desc(), "x", "y")
         .limit(1)
         .select("x", "y", F.lit(1).alias("__k"))
     )
-    flagged = (
-        paired.withColumn("__k", F.lit(1))
+    return (
+        words.withColumn("__k", F.lit(1))
         .join(top, "__k", "left")
-        .drop("__k")
-        .withColumn(
-            "match",
-            F.coalesce(
-                (F.col("tok") == F.col("x")) & (F.col("nxt") == F.col("y")),
-                F.lit(False),  # last char of a word has NULL nxt
-            ),
-        )
-        .withColumn(
-            "new_run",
-            F.col("match") & ~F.coalesce(F.lag("match").over(wp), F.lit(False)),
-        )
-        .withColumn(
-            "run0", F.max(F.when(F.col("new_run"), F.col("pos"))).over(wcum)
-        )
-        .withColumn(
-            "merge_here",
-            F.col("match") & ((F.col("pos") - F.col("run0")) % 2 == 0),
-        )
-    )
-    merged = (
-        flagged.withColumn(
-            "consumed", F.coalesce(F.lag("merge_here").over(wp), F.lit(False))
-        )
-        .filter(~F.col("consumed"))
-        .select(
-            "word",
-            "freq",
-            "pos",
-            F.when(F.col("merge_here"), F.concat(F.col("x"), F.col("y")))
-            .otherwise(F.col("tok"))
-            .alias("tok"),
-        )
-    )
-    return merged.withColumn(
-        "pos",
-        (F.row_number().over(Window.partitionBy("word").orderBy("pos")) - 1).cast(
-            "long"
-        ),
+        .select("word", "freq", F.expr(_MERGED).alias("toks"))
     )
 
 
-def _trained_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, freq, tpos, tok) after :data:`MERGE_ITERS` trained merge
-    rounds — the tokenizer model, shared by training-statistics
+def _trained_words(docs: DataFrame) -> DataFrame:
+    """(word, freq, toks) after :data:`MERGE_ITERS` trained merge rounds —
+    the tokenizer model, shared by training-statistics
     (:func:`bpe_merges_t2`) and corpus encoding (:func:`bpe_apply`).
 
     The merge rounds run on the caller's session: once the corpus has
-    collapsed to its exploded character table, every per-round
-    window/join moves a vocabulary-sized frame, and AQE coalesces those
-    shuffles to the minimum partition size at any session width."""
-    chars = _vocab_chars(spark, sf_dir).localCheckpoint()
+    collapsed to its vocabulary, every per-round aggregate/join moves a
+    vocabulary-sized frame, and AQE coalesces those shuffles to the
+    minimum partition size at any session width."""
+    words = _vocab_words(docs).localCheckpoint()
     for _ in range(MERGE_ITERS):
         # each round reads its predecessor twice (pair count + merge):
-        # checkpoint keeps the window/join chains from re-running.
+        # checkpoint keeps the join chains from re-running.
         # eager=False: the round's own pair-count broadcast build is
         # the first job over the frame and forces (and persists) the
         # checkpoint — one driver job per round instead of two,
         # identical lineage truncation (optimization round 14, the
         # connected_components pattern)
-        chars = _merge_round(chars).localCheckpoint(eager=False)
-    return chars
+        words = _merge_round(words).localCheckpoint(eager=False)
+    return words
 
 
 def bpe_merges_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,30 +159,25 @@ def bpe_merges_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence (so the oracle verifies the learned segmentation itself, not
     just counts).
 
-    Scale shape: the corpus is aggregated ONCE to (word, freq); both merge
-    rounds run windows/joins partitioned by word over the vocabulary-sized
-    character table (per-task state = one word's characters); the winning
-    pair is a 1-row broadcast. Applying the tokenizer back to documents is
-    a vocabulary-table broadcast join onto per-doc word counts — the corpus
-    is scanned exactly twice (dictionary build + application) and never
-    shuffles except on (doc_id, word)."""
-    chars = _trained_chars(spark, sf_dir)
-    per_word = chars.groupBy("word", "freq").agg(
-        F.count("*").cast("long").alias("n_toks"),
+    Scale shape: one read of the corpus is scanned twice — aggregated to
+    (word, freq) for training, then counted per (doc_id, word) for the
+    application. Both merge rounds run over the vocabulary-sized word
+    table, and the winning pair is a 1-row broadcast. Applying the
+    tokenizer is a broadcast join of the model's per-word token count and
+    fingerprint onto the per-doc word counts — the corpus never shuffles
+    except on (doc_id, word)."""
+    docs = _docs(spark, sf_dir)
+    per_word = _trained_words(docs).select(
+        "word",
+        F.size("toks").cast("long").alias("n_toks"),
         F.aggregate(
-            F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+            "toks",
             F.lit(0).cast("long"),
             # SHINGLE_MULT/MOD imported, not re-hardcoded: four sites
             # (Spark+oracle here, dedup's pair) must retune together or the
             # fingerprint arithmetic silently forks (round-12 review)
-            lambda acc, s: (acc * SHINGLE_MULT + poly_hash(s["tok"])) % MOD,
+            lambda acc, t: (acc * SHINGLE_MULT + poly_hash(t)) % MOD,
         ).alias("word_fp"),
-    )
-    from ..sources.tables import rebalance_narrow_scan
-
-    path = f"{sf_dir}/documents.parquet"
-    docs = rebalance_narrow_scan(
-        spark.read.parquet(path).select("doc_id", "text"), path
     )
     doc_words = (
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
@@ -225,22 +204,25 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer's vocab file orders ids.
 
     Scale shape: training is the shared vocabulary-sized dataflow
-    (:func:`_trained_chars`). Encoding is one corpus scan: per-doc word
-    positions explode map-side, then BROADCAST joins against the model —
-    word -> token count, word -> its trained token rows, token -> id (all
-    vocabulary-sized, i.e. model state). The only corpus-wide exchange is
-    the per-doc prefix-sum window, and it runs over WORD rows, not token
-    rows: because trained positions are dense 0..n_toks-1 within each word
-    (re-compacted every merge round), ``pos = (tokens in preceding words)
-    + tpos`` — so the cumulative sum needs only one row per corpus word,
-    and the token-level fan-out happens map-side AFTER the exchange
-    (~4-5x less shuffled/sorted volume than numbering exploded token
-    rows). Per-task window state is one document's words. The
-    id-assignment window is global but runs over the VOCABULARY
-    (model-sized, like the kmeans centroid collect) — never the corpus."""
-    chars = _trained_chars(spark, sf_dir)
+    (:func:`_trained_words`), off the same corpus read as the encode side.
+    Encoding: per-doc word positions explode map-side, then two BROADCAST
+    joins against the model — word -> its trained tokens, token -> id
+    (both model-sized). The only corpus-wide exchange is the per-doc
+    prefix-sum window, and it runs over WORD rows, not token rows:
+    ``pos = (tokens in preceding words) + tpos`` — so the cumulative sum of
+    ``size(toks)`` needs only one row per corpus word, and the token-level
+    ``posexplode`` runs map-side AFTER the exchange (~4-5x less
+    shuffled/sorted volume than numbering exploded token rows). Per-task
+    window state is one document's words. The id-assignment window is
+    global but runs over the trained TOKENS — at most the distinct code
+    points of the corpus plus one new token per merge round (model-sized,
+    like the kmeans centroid collect), never the corpus or its
+    vocabulary."""
+    docs = _docs(spark, sf_dir)
+    words = _trained_words(docs)
     ids = (
-        chars.groupBy("tok")
+        words.select("freq", F.explode("toks").alias("tok"))
+        .groupBy("tok")
         .agg(F.sum("freq").cast("long").alias("tot"))
         .withColumn(
             "token_id",
@@ -250,27 +232,20 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("tok", "token_id")
     )
-    from ..sources.tables import rebalance_narrow_scan
-
-    path = f"{sf_dir}/documents.parquet"
-    docs = rebalance_narrow_scan(
-        spark.read.parquet(path).select("doc_id", "text"), path
-    )
     dw = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("widx", "word")
     )
-    n_toks = chars.groupBy("word").agg(F.count("*").cast("long").alias("n_toks"))
     # the ONLY corpus exchange: per-doc running token offset over WORD rows
-    # (trained positions are dense per word, so offset + tpos IS the global
-    # token position — no need to shuffle the exploded token rows)
+    # (offset + tpos IS the global token position — no need to shuffle the
+    # exploded token rows)
     w_off = Window.partitionBy("doc_id").orderBy("widx").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    dw_off = dw.join(F.broadcast(n_toks), "word").withColumn(
-        "off", F.coalesce(F.sum("n_toks").over(w_off), F.lit(0)).cast("long")
+    dw_off = dw.join(F.broadcast(words.select("word", "toks")), "word").withColumn(
+        "off", F.coalesce(F.sum(F.size("toks")).over(w_off), F.lit(0)).cast("long")
     )
-    flat = dw_off.join(
-        F.broadcast(chars.select("word", F.col("pos").alias("tpos"), "tok")), "word"
+    flat = dw_off.select(
+        "doc_id", "off", F.posexplode("toks").alias("tpos", "tok")
     ).join(F.broadcast(ids), "tok")
     # sortWithinPartitions, NOT a global orderBy: the output is corpus-sized
     # (one row per token), so a presentation sort would add a second

@@ -50,13 +50,13 @@ SHOWCASE = [
     ("bm25_topk", "inverted-index scoring: query terms / df / corpus stats ALL broadcast onto the checkpointed postings slice; 3 corpus scans total"),
     ("dsir_weights", "feature-hash importance weights: ONE conditional-sum count pass, NBUCK-row weight table broadcast back onto the checkpointed bigram stream"),
     ("triangle_count", "degree-ordered orientation: wedge join + closing probe all read the checkpointed oriented-edge RDD; fact joins never re-run"),
-    ("bpe_merges_t2", "BPE training: corpus scanned exactly twice (dictionary + application); merge rounds on checkpointed vocabulary-sized tables; 1-row top pair broadcast"),
+    ("bpe_merges_t2", "BPE training: one corpus read scanned twice (dictionary + application); merge rounds are a pair count plus a map-side array fold on the checkpointed one-row-per-word model; 1-row top pair broadcast"),
     ("winnow_fingerprints", "winnowing selection: all 2(W-1) min-frames share ONE (doc_id, pos) exchange; zero joins, zero per-window row explosion"),
     ("cms_heavy_hitters", "count-min build: D*W-cell bounded aggregate (map-side partial sketches merge cell-wise); finished sketch broadcasts onto the probes"),
     ("span_scrub", "scrub apply step: checkpointed position table, MIN-owner aggregate; only DROPPED positions shuffle (per-doc collect_set), fingerprint folds array_except of kept positions map-side — the token stream never re-explodes"),
     ("lpa_communities_t3", "label propagation: checkpointed |E|-row bidirected edges reused every round; per round one join + aggregate + per-node top-1 window"),
     ("bfs_hops_t3", "multi-source BFS: min-plus frontier relaxation as one join + min-aggregate per round on the checkpointed edge list"),
-    ("bpe_apply", "tokenizer encode: trained model broadcasts three ways (word->n_toks, word->tokens, token->id, all vocab-sized); ONE corpus scan; only corpus-wide exchange is the per-doc prefix sum over WORD rows — token fan-out is map-side after it"),
+    ("bpe_apply", "tokenizer encode: trained model broadcasts two ways (word->token array, token->id, both model-sized); ONE corpus scan; only corpus-wide exchange is the per-doc prefix sum over WORD rows — the posexplode token fan-out is map-side after it"),
     ("hll_distinct", "HLL build: per-key register MAX merges map-side; integer estimator is a pure projection; exact twin rides the same key exchange"),
     ("weighted_sample", "priority sampling: map-only integer priorities, TakeOrderedAndProject top-k (per-partition heaps, no global sort); rank window bounded by k rows"),
     ("corpus_pipeline", "flagship composition: quality+token features fused into the scan of EACH augmented-corpus union branch (2 documents scans total, filters pushed); AQE resolves the pairs-sized drop set to ONE BroadcastHashJoin LeftAnti whose exchange is built once and ReusedExchange'd by the other branch; map-side partial aggregate feeds the 1-row rollup"),

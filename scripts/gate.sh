@@ -95,13 +95,24 @@ assert objs[-1]["n_queries"] == 2, objs[-1]
   BENCH_RC=$?
 fi
 
+# Traced-count repeat: two traced perfbench runs of curate_ops (the BPE,
+# dedup and pandas-UDF queries) must report identical jobs, stages, tasks,
+# shuffle bytes and result rows, so a job count cited for these queries is
+# a property of the plan and not of one run.
 {
   echo
-  echo "== result: pytest rc=$PYTEST_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC bench rc=$BENCH_RC =="
+  echo "-- traced counts repeat, curate_ops (perfbench/test_counts.py) --"
+} >> "$ART"
+python3 -m pytest perfbench/test_counts.py -q -k curate_ops >> "$ART" 2>&1
+COUNTS_RC=$?
+
+{
+  echo
+  echo "== result: pytest rc=$PYTEST_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC bench rc=$BENCH_RC counts rc=$COUNTS_RC =="
 } >> "$ART"
 
 tail -n 5 "$ART"
-if [ "$PYTEST_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ] || [ "$BENCH_RC" -ne 0 ]; then
+if [ "$PYTEST_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ] || [ "$BENCH_RC" -ne 0 ] || [ "$COUNTS_RC" -ne 0 ]; then
   echo "GATE RED — do not snapshot. Full output in $ART" >&2
   exit 1
 fi

@@ -41,9 +41,9 @@ SPILL_QUERIES = (
     # min-frames on one doc window — both route through WindowExec buffers
     "ngram_span_dedup",
     "winnow_fingerprints",
-    # round-7: the per-doc position window holds one document's post-merge
-    # tokens (~240 at this corpus's doc length) — above the 128-row forced
-    # threshold, so the encode path must spill and still hash-match
+    # round-7: the per-doc offset window holds one document's word rows
+    # (the token fan-out runs map-side after it) — above the 128-row
+    # forced threshold, so the encode path must spill and still hash-match
     "bpe_apply",
     # round-9: the rewritten apply step (dropped-position sets + map-side
     # array_except fold) routes its ownership join through SMJ buffers and

@@ -7,36 +7,37 @@ algorithm itself — in particular the overlapping-run rule ("aaaa" under
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, assume, given, settings
+import pytest
+from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 from hypothesis import strategies as st
 
 from datafusion_distributed_experiment_spark.operators.bpe import (
     MERGE_ITERS,
+    _docs,
     _merge_round,
-    _vocab_chars,
+    _vocab_words,
 )
+
+from .conftest import SF_DIR
 
 
 def _chars_frame(spark, words: list[tuple[str, int]]):
-    rows = [
-        (w, f, p, ch) for w, f in words for p, ch in enumerate(w)
-    ]
-    return spark.createDataFrame(rows, "word string, freq long, pos long, tok string")
+    rows = [(w, f, list(w)) for w, f in words]
+    return spark.createDataFrame(rows, "word string, freq long, toks array<string>")
 
 
 def _collect_tokens(df) -> dict[str, list[str]]:
-    out: dict[str, list[tuple[int, str]]] = {}
-    for r in df.collect():
-        out.setdefault(r["word"], []).append((r["pos"], r["tok"]))
-    return {w: [t for _, t in sorted(v)] for w, v in out.items()}
+    return {r["word"]: list(r["toks"]) for r in df.collect()}
 
 
-def _py_top_pair(words: list[tuple[list[str], int]]) -> tuple[str, str]:
+def _py_top_pair(words: list[tuple[list[str], int]]) -> tuple[str, str] | None:
     counts: dict[tuple[str, str], int] = {}
     for toks, f in words:
         for a, b in zip(toks, toks[1:]):
             counts[(a, b)] = counts.get((a, b), 0) + f
+    if not counts:
+        return None
     return min(counts, key=lambda p: (-counts[p], p))
 
 
@@ -86,13 +87,14 @@ def test_tie_breaks_lexicographically(spark):
     )
 )
 def test_merge_round_matches_python_replica(spark, words):
-    # documented precondition: at least one 2+-char word (no pairs at all ->
-    # no top pair -> degenerate round; impossible on a real corpus)
-    assume(any(len(w) >= 2 for w, _ in words))
+    # a vocabulary with no adjacent pair (all single characters) is in the
+    # domain: the round must then leave every word as it is
     got = _collect_tokens(_merge_round(_chars_frame(spark, words)))
     py_words = [([c for c in w], f) for w, f in words]
-    x, y = _py_top_pair(py_words)
-    expect = {w: _py_merge([c for c in w], x, y) for w, f in words}
+    top = _py_top_pair(py_words)
+    expect = {
+        w: list(w) if top is None else _py_merge(list(w), *top) for w, f in words
+    }
     assert got == expect
 
 
@@ -100,10 +102,10 @@ def test_two_rounds_over_vocab_chars(spark):
     """End-to-end over a real corpus slice: run MERGE_ITERS rounds and check
     every word's tokens still concatenate back to the word (merges never
     lose or reorder characters)."""
-    chars = _vocab_chars(spark, "/root/testdata/sf0.001")
+    words = _vocab_words(_docs(spark, SF_DIR))
     for _ in range(MERGE_ITERS):
-        chars = _merge_round(chars).localCheckpoint()
-    toks = _collect_tokens(chars)
+        words = _merge_round(words).localCheckpoint()
+    toks = _collect_tokens(words)
     assert len(toks) >= 10
     merged_words = [w for w, ts in toks.items() if len(ts) < len(w)]
     assert merged_words, "two merge rounds merged nothing"
@@ -114,23 +116,24 @@ def test_two_rounds_over_vocab_chars(spark):
 def test_char_split_is_version_independent(spark):
     """Pin the codepoint char-split (ADVICE r6; round-12: the regex form
     regexp_extract_all('(?s).') replaced split("(?!$)"), which broke
-    surrogate pairs): chars come out one per position with NO trailing
-    empty element, and positions feed the greedy-merge windows."""
-    chars = _vocab_chars(spark, "/root/testdata/sf0.001")
+    surrogate pairs): a word's initial tokens are its characters, one per
+    code point, with NO trailing empty element, and they concatenate back
+    to the word the greedy-merge fold starts from."""
+    words = _vocab_words(_docs(spark, SF_DIR))
     row = (
-        chars.filter(chars.word.isNotNull())
-        .groupBy("word")
-        .agg(
-            F.count("*").alias("n"),
-            F.max(F.length("tok")).alias("maxlen"),
-            F.min(F.length("tok")).alias("minlen"),
-            F.max("pos").alias("maxpos"),
-            F.first(F.length("word")).alias("wordlen"),
+        words.filter(words.word.isNotNull())
+        .select(
+            "word",
+            F.size("toks").alias("n"),
+            F.array_max(F.transform("toks", F.length)).alias("maxlen"),
+            F.array_min(F.transform("toks", F.length)).alias("minlen"),
+            F.array_join("toks", "").alias("joined"),
+            F.length("word").alias("wordlen"),
         )
         .filter((F.col("n") != F.col("wordlen")) | (F.col("minlen") != 1)
-                | (F.col("maxlen") != 1) | (F.col("maxpos") != F.col("n") - 1))
+                | (F.col("maxlen") != 1) | (F.col("joined") != F.col("word")))
     )
-    assert row.count() == 0, "char split emitted empties or skewed positions"
+    assert row.count() == 0, "char split emitted empties or skewed tokens"
 
 
 def test_bpe_apply_reconstructs_and_agrees_with_merge_stats(spark):
@@ -144,7 +147,7 @@ def test_bpe_apply_reconstructs_and_agrees_with_merge_stats(spark):
         bpe_merges_t2,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_DIR
     enc = bpe_apply(spark, sf)
     enc_pd = enc.toPandas()
     # (a) reconstruction
@@ -196,9 +199,6 @@ def test_bpe_apply_matches_python_replica(spark, tmp_path_factory, docs):
         MERGE_ITERS,
         bpe_apply,
     )
-
-    # the merge round degenerates on a vocabulary with no adjacent pair
-    assume(any(len(w) >= 2 for doc in docs for w in doc))
 
     sf = tmp_path_factory.mktemp("bpe_corpus")
     spark.createDataFrame(
@@ -274,3 +274,29 @@ def test_pairless_merge_round_is_a_noop(spark, tmp_path):
     )
     rows = con.execute(oracles()["bpe_apply"]).fetchall()
     assert [tuple(r) for r in rows] == [(0, 0, 1, "aa")], rows
+
+
+@pytest.mark.parametrize("name", ["bpe_apply", "bpe_merges_t2"])
+def test_bpe_queries_launch_pinned_job_count(spark, name):
+    """Job ledger for the two BPE queries on this session shape: one
+    documents read, the eager vocabulary checkpoint, one pair-count
+    broadcast per merge round and the encode side — 15 jobs per call each.
+    Counted by job group on the second call after clearCache, so nothing
+    cached by the first call can hide a job; a change that adds a job must
+    move this number in the same diff."""
+    from datafusion_distributed_experiment_spark.operators import bpe
+
+    fn = bpe.queries()[name]
+    sc = spark.sparkContext
+    jobs, rows = [], []
+    try:
+        for i in range(2):
+            group = f"bpe-jobs-{name}-{i}"
+            sc.setJobGroup(group, f"{name} call")
+            rows.append(sorted(fn(spark, SF_DIR).collect()))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            spark.catalog.clearCache()
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs[1] == 15, jobs
+    assert rows[0] == rows[1] and rows[0]

@@ -90,7 +90,7 @@ def test_loops_run_on_the_callers_session(spark):
         out = cc(pairs)
         assert out.sparkSession is spark, cc.__name__
         assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == want
-    assert bpe._trained_chars(spark, SF_DIR).sparkSession is spark
+    assert bpe._trained_words(bpe._docs(spark, SF_DIR)).sparkSession is spark
     assert sorted(t.name for t in spark.catalog.listTables("global_temp")) == views
     assert spark.conf.get("spark.sql.shuffle.partitions") == width
 

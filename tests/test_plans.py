@@ -521,12 +521,14 @@ def test_triangle_count_reuses_checkpointed_oriented_edges(spark):
 
 
 def test_bpe_scans_the_corpus_exactly_twice(spark):
-    """Dictionary build + tokenizer application are the only corpus scans.
-    The dictionary-build scan runs at construction (it feeds the FIRST
-    ``localCheckpoint`` in ``_vocab_chars``), so the RETURNED plan must show
-    exactly ONE parquet scan (the application side) plus the checkpointed
-    vocabulary RDD — a second FileScan here would mean the application side
-    re-derived the dictionary instead of reading the trained model."""
+    """Dictionary build + tokenizer application are the only corpus scans,
+    both off one read of ``documents.parquet``. The dictionary-build scan
+    runs at construction (it feeds the FIRST ``localCheckpoint`` in
+    ``_trained_words``), so the RETURNED plan must show exactly ONE parquet
+    scan (the application side) plus the checkpointed model RDD — a second
+    FileScan here would mean the application side re-derived the
+    dictionary instead of reading the trained model. The model reaches the
+    per-doc word counts through exactly ONE broadcast."""
     from datafusion_distributed_experiment_spark.operators.bpe import bpe_merges_t2
 
     from .conftest import SF_DIR
@@ -536,7 +538,7 @@ def test_bpe_scans_the_corpus_exactly_twice(spark):
     s = stage_summary(df)
     assert s["scans"] == 1, (s, plan[:2000])
     assert "ExistingRDD" in plan, plan[:2000]
-    assert s["broadcasts"] >= 1, (s, plan[:2000])
+    assert s["broadcasts"] == 1, (s, plan[:2000])
 
 
 def test_winnow_selection_shares_one_exchange(spark):
@@ -671,11 +673,11 @@ def test_hll_register_aggregate_combines_map_side(spark):
 
 
 def test_bpe_apply_model_broadcasts_single_corpus_scan(spark):
-    """Encoding must join the corpus against the trained model via
-    BROADCAST joins only (word->tokens and token->id are both model-sized),
+    """Encoding must join the corpus against the trained model via exactly
+    two BROADCAST joins (word->tokens and token->id, both model-sized),
     read the corpus ONCE for the encode side, and shuffle the corpus only
-    for the per-doc position window (partitioned by doc_id — per-task
-    state is one document's tokens)."""
+    for the per-doc offset window (partitioned by doc_id — per-task
+    state is one document's word rows)."""
     from datafusion_distributed_experiment_spark.operators.bpe import bpe_apply
 
     from .conftest import SF_DIR
@@ -683,13 +685,13 @@ def test_bpe_apply_model_broadcasts_single_corpus_scan(spark):
     df = bpe_apply(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     s = stage_summary(df)
-    # r8: three model-sized broadcasts (word->n_toks, word->token rows,
-    # token->id); the corpus-wide doc_id exchange carries WORD rows with
-    # the token fan-out joined map-side above it
-    assert s["broadcasts"] >= 3, (s, plan[:3000])
+    # two model-sized broadcasts (word->token array, token->id); the
+    # corpus-wide doc_id exchange carries WORD rows, and the token fan-out
+    # (posexplode of the word's tokens) runs map-side above it
+    assert s["broadcasts"] == 2, (s, plan[:3000])
     assert "SortMergeJoin" not in plan, plan[:3000]
     # one parquet scan for the encode side (the trained model reads the
-    # checkpointed chars RDD, not parquet)
+    # checkpointed word RDD, not parquet)
     assert plan.count("FileScan parquet") == 1, plan[:3000]
     assert "windowspecdefinition(doc_id" in plan, plan[:3000]
     # r8: output order is sortWithinPartitions — a global presentation sort
@@ -702,18 +704,23 @@ def test_single_partition_windows_are_model_sized(spark):
     from exactly two declared-query places: token_budget_select's band
     OFFSET frame and bpe_apply's vocab id-assignment window. Both are
     model-sized BY CONSTRUCTION — the band table is O(score_range /
-    SCORE_BAND_WIDTH) rows and the id window runs over the trained
-    VOCABULARY, never the corpus — so the single-partition sort the warning
-    fears is a handful-of-rows task. Pin both facts: (a) each plan has
-    EXACTLY ONE unpartitioned Window (a new global window over the corpus
-    would show up as a second), (b) the actual frame inputs are orders of
-    magnitude below corpus size."""
+    SCORE_BAND_WIDTH) rows and the id window runs over the trained TOKENS,
+    never the corpus or its vocabulary: each merge round adds at most one
+    new token, so there are at most (distinct code points of the corpus)
+    + MERGE_ITERS of them — so the single-partition sort the warning fears
+    is a handful-of-rows task. Pin both facts: (a) each plan has EXACTLY
+    ONE unpartitioned Window (a new global window over the corpus would
+    show up as a second), (b) the actual frame inputs stay within those
+    bounds."""
     import re
 
     from pyspark.sql import functions as F
 
     from datafusion_distributed_experiment_spark.functions.text import tokens
-    from datafusion_distributed_experiment_spark.operators.bpe import bpe_apply
+    from datafusion_distributed_experiment_spark.operators.bpe import (
+        MERGE_ITERS,
+        bpe_apply,
+    )
     from datafusion_distributed_experiment_spark.operators.selection import (
         SCORE_BAND_WIDTH,
         token_budget_select,
@@ -742,12 +749,24 @@ def test_single_partition_windows_are_model_sized(spark):
     )
     assert n_bands <= 64, n_bands  # the offset frame's whole input
 
-    unpart, wins = unpartitioned_windows(bpe_apply(spark, sf))
+    enc = bpe_apply(spark, sf)
+    unpart, wins = unpartitioned_windows(enc)
     assert len(unpart) == 1, wins
-    vocab = docs.select(F.explode(tokens(F.col("text"))).alias("w")).distinct().count()
-    corpus_tokens = docs.select(F.explode(tokens(F.col("text")))).count()
-    # trained token count is O(vocab * word_len), bounded far below corpus
-    assert vocab * 8 < corpus_tokens, (vocab, corpus_tokens)
+    code_points = (
+        docs.select(
+            F.explode(
+                F.regexp_extract_all(
+                    F.array_join(tokens(F.col("text")), ""), F.lit(r"(?s)."), 0
+                )
+            )
+        )
+        .distinct()
+        .count()
+    )
+    # every trained token occurs in the encoded corpus, so the id window's
+    # input is exactly the distinct tokens of the encoding
+    trained = enc.select("token").distinct().count()
+    assert trained <= code_points + MERGE_ITERS, (trained, code_points)
 
 
 def test_corpus_pipeline_broadcasts_drop_set_once(spark):
