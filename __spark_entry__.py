@@ -120,29 +120,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return _run_corpus("tpch/q1")(spark, "/root/testdata/sf0.001")
 
 
-def preload_mem(spark: SparkSession, sf_dir: str, partitions: int | None = None) -> None:
-    """Reference ``--mem-table`` analog (benchmarks/src/tpch/run.rs:226-235):
-    materialize every table in memory N-ways and pin the registration, so
-    SQL-corpus queries read the cached MemTable instead of parquet.
-    DataFrame-native operator queries read parquet by path and are unaffected
-    — same scope as the reference flag, which only feeds its SQL benchmark."""
-    from datafusion_distributed_experiment_spark.engine import _TPCH_TABLES
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        read_parquet_table,
-    )
-
-    eng = Engine(spark)
-    done: set = set()
-    for t in _TPCH_TABLES:
-        eng.register_mem(
-            t, read_parquet_table(spark, f"{sf_dir}/{t}.parquet"), partitions=partitions
-        )
-        done.add(t)
-    # pin the whole-session record in one shot: the MemTables ARE this
-    # sf_dir's views now, so any prior dir's record must not linger
-    _registered[spark] = (sf_dir, done)
-
-
 def green_rounds(directory: str = _ARTIFACT_DIR) -> dict[int, set[str]]:
     """``{round: names}`` of the queries green in each committed
     ``CORRECTNESS_r<round>.json`` under ``directory``. A row is green when

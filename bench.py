@@ -42,19 +42,11 @@ def _parse_cli_into_env(argv: list[str]) -> None:
     flag_to_env = {
         "iterations": "SPARK_GRAFT_BENCH_ITERATIONS",  # --iterations N
         "query": "SPARK_GRAFT_BENCH_ONLY",  # --query q9,bm25_topk
-        "mem_table": "SPARK_GRAFT_BENCH_MEM",  # --mem-table
-        "sorted": "SPARK_GRAFT_BENCH_SORTED",  # --sorted
         "sf_dir": "SPARK_GRAFT_SF_DIR",
         "cpus": "SPARK_GRAFT_CPUS",
     }
     p.add_argument("--iterations", type=int, help="timed iterations per query")
     p.add_argument("--query", help="comma-separated query subset (partial run)")
-    p.add_argument(
-        "--mem-table", action="store_true", help="preload tables into memory"
-    )
-    p.add_argument(
-        "--sorted", action="store_true", help="bench against key-sorted table copies"
-    )
     p.add_argument("--sf-dir", help="scale-factor data directory")
     p.add_argument("--cpus", help="local[N] parallelism")
     args = p.parse_args(argv)
@@ -99,21 +91,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Reference --sorted analog: rewrite the tables range-clustered + sorted
-    # on their primary keys and bench against the sorted copies.
-    if os.environ.get("SPARK_GRAFT_BENCH_SORTED", "") == "1":
-        from datafusion_distributed_experiment_spark.bench import prepare_sorted_dir
-
-        dest = os.environ.get("SPARK_GRAFT_BENCH_SORTED_DIR", "/tmp/bench_sorted_sf")
-        sf_dir = prepare_sorted_dir(spark, sf_dir, dest)
-
-    # Reference --mem-table analog (benchmarks/src/tpch/run.rs:226-235):
-    # preload every table into memory N-ways; cache eviction is disabled so
-    # the MemTables survive the whole run.
-    mem_mode = os.environ.get("SPARK_GRAFT_BENCH_MEM", "") == "1"
-    if mem_mode:
-        entry_mod.preload_mem(spark, sf_dir, partitions=int(cpus))
-
     tiers = entry_mod.query_tiers()
     # Reference --query N analog (benchmarks/src/tpch/run.rs:140-143,
     # benchmarks/src/util/options.rs): SPARK_GRAFT_BENCH_ONLY=q9,bm25_topk
@@ -138,14 +115,7 @@ def main() -> int:
             (t, {n: fn for n, fn in qs.items() if n in wanted}) for t, qs in tiers
         ]
         tiers = [t for t in tiers if t[1]]
-    results = run_benchmark(
-        spark,
-        None,
-        sf_dir,
-        iterations=iterations,
-        tiers=tiers,
-        clear_cache=not mem_mode,
-    )
+    results = run_benchmark(spark, sf_dir, tiers, iterations=iterations)
     # A partial run writes its own file, so the full-run results.json stays
     # the baseline; compare_runs refuses a partial baseline.
     here = os.path.dirname(os.path.abspath(__file__))

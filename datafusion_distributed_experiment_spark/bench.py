@@ -64,44 +64,6 @@ def _force(df: DataFrame) -> int:
     return len(df.collect())
 
 
-# Reference --sorted (benchmarks/src/util/options.rs:60-66): the bench can
-# run against data pre-sorted on each table's primary access keys. Spark has
-# no "declare this parquet sorted" registration; the idiomatic equivalent is
-# the range-clustered layout (repartitionByRange + sortWithinPartitions):
-# every file/row group covers a narrow key interval, so parquet min/max
-# stats prune selective filters to O(1) row groups — the same benefit the
-# reference gets from sortedness-aware planning, delivered by the scan layer.
-TABLE_SORT_KEYS = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderdate", "o_orderkey"],
-    "lineitem": ["l_shipdate", "l_orderkey"],
-    "events": ["ts"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
-
-
-def prepare_sorted_dir(spark: SparkSession, sf_dir: str, dest: str) -> str:
-    """Rewrite every table of ``sf_dir`` into ``dest`` range-clustered +
-    sorted on its primary keys (reference ``--sorted`` analog) and return
-    ``dest``; the bench then runs every query against the sorted copies.
-    Tables are written raw (no type normalization) so the unit-adaptive
-    events probe sees the same physical encoding either way."""
-    from .sources.tables import write_clustered
-
-    os.makedirs(dest, exist_ok=True)
-    for table, keys in TABLE_SORT_KEYS.items():
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        if not os.path.exists(src):
-            continue
-        write_clustered(spark.read.parquet(src), os.path.join(dest, f"{table}.parquet"), keys)
-    return dest
-
-
 MEASURE_LAST_TIERS = ("streaming",)  # leaves RocksDB maintenance threads behind
 
 
@@ -138,17 +100,15 @@ def _isolate(spark: SparkSession, settle: float = SETTLE_SECONDS) -> None:
 
 def run_benchmark(
     spark: SparkSession,
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]] | None,
     sf_dir: str,
+    tiers: list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]],
     iterations: int = 1,
     warmup: bool = True,
-    tiers: list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]] | None = None,
-    clear_cache: bool = True,
     warm_epoch: bool = True,
 ) -> dict:
     """Time every query; returns the reference-shaped results dict.
 
-    When ``tiers`` is given, queries run grouped by tier with cache
+    Queries run grouped by tier (``(name, {query: fn})`` pairs) with cache
     eviction between queries and a full isolation boundary (forced cleanup
     + settle) after each complete interleaved pass and after streaming
     floor blocks; the tiers named in :data:`MEASURE_LAST_TIERS` move to
@@ -164,13 +124,7 @@ def run_benchmark(
     per-query warmup cannot fix it; only sustained execution warms the
     machine. One epoch costs one extra pass (~1-2 min) and moves every
     measured iteration into the warm regime — the difference between a
-    regression signal and noise when each round benches in a fresh container.
-
-    ``clear_cache=False`` is for mem-table mode (reference ``--mem-table``):
-    preloaded MemTables must survive across queries, so nothing is evicted —
-    at the cost of operator-internal persist()s accumulating too."""
-    if tiers is None:
-        tiers = [("all", dict(queries or {}))]
+    regression signal and noise when each round benches in a fresh container."""
     tiers = [t for t in tiers if not _measure_last(t[0])] + [
         t for t in tiers if _measure_last(t[0])
     ]
@@ -209,10 +163,8 @@ def run_benchmark(
                     _force(fn(spark, sf_dir))
                 except Exception:  # noqa: BLE001 - warmup is best-effort
                     pass
-                if clear_cache:
-                    spark.catalog.clearCache()
-        if clear_cache:
-            _isolate(spark)
+                spark.catalog.clearCache()
+        _isolate(spark)
     # INTERLEAVED passes: iteration k of every query runs before iteration
     # k+1 of any query, so a host-level slow episode (measured here:
     # multi-minute throttling windows that degraded 5/5 consecutive
@@ -262,12 +214,10 @@ def run_benchmark(
                 # (LSH signature tables, etc.). Evict between queries so
                 # cached blocks from earlier queries can't skew later
                 # timings or accumulate executor memory across the run.
-                if clear_cache:
-                    spark.catalog.clearCache()
+                spark.catalog.clearCache()
         # Streaming runs last in each pass; drain its state-store threads
         # before the next pass's batch queries are timed.
-        if clear_cache:
-            _isolate(spark)
+        _isolate(spark)
     # Floor passes: FLOOR_EXTRA consecutive iterations per query, for every
     # query (tier order preserved, so streaming floor passes stay last and
     # cannot contaminate batch timings). See the FLOOR_EXTRA comment for the
@@ -294,9 +244,8 @@ def run_benchmark(
                     # evict per iteration exactly like the main passes — the
                     # floor regime is JIT/page-cache warmth, not persisted-
                     # intermediate reuse (which would measure a different job)
-                    if clear_cache:
-                        spark.catalog.clearCache()
-            if clear_cache and _measure_last(tier_name):
+                    spark.catalog.clearCache()
+            if _measure_last(tier_name):
                 _isolate(spark)
     return results
 

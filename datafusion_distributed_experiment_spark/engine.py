@@ -7,7 +7,6 @@ with an idiomatic Spark API. Registration paths map one-to-one:
 - parquet listing table (reference ``tests/tpch.rs:149-161``)      -> :meth:`Engine.register_parquet`
 - csv / pipe-delimited ``.tbl`` (reference ``benchmarks/src/tpch/run.rs:294-309``)
                                                                    -> :meth:`Engine.register_csv` / :meth:`Engine.register_tbl`
-- ``MemTable::load`` N-way in-memory (reference ``run.rs:226-235``) -> :meth:`Engine.register_mem`
 - ``CREATE VIEW``/multi-statement scripts (reference ``run.rs:186-199``,
   ``benchmarks/src/tpch/mod.rs:148-161``)                          -> :meth:`Engine.sql_script`
 """
@@ -15,7 +14,7 @@ with an idiomatic Spark API. Registration paths map one-to-one:
 from __future__ import annotations
 
 import re
-from typing import Iterable, Sequence
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -187,23 +186,6 @@ class Engine:
         df.createOrReplaceTempView(name)
         return df
 
-    def register_json(
-        self, name: str, path: str, schema: StructType | str | None = None
-    ) -> DataFrame:
-        """Register a newline-delimited JSON table (beyond the reference's
-        parquet/CSV/mem surface; schema recommended — see
-        :func:`..sources.read_json_table`)."""
-        df = sources.read_json_table(self.spark, path, schema=schema)
-        df.createOrReplaceTempView(name)
-        return df
-
-    def register_orc(self, name: str, path: str) -> DataFrame:
-        """Register an ORC table (columnar source beyond the reference's
-        parquet/CSV/mem surface; same pushdown machinery as parquet)."""
-        df = sources.read_orc_table(self.spark, path)
-        df.createOrReplaceTempView(name)
-        return df
-
     def register_tbl(
         self, name: str, path: str, schema: StructType | str, strict: bool = True
     ) -> DataFrame:
@@ -214,17 +196,6 @@ class Engine:
         rows instead of silently nulling them — see
         :func:`..sources.read_tbl_table`."""
         df = sources.read_tbl_table(self.spark, path, schema, strict=strict)
-        df.createOrReplaceTempView(name)
-        return df
-
-    def register_mem(self, name: str, df: DataFrame, partitions: int | None = None) -> DataFrame:
-        """Materialize a DataFrame in memory N-ways and register it
-        (reference ``MemTable::load``, ``benchmarks/src/tpch/run.rs:226-235``)."""
-        df = sources.memory_table(df, partitions=partitions)
-        df.createOrReplaceTempView(name)
-        return df
-
-    def register_view(self, name: str, df: DataFrame) -> DataFrame:
         df.createOrReplaceTempView(name)
         return df
 
@@ -299,20 +270,6 @@ class Engine:
     ) -> None:
         sources.write_parquet(df, path, compression=compression, partition_by=partition_by)
 
-    def write_clustered(
-        self,
-        df: DataFrame,
-        path: str,
-        cluster_by: list[str],
-        partitions: int | None = None,
-        compression: str = "zstd",
-    ) -> None:
-        """Range-clustered parquet layout for min/max data skipping on a
-        high-cardinality dimension (see :func:`sources.write_clustered`)."""
-        sources.write_clustered(
-            df, path, cluster_by, partitions=partitions, compression=compression
-        )
-
     def write_bucketed(
         self,
         df: DataFrame,
@@ -359,67 +316,6 @@ class Engine:
 
     def write_csv(self, df: DataFrame, path: str, sep: str = ",", header: bool = True) -> None:
         sources.write_csv(df, path, sep=sep, header=header)
-
-    def write_orc(self, df: DataFrame, path: str, compression: str = "zstd") -> None:
-        sources.write_orc(df, path, compression=compression)
-
-    def overwrite_partitions(
-        self, df: DataFrame, path: str, partition_by: list[str], compression: str = "zstd"
-    ) -> None:
-        """Replace only the hive partitions present in ``df`` (dynamic
-        partition overwrite) — the incremental daily-reingest primitive."""
-        sources.overwrite_partitions(df, path, partition_by, compression=compression)
-
-    def register_evolving(self, name: str, path: str) -> DataFrame:
-        """Register a schema-evolving parquet directory (files with
-        different but compatible schemas) as one unioned-schema view; old
-        files surface newly-added columns as NULLs
-        (see :func:`sources.read_evolving_table`)."""
-        df = sources.read_evolving_table(self.spark, path)
-        df.createOrReplaceTempView(name)
-        return df
-
-    def compact(
-        self, path: str, target_bytes: int = 128 * 1024 * 1024, compression: str = "zstd"
-    ) -> tuple[int, int]:
-        """Small-file compaction with verify-then-swap semantics
-        (see :func:`sources.compact_parquet`)."""
-        return sources.compact_parquet(
-            self.spark, path, target_bytes=target_bytes, compression=compression
-        )
-
-    def check_constraints(self, df: DataFrame, rules: dict[str, str]) -> dict[str, int]:
-        """Data-quality rule evaluation in ONE aggregate pass: for each
-        ``name -> SQL predicate``, the number of rows where the predicate is
-        not TRUE (FALSE **or NULL** both count as violations — the strict
-        data-quality reading, NOT SQL CHECK semantics where NULL passes;
-        append ``OR col IS NULL`` to a rule to allow missing values).
-
-        One job, one scan, regardless of rule count — every rule is a
-        conditional-sum aggregate over the same pass, which is the only
-        shape that holds up when the table is 100 TB and the rule set grows
-        to dozens."""
-        from pyspark.sql import functions as F
-
-        if not rules:
-            return {}  # df.agg() with zero exprs is an error, not a no-op
-        aggs = [
-            # coalesce: SUM over ZERO rows is NULL, and int(None) would
-            # crash on an empty (or fully-filtered) frame — zero violations
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.coalesce(F.expr(pred).cast("boolean"), F.lit(False)), 0
-                    ).otherwise(1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias(name)
-            for name, pred in rules.items()
-        ]
-        row = df.agg(*aggs).collect()[0]
-        return {name: int(row[name]) for name in rules}
 
     def stop(self) -> None:
         self.spark.stop()

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import DUCK_POLY_HASH, DUCK_TOKENS, poly_hash, tokens
+from .bpe import _docs
 
 # Query docs: poly_hash(doc_id) % QUERY_MOD == 0 (~1% of the corpus stands in
 # for a seed-query set); each query = the FIRST QUERY_TERMS tokens of its doc
@@ -59,15 +60,6 @@ def check_score_headroom(n_docs: int, max_tf: int, max_dl: int) -> None:
             "rescale (shard the corpus or clip tf/dl) or switch the "
             "score arithmetic to decimal(38,0)"
         )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import rebalance_narrow_scan
-
-    path = f"{sf_dir}/documents.parquet"
-    return rebalance_narrow_scan(
-        spark.read.parquet(path).select("doc_id", "text"), path
-    )
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

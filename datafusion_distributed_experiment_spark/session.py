@@ -20,10 +20,7 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def default_spark_conf(
-    shuffle_partitions: int | None = None,
-    prefer_hash_join: bool = True,
-) -> dict[str, str]:
+def default_spark_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     """Scale-oriented session configuration.
 
     Maps the reference's benchmark options (reference
@@ -31,7 +28,7 @@ def default_spark_conf(
 
     - ``--partitions`` -> ``spark.sql.shuffle.partitions``
     - ``--batch-size`` (Arrow batch 8192) -> Arrow execution batch size
-    - ``--prefer_hash_join`` -> ``spark.sql.join.preferSortMergeJoin`` (inverted)
+    - ``--prefer_hash_join`` (default true) -> ``spark.sql.join.preferSortMergeJoin=false``
     - memory pool / spill -> Spark's UnifiedMemoryManager (built in; no conf)
     """
     conf: dict[str, str] = {
@@ -58,7 +55,7 @@ def default_spark_conf(
         "spark.sql.ansi.enabled": "false",
         # Dimension-table broadcast: 32 MB threshold; AQE sizes at runtime too.
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-        "spark.sql.join.preferSortMergeJoin": "false" if prefer_hash_join else "true",
+        "spark.sql.join.preferSortMergeJoin": "false",
         # 128 MB scan splits — survives 100 TB inputs without driver OOM on
         # split enumeration while keeping per-task work meaningful.
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

@@ -2,42 +2,26 @@
 
 One function per registration path the reference supports (reference
 ``tests/tpch.rs:149-161`` parquet listing tables; ``benchmarks/src/tpch/
-run.rs:294-316`` csv/.tbl with explicit schemas; ``run.rs:226-235`` MemTable;
-``benchmarks/src/tpch/convert.rs:128-160`` parquet/csv sinks with
-compression). :class:`..engine.Engine` delegates here; the functions are also
-usable standalone on any SparkSession.
+run.rs:294-316`` csv/.tbl with explicit schemas; ``benchmarks/src/tpch/
+convert.rs:128-160`` parquet/csv sinks with compression).
+:class:`..engine.Engine` delegates here; the functions are also usable
+standalone on any SparkSession.
 """
 
 from .events import read_events
 from .tables import (
-    compact_parquet,
-    memory_table,
-    overwrite_partitions,
     read_csv_table,
-    read_json_table,
-    read_orc_table,
     read_parquet_table,
-    read_evolving_table,
     read_tbl_table,
-    write_clustered,
     write_csv,
-    write_orc,
     write_parquet,
 )
 
 __all__ = [
     "read_events",
-    "compact_parquet",
-    "read_evolving_table",
     "read_parquet_table",
     "read_csv_table",
-    "read_json_table",
     "read_tbl_table",
-    "memory_table",
     "write_parquet",
-    "write_clustered",
     "write_csv",
-    "read_orc_table",
-    "write_orc",
-    "overwrite_partitions",
 ]

@@ -24,16 +24,7 @@ import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 FORMAT_NAME = "int64list"
 
@@ -54,58 +45,22 @@ class Int64ListSource(DataSource):
         return "numbers bigint"
 
     def reader(self, schema) -> "Int64ListReader":
-        # Spark REFUSES a reader that implements pushFilters while
-        # spark.sql.python.filterPushdown.enabled is false, so the pushdown
-        # subclass is chosen by the session-aware caller (int64_list sets
-        # the option from the live conf value).
-        if self.options.get("pushdown") == "1":
-            return Int64ListPushdownReader(self.options)
         return Int64ListReader(self.options)
-
-
-_PUSHABLE = {
-    EqualTo: lambda v, x: v == x,
-    GreaterThan: lambda v, x: v > x,
-    GreaterThanOrEqual: lambda v, x: v >= x,
-    LessThan: lambda v, x: v < x,
-    LessThanOrEqual: lambda v, x: v <= x,
-}
 
 
 class Int64ListReader(DataSourceReader):
     def __init__(self, options):
         self.values = [int(v) for v in json.loads(options.get("values", "[]"))]
         self.n_partitions = max(1, int(options.get("partitions", "2")))
-        self.pushed: list = []
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         # round-robin assignment: partition i serves values[i::n] — the same
         # fixed per-partition batches the reference's Int64ListExec declares
         for v in self.values[partition.value :: self.n_partitions]:
-            if all(_PUSHABLE[type(f)](v, f.value) for f in self.pushed):
-                yield (v,)
+            yield (v,)
 
     def partitions(self) -> Sequence[InputPartition]:
         return [InputPartition(i) for i in range(self.n_partitions)]
-
-
-class Int64ListPushdownReader(Int64ListReader):
-    """Reader variant with scan-level predicate pushdown (the reference's
-    ``DataSourceExec ... predicate=`` evidence, reference
-    ``tests/distributed_repartitions.rs:71``, for the custom source).
-    Separate class because Spark rejects any reader that implements
-    ``pushFilters`` while ``spark.sql.python.filterPushdown.enabled`` is
-    false."""
-
-    def pushFilters(self, filters):
-        """Absorb simple comparisons on ``numbers`` into the read — applied
-        per-partition at emit time, so unselective partitions ship
-        nothing. Unsupported filters are yielded back for Spark to apply."""
-        for f in filters:
-            if type(f) in _PUSHABLE and f.attribute == ("numbers",):
-                self.pushed.append(f)
-            else:
-                yield f
 
 
 # WeakSet, not a set of id()s: an id is a recycled address, and a new
@@ -138,13 +93,6 @@ def register(spark: SparkSession) -> None:
     _registered_sessions.add(spark)
 
 
-def _pushdown_enabled(spark: SparkSession) -> bool:
-    try:
-        return spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
-    except Exception:  # noqa: BLE001 - conf unknown on exotic builds
-        return False
-
-
 def int64_list(
     spark: SparkSession, values: Sequence[int], partitions: int = 2
 ) -> DataFrame:
@@ -153,7 +101,6 @@ def int64_list(
         spark.read.format(FORMAT_NAME)
         .option("values", json.dumps(list(values)))
         .option("partitions", str(partitions))
-        .option("pushdown", "1" if _pushdown_enabled(spark) else "0")
         .load()
     )
 

@@ -142,33 +142,6 @@ def read_csv_table(
     return reader.csv(path)
 
 
-def read_json_table(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """Newline-delimited JSON. Schema should be supplied in production:
-    inference scans the data once extra, and at 100 TB that doubles the read
-    — the inferred path is for exploration only. ``mode`` passes through
-    to the JSON parser (``"FAILFAST"`` makes corrupt lines raise instead
-    of silently nulling the row — round-14 reader hardening)."""
-    reader = spark.read.option("mode", mode)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (columnar alternative to parquet; same pushdown/pruning
-    machinery — ``spark.sql.orc.filterPushdown`` is on by default)."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, compression: str = "zstd") -> None:
-    df.write.mode("overwrite").option("compression", compression).orc(path)
-
-
 def write_partitioned(
     rows: DataFrame, path: str, partition_by: list[str], n_dirs: int
 ) -> None:
@@ -202,27 +175,6 @@ def write_partitioned(
         rows.repartition(max(1, min(sess, n_dirs)), *[F.col(c) for c in partition_by])
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def overwrite_partitions(
-    df: DataFrame, path: str, partition_by: list[str], compression: str = "zstd"
-) -> None:
-    """Incremental hive-layout write: replace ONLY the partitions present in
-    ``df``, leaving all other partitions untouched (dynamic partition
-    overwrite).
-
-    The daily-ingest primitive at 100 TB: re-running one day's pipeline
-    rewrites that day's directory instead of truncating the whole table
-    (static overwrite mode would). The mode is a per-write
-    DataFrameWriter option (it overrides the session conf), so the shared
-    session is never mutated — safe under concurrent writers."""
-    (
-        df.write.mode("overwrite")
-        .option("compression", compression)
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by)
         .parquet(path)
     )
@@ -373,15 +325,6 @@ def read_tbl_table(
     )
 
 
-def memory_table(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Materialize in memory N-ways (reference MemTable::load)."""
-    if partitions:
-        df = df.repartition(partitions)
-    df = df.cache()
-    df.count()
-    return df
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -398,129 +341,5 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    partitions: int | None = None,
-    compression: str = "zstd",
-) -> None:
-    """Parquet sink with the data CLUSTERED on ``cluster_by``: range-
-    partition across files, sort within each, so every file and row group
-    covers a narrow key interval and parquet min/max statistics prune
-    selective filters down to O(1) files instead of a full scan — the
-    data-skipping layout for a dominant access dimension (hive
-    ``partition_by`` handles the low-cardinality dimensions; this handles
-    the high-cardinality one where a directory per value is impossible).
-
-    At 100 TB: one range exchange at write time (sampled range bounds, no
-    global sort) buys every future selective read. Readers need nothing
-    special — pushdown against row-group stats is automatic."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    out = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-    out.write.mode("overwrite").option("compression", compression).parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, sep: str = ",", header: bool = True) -> None:
     df.write.mode("overwrite").option("sep", sep).option("header", str(header).lower()).csv(path)
-
-
-def read_evolving_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet directory whose files carry DIFFERENT (compatible)
-    schemas — the append-only schema-evolution shape a long-lived ingest
-    directory accumulates (new columns appear in newer files). Spark's
-    default read takes ONE footer's schema; ``mergeSchema`` unions all
-    footers so old files surface the new columns as NULLs. Kept opt-in
-    (not the default read path) because the merge reads every footer —
-    O(files) driver metadata work that a 100 TB table with a stable schema
-    should not pay on each query."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    compression: str = "zstd",
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite ``path`` so each output file is about
-    ``target_bytes``. Returns (files_before, files_after).
-
-    The small-files problem is the classic lakehouse failure mode: a
-    streaming sink or per-partition daily writes leave thousands of KB-scale
-    files, and every later scan pays per-file open/footer/task overhead.
-    Compaction = one read + round-robin repartition to
-    ceil(total_bytes/target) + rewrite; a no-op when the layout is already
-    coarse enough. The swap is write-to-temp, row-count-verify, then rename
-    (on a real object store this is where a table format's commit protocol
-    takes over; the verify-then-swap mirrors its safety property that
-    readers never observe a partial rewrite)."""
-    import glob as _glob
-    import math
-    import os
-    import re
-    import shutil
-
-    backup = path.rstrip("/") + ".__compact_old__"
-    # Crash recovery BEFORE any expensive work (the swap below is two
-    # renames, and a previous run may have died between or after them):
-    #  - backup AND path exist: the swap completed but cleanup didn't —
-    #    path holds the verified compacted data, the backup is stale junk;
-    #  - backup exists, path missing: died between the renames — the
-    #    backup IS the table, restore it.
-    if os.path.exists(backup):
-        if os.path.exists(path):
-            shutil.rmtree(backup)
-        else:
-            os.rename(backup, path)
-    # Hive-partitioned layouts (key=value directories) are refused loudly:
-    # a flat rewrite would fold the partition columns into the files,
-    # destroying directory pruning and colliding with later partitioned
-    # writes — compact each partition directory instead.
-    part_dirs = [
-        d
-        for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d)) and re.match(r"^[^.=][^=]*=", d)
-    ]
-    if part_dirs:
-        from ..errors import PlanningError
-
-        raise PlanningError(
-            f"compact_parquet: {path} is hive-partitioned "
-            f"(e.g. {part_dirs[0]!r}); a flat rewrite would destroy the "
-            "partition layout — compact each partition directory instead"
-        )
-    files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_bytes))
-    if n_out >= len(files):
-        return len(files), len(files)
-
-    df = spark.read.parquet(path)
-    expected = df.count()
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    df.repartition(n_out).write.mode("overwrite").option(
-        "compression", compression
-    ).parquet(tmp)
-    actual = spark.read.parquet(tmp).count()
-    if actual != expected:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_parquet: rewrite of {path} produced {actual} rows, expected "
-            f"{expected}; temp output discarded, original left untouched"
-        )
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    shutil.rmtree(backup)
-    after = len(
-        [
-            f
-            for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        ]
-    )
-    return len(files), after

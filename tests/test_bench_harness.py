@@ -4,6 +4,9 @@ and the stdout contract of ``bench.py``."""
 
 from __future__ import annotations
 
+import pytest
+
+from datafusion_distributed_experiment_spark import bench as harness
 from datafusion_distributed_experiment_spark.bench import (
     FLOOR_EXTRA,
     floor_spread,
@@ -19,6 +22,11 @@ class _FakeSpark:
     class sparkContext:
         defaultParallelism = 4
 
+    class catalog:
+        @staticmethod
+        def clearCache():
+            pass
+
 
 class _FakeDF:
     def __init__(self, rows):
@@ -30,6 +38,16 @@ class _FakeDF:
         return [None] * self._rows
 
 
+@pytest.fixture(autouse=True)
+def isolations(monkeypatch):
+    """Record the harness's isolation boundaries instead of running them:
+    each one settles for a second, which these fake-session tests do not
+    need."""
+    calls: list[None] = []
+    monkeypatch.setattr(harness, "_isolate", lambda spark: calls.append(None))
+    return calls
+
+
 def _q(log, name, rows=1):
     def fn(spark, sf_dir):
         log.append(name)
@@ -38,15 +56,14 @@ def _q(log, name, rows=1):
     return fn
 
 
-def test_interleaved_passes_and_measure_last_tier():
+def test_interleaved_passes_and_measure_last_tier(isolations):
     log: list[str] = []
     tiers = [
         ("streaming", {"s1": _q(log, "s1")}),  # listed first, must run LAST
         ("sql", {"a": _q(log, "a"), "b": _q(log, "b")}),
     ]
     results = run_benchmark(
-        _FakeSpark(), None, "sf", iterations=2, warmup=False, tiers=tiers,
-        clear_cache=False, warm_epoch=False,
+        _FakeSpark(), "sf", tiers, iterations=2, warmup=False, warm_epoch=False,
     )
     # pass 1 of every query precedes pass 2 of any; streaming at each pass
     # end; then per-query consecutive floor passes, streaming tier still last
@@ -54,14 +71,15 @@ def test_interleaved_passes_and_measure_last_tier():
     assert log == ["a", "b", "s1", "a", "b", "s1", *floors], log
     assert all(len(e["iterations"]) == 2 + FLOOR_EXTRA for e in results["queries"])
     assert [e["tier"] for e in results["queries"]] == ["sql", "sql", "streaming"]
+    # one boundary after each interleaved pass, one after the streaming floors
+    assert len(isolations) == 2 + 1
 
 
 def test_warm_epoch_runs_everything_once_unmeasured():
     log: list[str] = []
     tiers = [("sql", {"a": _q(log, "a"), "b": _q(log, "b")})]
     results = run_benchmark(
-        _FakeSpark(), None, "sf", iterations=1, warmup=False, tiers=tiers,
-        clear_cache=False, warm_epoch=True,
+        _FakeSpark(), "sf", tiers, iterations=1, warmup=False, warm_epoch=True,
     )
     assert log == ["a", "b", "a", "b"]  # epoch + one measured pass
     assert all(len(e["iterations"]) == 1 for e in results["queries"])
@@ -77,8 +95,7 @@ def test_failing_query_is_isolated_and_skipped_in_later_passes():
         })
     ]
     results = run_benchmark(
-        _FakeSpark(), None, "sf", iterations=3, warmup=False, tiers=tiers,
-        clear_cache=False, warm_epoch=False,
+        _FakeSpark(), "sf", tiers, iterations=3, warmup=False, warm_epoch=False,
     )
     by_name = {e["query"]: e for e in results["queries"]}
     assert by_name["boom"]["success"] is False
@@ -154,8 +171,7 @@ def test_every_query_gets_consecutive_floor_passes(monkeypatch):
     log: list[str] = []
     tiers = [("sql", {"a": _q(log, "a"), "b": _q(log, "b")})]
     results = run_benchmark(
-        _FakeSpark(), None, "sf", iterations=2, warmup=False, tiers=tiers,
-        clear_cache=False, warm_epoch=False,
+        _FakeSpark(), "sf", tiers, iterations=2, warmup=False, warm_epoch=False,
     )
     # execution order: interleaved (a b a b) then consecutive floors per query
     assert log == ["a", "b", "a", "b"] + ["a"] * FLOOR_EXTRA + ["b"] * FLOOR_EXTRA, log
@@ -165,53 +181,6 @@ def test_every_query_gets_consecutive_floor_passes(monkeypatch):
         assert all(i.get("floor") for i in by_name[name]["iterations"][2:])
         # the floor passes are what the min estimator reads
         assert headline_seconds(by_name[name]) == 0.1
-
-
-def test_prepare_sorted_dir_preserves_results(spark, tmp_path):
-    """--sorted analog (reference options.rs:60-66): the clustered rewrite
-    must (a) produce every source table, (b) leave query results identical,
-    and (c) lay lineitem out in narrow disjoint l_shipdate intervals per
-    file so min/max stats prune selective scans."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from datafusion_distributed_experiment_spark.bench import prepare_sorted_dir
-    from .conftest import SF_DIR
-
-    dest = prepare_sorted_dir(spark, SF_DIR, str(tmp_path / "sorted"))
-    for t in ("lineitem", "orders", "events", "embeddings"):
-        assert os.path.exists(os.path.join(dest, f"{t}.parquet")), t
-
-    q = "SELECT CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS s, COUNT(*) AS n FROM {t}"
-    plain = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    plain.createOrReplaceTempView("li_plain")
-    spark.read.parquet(f"{dest}/lineitem.parquet").createOrReplaceTempView("li_sorted")
-    assert (
-        spark.sql(q.format(t="li_plain")).collect()
-        == spark.sql(q.format(t="li_sorted")).collect()
-    )
-
-    # clustered layout: per-file l_shipdate min/max intervals are disjoint
-    # (allowing single-point overlap at range-partition boundaries)
-    files = sorted(
-        os.path.join(dest, "lineitem.parquet", f)
-        for f in os.listdir(os.path.join(dest, "lineitem.parquet"))
-        if f.endswith(".parquet")
-    )
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "l_shipdate"
-        )
-        stats = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
-        spans.append((min(s.min for s in stats), max(s.max for s in stats)))
-    spans.sort()
-    assert len(spans) > 1
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, (hi1, lo2)
 
 
 def test_compare_runs_refuses_partial_baseline():
@@ -248,8 +217,8 @@ def test_compare_runs_refuses_other_scale_or_width():
             return _FakeDF(1)
 
         res = run_benchmark(
-            _FakeSpark(), None, sf_dir, iterations=1, warmup=False,
-            tiers=[("sql", {"q6": fn})], clear_cache=False, warm_epoch=False,
+            _FakeSpark(), sf_dir, [("sql", {"q6": fn})], iterations=1,
+            warmup=False, warm_epoch=False,
         )
         res["queries"][0]["iterations"] = [{"elapsed_ms": ms, "row_count": 1}]
         return res
@@ -284,21 +253,13 @@ def test_bench_cli_flags_map_to_env(monkeypatch):
     import os
 
     bench_mod = importlib.import_module("bench")
-    for var in (
-        "SPARK_GRAFT_BENCH_ITERATIONS",
-        "SPARK_GRAFT_BENCH_ONLY",
-        "SPARK_GRAFT_BENCH_MEM",
-        "SPARK_GRAFT_BENCH_SORTED",
-    ):
+    for var in ("SPARK_GRAFT_BENCH_ITERATIONS", "SPARK_GRAFT_BENCH_ONLY"):
         monkeypatch.delenv(var, raising=False)
     bench_mod._parse_cli_into_env([])
     assert "SPARK_GRAFT_BENCH_ONLY" not in os.environ
-    bench_mod._parse_cli_into_env(
-        ["--iterations", "2", "--query", "q1,q6", "--mem-table"]
-    )
+    bench_mod._parse_cli_into_env(["--iterations", "2", "--query", "q1,q6"])
     assert os.environ["SPARK_GRAFT_BENCH_ITERATIONS"] == "2"
     assert os.environ["SPARK_GRAFT_BENCH_ONLY"] == "q1,q6"
-    assert os.environ["SPARK_GRAFT_BENCH_MEM"] == "1"
     monkeypatch.setenv("SPARK_GRAFT_BENCH_ITERATIONS", "9")
     bench_mod._parse_cli_into_env(["--iterations", "3"])
     assert os.environ["SPARK_GRAFT_BENCH_ITERATIONS"] == "9"  # env wins
@@ -356,7 +317,6 @@ def test_bench_main_stdout_is_chunks_then_metric_line(monkeypatch, capsys):
 
     import __spark_entry__ as entry_mod
     import datafusion_distributed_experiment_spark as pkg
-    from datafusion_distributed_experiment_spark import bench as harness
 
     bench_mod = importlib.import_module("bench")
 
@@ -380,8 +340,7 @@ def test_bench_main_stdout_is_chunks_then_metric_line(monkeypatch, capsys):
     canned["queries"].append({"query": "failed", "iterations": [], "success": False})
     writes = []
 
-    for var in ("SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_SORTED", "SPARK_GRAFT_BENCH_MEM"):
-        monkeypatch.delenv(var, raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONLY", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "data/sf0.001")
     monkeypatch.setattr(pkg, "build_session", lambda **kw: _Session())
     monkeypatch.setattr(entry_mod, "query_tiers", lambda: [("sql", {})])

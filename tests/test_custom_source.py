@@ -61,50 +61,3 @@ def test_int64_list_empty_and_single_partition(spark):
     df = int64_list(spark, [7], partitions=4)  # more splits than values
     assert [r["numbers"] for r in df.collect()] == [7]
     assert QUERY_PARTITIONS >= 2  # the declared query is genuinely parallel
-
-
-def test_custom_source_filter_pushdown(spark):
-    """With Python-source filter pushdown enabled, simple comparisons on
-    `numbers` are absorbed into the reader (the custom-source analog of the
-    reference's DataSourceExec predicate pushdown evidence,
-    distributed_repartitions.rs:71) and the scan emits only matching rows;
-    results are identical either way."""
-    import json as _json
-
-    from datafusion_distributed_experiment_spark.sources import custom
-
-    # conf set/restored on the same session (runtime-settable): Spark 4.1's
-    # Python data source registry is global for the exists-check but
-    # session-local for lookup, so a sibling session cannot read a source
-    # registered elsewhere — see custom.register's docstring.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        df = custom.int64_list(spark, list(range(20)), partitions=4).filter(
-            "numbers > 15"
-        )
-        assert sorted(r["numbers"] for r in df.collect()) == [16, 17, 18, 19]
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
-
-    # reader-level unit check: pushFilters absorbs supported filters, emits
-    # only matching rows, and returns unsupported filters to Spark
-    from pyspark.sql.datasource import EqualTo, GreaterThan
-
-    reader = custom.Int64ListPushdownReader(
-        {"values": _json.dumps([1, 5, 9]), "partitions": "1"}
-    )
-
-    class _Unsupported:  # stand-in for a filter class we don't handle
-        pass
-
-    leftover = list(reader.pushFilters([GreaterThan(("numbers",), 4), _Unsupported()]))
-    assert len(leftover) == 1 and isinstance(leftover[0], _Unsupported)
-    assert [v for (v,) in reader.read(custom.InputPartition(0))] == [5, 9]
-    reader.pushed.append(EqualTo(("numbers",), 9))
-    assert [v for (v,) in reader.read(custom.InputPartition(0))] == [9]
-
-    # the plain session path (pushdown conf off) keeps working and agrees
-    plain = custom.int64_list(spark, list(range(20)), partitions=4).filter(
-        "numbers > 15"
-    )
-    assert sorted(r["numbers"] for r in plain.collect()) == [16, 17, 18, 19]

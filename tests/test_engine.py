@@ -40,27 +40,6 @@ def test_register_csv_and_tbl(engine, tmp_path):
     assert df.count() == 25
 
 
-def test_register_json_roundtrip(engine, tmp_path):
-    src = engine.sql("SELECT n_nationkey, n_name FROM nation")
-    src.write.json(str(tmp_path / "nation_json"))
-    engine.register_json(
-        "nation_json", str(tmp_path / "nation_json"),
-        schema="n_nationkey INT, n_name STRING",
-    )
-    df = engine.table("nation_json")
-    assert df.columns == ["n_nationkey", "n_name"]  # schema-first, no inference
-    assert df.count() == 25
-    got = {r.n_nationkey: r.n_name for r in df.collect()}
-    assert got == {r.n_nationkey: r.n_name for r in src.collect()}
-
-
-def test_register_mem(engine):
-    df = engine.sql("SELECT * FROM region")
-    engine.register_mem("region_mem", df, partitions=2)
-    assert engine.sql("SELECT COUNT(*) AS n FROM region_mem").collect()[0].n == 5
-    assert engine.table("region_mem").rdd.getNumPartitions() == 2
-
-
 def test_sql_script_view_lifecycle(engine):
     """The reference's q15 3-statement form: create view; select; drop view."""
     out = engine.sql_script(
@@ -130,51 +109,6 @@ def test_register_sf_dir_isolates_per_table(engine, tmp_path):
     failures = engine.register_sf_dir(str(tmp_path), tables=["bad", "good"])
     assert set(failures) == {"bad"}
     assert engine.sql("SELECT COUNT(*) AS n FROM good").collect()[0].n == 5
-
-
-def test_orc_round_trip(engine, tmp_path):
-    """ORC sink -> source round trip preserves rows and schema."""
-    src = engine.spark.table("nation")
-    engine.write_orc(src, str(tmp_path / "nation_orc"))
-    back = engine.register_orc("nation_orc", str(tmp_path / "nation_orc"))
-    assert back.schema == src.schema
-    assert sorted(r.n_name for r in back.collect()) == sorted(
-        r.n_name for r in src.collect()
-    )
-
-
-def test_dynamic_partition_overwrite_replaces_only_written_partitions(engine, tmp_path):
-    """Rewriting one partition's data must leave every other partition's
-    files intact — the incremental-ingest contract (static overwrite would
-    truncate the table)."""
-    from pyspark.sql import functions as F
-
-    spark = engine.spark
-    path = str(tmp_path / "orders_inc")
-    src = spark.table("orders").select("o_orderkey", "o_totalprice", "o_orderpriority")
-    engine.write_parquet(src, path, partition_by=["o_orderpriority"])
-    before = spark.read.parquet(path).count()
-    assert before == src.count()
-
-    # Re-ingest ONE priority with doubled prices.
-    one = src.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
-        "o_totalprice", F.col("o_totalprice") * 2
-    )
-    engine.overwrite_partitions(one, path, ["o_orderpriority"])
-
-    back = spark.read.parquet(path)
-    assert back.count() == before  # untouched partitions still present
-    got = back.filter(F.col("o_orderpriority") == "1-URGENT").agg(
-        F.sum("o_totalprice")
-    ).collect()[0][0]
-    want = 2 * src.filter(F.col("o_orderpriority") == "1-URGENT").agg(
-        F.sum("o_totalprice")
-    ).collect()[0][0]
-    assert abs(got - want) < 1e-6
-    # session conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static") != "dynamic"
-    )
 
 
 _PART_ROWS = st.lists(
@@ -264,225 +198,6 @@ def test_narrow_scan_width_estimate_agrees_with_rdd(spark, tmp_path):
     assert _parquet_scan_width(spark, wide_path, cap=target) == target
     wide = spark.read.parquet(wide_path)
     assert rebalance_narrow_scan(wide, wide_path) is wide
-
-
-def test_write_clustered_produces_skippable_layout(engine, spark, tmp_path):
-    """Range-clustered layout: row-group user_id intervals must be (near-)
-    disjoint, so parquet min/max stats prune a selective filter to O(1)
-    row groups — against the unclustered write they overlap heavily."""
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet").select("event_id", "user_id")
-
-    def intervals(path):
-        out = []
-        for f in ds.dataset(path, format="parquet").files:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.to_arrow_schema().get_field_index("user_id")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                out.append((st.min, st.max))
-        return sorted(out)
-
-    def overlap_fraction(iv):
-        overlapping = sum(
-            1 for (a, b), (c, d) in zip(iv, iv[1:]) if c <= b  # next starts inside prev
-        )
-        return overlapping / max(1, len(iv) - 1)
-
-    clustered = str(tmp_path / "clustered")
-    engine.write_clustered(src, clustered, ["user_id"], partitions=8)
-    plain = str(tmp_path / "plain")
-    engine.write_parquet(src.repartition(8), plain)
-
-    iv_c = intervals(clustered)
-    iv_p = intervals(plain)
-    assert len(iv_c) >= 4  # the range exchange actually fanned out
-    # clustered: adjacent intervals disjoint (range bounds may duplicate at
-    # the single boundary key); unclustered: nearly every interval overlaps
-    assert overlap_fraction(iv_c) <= 0.35, iv_c
-    assert overlap_fraction(iv_p) >= 0.9, iv_p
-    # fidelity: same rows back
-    assert spark.read.parquet(clustered).count() == src.count()
-
-
-def test_clustered_layout_prunes_at_read_time(spark, tmp_path):
-    """The footer test above proves the clustered layout's row-group
-    intervals are disjoint; this proves the PAYOFF at read time: a
-    selective filter on the clustered dimension makes the parquet scan
-    OUTPUT a small fraction of the table (row groups skipped via min/max
-    stats before any row is materialized), while the same filter over the
-    unclustered control reads essentially everything and discards it
-    post-scan. numOutputRows on the executed scan node is the evidence —
-    the same signal that distinguishes a pruned from an unpruned scan at
-    100 TB."""
-    from pyspark.sql import functions as F
-
-    from datafusion_distributed_experiment_spark.plans import executed_metrics
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        write_clustered,
-        write_parquet,
-    )
-
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet").select("event_id", "user_id")
-    n = src.count()
-    clustered, plain = str(tmp_path / "c"), str(tmp_path / "p")
-    write_clustered(src, clustered, ["user_id"], partitions=8)
-    write_parquet(src.repartition(8), plain)
-    key = src.agg(F.expr("approx_percentile(user_id, 0.5)")).collect()[0][0]
-
-    def scan_output_rows(path):
-        df = spark.read.parquet(path).filter(F.col("user_id") == key)
-        matched = df.count()
-        df.collect()
-        scans = [
-            m["numOutputRows"]
-            for m in executed_metrics(df)
-            if "Scan" in m["node"] and m.get("numOutputRows") is not None
-        ]
-        assert scans, "no scan node with numOutputRows in executed plan"
-        return matched, sum(scans)
-
-    matched_c, rows_c = scan_output_rows(clustered)
-    matched_p, rows_p = scan_output_rows(plain)
-    assert matched_c == matched_p > 0  # same answer from both layouts
-    # unclustered control: stats prune nothing, the scan reads ~the table
-    assert rows_p >= 0.9 * n, (rows_p, n)
-    # clustered: row-group skipping drops all but the key's narrow interval
-    assert rows_c <= n / 4, (rows_c, n)
-    assert rows_c < rows_p / 3
-
-
-def test_preload_mem_serves_sql_from_cached_tables(spark, tmp_path):
-    """The --mem-table analog: preload_mem materializes every table in
-    memory and pins the registration, so SQL-corpus queries read the cached
-    MemTable (InMemoryTableScan in the plan) instead of parquet."""
-    import __spark_entry__ as entry_mod
-
-    entry_mod.preload_mem(spark, SF_DIR, partitions=4)
-    try:
-        df = entry_mod.queries()["q6"](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, plan[:2000]
-        assert len(df.collect()) == 1
-    finally:
-        spark.catalog.clearCache()
-        # restore parquet-backed registrations for other tests
-        from datafusion_distributed_experiment_spark import Engine
-
-        entry_mod._registered.clear()
-        Engine(spark).register_sf_dir(SF_DIR)
-
-
-# --------------------------------------------------------- maintenance ----
-
-
-def test_compact_collapses_small_files_and_preserves_data(engine, tmp_path):
-    """32 tiny part files -> a handful at the target size; row set
-    byte-identical before/after; re-compaction is a no-op."""
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "smallfiles")
-    df = engine.spark.range(10_000).select(
-        F.col("id"), (F.col("id") * 7 % 97).alias("v")
-    )
-    df.repartition(32).write.parquet(path)
-    before_rows = sorted(tuple(r) for r in engine.spark.read.parquet(path).collect())
-
-    n_before, n_after = engine.compact(path, target_bytes=1 << 30)
-    assert n_before == 32 and n_after < 8, (n_before, n_after)
-    after_rows = sorted(tuple(r) for r in engine.spark.read.parquet(path).collect())
-    assert after_rows == before_rows
-
-    again = engine.compact(path, target_bytes=1 << 30)
-    assert again == (n_after, n_after)  # already coarse: no rewrite
-
-
-def test_compact_failed_verify_leaves_original_untouched(engine, tmp_path, monkeypatch):
-    """If the rewrite's row count does not match, the original directory
-    must survive and the temp output must be cleaned up."""
-    import os
-
-    from datafusion_distributed_experiment_spark.sources import tables as T
-
-    path = str(tmp_path / "guarded")
-    engine.spark.range(1000).toDF("id").repartition(16).write.parquet(path)
-
-    import pytest as _pytest
-
-    calls = {"n": 0}
-    orig = engine.spark.read.parquet
-
-    def flaky_parquet(p):
-        calls["n"] += 1
-        df = orig(p)
-        # second read (the verify read of the temp dir) gets a poisoned count
-        if p.endswith(".__compact_tmp__"):
-            return df.limit(999)
-        return df
-
-    monkeypatch.setattr(engine.spark.read.__class__, "parquet", lambda self, p: flaky_parquet(p))
-    with _pytest.raises(RuntimeError, match="produced 999 rows"):
-        T.compact_parquet(engine.spark, path, target_bytes=1 << 30)
-    monkeypatch.undo()
-    assert engine.spark.read.parquet(path).count() == 1000
-    assert not os.path.exists(path + ".__compact_tmp__")
-
-
-def test_register_evolving_unions_schemas_across_files(engine, tmp_path):
-    """Old files must surface columns added by newer files as NULLs (and
-    vice versa) — the append-only schema-evolution contract."""
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "evolving")
-    engine.spark.range(5).select("id", F.lit("old").alias("a")).write.parquet(path)
-    engine.spark.range(5, 10).select(
-        "id", F.lit(42).cast("long").alias("b")
-    ).write.mode("append").parquet(path)
-
-    df = engine.register_evolving("evolving_t", path)
-    assert set(df.columns) == {"id", "a", "b"}
-    rows = {r.id: (r.a, r.b) for r in engine.sql("SELECT * FROM evolving_t").collect()}
-    assert rows[0] == ("old", None)
-    assert rows[9] == (None, 42)
-    # plain read would have picked ONE schema — evolution is genuinely needed
-    plain_cols = set(engine.spark.read.parquet(path).columns)
-    assert plain_cols != {"id", "a", "b"}
-
-
-def test_check_constraints_counts_violations_in_one_pass(engine, duck):
-    """Rule violations (predicate not TRUE; NULL counts) cross-checked
-    against DuckDB, and the whole rule set runs as ONE aggregate job."""
-    df = engine.table("events")
-    rules = {
-        "value_nonneg": "value >= 0",
-        "known_type": "event_type IN ('click','view','purchase','signup','error')",
-        "user_in_range": "user_id BETWEEN 0 AND 10",  # deliberately violated
-        "props_present": "props IS NOT NULL AND length(props) > 0",
-    }
-    got = engine.check_constraints(df, rules)
-    for name, pred in rules.items():
-        expect = duck.execute(
-            f"SELECT COUNT(*) FROM events WHERE NOT COALESCE(({pred}), FALSE)"
-        ).fetchone()[0]
-        assert got[name] == expect, (name, got[name], expect)
-    assert got["user_in_range"] > 0, "fixture must exercise the violation path"
-
-    from datafusion_distributed_experiment_spark.plans import stage_summary
-
-    from pyspark.sql import functions as F
-
-    plan_df = df.agg(
-        *[
-            F.sum(
-                F.when(F.coalesce(F.expr(p).cast("boolean"), F.lit(False)), 0).otherwise(1)
-            ).alias(n)
-            for n, p in rules.items()
-        ]
-    )
-    s = stage_summary(plan_df)
-    assert s["scans"] <= 1 and s["exchanges"] <= 1, s  # one scan, one partial/final agg
 
 
 def test_executed_metrics_expose_operator_row_counts(engine):
@@ -588,54 +303,6 @@ def test_stream_session_memo_drops_dead_parents(spark):
     assert len(_stream_sessions) == n_before - 1, "a dead parent's entry must drop"
 
 
-def test_check_constraints_empty_frame_and_empty_rules(engine):
-    """Round-11 review fix: SUM over zero rows is NULL — an empty frame
-    reports zero violations, and an empty rule set is a no-op."""
-    empty = engine.spark.range(0).selectExpr("id AS x")
-    assert engine.check_constraints(empty, {"pos": "x > 0"}) == {"pos": 0}
-    assert engine.check_constraints(empty, {}) == {}
-
-
-def test_compact_refuses_hive_partitioned_layout(engine, spark, tmp_path):
-    """Round-11 review fix: a flat rewrite of a key=value layout would
-    destroy directory pruning — refuse loudly."""
-    import pytest
-
-    from datafusion_distributed_experiment_spark.errors import PlanningError
-    from datafusion_distributed_experiment_spark.sources.tables import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(100).selectExpr("id", "id % 3 AS d").write.partitionBy(
-        "d"
-    ).parquet(path)
-    with pytest.raises(PlanningError, match="hive-partitioned"):
-        compact_parquet(spark, path)
-
-
-def test_compact_recovers_from_interrupted_swap(engine, spark, tmp_path):
-    """Round-11 review fix: a leftover .__compact_old__ from a crash mid-
-    swap is recovered before any expensive work — stale backup dropped
-    when the table exists, restored as the table when it does not."""
-    import os
-    import shutil
-
-    from datafusion_distributed_experiment_spark.sources.tables import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(1000).repartition(8).write.parquet(path)
-    backup = path + ".__compact_old__"
-    # crash shape 1: swap completed, cleanup didn't -> stale backup dropped
-    shutil.copytree(path, backup)
-    compact_parquet(spark, path)
-    assert not os.path.exists(backup)
-    assert spark.read.parquet(path).count() == 1000
-    # crash shape 2: died between renames -> backup IS the table; restore
-    os.rename(path, backup)
-    compact_parquet(spark, path)
-    assert os.path.exists(path) and not os.path.exists(backup)
-    assert spark.read.parquet(path).count() == 1000
-
-
 def test_tbl_malformed_rows_raise_in_strict_mode(engine, tmp_path):
     """Round-14 reader hardening: a .tbl row with missing or extra fields
     must RAISE at scan time (FAILFAST default) — the PERMISSIVE parse
@@ -666,15 +333,12 @@ def test_tbl_malformed_rows_raise_in_strict_mode(engine, tmp_path):
 
 
 def test_csv_and_json_mode_passthrough(engine, spark, tmp_path):
-    """read_csv_table/read_json_table accept a parser mode: FAILFAST makes
-    corrupt input loud; the PERMISSIVE default (exploration) still nulls.
-    Pinned so the pass-through cannot silently drop."""
+    """read_csv_table accepts a parser mode: FAILFAST makes corrupt input
+    loud; the PERMISSIVE default (exploration) still nulls. Pinned so the
+    pass-through cannot silently drop."""
     import pytest
 
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        read_csv_table,
-        read_json_table,
-    )
+    from datafusion_distributed_experiment_spark.sources.tables import read_csv_table
 
     csv = tmp_path / "t.csv"
     csv.write_text("a,b\n1,2\n3\n")  # second data row short
@@ -684,13 +348,6 @@ def test_csv_and_json_mode_passthrough(engine, spark, tmp_path):
         ).collect()
     ok = read_csv_table(spark, str(csv), schema="a INT, b INT").collect()
     assert len(ok) == 2  # permissive keeps both, nulls the short row
-
-    js = tmp_path / "t.jsonl"
-    js.write_text('{"a": 1}\n{not json\n')
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_json_table(spark, str(js), schema="a INT", mode="FAILFAST").collect()
-    loose = read_json_table(spark, str(js), schema="a INT").collect()
-    assert len(loose) == 2
 
 
 def test_tbl_strict_rejects_type_corrupt_values_and_nulls_empty_fields(
