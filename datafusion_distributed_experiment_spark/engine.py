@@ -13,7 +13,6 @@ with an idiomatic Spark API. Registration paths map one-to-one:
 
 from __future__ import annotations
 
-import re
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -173,29 +172,22 @@ class Engine:
         return df
 
     def register_csv(
-        self,
-        name: str,
-        path: str,
-        schema: StructType | str | None = None,
-        sep: str = ",",
-        header: bool = True,
+        self, name: str, path: str, schema: StructType | str | None = None
     ) -> DataFrame:
-        """Register a CSV table, optionally with an explicit schema
-        (reference ``benchmarks/src/tpch/run.rs:294-309``)."""
-        df = sources.read_csv_table(self.spark, path, schema=schema, sep=sep, header=header)
+        """Register a comma-separated CSV table with a header row, optionally
+        with an explicit schema (reference
+        ``benchmarks/src/tpch/run.rs:294-309``)."""
+        df = sources.read_csv_table(self.spark, path, schema=schema)
         df.createOrReplaceTempView(name)
         return df
 
-    def register_tbl(
-        self, name: str, path: str, schema: StructType | str, strict: bool = True
-    ) -> DataFrame:
+    def register_tbl(self, name: str, path: str, schema: StructType | str) -> DataFrame:
         """Register a TPC-H ``.tbl`` file: ``|``-delimited, no header, with a
         trailing ``|`` producing a placeholder column that is dropped
         (reference ``benchmarks/src/tpch/mod.rs:41-45``,
-        ``convert.rs:97-106``). ``strict`` (default) raises on malformed
-        rows instead of silently nulling them — see
-        :func:`..sources.read_tbl_table`."""
-        df = sources.read_tbl_table(self.spark, path, schema, strict=strict)
+        ``convert.rs:97-106``). Malformed rows raise instead of silently
+        nulling — see :func:`..sources.read_tbl_table`."""
+        df = sources.read_tbl_table(self.spark, path, schema)
         df.createOrReplaceTempView(name)
         return df
 
@@ -261,61 +253,11 @@ class Engine:
     # sinks (reference benchmarks/src/tpch/convert.rs:128-160)
     # ------------------------------------------------------------------ #
 
-    def write_parquet(
-        self,
-        df: DataFrame,
-        path: str,
-        compression: str = "zstd",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        sources.write_parquet(df, path, compression=compression, partition_by=partition_by)
+    def write_parquet(self, df: DataFrame, path: str, compression: str = "zstd") -> None:
+        sources.write_parquet(df, path, compression=compression)
 
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        path: str,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-        sort_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Write ``df`` as a bucketed (hash-partitioned-on-disk) parquet table
-        and register it in the catalog.
-
-        Bucketing is the persistent form of the reference's hash
-        ``RepartitionExec`` (reference
-        ``src/flight_service/stream_partitioner_registry.rs:19-33``): the
-        shuffle is paid ONCE at write time, and every later equi-join or
-        aggregation on ``bucket_cols`` between tables bucketed the same way
-        runs with ZERO exchanges — the decisive optimization for fact-fact
-        joins repeated across a 100 TB pipeline (e.g. lineitem⋈orders every
-        night). Both tables must share the bucket column set and bucket
-        count; keep ``n_buckets`` >= cluster parallelism.
-
-        The input is pre-repartitioned with ``HashPartitioning(bucket_cols,
-        n_buckets)`` — the EXACT bucket-id function (``pmod(murmur3, n)``)
-        the bucketed writer applies — so every task holds exactly one
-        bucket and writes exactly one file (optimization round 14, guide
-        §6 small files: without it every input task writes a sliver into
-        every bucket, n_tasks x n_buckets files — measured 650 files for a
-        2000-row index at sf0.1, taxing the write, every bucket-pruned
-        read, and the oracle's glob; the ``sources.write_partitioned``
-        hive-layout twin measured 10.7 s -> 6.0 s from the same fix)."""
-        from pyspark.sql import functions as F
-
-        writer = (
-            df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*(sort_cols or bucket_cols))
-            .option("path", path)
-        )
-        writer.saveAsTable(name)
-        return self.spark.table(name)
-
-    def write_csv(self, df: DataFrame, path: str, sep: str = ",", header: bool = True) -> None:
-        sources.write_csv(df, path, sep=sep, header=header)
+    def write_csv(self, df: DataFrame, path: str) -> None:
+        sources.write_csv(df, path)
 
     def stop(self) -> None:
         self.spark.stop()

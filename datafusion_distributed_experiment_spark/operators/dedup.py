@@ -697,10 +697,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap) broadcast again to fetch index token sets for exact-Jaccard
     verification. Index band buckets are capped like the self-join path
     (hub suppression = skew guard). In production the index signatures/bands
-    are a persisted table (built once per corpus via
-    ``Engine.write_bucketed``, reference analog: the reference re-reads its
-    listing tables per query, ``tests/tpch.rs:149-161``); here they are
-    recomputed from parquet, which adds scans but no shuffles.
+    are a persisted table (built once per corpus and kept under the CDC
+    feed — :func:`minhash_index_upsert`; reference analog: the reference
+    re-reads its listing tables per query, ``tests/tpch.rs:149-161``); here
+    they are recomputed from parquet, which adds scans but no shuffles.
 
     Returns one row per incoming document: (doc_id, is_dup)."""
     index, incoming = _incremental_sides(spark, sf_dir)
@@ -1134,8 +1134,8 @@ def _cluster_output(labels: DataFrame) -> DataFrame:
 # partition directory, so frequent-bucket cap counts are correct over any
 # partition-pruned scan; (b) a probe's partition set is computable from
 # its OWN band rows before the index scan is planned, so the serve scan
-# partition-prunes (PartitionFilters — the dedup twin of the IVF
-# SelectedBucketsCount pruning).
+# partition-prunes (PartitionFilters, the same pruning the two IVF-PQ
+# indexes get on list_id).
 MINHASH_INDEX_TABLE = "minhash_band_index"
 MINHASH_INDEX_BUCKETS = 8
 

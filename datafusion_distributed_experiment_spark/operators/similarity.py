@@ -758,12 +758,12 @@ def _pq_serve(
 ) -> DataFrame:
     """The PQ probe/ADC/shortlist/refine pipeline over an encoded corpus
     ``enc`` (in-flight from :func:`_pq_encode`, or the persisted index
-    read back by :func:`ivf_pq_index_build`'s serve half — pre-filtered to
-    the probed lists there, so bucket pruning applies). ``probes``
-    overrides the (query_id, list_id) probe assignment with the LOCAL row
-    list the index serve path already collected for the bucket-pruning
-    filter: the probe x LUT attach is then pure local Python instead of a
-    Spark broadcast join of two KB-scale frames (two AQE stage jobs per
+    read back by :func:`serve_pq_index` — pre-filtered to the probed
+    lists there, so partition pruning applies). ``probes`` overrides the
+    (query_id, list_id) probe assignment with the LOCAL row list the
+    index serve path already collected for the partition-pruning filter:
+    the probe x LUT attach is then pure local Python instead of a Spark
+    broadcast join of two KB-scale frames (two AQE stage jobs per
     serve — optimization round 14, guide §2.4). ``scores`` shares one
     parsed centroid matrix with the caller (see :func:`_ivf_assign`)."""
     # Per-query ADC lookup tables: lut[m][c] = <query subslice m, codebook
@@ -853,25 +853,24 @@ def _pq_serve(
     )
 
 
-# IVF-PQ persisted-index layout (ivf_pq_index_build, promoted round 13):
-# the build-once/probe-many split of the ivf_pq_topk kernel. The index is
-# a bucketed parquet table hashed on list_id so a probe's IN-filter prunes
-# whole buckets at plan time (SelectedBucketsCount in the scan) — the
-# persistent form of the probe join's shuffle, paid once at build time.
-# Location (round-13 review — the previous fixed absolute path made the
-# repo non-relocatable and let two concurrent invocations at different
-# scales clobber each other between the bucketed write and the oracle's
-# read of the same files): the warehouse ROOT is repo-relative (override
-# via $SPARK_GRAFT_WAREHOUSE), and each corpus gets an ISOLATED two-level
-# hive subdirectory n=<row count>/f=<vec_id fingerprint> (the fingerprint
-# closes the same-count clobber race the count alone left — round-14
-# review). Both keys are derivable by BOTH engines from the embeddings
-# table alone, so the STATIC oracle SQL (the driver captures it before
-# running anything) selects its own corpus's partition out of the shared
-# glob with scalar subqueries — no path needs to be known at
+# IVF-PQ persisted-index layout, shared by ivf_pq_index_build and
+# ivf_pq_index_upsert: the build-once/probe-many split of the ivf_pq_topk
+# kernel. Each corpus's index is a hive list_id=K parquet layout written by
+# the shared partitioned writer, so a probe's IN-filter on list_id prunes
+# whole directories at plan time (PartitionFilters in the scan). Location:
+# the warehouse ROOT is repo-relative (override via $SPARK_GRAFT_WAREHOUSE),
+# and each corpus gets an ISOLATED two-level subdirectory
+# {table}/n=<row count>/f=<vec_id fingerprint> (the fingerprint closes the
+# same-count clobber race the count alone leaves). Both keys are derivable
+# by BOTH engines from the embeddings table alone, so the STATIC oracle SQL
+# (captured before any query runs) selects its own corpus's partition out
+# of the shared glob with scalar subqueries — no path needs to be known at
 # oracle-build time.
-IVF_PQ_INDEX_BUCKETS = 32
 IVF_PQ_INDEX_TABLE = "ivf_pq_index"
+IVF_PQ_UPSERT_TABLE = "ivf_pq_index_upsert"
+# the _pq_encode row as persisted; reading back with it skips schema
+# inference and types the list_id partition column
+PQ_INDEX_SCHEMA = "vec_id bigint, codes array<int>, list_id bigint"
 
 from ..sources.tables import (  # noqa: E402
     warehouse_root as _warehouse_root,
@@ -879,16 +878,48 @@ from ..sources.tables import (  # noqa: E402
 )
 
 
-def ivf_pq_index_location(n_corpus: int, fp: int) -> tuple[str, str]:
-    """(catalog table name, on-disk path) for the persisted index of a
-    corpus whose ``frame_fingerprint_stats(vecs, "vec_id")`` starts with
+def ivf_pq_location(table: str, n_corpus: int, fp: int) -> str:
+    """On-disk path of the persisted index ``table`` for a corpus whose
+    ``frame_fingerprint_stats(vecs, "vec_id")`` starts with
     ``(n_corpus, fp)``. The fingerprint keeps two same-count corpora out of
-    one partition. Table names carry the same suffix as the path so a
-    session running two scales holds two live catalog entries instead of
-    silently re-pointing one name."""
-    return (
-        f"{IVF_PQ_INDEX_TABLE}_n{n_corpus}_f{fp}",
-        f"{_warehouse_root()}/{IVF_PQ_INDEX_TABLE}/n={n_corpus}/f={fp}",
+    one partition."""
+    return f"{_warehouse_root()}/{table}/n={n_corpus}/f={fp}"
+
+
+def _persist_and_serve(
+    spark: SparkSession,
+    table: str,
+    n_corpus: int,
+    fp: int,
+    vecs: DataFrame,
+    centroids: list,
+    cb: list,
+    seed_rows: list,
+) -> DataFrame:
+    """Encode ``vecs`` under the model, persist the encoding as index
+    ``table`` at the location of corpus ``(n_corpus, fp)``, read it back
+    and serve the query batch from it. An EMPTY corpus answers with the
+    typed empty frame: a zero-row partitioned write leaves no files, and
+    the empty model has nothing to probe."""
+    if n_corpus == 0:
+        return spark.createDataFrame(
+            [],
+            "query_id bigint, neighbor_id bigint, adc_score bigint, "
+            "cos_ppm bigint, rank bigint",
+        )
+    scores = _centroid_scores(centroids)  # parsed once, shared encode/probe
+    path = ivf_pq_location(table, n_corpus, fp)
+    write_partitioned(
+        _pq_encode(vecs, centroids, cb, scores=scores).select(
+            "vec_id", "codes", "list_id"
+        ),
+        path,
+        ["list_id"],
+        len(centroids),
+    )
+    index = spark.read.schema(PQ_INDEX_SCHEMA).parquet(path)
+    return serve_pq_index(
+        spark, vecs, index, centroids, cb, seed_rows, scores=scores
     )
 
 
@@ -897,54 +928,38 @@ def ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (FAISS on-disk IndexIVFPQ; the reference's register-tables-
     then-query shape, reference ``benchmarks/src/tpch/run.rs:311-345``):
     the expensive corpus pass (encode + coarse-assign, :func:`_pq_encode`)
-    is paid ONCE and persisted as a parquet table BUCKETED on ``list_id``
-    (``Engine.write_bucketed`` — the shuffle paid at write time), then the
-    serve half probes the PERSISTED index: the probed-list IN-filter
-    prunes whole buckets at plan time (``SelectedBucketsCount`` in the
-    scan — a probe touches IVF_PROBE of ~sqrt(N) lists, so at scale a
-    query batch reads a vanishing fraction of the index bytes), and the
-    ADC/shortlist/refine pipeline (:func:`_pq_serve`) is shared verbatim
-    with :func:`ivf_pq_topk`, so the result is bit-identical to the
-    in-flight operator.
+    is paid ONCE and persisted as a parquet layout PARTITIONED on
+    ``list_id`` (:func:`_persist_and_serve`), then the serve half probes
+    the PERSISTED index: the probed-list IN-filter prunes whole list
+    directories at plan time (``PartitionFilters`` in the scan — a probe
+    touches IVF_PROBE of ~sqrt(N) lists, so at scale a query batch reads a
+    vanishing fraction of the index bytes), and the ADC/shortlist/refine
+    pipeline (:func:`_pq_serve`) is shared verbatim with
+    :func:`ivf_pq_topk`, so the result is bit-identical to the in-flight
+    operator.
 
-    Scale shape: build = one map-only corpus pass + one bucketed write
-    (the only corpus exchange, paid once); serve = bucket-pruned index
+    Scale shape: build = one map-only corpus pass + one partitioned write
+    (the only corpus exchange, paid once); serve = partition-pruned index
     scan (PQ_M bytes/vector of ADC traffic) joined map-side against the
     broadcast (query x probe x LUT) side, shortlist + refine exactly as
     ivf_pq_topk (plan-pinned there; the serve addition pinned here is the
-    bucket pruning). The model state (centroids, codebook, query LUTs) is
-    KB-scale and deterministic from the corpus seed rows, so the DuckDB
+    partition pruning). The model state (centroids, codebook, query LUTs)
+    is KB-scale and deterministic from the corpus seed rows, so the DuckDB
     oracle refits it from the embeddings table while reading
     ``(vec_id, list_id, codes)`` from the PERSISTED index parquet — a
     green row proves the on-disk round trip, not just the logical
     pipeline."""
-    vecs = (
-        _vectors(spark, sf_dir)
-        .withColumn("xp", F.expr("transform(v, x -> CAST(FLOOR(1e6 * x) AS BIGINT))"))
-        # fit + encode + serve-side fetch share the scan; non-eager: the
-        # fit's head aggregate materializes it in the same job (round 14)
-        .localCheckpoint(eager=False)
-    )
+    # fit + encode + serve-side fetch share the scan; non-eager: the fit's
+    # head aggregate materializes it in the same job (round 14)
+    vecs = _with_xp(_vectors(spark, sf_dir)).localCheckpoint(eager=False)
     # scale- AND content-isolated location: count + vec_id fingerprint RIDE
     # the fit's head aggregate (one pass, not two — optimization round 14),
     # and the SAME values are what the oracle's scalar subqueries compute
     # from the embeddings view — the two engines agree on which partition
     # holds this invocation's index by construction
     centroids, cb, seed_rows, (n_corpus, fp, _) = _pq_fit(vecs, with_key_stats=True)
-    from ..engine import Engine
-
-    scores = _centroid_scores(centroids)  # parsed once, shared encode/probe
-    table, path = ivf_pq_index_location(n_corpus, fp)
-    index = Engine(spark).write_bucketed(
-        _pq_encode(vecs, centroids, cb, scores=scores),
-        table,
-        path,
-        ["list_id"],
-        n_buckets=IVF_PQ_INDEX_BUCKETS,
-        sort_cols=["list_id", "vec_id"],
-    )
-    return serve_pq_index(
-        spark, vecs, index, centroids, cb, seed_rows, scores=scores
+    return _persist_and_serve(
+        spark, IVF_PQ_INDEX_TABLE, n_corpus, fp, vecs, centroids, cb, seed_rows
     )
 
 
@@ -959,9 +974,9 @@ def serve_pq_index(
     scores: F.Column | None = None,
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index: restrict the index scan to the
-    probed lists FIRST (the IN-filter on the bucket column is what turns
-    into bucket pruning — ``SelectedBucketsCount`` — on a bucketed table),
-    then run the shared ADC/shortlist/refine pipeline. The probed-list set
+    probed lists FIRST (the IN-filter on the list_id partition column is
+    what turns into directory pruning — ``PartitionFilters``), then run
+    the shared ADC/shortlist/refine pipeline. The probed-list set
     is model-state scale (<= PQ_QUERIES x IVF_PROBE ids, a driver-side
     collect of ~100 longs — the centroid-collect contract, never data);
     the same local rows feed the serve kernel's probe x LUT attach, so the
@@ -988,18 +1003,11 @@ def serve_pq_index(
 # embedding change batch (I/U/D) is merged into the corpus and the index
 # is REBUILT from the merged corpus under the FROZEN model
 # (centroids/codebook stay fixed between full refits, the production
-# contract) as a hive list_id=K layout. The rebuild is the whole cost:
-# the index is built in the same call, at a path keyed by the corpus
-# fingerprint, so no earlier index exists to patch in place.
-IVF_PQ_UPSERT_TABLE = "ivf_pq_index_upsert"
-
-
-def ivf_pq_upsert_location(n_corpus: int, fp: int) -> str:
-    """On-disk path for the maintained index of an ORIGINAL corpus with
-    fingerprint ``(n_corpus, fp)`` (stats taken before the
-    change batch — the oracle keys its partition selection on the
-    embeddings view, which only ever sees the original table)."""
-    return f"{_warehouse_root()}/{IVF_PQ_UPSERT_TABLE}/n={n_corpus}/f={fp}"
+# contract) in the shared layout above, under IVF_PQ_UPSERT_TABLE and keyed
+# on the ORIGINAL corpus (the oracle keys its partition selection on the
+# embeddings view, which only ever sees the original table). The rebuild
+# is the whole cost: the index is built in the same call, at a path keyed
+# by the corpus fingerprint, so no earlier index exists to patch in place.
 
 
 def _upsert_change_batch(vecs: DataFrame, max_id: int) -> DataFrame:
@@ -1066,20 +1074,6 @@ def ivf_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, cb, seed_rows, (n_orig, fp, max_id) = _pq_fit(
         vecs, with_key_stats=True
     )
-    if n_orig == 0:
-        # EMPTY corpus (round-13 empty-input review): a zero-row
-        # partitionBy write leaves NO parquet files, so the read-back
-        # cannot infer a schema and crashed where the oracle answered
-        # zero rows — the serve result of an empty index is the typed
-        # empty frame
-        return spark.createDataFrame(
-            [],
-            "query_id bigint, neighbor_id bigint, adc_score bigint, "
-            "cos_ppm bigint, rank bigint",
-        )
-    path = ivf_pq_upsert_location(n_orig, fp)
-    scores = _centroid_scores(centroids)  # parsed once, shared encode/probe
-
     changes = _upsert_change_batch(vecs, max_id).localCheckpoint()
     # the maintained corpus: encoded into the index here and read again by
     # refine, so it is materialized once; the change batch rides the
@@ -1087,20 +1081,8 @@ def ivf_pq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = _with_xp(
         cdc_merge(vecs.select("vec_id", "v"), changes, key="vec_id")
     ).withColumn("nrm", norm(F.col("v"))).localCheckpoint()
-    write_partitioned(
-        _pq_encode(merged, centroids, cb, scores=scores).select(
-            "vec_id", "codes", "list_id"
-        ),
-        path,
-        ["list_id"],
-        len(centroids),
-    )
-
-    index = spark.read.parquet(path).withColumn(
-        "list_id", F.col("list_id").cast("long")
-    )
-    return serve_pq_index(
-        spark, merged, index, centroids, cb, seed_rows, scores=scores
+    return _persist_and_serve(
+        spark, IVF_PQ_UPSERT_TABLE, n_orig, fp, merged, centroids, cb, seed_rows
     )
 
 
@@ -1239,18 +1221,41 @@ def _ivf_pq_oracle() -> str:
     """
 
 
-def _ivf_pq_index_oracle() -> str:
-    """DuckDB replay of the index-build/serve pipeline that reads
-    ``(vec_id, list_id, codes)`` from the PERSISTED index parquet — the
+# The merged corpus of ivf_pq_index_upsert re-derived in DuckDB: the
+# deterministic CDC batch (_upsert_change_batch) applied to vecs —
+# survivors verbatim, updates negated, inserts reversed at vec_id + max;
+# rows with vec_id < PQ_QUERIES are change-proof
+_DUCK_MERGED_VECS = f"""
+    SELECT vec_id, v, sqrt({DUCK_DOT.format(a="v", b="v", n=DIM)}) AS nrm FROM (
+        SELECT vec_id, v FROM vecs
+        WHERE vec_id < {PQ_QUERIES} OR (vec_id % 10) NOT IN (0, 1, 2)
+        UNION ALL
+        SELECT vec_id, list_transform(v, x -> -x) AS v FROM vecs
+        WHERE vec_id >= {PQ_QUERIES} AND (vec_id % 10) IN (1, 2)
+        UNION ALL
+        SELECT vec_id + (SELECT MAX(vec_id) FROM vecs) AS vec_id,
+               list_reverse(v) AS v
+        FROM vecs
+        WHERE vec_id >= {PQ_QUERIES} AND (vec_id % 10) = 3
+    )"""
+
+
+def _pq_index_oracle(table: str, refine_vecs: str) -> str:
+    """DuckDB replay of serving from the persisted index ``table``: the
     encode CTEs of :func:`_ivf_pq_oracle` are REPLACED by a scan of the
-    files :func:`ivf_pq_index_build` just wrote, so a hash match proves
-    the bucketed on-disk round trip (assignment AND codes, for every
-    probed list), not merely the logical dataflow. The KB-scale model
-    (centroids, codebook, query LUT inputs) is refit from the embeddings
-    view — deterministic from the same seed rows on both engines. The
+    ``(vec_id, list_id, codes)`` files the Spark side just wrote, so a hash
+    match proves the on-disk state (assignment AND codes, for every probed
+    list; for the upsert, every inserted and updated vector present in its
+    new list and every deleted or moved row absent), not merely the logical
+    dataflow. The KB-scale model (centroids, codebook, query LUT inputs) is
+    refit from the embeddings view — deterministic from the same seed rows
+    on both engines, and change-proof under the upsert's frozen-model
+    contract (the change batch is restricted to vec_id >= PQ_QUERIES). The
     codebook CTE carries the 1-based seed RANK (codes index codebook
-    positions, not seed vec_ids — they differ whenever the seed set is
-    not contiguous from 0)."""
+    positions, not seed vec_ids — they differ whenever the seed set is not
+    contiguous from 0). ``refine_vecs`` is the ``(vec_id, v, nrm)`` query
+    over ``vecs`` the refine stage re-scores against: the corpus itself for
+    the build, the merged corpus for the upsert."""
     adc_dot = " + ".join(
         f"p.qxp[mm.m*{PQ_SUB}+{j}] * cb.cxp[mm.m*{PQ_SUB}+{j}]"
         for j in range(1, PQ_SUB + 1)
@@ -1261,119 +1266,20 @@ def _ivf_pq_index_oracle() -> str:
             SELECT vec_id, v, nrm,
                    list_transform(v, x -> CAST(FLOOR(1e6 * x) AS BIGINT)) AS xp
             FROM vecs
+        ), rvecs AS ({refine_vecs}
         ), idx AS (
             -- scale- AND content-isolated partition selection: the hive
-            -- glob spans every corpus ever built under the warehouse root;
-            -- the scalar subqueries pick THIS corpus's partition by the
-            -- same (row count, vec_id fingerprint) pair the Spark build
-            -- keyed the path on (round-13/14 reviews — the fingerprint
-            -- closes the same-count clobber race the count alone left)
-            SELECT vec_id, list_id, codes
-            FROM read_parquet(
-                '{_warehouse_root()}/{IVF_PQ_INDEX_TABLE}/*/*/*.parquet',
-                hive_partitioning = true
-            )
-            -- stats over vecs, not raw embeddings: the Spark build keys the
-            -- location on the FILTERED corpus (exclusion contract)
-            WHERE TRY_CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
-              AND TRY_CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
-        ), cent AS (
-            SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM vecs
-            WHERE vec_id < (SELECT GREATEST({IVF_K_MIN}, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) FROM vecs)
-        ), cb AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS c, xp AS cxp
-            FROM xpt WHERE vec_id < {PQ_CODES}
-        ), probes AS (
-            SELECT vec_id AS query_id, qxp, cid AS list_id FROM (
-                SELECT x.vec_id, x.xp AS qxp, cent.cid,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY x.vec_id
-                           ORDER BY {coarse} / (x.nrm * cent.cnrm) DESC, cent.cid ASC
-                       ) AS rn
-                FROM xpt x CROSS JOIN cent WHERE x.vec_id < {PQ_QUERIES}
-            ) WHERE rn <= {IVF_PROBE}
-        ), scored AS (
-            SELECT p.query_id, a.vec_id AS neighbor_id,
-                   CAST(SUM({adc_dot}) AS BIGINT) AS adc_score
-            FROM probes p
-            JOIN idx a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-            CROSS JOIN range({PQ_M}) mm(m)
-            JOIN cb ON cb.c = a.codes[mm.m + 1]
-            GROUP BY p.query_id, a.vec_id
-        ), short AS (
-            SELECT query_id, neighbor_id, adc_score FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY query_id ORDER BY adc_score DESC, neighbor_id ASC
-                ) AS arn FROM scored
-            ) WHERE arn <= {PQ_RERANK}
-        ), rer AS (
-            SELECT s.query_id, s.neighbor_id, s.adc_score,
-                   CAST(FLOOR(1e6 * {DUCK_DOT.format(a="q.v", b="nb.v", n=DIM)}
-                        / (q.nrm * nb.nrm)) AS BIGINT) AS cos_ppm
-            FROM short s
-            JOIN vecs q ON q.vec_id = s.query_id
-            JOIN vecs nb ON nb.vec_id = s.neighbor_id
-        ), ranked AS (
-            SELECT *, CAST(ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY cos_ppm DESC, neighbor_id ASC
-            ) AS BIGINT) AS rank
-            FROM rer
-        )
-        SELECT query_id, neighbor_id, adc_score, cos_ppm, rank FROM ranked
-        WHERE rank <= {PQ_TOP_K} ORDER BY query_id, rank
-    """
-
-
-def _ivf_pq_upsert_oracle() -> str:
-    """DuckDB replay of the serve-after-maintenance pipeline reading
-    ``(vec_id, list_id, codes)`` from the POST-UPSERT persisted parquet —
-    a hash match proves the REBUILT on-disk state: every inserted and
-    updated vector present with frozen-model codes in its new list, every
-    deleted/moved row absent, every unchanged row in place (a stale or
-    missing row in any probed list breaks the ADC sums). The KB-scale
-    model (centroids, codebook, query LUT inputs) is refit from the
-    ORIGINAL embeddings view (the frozen-model contract: the change batch
-    is restricted to vec_id >= PQ_QUERIES, so seeds and queries are
-    change-proof); the MERGED corpus the refine stage re-scores against is
-    re-derived from the same deterministic I/U/D rules the Spark side
-    feeds through cdc_merge."""
-    adc_dot = " + ".join(
-        f"p.qxp[mm.m*{PQ_SUB}+{j}] * cb.cxp[mm.m*{PQ_SUB}+{j}]"
-        for j in range(1, PQ_SUB + 1)
-    )
-    coarse = DUCK_DOT.format(a="x.v", b="cent.cv", n=DIM)
-    mnorm = DUCK_DOT.format(a="v", b="v", n=DIM)
-    return f"""
-        WITH {_DUCK_VECS}, xpt AS (
-            SELECT vec_id, v, nrm,
-                   list_transform(v, x -> CAST(FLOOR(1e6 * x) AS BIGINT)) AS xp
-            FROM vecs
-        ), merged AS (
-            -- the deterministic CDC batch (_upsert_change_batch) applied:
-            -- survivors verbatim, updates negated, inserts reversed at
-            -- vec_id + max; rows with vec_id < {PQ_QUERIES} are change-proof
-            SELECT vec_id, v FROM vecs
-            WHERE vec_id < {PQ_QUERIES} OR (vec_id % 10) NOT IN (0, 1, 2)
-            UNION ALL
-            SELECT vec_id, list_transform(v, x -> -x) AS v FROM vecs
-            WHERE vec_id >= {PQ_QUERIES} AND (vec_id % 10) IN (1, 2)
-            UNION ALL
-            SELECT vec_id + (SELECT MAX(vec_id) FROM vecs) AS vec_id,
-                   list_reverse(v) AS v
-            FROM vecs
-            WHERE vec_id >= {PQ_QUERIES} AND (vec_id % 10) = 3
-        ), mvecs AS (
-            SELECT vec_id, v, sqrt({mnorm}) AS nrm FROM merged
-        ), idx AS (
+            -- glob spans every corpus ever indexed under the warehouse
+            -- root; the scalar subqueries pick THIS corpus's partition by
+            -- the same (row count, vec_id fingerprint) pair the Spark side
+            -- keyed the path on. Stats over vecs, not raw embeddings: the
+            -- Spark side keys the location on the FILTERED ORIGINAL corpus
+            -- (exclusion contract)
             SELECT vec_id, CAST(list_id AS BIGINT) AS list_id, codes
             FROM read_parquet(
-                '{_warehouse_root()}/{IVF_PQ_UPSERT_TABLE}/*/*/*/*.parquet',
+                '{_warehouse_root()}/{table}/*/*/*/*.parquet',
                 hive_partitioning = true
             )
-            -- stats over vecs, not raw embeddings: the Spark build keys the
-            -- location on the FILTERED ORIGINAL corpus (exclusion contract;
-            -- the fingerprint closes the same-count clobber race — round-14
-            -- review)
             WHERE TRY_CAST(n AS BIGINT) = (SELECT COUNT(*) FROM vecs)
               AND TRY_CAST(f AS BIGINT) = (SELECT {_DUCK_FP} FROM vecs)
         ), cent AS (
@@ -1410,8 +1316,8 @@ def _ivf_pq_upsert_oracle() -> str:
                    CAST(FLOOR(1e6 * {DUCK_DOT.format(a="q.v", b="nb.v", n=DIM)}
                         / (q.nrm * nb.nrm)) AS BIGINT) AS cos_ppm
             FROM short s
-            JOIN mvecs q ON q.vec_id = s.query_id
-            JOIN mvecs nb ON nb.vec_id = s.neighbor_id
+            JOIN rvecs q ON q.vec_id = s.query_id
+            JOIN rvecs nb ON nb.vec_id = s.neighbor_id
         ), ranked AS (
             SELECT *, CAST(ROW_NUMBER() OVER (
                 PARTITION BY query_id ORDER BY cos_ppm DESC, neighbor_id ASC
@@ -1426,8 +1332,12 @@ def _ivf_pq_upsert_oracle() -> str:
 def oracles() -> dict[str, str]:
     return {
         "ivf_pq_topk": _ivf_pq_oracle(),
-        "ivf_pq_index_build": _ivf_pq_index_oracle(),
-        "ivf_pq_index_upsert": _ivf_pq_upsert_oracle(),
+        "ivf_pq_index_build": _pq_index_oracle(
+            IVF_PQ_INDEX_TABLE, "SELECT vec_id, v, nrm FROM vecs"
+        ),
+        "ivf_pq_index_upsert": _pq_index_oracle(
+            IVF_PQ_UPSERT_TABLE, _DUCK_MERGED_VECS
+        ),
         "embedding_quantize": """
             WITH base AS (
                 SELECT vec_id,

@@ -118,23 +118,11 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_csv_table(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    sep: str = ",",
-    header: bool = True,
-    mode: str = "PERMISSIVE",
+    spark: SparkSession, path: str, schema: StructType | str | None = None
 ) -> DataFrame:
-    """``mode`` passes through to the CSV parser (round-14 reader
-    hardening): the PERMISSIVE default nulls the columns of a malformed
-    row SILENTLY — the right exploration default, but a pipeline joining
-    on a nulled key loses rows invisibly; pass ``mode="FAILFAST"`` to
-    make malformed input loud."""
-    reader = (
-        spark.read.option("sep", sep)
-        .option("header", str(header).lower())
-        .option("mode", mode)
-    )
+    """Comma-separated CSV with a header row; the schema is inferred when
+    none is given."""
+    reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -240,19 +228,12 @@ def warehouse_root() -> str:
     return os.environ.get("SPARK_GRAFT_WAREHOUSE", default)
 
 
-def read_tbl_table(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    strict: bool = True,
-) -> DataFrame:
-    """TPC-H ``.tbl``: pipe-delimited, no header, trailing ``|`` producing a
-    placeholder column dropped on load (reference benchmarks/src/tpch/
-    mod.rs:41-45, convert.rs:97-106).
+def read_tbl_table(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
+    """TPC-H ``.tbl``: pipe-delimited, no header, trailing ``|`` (reference
+    benchmarks/src/tpch/mod.rs:41-45, convert.rs:97-106).
 
-    ``strict`` (default, round-14 reader hardening) makes a row with
-    missing or extra fields RAISE at scan time instead of silently
-    parsing to NULLs — a .tbl row whose key column nulls out just
+    A row with missing or extra fields RAISES at scan time instead of
+    silently parsing to NULLs — a .tbl row whose key column nulls out just
     vanishes from every downstream join, the worst failure shape for
     benchmark data whose row counts are the ground truth. The CSV parser
     cannot express this check: Spark documents that a token-count
@@ -260,86 +241,62 @@ def read_tbl_table(
     normalizes the empty trailing token to NULL regardless of
     nullValue/emptyValue, so a padding-column probe cannot tell a
     well-formed row from a short one. ``.tbl`` has no quoting or escapes,
-    so strict mode parses structurally instead — ``spark.read.text`` +
+    so the reader parses structurally instead — ``spark.read.text`` +
     ``split`` on ``|`` IS a faithful parser for this format — and
     validates that every line carries exactly ``n_fields`` pipe-terminated
     tokens, raising through a ``raise_error`` CASE wrapped around every
     projected column (the cdc_merge guard pattern: fires on any
-    row-materializing read). Pass ``strict=False`` to salvage a
-    known-dirty dump through the old permissive CSV path (malformed rows
-    null out)."""
+    row-materializing read)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    if strict and schema.fields:
-        nf = len(schema.fields)
-        raw = spark.read.text(path).filter(F.col("value") != "")
-        parts = F.split(F.col("value"), r"\|", -1)
-        ok = (F.size(parts) == nf + 1) & (F.element_at(parts, nf + 1) == "")
-        err = F.raise_error(
+    nf = len(schema.fields)
+    raw = spark.read.text(path).filter(F.col("value") != "")
+    parts = F.split(F.col("value"), r"\|", -1)
+    ok = (F.size(parts) == nf + 1) & (F.element_at(parts, nf + 1) == "")
+    err = F.raise_error(
+        F.concat(
+            F.lit(
+                f"malformed .tbl row in {path} (every row must carry "
+                f"exactly {nf} |-terminated fields): "
+            ),
+            F.col("value"),
+        )
+    )
+
+    def _field(i, f):
+        # Three checks per field: bad token COUNT raises; an EMPTY token
+        # parses to NULL (the .tbl spelling of a missing value); a
+        # NON-EMPTY token the type cast nulls out raises — under this
+        # session's ANSI-off conf a plain cast would swallow a garbage
+        # value into NULL, the exact vanishing-key failure the reader
+        # exists to prevent.
+        tok = F.element_at(parts, i + 1)
+        val = tok.cast(f.dataType)
+        bad_value = F.raise_error(
             F.concat(
                 F.lit(
-                    f"malformed .tbl row in {path} (every row must carry "
-                    f"exactly {nf} |-terminated fields; pass strict=False "
-                    "to salvage a dirty dump): "
+                    f"corrupt .tbl value in {path}: field '{f.name}' "
+                    f"cannot parse as {f.dataType.simpleString()} in row: "
                 ),
                 F.col("value"),
             )
         )
+        return (
+            F.when(~ok, err)
+            .when(tok == "", F.lit(None).cast(f.dataType))
+            .when(val.isNull(), bad_value)
+            .otherwise(val)
+            .alias(f.name)
+        )
 
-        def _field(i, f):
-            # Three strict checks per field (round-14 review): bad token
-            # COUNT raises; an EMPTY token parses to NULL (parity with the
-            # CSV salvage path, whose nullValue='' did the same — flipping
-            # the default must not silently change IS NULL semantics); a
-            # NON-EMPTY token the type cast nulls out raises — under this
-            # session's ANSI-off conf a plain cast would swallow a garbage
-            # value into NULL, the exact vanishing-key failure strict mode
-            # exists to prevent.
-            tok = F.element_at(parts, i + 1)
-            val = tok.cast(f.dataType)
-            bad_value = F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"corrupt .tbl value in {path}: field '{f.name}' "
-                        f"cannot parse as {f.dataType.simpleString()} in row: "
-                    ),
-                    F.col("value"),
-                )
-            )
-            return (
-                F.when(~ok, err)
-                .when(tok == "", F.lit(None).cast(f.dataType))
-                .when(val.isNull(), bad_value)
-                .otherwise(val)
-                .alias(f.name)
-            )
-
-        return raw.select(*[_field(i, f) for i, f in enumerate(schema.fields)])
-    padded = StructType(schema.fields[:]).add("__placeholder", "string")
-    return (
-        spark.read.option("sep", "|")
-        .option("header", "false")
-        .schema(padded)
-        .csv(path)
-        .drop("__placeholder")
-    )
+    return raw.select(*[_field(i, f) for i, f in enumerate(schema.fields)])
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    compression: str = "zstd",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Parquet sink. ``partition_by`` lays the table out hive-style
-    (``col=value/`` directories) — at 100 TB this is what turns a filter on
-    the partition column into directory pruning (zero data files touched)
-    instead of a full scan; see the PartitionFilters plan test."""
-    writer = df.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str, compression: str = "zstd") -> None:
+    """Parquet sink. Hive-partitioned layouts go through
+    :func:`write_partitioned`."""
+    df.write.mode("overwrite").option("compression", compression).parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, sep: str = ",", header: bool = True) -> None:
-    df.write.mode("overwrite").option("sep", sep).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)

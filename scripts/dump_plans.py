@@ -82,7 +82,7 @@ SHOWCASE = [
     ("events_percentiles_hist", "histogram-sketch percentiles: bin counts are a bounded partial/final aggregate (state O(bins) per group at any group size); domain stats broadcast twice; cum-sum window runs on the BINS*types table, never the fact rows"),
     ("stream_topk", "streaming top-k split: the STATEFUL micro-batch plan (below, captured from the executed drain) is partial agg -> ONE REQUIRED_BY_STATEFUL_OPERATOR exchange -> StateStoreRestore/Save; rank is a batch window over the windows*types memory sink, zero parquet"),
     ("ivf_pq_topk", "IVF-PQ+refine ANN (promoted r12) (Jegou et al. ADC + FAISS-style exact rerank): codebook/centroids are literal model state, encode+assign is ONE map-only projection (zero pre-join exchanges), the (query x probe x LUT) side BROADCASTS so the corpus never shuffles (BuildLeft BHJ over PQ_M-byte codes); the shortlist then broadcasts back onto a second map-side corpus pass for the exact integer-cosine re-score — the only hash exchanges are the two partial/final WindowGroupLimit top-k's over candidate rows"),
-    ("ivf_pq_index_build", "IVF-PQ index build/serve split (promoted r13) (FAISS on-disk IndexIVFPQ lifecycle): the encode corpus pass is persisted ONCE as a parquet table BUCKETED on list_id (the probe shuffle paid at write time); the serve half's probed-list IN-filter prunes whole buckets at plan time (SelectedBucketsCount in the ONLY FileScan of the returned plan — at scale a query batch reads a vanishing fraction of the index bytes) and the ADC/shortlist/refine pipeline is the shared _pq_serve kernel, bit-identical to ivf_pq_topk"),
+    ("ivf_pq_index_build", "IVF-PQ index build/serve split (promoted r13) (FAISS on-disk IndexIVFPQ lifecycle): the encode corpus pass is persisted ONCE, through the same static-overwrite writer as the upserts, as a parquet layout partitioned by list_id with one file per list (the probe shuffle paid at write time); the serve half's probed-list IN-filter prunes whole list directories at plan time (PartitionFilters on list_id in the ONLY FileScan of the returned plan — at scale a query batch reads a vanishing fraction of the index bytes) and the ADC/shortlist/refine pipeline is the shared _pq_serve kernel, bit-identical to ivf_pq_topk"),
     ("minhash_index_upsert", "persisted MinHash LSH band index refreshed under a CDC batch (promoted r15; signatures -> pairs -> clusters -> incremental -> persisted index): the delta's band rows come from ONE map-only signature pass; the index is rebuilt as bands(hist) anti-joined with the removal keys (no join hint — the planner picks the strategy from their size) plus the delta bands, in ONE static-overwrite write partitioned by (band_idx, bucket) with one file per partition; the serve probe partition-prunes to the probe's own band partitions, broadcasts the probe bands onto the pruned scan (the dedup_incremental asymmetry), caps frequent buckets, and tokenizes only CANDIDATE index docs"),
     ("ivf_pq_index_upsert", "IVF-PQ index refreshed under a CDC batch (promoted r14; build -> serve -> maintain): the change batch is merged through cdc_merge and the merged corpus is encoded by ONE map-only pass under the frozen model, then written in ONE static-overwrite write partitioned by list_id with one file per list — a full rebuild, since the call builds the index itself; the serve half partition-prunes to the probed lists (PartitionFilters on list_id) and runs the shared _pq_serve kernel"),
     ("events_quantile_sketch", "mergeable rank sketch (promoted r11): BOTH bottom-k levels plan as partial/final WindowGroupLimit pairs (every input partition forwards <= k rows per group into its exchange); rank selection runs on the k-row sample; types-sized totals broadcast"),

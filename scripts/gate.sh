@@ -10,8 +10,14 @@
 set -u
 cd "$(dirname "$0")/.."
 ART=GATE.txt
+# The stamp names the tree the gate checked: an uncommitted change to a
+# tracked file appends +dirty and a short hash of its diff against HEAD.
+REV=$(git rev-parse --short HEAD 2>/dev/null || echo 'no-commit')
+if [ -n "$(git status --porcelain --untracked-files=no 2>/dev/null)" ]; then
+  REV="$REV+dirty-$(git diff HEAD | git hash-object --stdin | cut -c1-7)"
+fi
 {
-  echo "== gate run $(date -u +%Y-%m-%dT%H:%M:%SZ) @ $(git rev-parse --short HEAD 2>/dev/null || echo 'no-commit') =="
+  echo "== gate run $(date -u +%Y-%m-%dT%H:%M:%SZ) @ $REV =="
   echo
   echo "-- pytest tests/ -q --"
 } > "$ART"

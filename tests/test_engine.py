@@ -305,11 +305,10 @@ def test_stream_session_memo_drops_dead_parents(spark):
 
 def test_tbl_malformed_rows_raise_in_strict_mode(engine, tmp_path):
     """Round-14 reader hardening: a .tbl row with missing or extra fields
-    must RAISE at scan time (FAILFAST default) — the PERMISSIVE parse
-    nulls the whole row silently, and a nulled key column just vanishes
-    from every downstream join (the worst failure shape for benchmark
-    data whose row counts are ground truth). strict=False still offers
-    the salvage path, pinned to the old nulling behavior."""
+    must RAISE at scan time — a permissive parse nulls the whole row
+    silently, and a nulled key column just vanishes from every downstream
+    join (the worst failure shape for benchmark data whose row counts are
+    ground truth)."""
     import pytest
 
     good = "0|ALGERIA|\n1|ARGENTINA|\n"
@@ -321,33 +320,6 @@ def test_tbl_malformed_rows_raise_in_strict_mode(engine, tmp_path):
         engine.register_tbl("bad_tbl", str(tbl), "n_nationkey INT, n_name STRING")
         with pytest.raises(Exception, match="malformed .tbl row"):
             engine.table("bad_tbl").collect()
-    # salvage path: PERMISSIVE keeps the well-formed rows, nulls the bad
-    tbl = tmp_path / "bad2.tbl"
-    tbl.write_text(short)
-    engine.register_tbl(
-        "bad_tbl_loose", str(tbl), "n_nationkey INT, n_name STRING", strict=False
-    )
-    rows = engine.table("bad_tbl_loose").collect()
-    assert len(rows) == 3
-    assert sum(1 for r in rows if r.n_name is None) == 1
-
-
-def test_csv_and_json_mode_passthrough(engine, spark, tmp_path):
-    """read_csv_table accepts a parser mode: FAILFAST makes corrupt input
-    loud; the PERMISSIVE default (exploration) still nulls. Pinned so the
-    pass-through cannot silently drop."""
-    import pytest
-
-    from datafusion_distributed_experiment_spark.sources.tables import read_csv_table
-
-    csv = tmp_path / "t.csv"
-    csv.write_text("a,b\n1,2\n3\n")  # second data row short
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_csv_table(
-            spark, str(csv), schema="a INT, b INT", mode="FAILFAST"
-        ).collect()
-    ok = read_csv_table(spark, str(csv), schema="a INT, b INT").collect()
-    assert len(ok) == 2  # permissive keeps both, nulls the short row
 
 
 def test_tbl_strict_rejects_type_corrupt_values_and_nulls_empty_fields(
@@ -358,8 +330,7 @@ def test_tbl_strict_rejects_type_corrupt_values_and_nulls_empty_fields(
     (ANSI is off in this session), re-creating the vanishing-key failure
     strict mode exists to prevent. Pinned: a non-empty token the type
     cast nulls out raises with the field name; an EMPTY token parses to
-    NULL (parity with the permissive CSV path's nullValue='' — flipping
-    the strict default must not change IS NULL semantics)."""
+    NULL (the .tbl spelling of a missing value)."""
     import pytest
 
     from datafusion_distributed_experiment_spark.sources.tables import read_tbl_table

@@ -7,15 +7,15 @@ Pinned here:
     encode of the merged corpus — including lists no probe touches — and
     serving from it is BIT-IDENTICAL to the in-flight serve over that
     rebuild encode;
-(2) the serve over the persisted index prunes to the probed list
-    directories, and pruning is sound;
-(3) the refresh has set semantics for ARBITRARY change batches written
+(2) the refresh has set semantics for ARBITRARY change batches written
     over a stale base layout: the index is (encode(base) minus removed
     ids) plus encode(inserted and updated rows), an empty batch changes
     nothing, and a list the batch empties loses its directory.
 
 The partitioned writer itself (static overwrite, one file per partition,
-stale partitions gone) is pinned in tests/test_engine.py. Every test here
+stale partitions gone) is pinned in tests/test_engine.py; partition
+pruning of the serve over both persisted indexes in
+tests/test_ivf_pq_index.py. Every test here
 writes into a private warehouse, never the one the oracles read.
 """
 
@@ -29,6 +29,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from datafusion_distributed_experiment_spark.operators.similarity import (
+    IVF_PQ_UPSERT_TABLE,
+    PQ_INDEX_SCHEMA,
     _pq_encode,
     _pq_fit,
     _pq_serve,
@@ -36,7 +38,7 @@ from datafusion_distributed_experiment_spark.operators.similarity import (
     _vectors,
     _with_xp,
     ivf_pq_index_upsert,
-    ivf_pq_upsert_location,
+    ivf_pq_location,
     norm,
 )
 from datafusion_distributed_experiment_spark.sources.tables import (
@@ -83,10 +85,12 @@ def test_upsert_equals_frozen_model_rebuild(spark):
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in rebuild_enc.collect()
     )
-    path = ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
+    path = ivf_pq_location(
+        IVF_PQ_UPSERT_TABLE, *frame_fingerprint_stats(vecs, "vec_id")[:2]
+    )
     got_index = sorted(
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
-        for r in spark.read.parquet(path).collect()
+        for r in spark.read.schema(PQ_INDEX_SCHEMA).parquet(path).collect()
     )
     assert got_index == want_index and len(got_index) > 0
 
@@ -94,48 +98,6 @@ def test_upsert_equals_frozen_model_rebuild(spark):
         _pq_serve(spark, merged, rebuild_enc, centroids, cb, seed_rows)
     )
     assert got_serve == want_serve and len(got_serve) > 0
-
-
-def test_single_query_serve_prunes_partitions(spark):
-    """Serving shape over the MAINTAINED index: ONE query probes
-    IVF_PROBE lists and the planned scan's PartitionFilters INSET carries
-    at most that many list ids — the hive-partition analog of the build
-    index's SelectedBucketsCount pin (at scale a query batch reads a
-    vanishing fraction of the index directories). Soundness: the pruned
-    serve equals the same serve over the unpruned index."""
-    import re
-
-    from datafusion_distributed_experiment_spark.operators.similarity import (
-        IVF_PROBE,
-        serve_pq_index,
-    )
-    from datafusion_distributed_experiment_spark.plans import plan_string
-
-    ivf_pq_index_upsert(spark, SF_DIR).collect()  # maintain side effect
-    vecs, centroids, cb, seed_rows = _frozen_fit(spark)
-    merged = _merged_corpus(spark, vecs).localCheckpoint()
-    path = ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
-    index = spark.read.parquet(path).withColumn(
-        "list_id", F.col("list_id").cast("long")
-    )
-    served = serve_pq_index(
-        spark, merged, index, centroids, cb, seed_rows, n_queries=1
-    )
-    plan = plan_string(served)
-    # Spark prints small literal sets as `IN (a,b,c)` and switches to
-    # `INSET a, b, c` above the optimizer's set-conversion threshold
-    m = re.search(r"PartitionFilters: \[[^\]]*?(?:INSET ([\d, ]+)|IN \(([\d,]+)\))", plan)
-    assert m, plan
-    probed = [x for x in (m.group(1) or m.group(2)).split(",") if x.strip()]
-    assert 0 < len(probed) <= IVF_PROBE, (
-        f"one query probes {IVF_PROBE} lists; the scan must prune to at "
-        f"most that many partitions, got {len(probed)}"
-    )
-    # soundness: pruning removes only rows no probe can join
-    unpruned = _pq_serve(
-        spark, merged, index, centroids, cb, seed_rows, n_queries=1
-    )
-    assert _rows(served) == _rows(unpruned) and len(_rows(served)) > 0
 
 
 # ------------------------------------------------------------------ #
@@ -150,9 +112,7 @@ _CHANGES_SCHEMA = "vec_id long, v array<double>, __op string"
 def _index_set(spark, path):
     return {
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
-        for r in spark.read.parquet(path)
-        .withColumn("list_id", F.col("list_id").cast("long"))
-        .collect()
+        for r in spark.read.schema(PQ_INDEX_SCHEMA).parquet(path).collect()
     }
 
 

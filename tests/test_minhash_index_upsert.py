@@ -233,17 +233,21 @@ def test_band_index_rows_join_strategy_follows_key_size(spark):
 
 def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeypatch):
     """The shared partitioned writer leaves sibling directories whose ``f=``
-    value is not an integer inside both index table roots, then both
-    upsert oracles run in that same warehouse: they select their partition
-    by value and must skip the foreign directories instead of failing to
-    cast them."""
+    value is not an integer inside all three index table roots, and the
+    IVF-PQ build root also holds a foreign corpus in the retired bucketed
+    layout (part files directly under ``n=/f=``, one level shallower than
+    a ``list_id=`` layout). Every persisted-index oracle then runs in that
+    same warehouse: it selects its partition by value and must skip the
+    foreign directories instead of failing to cast or read them."""
     from datafusion_distributed_experiment_spark.operators import (
         pipeline_oracles,
         pipeline_queries,
     )
     from datafusion_distributed_experiment_spark.operators.similarity import (
+        IVF_PQ_INDEX_TABLE,
+        IVF_PQ_UPSERT_TABLE,
         _pq_encode,
-        ivf_pq_upsert_location,
+        ivf_pq_location,
     )
 
     from ._compare import assert_frames_match
@@ -251,13 +255,13 @@ def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeyp
 
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path))
     vecs, centroids, cb, _ = _frozen_fit(spark)
-    write_partitioned(
-        _pq_encode(vecs, centroids, cb),
-        ivf_pq_upsert_location(*frame_fingerprint_stats(vecs, "vec_id")[:2])
-        + "_foldtest",
-        ["list_id"],
-        len(centroids),
-    )
+    n, fp = frame_fingerprint_stats(vecs, "vec_id")[:2]
+    enc = _pq_encode(vecs, centroids, cb).select("vec_id", "codes", "list_id")
+    for table in (IVF_PQ_INDEX_TABLE, IVF_PQ_UPSERT_TABLE):
+        write_partitioned(
+            enc, ivf_pq_location(table, n, fp) + "_foldtest", ["list_id"], len(centroids)
+        )
+    enc.coalesce(1).write.parquet(ivf_pq_location(IVF_PQ_INDEX_TABLE, n, fp + 1))
     hist, _, path = _hist_stats(spark)
     write_partitioned(
         _bands_with_bucket(_with_signature(hist).select("doc_id", "sig")),
@@ -267,7 +271,7 @@ def test_upsert_oracles_ignore_foreign_index_dirs(spark, duck, tmp_path, monkeyp
     )
 
     queries, oracles = pipeline_queries(), pipeline_oracles()
-    for name in ("ivf_pq_index_upsert", "minhash_index_upsert"):
+    for name in ("ivf_pq_index_build", "ivf_pq_index_upsert", "minhash_index_upsert"):
         got = queries[name](spark, SF_DIR).toPandas()
         assert len(got) > 0, f"{name}: empty result proves nothing"
         assert_frames_match(got, duck.execute(oracles[name]).df(), name)

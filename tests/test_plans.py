@@ -142,41 +142,6 @@ def test_ivf_k_scales_with_corpus_and_lists_stay_bounded(spark):
     assert sizes <= 8 * max(1, n // k), (n, k, sizes)
 
 
-def test_bucketed_join_eliminates_exchanges(engine, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts join with
-    ZERO shuffle exchanges — the write-once-join-many co-location strategy
-    for repeated fact-fact joins at 100 TB. The unbucketed control plan for
-    the identical join shuffles both sides."""
-    spark = engine.spark
-    orders = spark.table("orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    lineitem = spark.table("lineitem").select("l_orderkey", "l_quantity")
-    b_orders = engine.write_bucketed(
-        orders, "orders_b", str(tmp_path / "orders_b"), ["o_orderkey"], n_buckets=4
-    )
-    b_lineitem = engine.write_bucketed(
-        lineitem, "lineitem_b", str(tmp_path / "lineitem_b"), ["l_orderkey"], n_buckets=4
-    )
-    # Force a real shuffle-or-colocate decision: no broadcast escape hatch.
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = b_orders.join(
-            b_lineitem, b_orders.o_orderkey == b_lineitem.l_orderkey
-        )
-        control = orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        s_bucketed = stage_summary(joined)
-        s_control = stage_summary(control)
-        assert s_bucketed["exchanges"] == 0, s_bucketed
-        assert s_bucketed["broadcasts"] == 0, s_bucketed
-        assert s_control["exchanges"] >= 2, s_control
-        # co-location must not change results
-        assert joined.count() == control.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_corpus_pipeline_reads_documents_twice_only(spark):
     """The fused feature block (features_frame) must keep the pipeline at
     exactly TWO document scans — one for quality+token features, one for the
@@ -200,18 +165,20 @@ def test_corpus_pipeline_reads_documents_twice_only(spark):
 
 
 def test_partitioned_write_enables_partition_pruning(engine, tmp_path):
-    """Hive-layout writes (partitionBy) must turn a partition-column filter
-    into PartitionFilters (directory pruning) — the difference between
-    touching one partition and scanning the whole 100 TB table."""
+    """Hive-layout writes (the shared ``write_partitioned``) must turn a
+    partition-column filter into PartitionFilters (directory pruning) —
+    the difference between touching one partition and scanning the whole
+    100 TB table."""
     import re
 
     from datafusion_distributed_experiment_spark.plans import plan_string
+    from datafusion_distributed_experiment_spark.sources.tables import (
+        write_partitioned,
+    )
 
     spark = engine.spark
     src = spark.table("orders").select("o_orderkey", "o_totalprice", "o_orderpriority")
-    engine.write_parquet(
-        src, str(tmp_path / "orders_part"), partition_by=["o_orderpriority"]
-    )
+    write_partitioned(src, str(tmp_path / "orders_part"), ["o_orderpriority"], 5)
     back = spark.read.parquet(str(tmp_path / "orders_part"))
     one = back.filter(back.o_orderpriority == "1-URGENT")
     pf = [
@@ -1227,20 +1194,20 @@ def test_ivf_pq_corpus_never_shuffles(spark):
 
 
 def test_ivf_pq_index_serve_reads_bucketed_pruned_index(spark):
-    """The staged index-build/serve split's scale contract: the returned
-    (serve) plan's ONLY parquet scan is the persisted bucketed index, and
-    that scan carries a bucket-pruning spec (SelectedBucketsCount out of
-    IVF_PQ_INDEX_BUCKETS) from the probed-list IN-filter — the persistent
-    form of "the corpus never shuffles": at 100 TB the probe batch reads
-    only the probed lists' buckets, PQ_M bytes per vector. Downstream the
-    serve kernel is shared with ivf_pq_topk verbatim, so the same
-    exchange budget holds: two candidate-window hash exchanges + the
-    presentation sort, broadcast probe/shortlist sides, never an SMJ.
-    (The per-query pruning bound — one query touches <= IVF_PROBE of the
-    32 buckets — and prune soundness are pinned in
-    tests/test_ivf_pq_index.py.)"""
+    """The index-build/serve split's scale contract: the returned (serve)
+    plan's ONLY parquet scan is the persisted index, a hive layout
+    partitioned on list_id, and that scan carries PartitionFilters on
+    list_id from the probed-list IN-filter — the persistent form of "the
+    corpus never shuffles": at 100 TB the probe batch reads only the
+    probed lists' directories, PQ_M bytes per vector. Downstream the serve
+    kernel is shared with ivf_pq_topk verbatim, so the same exchange
+    budget holds: two candidate-window hash exchanges + the presentation
+    sort, broadcast probe/shortlist sides, never an SMJ. (The per-query
+    pruning bound — one query touches <= IVF_PROBE list directories — and
+    prune soundness are pinned in tests/test_ivf_pq_index.py.)"""
+    import re
+
     from datafusion_distributed_experiment_spark.operators.similarity import (
-        IVF_PQ_INDEX_BUCKETS,
         ivf_pq_index_build,
     )
 
@@ -1249,9 +1216,8 @@ def test_ivf_pq_index_serve_reads_bucketed_pruned_index(spark):
     df = ivf_pq_index_build(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1, plan[:3000]
-    assert f"SelectedBucketsCount:" in plan and f"out of {IVF_PQ_INDEX_BUCKETS}" in plan, (
-        plan[:3000]
-    )
+    pf = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert len(pf) == 1 and "list_id" in pf[0] and " IN" in pf[0], plan[:3000]
     assert plan.count("Exchange hashpartitioning") == 2, plan[:3000]
     assert plan.count("Exchange rangepartitioning") == 1, plan[:3000]
     assert plan.count("BroadcastHashJoin") >= 3 and "BuildLeft" in plan, plan[:3000]
